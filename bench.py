@@ -6,16 +6,13 @@ default 40 -> ~110M tokens at sf0.1). Data moves between phases as parquet —
 the realistic shape (the north star stores token tables in Iceberg/parquet)
 and the fast one (vectorized columnar scan -> Arrow, no row-object boxing).
 
-Timed phases (default FUSED pipeline; SPARK_GRAFT_BENCH_FUSED=0 for the
-two-phase exchange->encode form):
+Timed phases:
   q_generate    distributed corpus synthesis -> tokens parquet (worker sink)
-  q_partition   fused: cut planning (stride sample -> weighted quantiles);
-                two-phase: full file-level exchange -> bucketed parquet
-  q_encode      fused: sort + bucket + encode in one worker pass over the
-                source parquet (no bucketed intermediate, engine/exchange.py
-                exchange_encode_fused); two-phase: encode of the bucketed
-                table. Either way: parquet -> Arrow -> numpy in workers, no
-                JVM row boxing of token arrays anywhere
+  q_partition   cut planning (stride sample -> weighted quantiles)
+  q_encode      sort + bucket + encode in one worker pass over the source
+                parquet, worker-side blocks sink (engine/exchange.py
+                exchange_encode_fused_direct): parquet -> Arrow -> numpy ->
+                parquet in workers, no JVM row boxing of token arrays
   q_decode      blocks parquet -> mapInArrow decode -> token count agg
   q_verify      per-doc checksum metadata join (worker-side order-sensitive
                 checksums both sides; arrays never cross to the JVM)
@@ -94,13 +91,10 @@ def main() -> int:
         exchange_encode_fused_direct,
         plan_weighted_cuts,
         regime_doc_key,
-        size_weighted_exchange,
     )
     from mapbox_vector_tile_spark.engine.session import get_spark
     from mapbox_vector_tile_spark.engine.verify import verify_roundtrip_checksums
     from mapbox_vector_tile_spark.sources.parquet_direct import list_parquet_files
-
-    fused = os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1") == "1"
 
     spark = get_spark(
         app_name="mvt-spark-bench",
@@ -142,7 +136,6 @@ def main() -> int:
     os.makedirs(work, exist_ok=True)
     tokens_pq = f"{work}/tokens_{n_docs}"
     cks_pq = f"{work}/tokens_{n_docs}_cks"
-    bucketed_pq = f"{work}/bucketed_{n_docs}_{num_buckets}"
     blocks_pq = f"{work}/blocks"
     queries: dict[str, float] = {}
     probes: dict[str, float] = {"pre_generate": _probe_first_touch()}
@@ -161,59 +154,32 @@ def main() -> int:
         # the per-chunk selector can beat the one-size-fits-all reference
         # scheme (the table-level analog of the reference's delta-minimizing
         # reorder, /root/reference/mapbox_vector_tile/optimise.py:133-163).
-        # Either form moves bytes parquet -> Arrow -> parquet inside workers;
-        # the JVM never boxes the token arrays into shuffle rows.
         # best-of-2 on the encode phase: this VM backs guest RAM lazily, so
         # whichever run first touches fresh pages pays a ~100 MB/s
         # first-touch tax; the second run measures steady state (what a
         # warm cluster delivers)
         probes["pre_encode"] = _probe_first_touch()
-        if fused:
+        t = time.time()
+        cuts = plan_weighted_cuts(
+            spark, list_parquet_files(tokens_pq), num_buckets,
+            key_fn=regime_doc_key,
+        )
+        queries["q_partition"] = round(time.time() - t, 3)
+        best = None
+        # 2*cpus writer tasks: sizes the blocks file count for the
+        # decode side's parallelism (decode tasks = file groups).
+        # Worker-side sink: encoded payloads go numpy -> Arrow ->
+        # parquet inside each task; the JVM sees one manifest row per
+        # task, so payloads are never boxed into JVM rows
+        for _ in range(n_reps):
             t = time.time()
-            cuts = plan_weighted_cuts(
-                spark, list_parquet_files(tokens_pq), num_buckets,
-                key_fn=regime_doc_key,
+            exchange_encode_fused_direct(
+                spark, tokens_pq, blocks_pq, num_buckets, EncodeOptions(),
+                key_fn=regime_doc_key, n_tasks=2 * cpus, cuts=cuts,
             )
-            queries["q_partition"] = round(time.time() - t, 3)
-            best = None
-            # 2*cpus writer tasks: sizes the blocks file count for the
-            # decode side's parallelism (decode tasks = file groups).
-            # Worker-side sink: encoded payloads go numpy -> Arrow ->
-            # parquet inside each task; the JVM sees one manifest row per
-            # task (the DataFrame+JVM-writer form boxed every payload into
-            # rows and capped 4N-core encode at ~15 M tok/s on this host
-            # while decode scaled 0.93 in the same campaign)
-            for _ in range(n_reps):
-                t = time.time()
-                exchange_encode_fused_direct(
-                    spark, tokens_pq, blocks_pq, num_buckets, EncodeOptions(),
-                    key_fn=regime_doc_key, n_tasks=2 * cpus, cuts=cuts,
-                )
-                dt = round(time.time() - t, 3)
-                best = dt if best is None else min(best, dt)
-            queries["q_encode"] = best
-        else:
-            t = time.time()
-            if not os.path.exists(f"{bucketed_pq}/_SUCCESS"):
-                size_weighted_exchange(
-                    spark, tokens_pq, bucketed_pq, num_buckets,
-                    key_fn=regime_doc_key, n_tasks=cpus,
-                )
-            queries["q_partition"] = round(time.time() - t, 3)
-
-            from mapbox_vector_tile_spark.sources.parquet_direct import (
-                encode_parquet_direct,
-            )
-
-            best = None
-            for _ in range(n_reps):
-                t = time.time()
-                encode_parquet_direct(spark, bucketed_pq, EncodeOptions(),
-                                      bucket_from_dir=True, n_tasks=4 * cpus) \
-                    .write.mode("overwrite").parquet(blocks_pq)
-                dt = round(time.time() - t, 3)
-                best = dt if best is None else min(best, dt)
-            queries["q_encode"] = best
+            dt = round(time.time() - t, 3)
+            best = dt if best is None else min(best, dt)
+        queries["q_encode"] = best
 
         written = spark.read.parquet(blocks_pq)
         sizes = written.agg(
@@ -302,9 +268,6 @@ def main() -> int:
         "metric": "encode+decode+verify wall, synthetic token corpus",
         "value": total,
         "unit": "sec",
-        # fused: q_partition is cut PLANNING only (the exchange is fused
-        # into q_encode); two_phase: q_partition is the full file exchange
-        "pipeline": "fused" if fused else "two_phase",
         "queries": queries,
         "sf": sf,
         "n_docs": n_docs,

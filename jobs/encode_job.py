@@ -9,11 +9,18 @@ North-rule deployment form:
         --input  /path/to/tokens_table \
         --output /path/to/blocks_table \
         --checkpoint /path/to/lineage_table \
-        --num-buckets 512 [--codec auto] [--string-col source] [--resume]
+        --num-buckets 512 [--codec auto] [--sort-col regime|doc_id]
 
-The job is idempotent at bucket granularity: rerunning after an interruption
-encodes only buckets absent from the checkpoint (left-anti join), and bucket
-reruns overwrite their own partition directory (never duplicate).
+The job runs the fused exchange+encode with a worker-side sink
+(``engine.checkpoint.encode_with_checkpoint_fused``) and is idempotent at
+task granularity: each task turns one planned input file group into one
+blocks fragment, a rerun after an interruption encodes only the tasks
+without a ``done`` lineage row, and task reruns overwrite their own
+fragment (never duplicate). The last run writes ``_manifest.json`` and
+``_SUCCESS``. ``--input`` also takes ``iceberg://<table>[@<snapshot>]``;
+tables with live delete files must be rewritten (``rewrite_data_files``)
+first. The last stdout line is a JSON summary with
+``tasks_total``/``tasks_pending``/``tasks_processed``.
 """
 
 from __future__ import annotations
@@ -30,29 +37,17 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--checkpoint", required=True, help="lineage/checkpoint path")
     p.add_argument("--num-buckets", type=int, default=32)
     p.add_argument("--codec", default=None, help="force codec (default: auto)")
-    p.add_argument("--string-col", default=None)
     p.add_argument("--sort-col", default="doc_id",
-                   help="clustering key for size-weighted buckets")
+                   help="cluster key for size-weighted buckets: doc_id or "
+                        "regime|doc_id")
     p.add_argument("--validate", action="store_true")
     p.add_argument("--fail-after", type=int, default=None,
-                   help="test hook: stop after N buckets (simulated crash)")
-    p.add_argument("--direct", action="store_true",
-                   help="scale path: file-level exchange + worker-side "
-                        "columnar scans (token arrays never cross the JVM "
-                        "row boundary); --sort-col must be doc_id or "
-                        "regime|doc_id")
-    p.add_argument("--fused", action="store_true",
-                   help="flagship path: fused exchange+encode, worker-side "
-                        "sink, resume at task (file-group) granularity; "
-                        "--sort-col must be doc_id or regime|doc_id; "
-                        "--fail-after counts tasks")
+                   help="test hook: stop after N tasks (simulated crash)")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     from mapbox_vector_tile_spark.engine.checkpoint import (
-        encode_with_checkpoint,
-        encode_with_checkpoint_direct,
         encode_with_checkpoint_fused,
     )
     from mapbox_vector_tile_spark.engine.encode import EncodeOptions
@@ -63,50 +58,16 @@ def main(argv: list[str] | None = None) -> int:
         codec=None if args.codec in (None, "auto") else args.codec,
         validate=args.validate,
     )
-    if args.fused:
-        summary = encode_with_checkpoint_fused(
-            spark,
-            args.input,
-            args.output,
-            args.checkpoint,
-            num_buckets=args.num_buckets,
-            options=opts,
-            fail_after_tasks=args.fail_after,
-            key_name=args.sort_col,
-        )
-    elif args.direct:
-        summary = encode_with_checkpoint_direct(
-            spark,
-            args.input,
-            args.output,
-            args.checkpoint,
-            num_partitions=args.num_buckets,
-            options=opts,
-            fail_after_buckets=args.fail_after,
-            key_name=args.sort_col,
-        )
-    else:
-        if args.input.startswith("iceberg://"):
-            from mapbox_vector_tile_spark.sources.iceberg import read_table
-            from mapbox_vector_tile_spark.sources.iceberg_catalog import (
-                resolve_uri,
-            )
-
-            table, snap = resolve_uri(args.input)
-            tokens = read_table(spark, table, int(snap) if snap else None)
-        else:
-            tokens = spark.read.parquet(args.input)
-        summary = encode_with_checkpoint(
-            spark,
-            tokens,
-            args.output,
-            args.checkpoint,
-            num_partitions=args.num_buckets,
-            options=opts,
-            fail_after_buckets=args.fail_after,
-            sort_col=args.sort_col,
-            string_col=args.string_col,
-        )
+    summary = encode_with_checkpoint_fused(
+        spark,
+        args.input,
+        args.output,
+        args.checkpoint,
+        num_buckets=args.num_buckets,
+        options=opts,
+        fail_after_tasks=args.fail_after,
+        key_name=args.sort_col,
+    )
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -1,18 +1,17 @@
-"""Checkpoint / resume at partition-bucket granularity (north rule).
+"""Checkpoint / resume at task granularity (north rule).
 
 Spark restarts *stages*, not *jobs* — an interrupted 100 TB encode would
-otherwise start over. The job therefore:
+otherwise start over. :func:`encode_with_checkpoint_fused` runs the fused
+exchange+encode (:mod:`.exchange`) resumably:
 
-1. assigns every row a size-weighted bucket (:mod:`.partitioning`);
-2. anti-joins the bucket work-list against the checkpoint table to find
-   pending work (the join-shaped resume SURVEY §2.7 predicts);
-3. encodes pending buckets only, writing blocks with **dynamic partition
-   overwrite** on ``bucket`` so a rerun of a half-written bucket is
-   idempotent (overwrites its own directory, never duplicates);
-4. appends one lineage/metrics row per finished bucket (n_rows, n_values,
-   bytes in/out/ref, codec histogram, wall ms, run_id) — the explicit form
-   of the reference's implicit compressed-size accounting
-   (/root/reference/mapbox_vector_tile/__init__.py:98, SURVEY §2.5 A3).
+1. the first run persists a plan sidecar: cuts, bucket count, cluster key
+   and the file grouping, so every later run encodes the same fragments;
+2. each finished task appends one lineage/metrics row (n_rows, n_values,
+   bytes in/out/ref, chunk count, fragment path, wall ms, run_id) — the
+   explicit form of the reference's implicit compressed-size accounting;
+3. a rerun skips the tasks with a ``done`` lineage row and encodes only the
+   pending ones. Fragment names are deterministic and writes atomic, so a
+   task that died mid-write is simply redone in place.
 """
 
 from __future__ import annotations
@@ -22,23 +21,23 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.utils import AnalysisException
 
-from .encode import EncodeOptions, encode_dataframe
-from .partitioning import size_weighted_repartition, weighted_cuts
-
-CHECKPOINT_SCHEMA = (
-    "bucket int, run_id string, status string, n_rows long, n_values long, "
-    "bytes_raw long, bytes_enc long, bytes_ref long, n_chunks long, "
-    "codecs string, wall_ms long, finished_at double"
+from ..sources.parquet_direct import group_files_by_size, list_parquet_files
+from .encode import EncodeOptions
+from .exchange import (
+    CLUSTER_KEYS,
+    _fused_direct_run,
+    commit_blocks,
+    plan_weighted_cuts,
 )
 
-# Bucket-plan sidecar: leading "_" so parquet readers ignore it (like
-# _SUCCESS). The cut boundaries MUST be identical across runs — sampling
-# depends on the physical partition layout (executor count, file splits), so
-# a resume on a different cluster config would otherwise re-derive different
-# cuts and the 'done' markers would describe different row sets.
+# Plan sidecar: leading "_" so parquet readers ignore it (like _SUCCESS).
+# The cut boundaries and file grouping MUST be identical across runs —
+# planning depends on the cluster size, so a resume on a different cluster
+# config would otherwise re-derive a different plan and the 'done' markers
+# would describe different row sets.
 _PLAN_FILE = "_bucket_plan.json"
 
 
@@ -56,248 +55,6 @@ def _write_plan(ckpt_dir: str, plan: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(plan, f)
     os.replace(tmp, os.path.join(ckpt_dir, _PLAN_FILE))
-
-
-def read_checkpoint(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    try:
-        return spark.read.parquet(ckpt_dir)
-    except AnalysisException:
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-
-
-def done_buckets(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    ck = read_checkpoint(spark, ckpt_dir)
-    return ck.filter(F.col("status") == "done").select("bucket").distinct()
-
-
-def pending_buckets(work: DataFrame, done: DataFrame) -> DataFrame:
-    """left-anti join: the resume primitive (SURVEY §2.7)."""
-    return work.join(done, "bucket", "left_anti")
-
-
-def encode_with_checkpoint(
-    spark: SparkSession,
-    tokens_df: DataFrame,
-    out_dir: str,
-    ckpt_dir: str,
-    num_partitions: int = 32,
-    options: EncodeOptions | None = None,
-    run_id: str | None = None,
-    fail_after_buckets: int | None = None,
-    sort_col: str = "doc_id",
-    string_col: str | None = None,
-) -> dict:
-    """Encode ``tokens_df`` into ``out_dir`` resumably.
-
-    ``fail_after_buckets`` processes only that many pending buckets then
-    returns (test hook simulating an interruption — the analog of the
-    kill-after-k-partitions resume test in SURVEY §5).
-
-    ``sort_col``: clustering key for the size-weighted buckets — pass a
-    content key (e.g. a regime/source-derived column) so chunks are
-    distribution-homogeneous and the codec selector can beat the
-    one-size-fits-all scheme (see bench.py's cluster_key).
-
-    Returns a summary dict (buckets_total/pending/processed, run_id).
-    """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    plan = _read_plan(ckpt_dir)
-    if plan is None:
-        cuts = weighted_cuts(tokens_df, num_partitions, sort_col, "n_tok")
-        _write_plan(
-            ckpt_dir,
-            {
-                "cuts": cuts,
-                "num_partitions": num_partitions,
-                "sort_col": sort_col,
-            },
-        )
-    else:
-        if plan["num_partitions"] != num_partitions or plan["sort_col"] != sort_col:
-            raise ValueError(
-                "checkpoint bucket plan mismatch: recorded "
-                f"(num_partitions={plan['num_partitions']}, "
-                f"sort_col={plan['sort_col']!r}) but caller supplied "
-                f"(num_partitions={num_partitions}, sort_col={sort_col!r}); "
-                "resume must reuse the original bucketing"
-            )
-        cuts = plan["cuts"]
-    bucketed = size_weighted_repartition(
-        tokens_df, num_partitions, sort_col=sort_col, cuts=cuts
-    )
-    work = bucketed.select("bucket").distinct()
-    done = done_buckets(spark, ckpt_dir)
-    pending = sorted(r.bucket for r in pending_buckets(work, done).collect())
-    total = work.count()
-    if fail_after_buckets is not None:
-        pending = pending[:fail_after_buckets]
-    if not pending:
-        return {
-            "run_id": run_id,
-            "buckets_total": total,
-            "buckets_pending": 0,
-            "buckets_processed": 0,
-        }
-
-    t0 = time.time()
-    todo = bucketed.filter(F.col("bucket").isin(pending))
-    blocks = encode_dataframe(
-        todo, options, bucket_col="bucket", string_col=string_col
-    )
-    (
-        blocks.write.partitionBy("bucket")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(out_dir)
-    )
-    _append_lineage(spark, out_dir, ckpt_dir, pending, run_id, t0)
-    return {
-        "run_id": run_id,
-        "buckets_total": total,
-        "buckets_pending": len(pending),
-        "buckets_processed": len(pending),
-    }
-
-
-def _append_lineage(
-    spark: SparkSession,
-    out_dir: str,
-    ckpt_dir: str,
-    pending: list[int],
-    run_id: str,
-    t0: float,
-) -> None:
-    """One lineage/metrics row per finished bucket, aggregated from the
-    just-written blocks (source of truth)."""
-    wall_ms = int((time.time() - t0) * 1000)
-    written = spark.read.parquet(out_dir).filter(F.col("bucket").isin(pending))
-    ck_rows = (
-        written.groupBy("bucket")
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("n_values").alias("n_values"),
-            F.sum("bytes_raw").alias("bytes_raw"),
-            F.sum("bytes_enc").alias("bytes_enc"),
-            F.sum("bytes_ref").alias("bytes_ref"),
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.concat_ws(",", F.sort_array(F.collect_set("codec"))).alias("codecs"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("done"))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("finished_at", F.lit(time.time()))
-        .select(*[c.strip().split(" ")[0] for c in CHECKPOINT_SCHEMA.split(",")])
-    )
-    ck_rows.write.mode("append").parquet(ckpt_dir)
-
-
-def encode_with_checkpoint_direct(
-    spark: SparkSession,
-    tokens_path: str,
-    out_dir: str,
-    ckpt_dir: str,
-    num_partitions: int = 32,
-    options: EncodeOptions | None = None,
-    run_id: str | None = None,
-    fail_after_buckets: int | None = None,
-    key_name: str = "doc_id",
-    work_dir: str | None = None,
-    n_tasks: int | None = None,
-) -> dict:
-    """Scale-path resumable encode: the file-level exchange
-    (:mod:`.exchange`) replaces the Catalyst repartition, so token arrays
-    never cross the JVM row boundary anywhere in the job.
-
-    ``key_name``: cluster key — ``"doc_id"`` or ``"regime|doc_id"`` (the
-    bench key). Recorded in the persisted bucket plan; a resume with a
-    different key or bucket count fails fast. The exchange itself is
-    restartable: fragment names are deterministic and written atomically, so
-    an interrupted exchange (no ``_SUCCESS``) is simply redone in place.
-    """
-    from .exchange import (
-        doc_id_key,
-        plan_weighted_cuts,
-        regime_doc_key,
-        size_weighted_exchange,
-    )
-    from ..sources.parquet_direct import encode_parquet_direct, list_parquet_files
-
-    key_fns = {"doc_id": doc_id_key, "regime|doc_id": regime_doc_key}
-    if key_name not in key_fns:
-        raise ValueError(
-            f"unknown key_name {key_name!r}; valid: {sorted(key_fns)}"
-        )
-    run_id = run_id or uuid.uuid4().hex[:12]
-    plan = _read_plan(ckpt_dir)
-    if plan is None:
-        cuts = plan_weighted_cuts(
-            spark, list_parquet_files(tokens_path), num_partitions,
-            key_fn=key_fns[key_name],
-        )
-        _write_plan(
-            ckpt_dir,
-            {
-                "cuts": cuts,
-                "num_partitions": num_partitions,
-                "sort_col": key_name,
-            },
-        )
-    else:
-        if plan["num_partitions"] != num_partitions or plan["sort_col"] != key_name:
-            raise ValueError(
-                "checkpoint bucket plan mismatch: recorded "
-                f"(num_partitions={plan['num_partitions']}, "
-                f"sort_col={plan['sort_col']!r}) but caller supplied "
-                f"(num_partitions={num_partitions}, sort_col={key_name!r}); "
-                "resume must reuse the original bucketing"
-            )
-        cuts = plan["cuts"]
-
-    work_dir = work_dir or out_dir.rstrip("/") + "_bucketed"
-    if not os.path.exists(os.path.join(work_dir, "_SUCCESS")):
-        size_weighted_exchange(
-            spark, tokens_path, work_dir, num_partitions,
-            key_fn=key_fns[key_name], cuts=cuts, n_tasks=n_tasks,
-        )
-
-    all_buckets = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(work_dir)
-        if d.startswith("bucket=")
-    )
-    done = {
-        r.bucket for r in done_buckets(spark, ckpt_dir).collect()
-    }
-    pending = [b for b in all_buckets if b not in done]
-    total = len(all_buckets)
-    if fail_after_buckets is not None:
-        pending = pending[:fail_after_buckets]
-    if not pending:
-        return {
-            "run_id": run_id,
-            "buckets_total": total,
-            "buckets_pending": 0,
-            "buckets_processed": 0,
-        }
-
-    t0 = time.time()
-    blocks = encode_parquet_direct(
-        spark, work_dir, options, bucket_from_dir=True,
-        n_tasks=n_tasks, buckets=pending,
-    )
-    (
-        blocks.write.partitionBy("bucket")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(out_dir)
-    )
-    _append_lineage(spark, out_dir, ckpt_dir, pending, run_id, t0)
-    return {
-        "run_id": run_id,
-        "buckets_total": total,
-        "buckets_pending": len(pending),
-        "buckets_processed": len(pending),
-    }
 
 
 FUSED_CHECKPOINT_SCHEMA = (
@@ -334,37 +91,27 @@ def encode_with_checkpoint_fused(
     key_name: str = "doc_id",
     n_tasks: int | None = None,
 ) -> dict:
-    """Resumable form of the FLAGSHIP fused pipeline (exchange+encode in one
-    worker pass, worker-side parquet sink): resume granularity is the task
-    (one input file group -> one blocks fragment).
+    """Resumable form of :func:`.exchange.exchange_encode_fused_direct`:
+    resume granularity is the task (one input file group -> one blocks
+    fragment). ``key_name`` picks the cluster key from
+    :data:`.exchange.CLUSTER_KEYS`; ``fail_after_tasks`` runs only that many
+    pending tasks and returns (the simulated-crash test hook).
 
     The persisted plan pins cuts, bucket count, cluster key AND the file
     grouping — a resume on a different cluster size must encode the same
     fragments the first run planned, or the done-markers would describe
     different row sets. Each finished task appends one lineage/metrics row
-    (bytes in/enc/ref, chunk count, fragment path, wall ms, run_id); a
-    rerun left-anti-joins the plan against done lineage rows and encodes
-    only pending tasks. Fragment writes are atomic with deterministic
-    names, so a task that died mid-write is simply redone in place. When
-    the last task lands, the job writes the dataset ``_manifest.json``
-    (per-fragment row counts, from lineage) and ``_SUCCESS``.
+    (bytes in/enc/ref, chunk count, fragment path, wall ms, run_id), but
+    only after the run's count check passed (every planned task reported
+    and wrote the docs it read); a rerun encodes only the tasks without a
+    ``done`` row. When the last task lands, the job writes the dataset
+    ``_manifest.json`` (per-fragment chunk counts, from lineage) and
+    ``_SUCCESS``. Returns ``tasks_total``/``tasks_pending``/
+    ``tasks_processed`` and the ``run_id``.
     """
-    from .exchange import (
-        _fused_direct_run,
-        doc_id_key,
-        plan_weighted_cuts,
-        regime_doc_key,
-    )
-    from ..sources.parquet_direct import (
-        group_files_by_size,
-        list_parquet_files,
-        write_file_manifest,
-    )
-
-    key_fns = {"doc_id": doc_id_key, "regime|doc_id": regime_doc_key}
-    if key_name not in key_fns:
+    if key_name not in CLUSTER_KEYS:
         raise ValueError(
-            f"unknown key_name {key_name!r}; valid: {sorted(key_fns)}"
+            f"unknown key_name {key_name!r}; valid: {sorted(CLUSTER_KEYS)}"
         )
     opts = options or EncodeOptions()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -374,7 +121,7 @@ def encode_with_checkpoint_fused(
         if not files:
             raise ValueError(f"no parquet files under {tokens_path}")
         cuts = plan_weighted_cuts(
-            spark, files, num_buckets, key_fn=key_fns[key_name]
+            spark, files, num_buckets, key_fn=CLUSTER_KEYS[key_name]
         )
         groups = group_files_by_size(
             files, n_tasks or spark.sparkContext.defaultParallelism
@@ -415,7 +162,7 @@ def encode_with_checkpoint_fused(
         t0 = time.time()
         manifest = _fused_direct_run(
             spark, pending, out_dir, opts, cuts,
-            key_fns[key_name], ("doc_id",), opts.max_chunk_values // 4,
+            CLUSTER_KEYS[key_name], ("doc_id",), opts.max_chunk_values // 4,
         )
         wall_ms = int((time.time() - t0) * 1000)
         now = time.time()
@@ -448,21 +195,7 @@ def encode_with_checkpoint_fused(
             .select("path", "n_chunks", "min_doc_id", "max_doc_id")
             .collect()
         )
-        write_file_manifest(
-            out_dir,
-            {
-                os.path.relpath(r.path, out_dir): int(r.n_chunks)
-                for r in frag_rows
-            },
-            file_stats={
-                os.path.relpath(r.path, out_dir): {
-                    "min_doc_id": r.min_doc_id, "max_doc_id": r.max_doc_id
-                }
-                for r in frag_rows
-            },
-        )
-        with open(os.path.join(out_dir, "_SUCCESS"), "w"):
-            pass
+        commit_blocks(out_dir, frag_rows)
     return {
         "run_id": run_id,
         "tasks_total": total,

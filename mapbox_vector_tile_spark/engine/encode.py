@@ -272,9 +272,9 @@ def encode_dataframe(
 ):
     """tokens DataFrame -> blocks DataFrame (one row per chunk).
 
-    ``bucket_col``: optional partition-bucket column (from
-    :func:`.partitioning.size_weighted_repartition`) carried into the
-    manifest for checkpoint/resume bookkeeping.
+    ``bucket_col``: optional integer bucket column carried into each
+    chunk's ``bucket`` field; chunks are cut at bucket changes, so each
+    stays bucket-pure.
     ``string_col``: optional string column (e.g. ``source``) stored per chunk
     as a DICT+FSST blob (``codec/strings.py``), so the full input_hint schema
     round-trips, not just the token arrays.

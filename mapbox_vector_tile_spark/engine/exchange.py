@@ -1,35 +1,28 @@
-"""File-level size-weighted exchange: repartition a tokens table into
-equal-weight, key-clustered buckets WITHOUT a JVM row shuffle.
+"""Fused size-weighted exchange + encode: the engine's one bulk encode.
 
-``partitioning.size_weighted_repartition`` expresses the same operator as a
-Catalyst plan, but its exchange moves every ``array<int32>`` token payload
-through JVM shuffle rows — measured as the slowest phase of the whole bench
-(the JVM boxes each array element). Here the exchange happens at *file*
-granularity instead, the way a table-format compaction job would:
+A tokens parquet table becomes a blocks table in one worker pass, without a
+JVM row shuffle and without a bucketed intermediate:
 
 1. **plan**: stride-sample ``(cluster_key, weight)`` from the input parquet
-   (column-pruned worker-side scans), cut at equal cumulative-weight
-   quantiles — same boundary semantics as ``partitioning.weighted_cuts``,
-   but deterministic w.r.t. cluster layout (per-file stride, not
-   ``df.sample``), so two runs at different parallelism produce identical
-   buckets;
-2. **exchange**: each task pyarrow-reads a group of input files, assigns
-   buckets by binary-searching the broadcast cuts, sorts rows by the cluster
-   key, and writes one sorted parquet fragment per (task, bucket) under
-   ``out/bucket=N/`` (hive layout, atomic tmp+rename, deterministic names so
-   task retries overwrite instead of duplicating).
+   (column-pruned worker-side scans) and cut at equal cumulative-weight
+   quantiles. The stride depends only on file contents and the file count,
+   so two runs at different parallelism produce identical buckets;
+2. **exchange + encode**: each task streams its file group one file at a
+   time — pyarrow read, sort by the cluster key, bucket by binary search
+   over the broadcast cuts — into per-bucket accumulators
+   (:class:`_FusedChunkEmitter`) that emit encoded chunks, and writes one
+   blocks fragment per task with pyarrow (deterministic name, atomic
+   tmp+rename, so retries overwrite instead of duplicating).
 
-Bytes flow parquet -> Arrow -> parquet inside workers; the JVM sees only
-file-task rows and tiny manifest rows. This is the distribution analog of
-the reference's greedy reorder that groups similar values so deltas stay
-small (/root/reference/mapbox_vector_tile/optimise.py:133-163) — realized as
-a scale-safe two-pass exchange instead of an in-memory sort.
+Bytes flow parquet -> Arrow -> numpy -> parquet inside workers; the JVM sees
+only file-task rows and one manifest row per task. Clustering by content
+keeps chunks distribution-homogeneous, the distribution analog of the
+reference encoder's greedy reorder (``optimise.py``) that groups similar
+values so deltas stay small.
 
 At 100 TB: the sample pass reads two small columns (statistics could also
-come from table-format column metrics); each exchange task handles one
-executor-sized file group; fragments per bucket = number of tasks, each a
-full-sized parquet file — the same shape Iceberg/Hive write-partitioned
-tables take.
+come from table-format column metrics); each task handles one
+executor-sized file group and writes one full-sized fragment.
 """
 
 from __future__ import annotations
@@ -41,7 +34,16 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..sources.parquet_direct import (
+    group_files_by_size,
+    list_parquet_files,
+    task_rows_dataframe,
+    write_file_manifest,
+    write_parquet_atomic,
+)
 
 
 def doc_id_key(table: pa.Table | pa.RecordBatch) -> pa.Array:
@@ -61,6 +63,14 @@ def regime_doc_key(table: pa.Table | pa.RecordBatch) -> pa.Array:
     return pc.binary_join_element_wise(
         pc.cast(pa.array(regime, pa.int64()), pa.string()), doc_id, "|"
     )
+
+
+#: named cluster keys, for callers that persist the key choice by name
+#: (the resumable job's bucket plan, the spark-submit ``--sort-col`` flag)
+CLUSTER_KEYS: dict[str, Callable[[pa.Table], pa.Array]] = {
+    "doc_id": doc_id_key,
+    "regime|doc_id": regime_doc_key,
+}
 
 
 def _utf8_fixed_bytes(keys: pa.Array, width: int = 0) -> np.ndarray:
@@ -117,18 +127,6 @@ def _cuts_fixed_bytes(cuts: list[str]) -> tuple[np.ndarray, int]:
     return np.array(enc, dtype=f"S{w}"), w
 
 
-def _list_files(path: str) -> list[str]:
-    from ..sources.parquet_direct import list_parquet_files
-
-    return list_parquet_files(path)
-
-
-def _group_files(files: list[str], n_tasks: int) -> list[list[str]]:
-    from ..sources.parquet_direct import group_files_by_size
-
-    return group_files_by_size(files, n_tasks)
-
-
 def plan_weighted_cuts(
     spark: SparkSession,
     files: list[str],
@@ -151,9 +149,7 @@ def plan_weighted_cuts(
     if n_files == 0:
         return []
     per_file_target = max(1, sample_target // n_files)
-    groups = _group_files(files, spark.sparkContext.defaultParallelism)
-    from ..sources.parquet_direct import task_rows_dataframe
-
+    groups = group_files_by_size(files, spark.sparkContext.defaultParallelism)
     tasks = task_rows_dataframe(
         spark,
         [(i, g) for i, g in enumerate(groups)],
@@ -217,148 +213,6 @@ def plan_weighted_cuts(
         if acc >= target * (len(cuts) + 1) and len(cuts) < num_buckets - 1:
             cuts.append(key)
     return cuts
-
-
-def size_weighted_exchange(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    num_buckets: int,
-    key_fn: Callable[[pa.Table], pa.Array] = doc_id_key,
-    key_cols: tuple[str, ...] = ("doc_id",),
-    weight_col: str = "n_tok",
-    n_tasks: int | None = None,
-    cuts: list[str] | None = None,
-) -> dict:
-    """Exchange ``in_path`` tokens parquet into ``out_path/bucket=N/`` sorted
-    fragments. Returns a summary dict; writes ``_SUCCESS`` on completion.
-
-    Equivalent result contract to ``size_weighted_repartition`` +
-    ``write.partitionBy("bucket")``: every row lands in the bucket given by
-    its cluster key vs the cuts, rows within each fragment sorted by key.
-
-    Any prior fragments under ``out_path`` are cleared first: fragment
-    names encode the task file-grouping (``part-{task_id}``), and a rerun
-    at different parallelism — or after input files changed size — groups
-    differently, so an interrupted attempt's leftovers would otherwise
-    survive as silent duplicate rows (the resume-with-different-cluster
-    hazard). Bucket *membership* depends only on ``cuts``, so a wiped
-    rerun under any grouping produces the same logical table.
-    """
-    import shutil
-
-    files = _list_files(in_path)
-    if not files:
-        raise ValueError(f"no parquet files under {in_path}")
-    if os.path.isdir(out_path):
-        for d in os.listdir(out_path):
-            if d.startswith("bucket="):
-                shutil.rmtree(os.path.join(out_path, d), ignore_errors=True)
-        for marker in ("_SUCCESS", "_manifest.json"):
-            p = os.path.join(out_path, marker)
-            if os.path.exists(p):
-                os.remove(p)
-    if cuts is None:
-        cuts = plan_weighted_cuts(
-            spark, files, num_buckets, key_fn, key_cols, weight_col
-        )
-    cuts_b, cuts_w = _cuts_fixed_bytes(cuts)
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    groups = _group_files(files, n_tasks)
-    from ..sources.parquet_direct import task_rows_dataframe
-
-    tasks = task_rows_dataframe(
-        spark,
-        [(i, g) for i, g in enumerate(groups)],
-        "task_id int, paths array<string>",
-    )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..sources.parquet_direct import write_parquet_atomic
-
-        for tb in batches:
-            task_ids = tb.column("task_id").to_pylist()
-            for task_id, paths in zip(task_ids, tb.column("paths").to_pylist()):
-                t = pa.concat_tables([pq.read_table(p) for p in paths])
-                keys_b = _utf8_fixed_bytes(key_fn(t), cuts_w)
-                order = np.argsort(keys_b, kind="stable")
-                keys_sorted = keys_b[order]
-                t = t.take(pa.array(order))
-                # bucket = count of cuts < key (matches partitioning._bucket_expr);
-                # keys are sorted, so buckets are too — slice at transitions
-                if cuts_b.size:
-                    buckets = np.searchsorted(cuts_b, keys_sorted, side="left")
-                else:
-                    buckets = np.zeros(keys_sorted.size, dtype=np.int64)
-                seg_starts = np.concatenate(
-                    ([0], np.flatnonzero(np.diff(buckets) != 0) + 1, [len(buckets)])
-                )
-                out_rows = {"bucket": [], "n_rows": [], "n_tok": [], "path": []}
-                weights = t.column(weight_col)
-                if isinstance(weights, pa.ChunkedArray):
-                    weights = weights.combine_chunks()
-                w_np = weights.to_numpy(zero_copy_only=False).astype(np.int64)
-                w_cum = np.concatenate(([0], np.cumsum(w_np)))
-                for a, b in zip(seg_starts[:-1], seg_starts[1:]):
-                    if a == b:
-                        continue
-                    bucket = int(buckets[a])
-                    frag = t.slice(a, b - a)
-                    d = os.path.join(out_path, f"bucket={bucket}")
-                    os.makedirs(d, exist_ok=True)
-                    final = os.path.join(d, f"part-{task_id:05d}.parquet")
-                    # atomic + retry/speculation-safe (unique tmp per attempt)
-                    write_parquet_atomic(frag, final)
-                    out_rows["bucket"].append(bucket)
-                    out_rows["n_rows"].append(b - a)
-                    out_rows["n_tok"].append(int(w_cum[b] - w_cum[a]))
-                    out_rows["path"].append(final)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "task_id": [task_id] * len(out_rows["bucket"]),
-                        **out_rows,
-                    },
-                    schema=pa.schema(
-                        [
-                            ("task_id", pa.int32()),
-                            ("bucket", pa.int32()),
-                            ("n_rows", pa.int64()),
-                            ("n_tok", pa.int64()),
-                            ("path", pa.string()),
-                        ]
-                    ),
-                )
-
-    manifest = tasks.mapInArrow(
-        fn, "task_id int, bucket int, n_rows long, n_tok long, path string"
-    ).collect()
-    os.makedirs(out_path, exist_ok=True)
-    from ..sources.parquet_direct import write_file_manifest
-
-    write_file_manifest(
-        out_path,
-        {os.path.relpath(r.path, out_path): int(r.n_rows) for r in manifest},
-    )
-    with open(os.path.join(out_path, "_SUCCESS"), "w"):
-        pass
-    per_bucket: dict[int, int] = {}
-    n_rows = 0
-    for r in manifest:
-        per_bucket[r.bucket] = per_bucket.get(r.bucket, 0) + int(r.n_tok)
-        n_rows += int(r.n_rows)
-    return {
-        "n_rows": n_rows,
-        "n_fragments": len(manifest),
-        "n_buckets": len(per_bucket),
-        "bucket_weights": per_bucket,
-        "cuts": cuts,
-    }
-
-
-def bucketed_tokens_dataframe(spark: SparkSession, out_path: str) -> DataFrame:
-    """Read an exchanged table back as a DataFrame (bucket from hive path)."""
-    return spark.read.option("basePath", out_path).parquet(out_path)
 
 
 class _BucketAcc:
@@ -480,11 +334,13 @@ class _FusedChunkEmitter:
     def flush(self) -> None:
         """End of task: emit every bucket's tail. Tails of at least
         ``min_chunk`` values stand alone (bucket-pure); smaller tails are
-        merged with neighbouring buckets into mixed chunks."""
+        merged with neighbouring buckets into mixed chunks. A tail is
+        emitted whenever it holds rows — a tail of zero-token docs holds
+        no values but must still reach the output."""
         pending: list[tuple[int, _BucketAcc]] = []
         for b in sorted(self._accs):
             acc = self._accs[b]
-            if acc.n_values <= 0:
+            if not acc.lens:
                 continue
             if acc.n_values >= self.min_chunk or self.min_chunk <= 0:
                 self._drain(b, acc, hold_tail=False)
@@ -561,11 +417,11 @@ class _FusedChunkEmitter:
             return acc.vals[i][va - pv : vb - pv]
         pieces = []
         for p in range(i, j + 1):
+            # parts of zero-token docs contribute empty pieces: keep them,
+            # so a chunk of only such parts still gathers (to no values)
             ps = int(val_off[pbounds[p]])
             pe = int(val_off[pbounds[p + 1]])
-            s, e = max(va, ps) - ps, min(vb, pe) - ps
-            if e > s:
-                pieces.append(acc.vals[p][s:e])
+            pieces.append(acc.vals[p][max(va, ps) - ps : min(vb, pe) - ps])
         return np.concatenate(pieces)
 
     def _rebuild_tail(
@@ -651,129 +507,6 @@ class _FusedChunkEmitter:
         return pa.RecordBatch.from_arrays(cols, schema=_BLOCKS_ARROW_SCHEMA)
 
 
-def exchange_encode_fused(
-    spark: SparkSession,
-    in_path: str,
-    num_buckets: int,
-    options=None,
-    key_fn: Callable[[pa.Table], pa.Array] = doc_id_key,
-    key_cols: tuple[str, ...] = ("doc_id",),
-    weight_col: str = "n_tok",
-    n_tasks: int | None = None,
-    cuts: list[str] | None = None,
-    min_chunk_values: int | None = None,
-) -> DataFrame:
-    """Fused exchange + encode: each task streams its file group ONE FILE AT
-    A TIME — read, sort by the cluster key, bucket, encode — so the bucketed
-    intermediate is never written or re-read AND working memory is O(one
-    file), not O(task file group). Round 3 materialized the whole group
-    (``concat_tables + take + combine_chunks`` ≈ 3 copies of the task's
-    token data) before encoding; at low parallelism groups grow and that
-    allocation traffic was the encode-scaling wall. Per-file processing
-    keeps the allocation profile flat across parallelism levels.
-
-    Chunk composition comes from PER-BUCKET accumulators
-    (:class:`_FusedChunkEmitter`): each bucket's per-file runs merge into
-    bucket-pure chunks of up to ``max_chunk_values``, so whole-chunk codec
-    state (one dictionary, one FOR frame) is shared across files instead of
-    restarting at every (file x bucket) crossing — per-file sorting costs
-    no compression vs a task-global sort (measured 0.6647 vs 0.6659 at
-    sf0.1). File junctions inside a chunk stay recorded as PAGED segment
-    bounds, so the selector can still re-pick codecs per segment when that
-    is smaller.
-
-    ``min_chunk_values`` (default ``max_chunk_values // 4``) governs
-    end-of-task tails: a bucket tail at least this large stands alone;
-    smaller tails merge with neighbouring buckets into mixed chunks. A
-    mixed chunk's ``bucket`` is the lowest bucket its rows span and
-    ``bucket_max`` the highest — readers filtering by bucket must use the
-    ``[bucket, bucket_max]`` range (or pass ``min_chunk_values=0`` for
-    strict chunk/bucket homogeneity, e.g. ``write.partitionBy("bucket")``
-    products).
-
-    Trade recorded, not hidden: chunks cannot span tasks, so n_chunks >=
-    n_tasks, and there is no bucketed table for other readers — use the
-    two-phase path when the clustered tokens table itself is a product.
-
-    Returns the blocks DataFrame (standard blocks schema, ``bucket`` set).
-    """
-    from .encode import BLOCKS_SPARK_SCHEMA, EncodeOptions
-
-    opts = options or EncodeOptions()
-    if min_chunk_values is None:
-        min_chunk_values = opts.max_chunk_values // 4
-    files = _list_files(in_path)
-    if not files:
-        raise ValueError(f"no parquet files under {in_path}")
-    if cuts is None:
-        cuts = plan_weighted_cuts(
-            spark, files, num_buckets, key_fn, key_cols, weight_col
-        )
-    cuts_b, cuts_w = _cuts_fixed_bytes(cuts)
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    groups = _group_files(files, n_tasks)
-    from ..sources.parquet_direct import task_rows_dataframe
-
-    tasks = task_rows_dataframe(
-        spark,
-        [(i, g) for i, g in enumerate(groups)],
-        "task_id int, paths array<string>",
-    )
-    read_cols = list(dict.fromkeys([*key_cols, "doc_id", "tokens"]))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for tb in batches:
-            task_ids = tb.column("task_id").to_pylist()
-            for task_id, paths in zip(task_ids, tb.column("paths").to_pylist()):
-                em = _run_fused_task(
-                    task_id, paths, opts, min_chunk_values,
-                    cuts_b, cuts_w, key_fn, read_cols,
-                )
-                out = em.batch()
-                if out is not None:
-                    yield out
-
-    return tasks.mapInArrow(fn, BLOCKS_SPARK_SCHEMA)
-
-
-def _run_fused_task(
-    task_id, paths, opts, min_chunk_values, cuts_b, cuts_w, key_fn, read_cols
-) -> _FusedChunkEmitter:
-    """One fused-encode task: stream each file through read -> key -> sort ->
-    bucket -> emitter (shared by the DataFrame and direct-sink forms)."""
-    em = _FusedChunkEmitter(opts, task_id, min_chunk_values)
-    for path in paths:
-        t = pq.read_table(path, columns=read_cols)
-        if t.num_rows == 0:
-            continue
-        keys_b = _utf8_fixed_bytes(key_fn(t), cuts_w)
-        # corpora are commonly written key-sorted within each file (the
-        # generator's layout, and the natural shape of a resharded corpus);
-        # then the argsort is the identity and the row gather — a full copy
-        # of every token value — is skipped entirely
-        if keys_b.size < 2 or bool(np.all(keys_b[:-1] <= keys_b[1:])):
-            keys_sorted = keys_b
-            t = t.combine_chunks()
-        else:
-            order = np.argsort(keys_b, kind="stable")
-            keys_sorted = keys_b[order]
-            t = t.take(pa.array(order)).combine_chunks()
-        if cuts_b.size:
-            buckets = np.searchsorted(cuts_b, keys_sorted, side="left")
-        else:
-            buckets = np.zeros(keys_b.size, dtype=np.int64)
-        tokens_arr = t.column("tokens").chunk(0)
-        doc_arr = t.column("doc_id").chunk(0)
-        lengths = tokens_arr.value_lengths().to_numpy().astype(np.int64)
-        values = tokens_arr.flatten().to_numpy(zero_copy_only=False).astype(
-            np.int32, copy=False
-        )
-        em.add_file(doc_arr, lengths, values, buckets)
-    em.flush()
-    return em
-
-
 def exchange_encode_fused_direct(
     spark: SparkSession,
     in_path: str,
@@ -787,31 +520,40 @@ def exchange_encode_fused_direct(
     cuts: list[str] | None = None,
     min_chunk_values: int | None = None,
 ) -> dict:
-    """:func:`exchange_encode_fused` with a WORKER-SIDE parquet sink.
+    """Encode the tokens parquet table at ``in_path`` into a blocks table at
+    ``out_path`` (cleared first): plan cuts (unless ``cuts`` is given), then
+    one fused exchange+encode pass with a worker-side parquet sink.
 
-    The DataFrame form returns encoded chunks to the JVM, which boxes every
-    payload into rows and funnels them through Spark's parquet writer —
-    measured as the 4N-executor encode ceiling on this host (decode, which
-    moves no payload bytes into the JVM, scaled 0.93 in the same campaign
-    while encode sat at ~15 M tok/s for 2 AND 8 cores). Here each task
-    writes its own blocks fragment with pyarrow (deterministic name, atomic
-    tmp+rename — the corpus generator / exchange sink pattern), so encoded
-    bytes go numpy -> Arrow -> parquet entirely inside the worker and the
-    JVM sees only one manifest row per task.
+    Each task streams its file group ONE FILE AT A TIME — read, sort by the
+    cluster key, bucket, encode — so working memory is O(one file), not
+    O(task file group). Chunk composition comes from per-bucket
+    accumulators (:class:`_FusedChunkEmitter`): each bucket's per-file runs
+    merge into bucket-pure chunks of up to ``max_chunk_values``, so
+    whole-chunk codec state is shared across files; file junctions stay
+    recorded as PAGED segment bounds. Each task writes its own fragment
+    with pyarrow, so encoded bytes never cross into the JVM (boxing payloads
+    into rows for Spark's writer was the encode scaling ceiling).
 
-    Also writes ``_manifest.json`` per-fragment row counts (the decode
-    side's row-range split planning reads it without touching footers) and
-    ``_SUCCESS``. Returns a summary dict with the manifest totals.
+    ``min_chunk_values`` (default ``max_chunk_values // 4``) governs
+    end-of-task tails: a bucket tail at least this large stands alone;
+    smaller tails merge with neighbouring buckets into mixed chunks whose
+    ``bucket`` is the lowest bucket they span and ``bucket_max`` the
+    highest. Pass ``min_chunk_values=0`` for strict chunk/bucket
+    homogeneity. Chunks cannot span tasks, so n_chunks >= n_tasks.
+
+    Writes ``_manifest.json`` (per-fragment chunk counts and doc-id zone
+    maps, read by the decode side's split planning and range pruning) and
+    ``_SUCCESS``. Raises before either if a task wrote a different number
+    of docs than it read. Returns a summary dict with the manifest totals.
     """
     import shutil
 
     from .encode import EncodeOptions
-    from ..sources.parquet_direct import write_file_manifest
 
     opts = options or EncodeOptions()
     if min_chunk_values is None:
         min_chunk_values = opts.max_chunk_values // 4
-    files = _list_files(in_path)
+    files = list_parquet_files(in_path)
     if not files:
         raise ValueError(f"no parquet files under {in_path}")
     if cuts is None:
@@ -822,28 +564,12 @@ def exchange_encode_fused_direct(
         n_tasks = spark.sparkContext.defaultParallelism
     if os.path.isdir(out_path):
         shutil.rmtree(out_path, ignore_errors=True)
-    groups = list(enumerate(_group_files(files, n_tasks)))
+    groups = list(enumerate(group_files_by_size(files, n_tasks)))
     manifest = _fused_direct_run(
         spark, groups, out_path, opts, cuts, key_fn, key_cols,
         min_chunk_values,
     )
-    write_file_manifest(
-        out_path,
-        {
-            os.path.relpath(r.path, out_path): int(r.n_chunks)
-            for r in manifest
-            if r.path
-        },
-        file_stats={
-            os.path.relpath(r.path, out_path): {
-                "min_doc_id": r.min_doc_id, "max_doc_id": r.max_doc_id
-            }
-            for r in manifest
-            if r.path
-        },
-    )
-    with open(os.path.join(out_path, "_SUCCESS"), "w"):
-        pass
+    commit_blocks(out_path, manifest)
     return {
         "n_fragments": sum(1 for r in manifest if r.path),
         "n_chunks": sum(r.n_chunks for r in manifest),
@@ -861,6 +587,44 @@ def exchange_encode_fused_direct(
     }
 
 
+def commit_blocks(out_path: str, rows) -> None:
+    """Seal a blocks table: ``_manifest.json`` from per-fragment rows
+    (``path``, ``n_chunks``, ``min_doc_id``, ``max_doc_id``; rows with an
+    empty ``path`` wrote no fragment) and then ``_SUCCESS``."""
+    frags = [r for r in rows if r.path]
+    write_file_manifest(
+        out_path,
+        {os.path.relpath(r.path, out_path): int(r.n_chunks) for r in frags},
+        file_stats={
+            os.path.relpath(r.path, out_path): {
+                "min_doc_id": r.min_doc_id, "max_doc_id": r.max_doc_id
+            }
+            for r in frags
+        },
+    )
+    with open(os.path.join(out_path, "_SUCCESS"), "w"):
+        pass
+
+
+_MANIFEST_SCHEMA = pa.schema(
+    [
+        ("task_id", pa.int32()),
+        ("path", pa.string()),
+        ("min_doc_id", pa.string()),
+        ("max_doc_id", pa.string()),
+        ("n_chunks", pa.int64()),
+        ("n_rows_read", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("n_values", pa.int64()),
+        ("bytes_raw", pa.int64()),
+        ("bytes_enc", pa.int64()),
+        ("bytes_ref", pa.int64()),
+        ("t_start", pa.float64()),
+        ("t_end", pa.float64()),
+    ]
+)
+
+
 def _fused_direct_run(
     spark: SparkSession,
     groups: list[tuple[int, list[str]]],
@@ -874,13 +638,12 @@ def _fused_direct_run(
     """Run fused encode for explicit ``(task_id, paths)`` groups, one
     worker-written fragment per task (atomic rename, deterministic name —
     a task retry or a resumed run overwrites, never duplicates). Returns
-    the collected per-task manifest rows. Shared by the one-shot direct
-    sink and the checkpoint-resumable job, which passes only its PENDING
-    task groups."""
+    the collected per-task manifest rows, after checking that every
+    planned task reported and wrote exactly the docs it read. Shared by
+    the one-shot sink and the checkpoint-resumable job, which passes only
+    its PENDING task groups."""
     cuts_b, cuts_w = _cuts_fixed_bytes(cuts)
     os.makedirs(out_path, exist_ok=True)
-    from ..sources.parquet_direct import task_rows_dataframe
-
     tasks = task_rows_dataframe(
         spark, groups, "task_id int, paths array<string>"
     )
@@ -889,29 +652,58 @@ def _fused_direct_run(
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import time as _time
 
-        from ..sources.parquet_direct import write_parquet_atomic
-
         for tb in batches:
             task_ids = tb.column("task_id").to_pylist()
             for task_id, paths in zip(task_ids, tb.column("paths").to_pylist()):
                 t0 = _time.time()
-                em = _run_fused_task(
-                    task_id, paths, opts, min_chunk_values,
-                    cuts_b, cuts_w, key_fn, read_cols,
-                )
+                em = _FusedChunkEmitter(opts, task_id, min_chunk_values)
+                n_read = 0
+                for path in paths:
+                    t = pq.read_table(path, columns=read_cols)
+                    n_read += t.num_rows
+                    if t.num_rows == 0:
+                        continue
+                    keys_b = _utf8_fixed_bytes(key_fn(t), cuts_w)
+                    # corpora are commonly written key-sorted within each
+                    # file (the generator's layout, and the natural shape of
+                    # a resharded corpus); then the argsort is the identity
+                    # and the row gather — a full copy of every token value
+                    # — is skipped entirely
+                    if keys_b.size < 2 or bool(
+                        np.all(keys_b[:-1] <= keys_b[1:])
+                    ):
+                        keys_sorted = keys_b
+                        t = t.combine_chunks()
+                    else:
+                        order = np.argsort(keys_b, kind="stable")
+                        keys_sorted = keys_b[order]
+                        t = t.take(pa.array(order)).combine_chunks()
+                    if cuts_b.size:
+                        buckets = np.searchsorted(
+                            cuts_b, keys_sorted, side="left"
+                        )
+                    else:
+                        buckets = np.zeros(keys_b.size, dtype=np.int64)
+                    tokens_arr = t.column("tokens").chunk(0)
+                    lengths = tokens_arr.value_lengths().to_numpy()
+                    values = tokens_arr.flatten().to_numpy(
+                        zero_copy_only=False
+                    ).astype(np.int32, copy=False)
+                    em.add_file(
+                        t.column("doc_id").chunk(0),
+                        lengths.astype(np.int64),
+                        values,
+                        buckets,
+                    )
+                em.flush()
                 out = em.batch()
-                n_chunks = n_rows = n_values = 0
-                b_raw = b_enc = b_ref = 0
+                final = ""
                 dmin = dmax = ""
-                final = os.path.join(out_path, f"part-{task_id:05d}.parquet")
                 if out is not None:
+                    final = os.path.join(
+                        out_path, f"part-{task_id:05d}.parquet"
+                    )
                     write_parquet_atomic(pa.Table.from_batches([out]), final)
-                    n_chunks = out.num_rows
-                    n_rows = sum(r["n_rows"] for r in em.rows)
-                    n_values = sum(r["n_values"] for r in em.rows)
-                    b_raw = sum(r["bytes_raw"] for r in em.rows)
-                    b_enc = sum(r["bytes_enc"] for r in em.rows)
-                    b_ref = sum(r["bytes_ref"] for r in em.rows)
                     # fragment zone map: the file-level envelope of the
                     # per-chunk doc-id spans, recorded in _manifest.json so
                     # range scans drop whole fragments before any footer.
@@ -927,43 +719,45 @@ def _fused_direct_run(
                 yield pa.RecordBatch.from_pydict(
                     {
                         "task_id": [task_id],
-                        "path": [final if out is not None else ""],
+                        "path": [final],
                         "min_doc_id": [dmin],
                         "max_doc_id": [dmax],
-                        "n_chunks": [n_chunks],
-                        "n_rows": [n_rows],
-                        "n_values": [n_values],
-                        "bytes_raw": [b_raw],
-                        "bytes_enc": [b_enc],
-                        "bytes_ref": [b_ref],
+                        "n_chunks": [len(em.rows)],
+                        "n_rows_read": [n_read],
+                        **{
+                            k: [sum(r[k] for r in em.rows)]
+                            for k in ("n_rows", "n_values", "bytes_raw",
+                                      "bytes_enc", "bytes_ref")
+                        },
                         # per-task wall span: lets callers separate worker
                         # busy time from scheduling/stragglers/serial driver
                         # work when diagnosing scaling (epoch seconds)
                         "t_start": [t0],
                         "t_end": [_time.time()],
                     },
-                    schema=pa.schema(
-                        [
-                            ("task_id", pa.int32()),
-                            ("path", pa.string()),
-                            ("min_doc_id", pa.string()),
-                            ("max_doc_id", pa.string()),
-                            ("n_chunks", pa.int64()),
-                            ("n_rows", pa.int64()),
-                            ("n_values", pa.int64()),
-                            ("bytes_raw", pa.int64()),
-                            ("bytes_enc", pa.int64()),
-                            ("bytes_ref", pa.int64()),
-                            ("t_start", pa.float64()),
-                            ("t_end", pa.float64()),
-                        ]
-                    ),
+                    schema=_MANIFEST_SCHEMA,
                 )
 
-    return tasks.mapInArrow(
-        fn,
-        "task_id int, path string, min_doc_id string, max_doc_id string, "
-        "n_chunks long, n_rows long, "
-        "n_values long, bytes_raw long, bytes_enc long, bytes_ref long, "
-        "t_start double, t_end double",
+    manifest = tasks.mapInArrow(
+        fn, from_arrow_schema(_MANIFEST_SCHEMA)
     ).collect()
+    _check_task_counts(groups, manifest)
+    return manifest
+
+
+def _check_task_counts(groups: list[tuple[int, list[str]]], manifest) -> None:
+    """Raise unless every planned task returned a manifest row and every
+    task wrote exactly as many docs as it read."""
+    missing = sorted(
+        {tid for tid, _ in groups} - {r.task_id for r in manifest}
+    )
+    lost = [
+        (r.task_id, r.n_rows_read, r.n_rows)
+        for r in manifest
+        if r.n_rows_read != r.n_rows
+    ]
+    if missing or lost:
+        raise RuntimeError(
+            f"fused encode count check failed: tasks without a manifest row "
+            f"{missing}; (task_id, docs read, docs written) mismatches {lost}"
+        )

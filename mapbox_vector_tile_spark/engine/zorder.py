@@ -24,7 +24,7 @@ sorts today (engine/exchange.py key_fn).
 Production note on domains: interleaving uses the low ``bits`` bits of
 each dimension, so real pipelines first quantize each dimension into
 ``2^bits`` cells (fixed divisor, or quantile ranks from a sampled CDF —
-the same ~100k-row sample partitioning.py already draws). The synthetic
+the same ~100k-row sample the fused exchange's cut planner draws). The synthetic
 corpus dims (doc number, n_tok) already fit 14 bits, so the gate exercises
 the interleave itself un-quantized.
 
@@ -82,8 +82,8 @@ def zorder_doc_len_key(table):
     """Arrow-side cluster key for the fused exchange: ``{zkey:010d}|doc_id``
     where zkey = interleave(doc number, n_tok).
 
-    Drop-in for ``exchange_encode_fused(key_fn=..., key_cols=("doc_id",
-    "n_tok"))`` — blocks then cluster along the Z-curve, so every chunk's
+    Drop-in for ``exchange_encode_fused_direct(key_fn=...,
+    key_cols=("doc_id", "n_tok"))`` — blocks then cluster along the Z-curve, so every chunk's
     zone maps bound BOTH the doc range and the length band (the
     2-D-pruning layout the audit above measures). Vectorized per BIT over
     numpy, zero per-row Python; the decimal zkey is left-padded to fixed

@@ -22,12 +22,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine.encode import (
-    _BLOCKS_ARROW_SCHEMA,
-    BLOCKS_SPARK_SCHEMA,
-    EncodeOptions,
-)
-
 
 def write_parquet_atomic(table: pa.Table, final: str) -> None:
     """Worker-side atomic parquet write: unique per-attempt tmp name (pid +
@@ -438,100 +432,6 @@ def _read_block_batches(
         )
 
 
-def encode_parquet_direct(
-    spark: SparkSession,
-    in_path: str,
-    options: EncodeOptions | None = None,
-    batch_rows: int = 4096,
-    bucket_from_dir: bool = False,
-    n_tasks: int | None = None,
-    buckets: list[int] | None = None,
-) -> DataFrame:
-    """Encode a tokens parquet dataset via worker-side columnar scans.
-
-    Returns the blocks DataFrame (same schema as
-    :func:`..engine.encode.encode_dataframe`). ``bucket_from_dir`` parses
-    ``bucket=N`` path segments (hive-partitioned layout) into the manifest.
-    ``n_tasks`` groups many small files into size-balanced tasks.
-    ``buckets`` restricts the scan to those ``bucket=N`` directories
-    (partition pruning for the resumable job's pending set).
-    """
-    from ..engine import encode as E
-
-    opts = options or EncodeOptions()
-    files = list_parquet_files(in_path)
-    if buckets is not None:
-        keep = {f"bucket={b}" for b in buckets}
-        files = [
-            f for f in files if keep.intersection(f.split(os.sep))
-        ]
-    if not files:
-        raise ValueError(f"no parquet files under {in_path}")
-    tasks = file_task_dataframe(spark, files, n_tasks)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else 0
-        seq = 0
-        for tb in batches:
-            for path in (
-                p for ps in tb.column("paths").to_pylist() for p in ps
-            ):
-                bucket = 0
-                if bucket_from_dir:
-                    for seg in path.split(os.sep):
-                        if seg.startswith("bucket="):
-                            bucket = int(seg.split("=", 1)[1])
-                pf = pq.ParquetFile(path)
-                for batch in pf.iter_batches(
-                    batch_size=batch_rows, columns=["doc_id", "tokens"]
-                ):
-                    if batch.num_rows == 0:
-                        continue
-                    lengths, values = E._flatten_tokens(batch)
-                    import numpy as np
-
-                    val_offsets = np.concatenate(([0], np.cumsum(lengths)))
-                    row_starts = E.chunk_row_starts(lengths, opts.max_chunk_values)
-                    doc_ids = batch.column("doc_id")
-                    if isinstance(doc_ids, pa.ChunkedArray):
-                        doc_ids = doc_ids.combine_chunks()
-                    rows, bounds = [], []
-                    for a, b in zip(row_starts[:-1], row_starts[1:]):
-                        if a == b:
-                            continue
-                        rows.append(
-                            E._encode_chunk(
-                                doc_ids.slice(a, b - a),
-                                lengths[a:b],
-                                values[val_offsets[a] : val_offsets[b]],
-                                opts,
-                                part_id,
-                                seq,
-                                bucket,
-                            )
-                        )
-                        bounds.append(a)
-                        seq += 1
-                    if not rows:
-                        continue
-                    bounds.append(row_starts[-1])
-                    doc_id_lists = pa.ListArray.from_arrays(
-                        pa.array(bounds, pa.int32()), doc_ids
-                    )
-                    cols = [
-                        doc_id_lists
-                        if f.name == "doc_ids"
-                        else pa.array([r[f.name] for r in rows], f.type)
-                        for f in _BLOCKS_ARROW_SCHEMA
-                    ]
-                    yield pa.RecordBatch.from_arrays(cols, schema=_BLOCKS_ARROW_SCHEMA)
-
-    return tasks.mapInArrow(fn, BLOCKS_SPARK_SCHEMA)
-
-
 def decode_stats_direct(
     spark: SparkSession,
     blocks_path: str,
@@ -599,7 +499,7 @@ def decode_to_parquet_direct(
     doc_range: tuple[str, str] | None = None,
 ) -> int:
     """Decode a blocks dataset straight to a tokens parquet dataset — the
-    sink-side twin of :func:`encode_parquet_direct`: each task decodes its
+    inverse of the fused encode's worker-side sink: each task decodes its
     block-file group and writes one tokens file with pyarrow (deterministic
     name, atomic rename, ``_SUCCESS`` marker), so the decoded arrays never
     cross the JVM row boundary. Returns rows written.

@@ -31,8 +31,8 @@ def start_encode_stream(
     ``foreachBatch`` is at-least-once: a batch whose write committed but
     whose stream-checkpoint record didn't is replayed on restart. Each
     micro-batch therefore writes to its own ``batch_id=`` partition with
-    dynamic partition overwrite (mirroring ``engine/checkpoint.py``), so a
-    replay overwrites its own output instead of appending duplicates.
+    dynamic partition overwrite, so a replay overwrites its own output
+    instead of appending duplicates.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,27 +1,23 @@
-"""Size-weighted partitioning + checkpoint/resume tests (SURVEY §5 plan:
-kill after k partitions, rerun, assert only pending ran and result equals an
+"""Checkpoint/resume tests for the fused resumable job (SURVEY §5 plan:
+kill after k tasks, rerun, assert only pending ran and result equals an
 uninterrupted run)."""
 
-import numpy as np
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.checkpoint import (
-    encode_with_checkpoint,
-    read_checkpoint,
+    encode_with_checkpoint_fused,
 )
 from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-from mapbox_vector_tile_spark.engine.partitioning import (
-    bucket_of_value,
-    hash_perfect_labels,
-    size_weighted_repartition,
-    weighted_cuts,
-)
 from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
 
 N_DOCS = 500
 N_BUCKETS = 8
+N_TASKS = 6
 
 
 @pytest.fixture(scope="module")
@@ -31,81 +27,63 @@ def tokens_df(spark):
     return df
 
 
-def test_hash_perfect_labels(spark):
-    labels = hash_perfect_labels(spark, N_BUCKETS)
-    got = (
-        spark.createDataFrame([(x,) for x in labels], "label int")
-        .select(F.pmod(F.hash("label"), F.lit(N_BUCKETS)).alias("p"))
-        .collect()
-    )
-    assert sorted(r.p for r in got) == list(range(N_BUCKETS))
+@pytest.fixture(scope="module")
+def tokens_pq(spark, tokens_df, tmp_path_factory):
+    # more files than tasks, so every task owns a file group
+    path = str(tmp_path_factory.mktemp("ckpt") / "tokens")
+    tokens_df.repartition(12).write.parquet(path)
+    return path
 
 
-def test_size_weighted_balance(spark, tokens_df):
-    bucketed = size_weighted_repartition(tokens_df, N_BUCKETS, sample_fraction=1.0)
-    per_bucket = (
-        bucketed.groupBy(F.spark_partition_id().alias("pid"), "bucket")
-        .agg(F.sum("n_tok").alias("w"))
-        .collect()
-    )
-    # exactly one bucket per spark partition
-    assert len({r.pid for r in per_bucket}) == len(per_bucket)
-    weights = np.array([r.w for r in per_bucket], dtype=float)
-    assert weights.size == N_BUCKETS
-    # byte balance despite 8192-token outlier docs: max <= 2x mean
-    assert weights.max() <= 2.0 * weights.mean()
-
-
-def test_bucket_of_value_mirror(spark, tokens_df):
-    cuts = weighted_cuts(tokens_df, N_BUCKETS, "doc_id", "n_tok", sample_fraction=1.0)
-    bucketed = size_weighted_repartition(tokens_df, N_BUCKETS, sample_fraction=1.0)
-    for r in bucketed.select("doc_id", "bucket").limit(50).collect():
-        assert r.bucket == bucket_of_value(cuts, r.doc_id)
-
-
-def test_resume_equals_uninterrupted(spark, tokens_df, tmp_path):
+def test_resume_equals_uninterrupted(spark, tokens_df, tokens_pq, tmp_path):
     out1 = str(tmp_path / "blocks_full")
     ck1 = str(tmp_path / "ckpt_full")
-    s = encode_with_checkpoint(spark, tokens_df, out1, ck1, N_BUCKETS)
-    assert s["buckets_processed"] == s["buckets_total"]
+    s = encode_with_checkpoint_fused(
+        spark, tokens_pq, out1, ck1, N_BUCKETS, n_tasks=N_TASKS
+    )
+    assert s["tasks_processed"] == s["tasks_total"] == N_TASKS
 
     out2 = str(tmp_path / "blocks_resumed")
     ck2 = str(tmp_path / "ckpt_resumed")
-    # "crash" after 3 buckets
-    s1 = encode_with_checkpoint(
-        spark, tokens_df, out2, ck2, N_BUCKETS, fail_after_buckets=3
+    # "crash" after 3 tasks
+    s1 = encode_with_checkpoint_fused(
+        spark, tokens_pq, out2, ck2, N_BUCKETS, n_tasks=N_TASKS,
+        fail_after_tasks=3,
     )
-    assert s1["buckets_processed"] == 3
-    # resume: only the pending buckets run
-    s2 = encode_with_checkpoint(spark, tokens_df, out2, ck2, N_BUCKETS)
-    assert s2["buckets_processed"] == s2["buckets_total"] - 3
+    assert s1["tasks_processed"] == 3
+    # resume: only the pending tasks run
+    s2 = encode_with_checkpoint_fused(
+        spark, tokens_pq, out2, ck2, N_BUCKETS, n_tasks=N_TASKS
+    )
+    assert s2["tasks_processed"] == s2["tasks_total"] - 3
     # third call: nothing pending
-    s3 = encode_with_checkpoint(spark, tokens_df, out2, ck2, N_BUCKETS)
-    assert s3["buckets_processed"] == 0
+    s3 = encode_with_checkpoint_fused(
+        spark, tokens_pq, out2, ck2, N_BUCKETS, n_tasks=N_TASKS
+    )
+    assert s3["tasks_processed"] == 0
 
     full = spark.read.parquet(out1)
     resumed = spark.read.parquet(out2)
     # identical decoded contents
     res = verify_roundtrip(tokens_df, decode_dataframe(resumed)).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (N_DOCS, N_DOCS, 0)
-    # identical byte totals (same partitioning -> same chunks)
+    # identical byte totals (same plan -> same chunks)
     a = full.agg(F.sum("bytes_enc"), F.sum("n_values"), F.sum("n_rows")).first()
     b = resumed.agg(F.sum("bytes_enc"), F.sum("n_values"), F.sum("n_rows")).first()
     assert tuple(a) == tuple(b)
 
-    ck = read_checkpoint(spark, ck2)
-    assert ck.count() == s1["buckets_total"]  # one lineage row per bucket
+    ck = spark.read.parquet(ck2)
+    assert ck.count() == s1["tasks_total"]  # one lineage row per task
     assert {r.status for r in ck.select("status").distinct().collect()} == {"done"}
 
 
-def test_bucket_plan_persisted_and_reused(spark, tokens_df, tmp_path):
-    import json
-    import os
-
+def test_bucket_plan_persisted_and_reused(spark, tokens_df, tokens_pq,
+                                          tmp_path):
     out = str(tmp_path / "blocks_plan")
     ck = str(tmp_path / "ckpt_plan")
-    encode_with_checkpoint(
-        spark, tokens_df, out, ck, N_BUCKETS, fail_after_buckets=2
+    encode_with_checkpoint_fused(
+        spark, tokens_pq, out, ck, N_BUCKETS, n_tasks=N_TASKS,
+        fail_after_tasks=2,
     )
     plan_path = os.path.join(ck, "_bucket_plan.json")
     assert os.path.exists(plan_path)
@@ -113,31 +91,39 @@ def test_bucket_plan_persisted_and_reused(spark, tokens_df, tmp_path):
         plan = json.load(f)
     assert plan["num_partitions"] == N_BUCKETS
     assert len(plan["cuts"]) == N_BUCKETS - 1
-    # resume with a different bucketing must fail fast
-    with pytest.raises(ValueError, match="bucket plan mismatch"):
-        encode_with_checkpoint(spark, tokens_df, out, ck, N_BUCKETS * 2)
-    with pytest.raises(ValueError, match="bucket plan mismatch"):
-        encode_with_checkpoint(
-            spark, tokens_df, out, ck, N_BUCKETS, sort_col="source"
+    assert len(plan["groups"]) == N_TASKS
+    # resume with a different bucketing or cluster key must fail fast
+    with pytest.raises(ValueError, match="plan mismatch"):
+        encode_with_checkpoint_fused(spark, tokens_pq, out, ck, N_BUCKETS * 2)
+    with pytest.raises(ValueError, match="plan mismatch"):
+        encode_with_checkpoint_fused(
+            spark, tokens_pq, out, ck, N_BUCKETS, key_name="regime|doc_id"
         )
-    # normal resume still completes and round-trips
-    s = encode_with_checkpoint(spark, tokens_df, out, ck, N_BUCKETS)
-    assert s["buckets_processed"] == s["buckets_total"] - 2
+    # the persisted grouping wins over a different cluster size
+    s = encode_with_checkpoint_fused(
+        spark, tokens_pq, out, ck, N_BUCKETS, n_tasks=2
+    )
+    assert s["tasks_processed"] == s["tasks_total"] - 2 == N_TASKS - 2
     res = verify_roundtrip(
         tokens_df, decode_dataframe(spark.read.parquet(out))
     ).first()
     assert res.n_mismatch == 0 and res.n_docs == N_DOCS
 
 
-def test_rerun_of_done_bucket_is_idempotent(spark, tokens_df, tmp_path):
+def test_rerun_of_done_bucket_is_idempotent(spark, tokens_df, tokens_pq,
+                                            tmp_path):
     out = str(tmp_path / "blocks_idem")
     ck_a = str(tmp_path / "ckpt_a")
     ck_b = str(tmp_path / "ckpt_b")
-    encode_with_checkpoint(spark, tokens_df, out, ck_a, N_BUCKETS)
+    encode_with_checkpoint_fused(
+        spark, tokens_pq, out, ck_a, N_BUCKETS, n_tasks=N_TASKS
+    )
     n1 = spark.read.parquet(out).count()
-    # fresh checkpoint dir: every bucket reruns into the same out_dir;
-    # dynamic partition overwrite must not duplicate rows
-    encode_with_checkpoint(spark, tokens_df, out, ck_b, N_BUCKETS)
+    # fresh checkpoint dir: every task reruns into the same out_dir;
+    # deterministic fragment names must not duplicate rows
+    encode_with_checkpoint_fused(
+        spark, tokens_pq, out, ck_b, N_BUCKETS, n_tasks=N_TASKS
+    )
     n2 = spark.read.parquet(out).count()
     assert n1 == n2
     res = verify_roundtrip(
@@ -149,13 +135,6 @@ def test_rerun_of_done_bucket_is_idempotent(spark, tokens_df, tmp_path):
 def test_fused_resume_equals_uninterrupted(spark, tokens_df, tmp_path):
     """Fused flagship path: crash after 2 tasks, resume, third run is a
     no-op; final table byte-identical to an uninterrupted run."""
-    import json
-    import os
-
-    from mapbox_vector_tile_spark.engine.checkpoint import (
-        encode_with_checkpoint_fused,
-    )
-
     tokens_pq = str(tmp_path / "tokens")
     tokens_df.write.parquet(tokens_pq, mode="overwrite")
 
@@ -207,13 +186,6 @@ def test_fused_resume_from_pre_envelope_checkpoint(spark, tokens_df,
     min_doc_id/max_doc_id columns (12-column schema) must not fail or
     silently corrupt the manifest: mergeSchema reconciles the mix, and
     pre-envelope rows land as null stats (conservative keep at scan)."""
-    import json
-    import os
-
-    from mapbox_vector_tile_spark.engine.checkpoint import (
-        encode_with_checkpoint_fused,
-    )
-
     tokens_pq = str(tmp_path / "tokens")
     tokens_df.write.parquet(tokens_pq, mode="overwrite")
     out, ck = str(tmp_path / "b"), str(tmp_path / "c")

@@ -111,21 +111,24 @@ def test_compact_multibucket_fused_blocks(spark, tokens_df, tmp_path):
     """Blocks from the fused multi-bucket exchange compact per bucket:
     bucket zone maps stay intact and the round trip is bit-exact."""
     from mapbox_vector_tile_spark.engine.exchange import (
-        exchange_encode_fused,
+        exchange_encode_fused_direct,
         regime_doc_key,
     )
 
     tokens_pq = str(tmp_path / "tokens")
+    blocks_pq = str(tmp_path / "blocks")
     tokens_df.write.parquet(tokens_pq)
-    blocks = exchange_encode_fused(
+    exchange_encode_fused_direct(
         spark,
         tokens_pq,
+        blocks_pq,
         6,
         key_fn=regime_doc_key,
         n_tasks=4,
         min_chunk_values=0,
         options=EncodeOptions(max_chunk_values=1 << 11),
-    ).cache()
+    )
+    blocks = spark.read.parquet(blocks_pq).cache()
     compacted = compact_blocks(blocks, EncodeOptions()).cache()
     assert compacted.count() < blocks.count()
     # bucket range preserved: every output chunk's [bucket, bucket_max]

@@ -1,20 +1,20 @@
-"""File-level size-weighted exchange: must produce the same bucket
-membership contract as the Catalyst repartition operator, with sorted
-fragments, balanced buckets, and a lossless end-to-end round trip."""
+"""Fused size-weighted exchange + encode: every doc lands in the bucket
+its cluster key selects, buckets balance, chunks stay sorted, and the round
+trip is lossless."""
+
+from bisect import bisect_left
 
 import numpy as np
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.exchange import (
     doc_id_key,
+    exchange_encode_fused_direct,
     plan_weighted_cuts,
     regime_doc_key,
-    size_weighted_exchange,
 )
-from mapbox_vector_tile_spark.engine.partitioning import bucket_of_value
 from mapbox_vector_tile_spark.engine.verify import (
     doc_num_expr,
     regime_expr,
@@ -43,28 +43,37 @@ def test_plan_cuts_deterministic(spark, tokens_pq):
 
 
 def test_exchange_membership_balance_sortedness(spark, tokens_pq, tmp_path):
-    out = str(tmp_path / "bucketed")
-    summary = size_weighted_exchange(
-        spark, tokens_pq, out, N_BUCKETS, key_fn=doc_id_key
+    out = str(tmp_path / "blocks")
+    # min_chunk_values=0: strict chunk/bucket homogeneity; one input file
+    # per task, so every chunk is one sorted run
+    summary = exchange_encode_fused_direct(
+        spark, tokens_pq, out, N_BUCKETS, key_fn=doc_id_key,
+        n_tasks=len(list_parquet_files(tokens_pq)), min_chunk_values=0,
     )
     assert summary["n_rows"] == N_DOCS
-    assert summary["n_buckets"] == N_BUCKETS
     cuts = summary["cuts"]
+    blocks = spark.read.parquet(out).select(
+        "bucket", "bucket_max", "doc_ids", "n_values"
+    ).collect()
+    assert {r.bucket for r in blocks} == set(range(N_BUCKETS))
 
-    # balance: max bucket weight <= 2x mean (same bar as the Catalyst op)
-    weights = np.array(list(summary["bucket_weights"].values()), dtype=float)
+    # balance: max bucket weight <= 2x mean
+    per_bucket: dict[int, int] = {}
+    for r in blocks:
+        per_bucket[r.bucket] = per_bucket.get(r.bucket, 0) + r.n_values
+    weights = np.array(list(per_bucket.values()), dtype=float)
     assert weights.max() <= 2.0 * weights.mean()
 
-    # membership matches the driver-side mirror of the bucket expression
-    bucketed = spark.read.option("basePath", out).parquet(out)
-    assert bucketed.count() == N_DOCS
-    for r in bucketed.select("doc_id", "bucket").collect():
-        assert r.bucket == bucket_of_value(cuts, r.doc_id)
-
-    # every fragment is sorted by the cluster key
-    for f in list_parquet_files(out):
-        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
-        assert ids == sorted(ids)
+    # membership: every doc sits in the bucket its key selects
+    n = 0
+    for r in blocks:
+        assert r.bucket == r.bucket_max
+        for d in r.doc_ids:
+            assert bisect_left(cuts, d) == r.bucket
+        # every chunk is sorted by the cluster key
+        assert list(r.doc_ids) == sorted(r.doc_ids)
+        n += len(r.doc_ids)
+    assert n == N_DOCS
 
 
 def test_regime_key_matches_spark_expr(spark, tokens_pq):
@@ -88,23 +97,19 @@ def test_regime_key_matches_spark_expr(spark, tokens_pq):
 
 
 def test_exchange_encode_decode_roundtrip(spark, tokens_pq, tmp_path):
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
     from mapbox_vector_tile_spark.sources.parquet_direct import (
         decode_blocks_direct,
-        encode_parquet_direct,
     )
 
-    out = str(tmp_path / "bucketed")
     blocks_pq = str(tmp_path / "blocks")
-    size_weighted_exchange(
-        spark, tokens_pq, out, N_BUCKETS, key_fn=regime_doc_key
+    exchange_encode_fused_direct(
+        spark, tokens_pq, blocks_pq, N_BUCKETS, key_fn=regime_doc_key,
+        n_tasks=8, min_chunk_values=0,
     )
-    encode_parquet_direct(
-        spark, out, EncodeOptions(), bucket_from_dir=True, n_tasks=8
-    ).write.parquet(blocks_pq)
     blocks = spark.read.parquet(blocks_pq)
     # chunks are bucket-homogeneous and cover all buckets
     assert blocks.select("bucket").distinct().count() == N_BUCKETS
+    assert blocks.filter(F.col("bucket") != F.col("bucket_max")).count() == 0
     decoded = decode_blocks_direct(spark, blocks_pq, n_tasks=4)
     res = verify_roundtrip(spark.read.parquet(tokens_pq), decoded).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (N_DOCS, N_DOCS, 0)
@@ -113,7 +118,6 @@ def test_exchange_encode_decode_roundtrip(spark, tokens_pq, tmp_path):
 def test_checksum_verify_matches_catalyst_and_detects_mismatch(
     spark, tokens_pq, tmp_path
 ):
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
     from mapbox_vector_tile_spark.engine.verify import (
         verify_roundtrip_checksums,
         with_doc_checksums,
@@ -121,7 +125,6 @@ def test_checksum_verify_matches_catalyst_and_detects_mismatch(
     from mapbox_vector_tile_spark.sources.parquet_direct import (
         decoded_doc_checksums_direct,
         doc_checksums_direct,
-        encode_parquet_direct,
     )
 
     # worker-side checksums == Catalyst aggregate checksums, doc by doc
@@ -138,9 +141,7 @@ def test_checksum_verify_matches_catalyst_and_detects_mismatch(
     assert direct == catalyst
 
     blocks_pq = str(tmp_path / "blocks")
-    encode_parquet_direct(spark, tokens_pq, EncodeOptions()).write.parquet(
-        blocks_pq
-    )
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, N_BUCKETS)
     o = doc_checksums_direct(spark, tokens_pq)
     d = decoded_doc_checksums_direct(spark, blocks_pq)
     res = verify_roundtrip_checksums(o, d).first()
@@ -153,57 +154,52 @@ def test_checksum_verify_matches_catalyst_and_detects_mismatch(
 
 
 def test_direct_checkpoint_resume(spark, tokens_pq, tmp_path):
-    """Scale-path resumable encode (exchange + direct scans): crash after 3
-    buckets, resume finishes only the pending set, result round-trips, and a
-    mismatched bucketing fails fast."""
+    """Resumable fused encode with the regime key: crash after 3 tasks,
+    resume finishes only the pending set, result round-trips, and a
+    mismatched cluster key fails fast."""
     from mapbox_vector_tile_spark.engine.checkpoint import (
-        encode_with_checkpoint_direct,
-        read_checkpoint,
+        encode_with_checkpoint_fused,
     )
     from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-    from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
 
     out = str(tmp_path / "blocks")
     ck = str(tmp_path / "ckpt")
-    s1 = encode_with_checkpoint_direct(
-        spark, tokens_pq, out, ck, N_BUCKETS, fail_after_buckets=3,
+    s1 = encode_with_checkpoint_fused(
+        spark, tokens_pq, out, ck, N_BUCKETS, fail_after_tasks=3,
         key_name="regime|doc_id",
     )
-    assert s1["buckets_processed"] == 3
-    with pytest.raises(ValueError, match="bucket plan mismatch"):
-        encode_with_checkpoint_direct(
+    assert s1["tasks_processed"] == 3
+    with pytest.raises(ValueError, match="plan mismatch"):
+        encode_with_checkpoint_fused(
             spark, tokens_pq, out, ck, N_BUCKETS, key_name="doc_id"
         )
-    s2 = encode_with_checkpoint_direct(
+    s2 = encode_with_checkpoint_fused(
         spark, tokens_pq, out, ck, N_BUCKETS, key_name="regime|doc_id"
     )
-    assert s2["buckets_processed"] == s2["buckets_total"] - 3
-    s3 = encode_with_checkpoint_direct(
+    assert s2["tasks_processed"] == s2["tasks_total"] - 3
+    s3 = encode_with_checkpoint_fused(
         spark, tokens_pq, out, ck, N_BUCKETS, key_name="regime|doc_id"
     )
-    assert s3["buckets_processed"] == 0
+    assert s3["tasks_processed"] == 0
     res = verify_roundtrip(
         spark.read.parquet(tokens_pq),
         decode_dataframe(spark.read.parquet(out)),
     ).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (N_DOCS, N_DOCS, 0)
-    ck_df = read_checkpoint(spark, ck)
-    assert ck_df.count() == s2["buckets_total"]
+    assert spark.read.parquet(ck).count() == s2["tasks_total"]
 
 
 def test_fused_exchange_encode_roundtrip(spark, tokens_pq, tmp_path):
-    """Fused path must decode bit-identical to the source and match the
-    two-phase path's bucket structure and compression ballpark."""
+    """Fused path must decode bit-identical to the source, and strict
+    bucket homogeneity must cost little compression vs merged tails."""
     from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-    from mapbox_vector_tile_spark.engine.exchange import exchange_encode_fused
 
     blocks_pq = str(tmp_path / "blocks_fused")
     # min_chunk_values=0: strict chunk/bucket homogeneity (partitionBy mode)
-    blocks = exchange_encode_fused(
-        spark, tokens_pq, N_BUCKETS, key_fn=regime_doc_key, n_tasks=4,
-        min_chunk_values=0,
+    exchange_encode_fused_direct(
+        spark, tokens_pq, blocks_pq, N_BUCKETS, key_fn=regime_doc_key,
+        n_tasks=4, min_chunk_values=0,
     )
-    blocks.write.partitionBy("bucket").parquet(blocks_pq)
     written = spark.read.parquet(blocks_pq)
     assert written.select("bucket").distinct().count() == N_BUCKETS
     res = verify_roundtrip(
@@ -211,23 +207,13 @@ def test_fused_exchange_encode_roundtrip(spark, tokens_pq, tmp_path):
     ).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (N_DOCS, N_DOCS, 0)
 
-    # compression within ~5% of the two-phase (exchange -> encode) path
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-    from mapbox_vector_tile_spark.engine.exchange import size_weighted_exchange
-    from mapbox_vector_tile_spark.sources.parquet_direct import (
-        encode_parquet_direct,
-    )
-
-    bucketed = str(tmp_path / "bucketed_2p")
-    size_weighted_exchange(
-        spark, tokens_pq, bucketed, N_BUCKETS, key_fn=regime_doc_key, n_tasks=4
-    )
-    two_phase = encode_parquet_direct(
-        spark, bucketed, EncodeOptions(), bucket_from_dir=True
+    # compression within ~5% of the default (merged-tail) layout
+    merged = exchange_encode_fused_direct(
+        spark, tokens_pq, str(tmp_path / "blocks_merged"), N_BUCKETS,
+        key_fn=regime_doc_key, n_tasks=4,
     )
     b1 = written.agg(F.sum("bytes_enc")).first()[0]
-    b2 = two_phase.agg(F.sum("bytes_enc")).first()[0]
-    assert b1 <= 1.05 * b2
+    assert b1 <= 1.05 * merged["bytes_enc"]
 
 
 def test_fused_min_chunk_merging(spark, tokens_pq, tmp_path):
@@ -235,16 +221,15 @@ def test_fused_min_chunk_merging(spark, tokens_pq, tmp_path):
     O(tasks), not O(tasks x buckets), the round trip is still bit-exact, and
     every chunk's bucket is its first row's bucket under the shared cuts."""
     from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-    from mapbox_vector_tile_spark.engine.exchange import exchange_encode_fused
 
     blocks_pq = str(tmp_path / "blocks_merged")
     cuts = plan_weighted_cuts(
         spark, list_parquet_files(tokens_pq), N_BUCKETS, key_fn=regime_doc_key
     )
-    exchange_encode_fused(
-        spark, tokens_pq, N_BUCKETS, key_fn=regime_doc_key, n_tasks=4,
-        cuts=cuts,
-    ).write.parquet(blocks_pq)
+    exchange_encode_fused_direct(
+        spark, tokens_pq, blocks_pq, N_BUCKETS, key_fn=regime_doc_key,
+        n_tasks=4, cuts=cuts,
+    )
     written = spark.read.parquet(blocks_pq)
     n_chunks = written.count()
     # the corpus is far below min_chunk_values per task: every task's
@@ -260,7 +245,7 @@ def test_fused_min_chunk_merging(spark, tokens_pq, tmp_path):
         keys = [
             f"{int(r)}|{d}" for r, d in zip(regime_of(nums), row.doc_ids)
         ]
-        assert row.bucket == bucket_of_value(cuts, min(keys))
+        assert row.bucket == bisect_left(cuts, min(keys))
     res = verify_roundtrip(
         spark.read.parquet(tokens_pq), decode_dataframe(written)
     ).first()
@@ -268,47 +253,41 @@ def test_fused_min_chunk_merging(spark, tokens_pq, tmp_path):
 
 
 def test_exchange_task_retry_overwrites(spark, tokens_pq, tmp_path):
-    # deterministic fragment names: rerunning the exchange into the same
+    # deterministic fragment names: rerunning the encode into the same
     # directory must not duplicate rows (the task-retry contract)
-    out = str(tmp_path / "bucketed")
-    s1 = size_weighted_exchange(spark, tokens_pq, out, N_BUCKETS)
-    s2 = size_weighted_exchange(spark, tokens_pq, out, N_BUCKETS)
+    out = str(tmp_path / "blocks")
+    s1 = exchange_encode_fused_direct(spark, tokens_pq, out, N_BUCKETS)
+    s2 = exchange_encode_fused_direct(spark, tokens_pq, out, N_BUCKETS)
     assert s1["cuts"] == s2["cuts"]
-    assert spark.read.option("basePath", out).parquet(out).count() == N_DOCS
+    written = spark.read.parquet(out).agg(F.sum("n_rows")).first()[0]
+    assert written == N_DOCS
 
 
 def test_exchange_rerun_at_different_parallelism_wipes_stale_fragments(
     spark, tokens_pq, tmp_path
 ):
-    """An interrupted exchange redone at different parallelism groups files
+    """An interrupted encode redone at different parallelism groups files
     differently (fragment names = part-{task_id}); stale fragments from the
     first attempt must not survive as duplicate rows."""
     import os
 
-    out = str(tmp_path / "bucketed")
-    size_weighted_exchange(spark, tokens_pq, out, N_BUCKETS, n_tasks=4)
+    out = str(tmp_path / "blocks")
+    exchange_encode_fused_direct(spark, tokens_pq, out, N_BUCKETS, n_tasks=4)
     # simulate the interruption: drop _SUCCESS, leave all 4-task fragments
     os.remove(os.path.join(out, "_SUCCESS"))
     # resume at different parallelism -> different part-ids
-    size_weighted_exchange(spark, tokens_pq, out, N_BUCKETS, n_tasks=2)
-    assert spark.read.option("basePath", out).parquet(out).count() == N_DOCS
+    exchange_encode_fused_direct(spark, tokens_pq, out, N_BUCKETS, n_tasks=2)
+    written = spark.read.parquet(out).agg(F.sum("n_rows")).first()[0]
+    assert written == N_DOCS
 
 
-def test_fused_direct_sink_matches_dataframe_form(spark, tokens_pq, tmp_path):
-    """Worker-side sink: same chunks, sizes, and bit-identical decode as the
-    DataFrame form; manifest sidecar carries per-fragment chunk counts."""
+def test_fused_direct_summary_matches_written(spark, tokens_pq, tmp_path):
+    """The summary totals equal the written table's; the manifest sidecar
+    carries per-fragment chunk counts; decode is bit-identical."""
     import json
     import os
 
     from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-    from mapbox_vector_tile_spark.engine.exchange import (
-        exchange_encode_fused,
-        exchange_encode_fused_direct,
-        plan_weighted_cuts,
-    )
-    from mapbox_vector_tile_spark.sources.parquet_direct import (
-        list_parquet_files,
-    )
 
     cuts = plan_weighted_cuts(
         spark, list_parquet_files(tokens_pq), N_BUCKETS, key_fn=regime_doc_key
@@ -318,18 +297,15 @@ def test_fused_direct_sink_matches_dataframe_form(spark, tokens_pq, tmp_path):
         spark, tokens_pq, out, N_BUCKETS, key_fn=regime_doc_key,
         n_tasks=4, cuts=cuts,
     )
-    df_form = exchange_encode_fused(
-        spark, tokens_pq, N_BUCKETS, key_fn=regime_doc_key,
-        n_tasks=4, cuts=cuts,
-    )
-    agg = df_form.agg(
-        F.count(F.lit(1)), F.sum("n_values"), F.sum("bytes_enc")
+    written = spark.read.parquet(out)
+    agg = written.agg(
+        F.count(F.lit(1)), F.sum("n_values"), F.sum("bytes_enc"),
+        F.sum("n_rows"),
     ).first()
     assert summary["n_chunks"] == agg[0]
     assert summary["n_values"] == agg[1]
     assert summary["bytes_enc"] == agg[2]
-    written = spark.read.parquet(out)
-    assert written.count() == summary["n_chunks"]
+    assert summary["n_rows"] == agg[3] == N_DOCS
     res = verify_roundtrip(
         spark.read.parquet(tokens_pq), decode_dataframe(written)
     ).first()

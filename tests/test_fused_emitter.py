@@ -1,0 +1,176 @@
+"""Doc conservation through the fused encode's chunk emitter.
+
+Property: whatever the layout — zero-token docs, buckets holding only
+zero-token docs, docs longer than ``max_chunk_values``, one bucket, many
+files forcing pin-window and budget drains — the doc ids and per-doc tokens
+that come out of the emitted chunks equal those that went in. The emitter
+is pure Python, so the property runs without a Spark session; one Spark case
+drives the same edges through ``exchange_encode_fused_direct``.
+"""
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import example, given, settings, strategies as st
+
+from mapbox_vector_tile_spark.engine.decode import decode_block_row
+from mapbox_vector_tile_spark.engine.encode import EncodeOptions
+from mapbox_vector_tile_spark.engine.exchange import _FusedChunkEmitter
+
+MAX_CHUNK = 64
+
+# one file = rows sorted by cluster key: (n_tokens, bucket) with buckets
+# non-decreasing; lengths straddle 0 and MAX_CHUNK on purpose
+docs_st = st.lists(
+    st.tuples(
+        st.one_of(st.just(0), st.integers(0, 20), st.integers(50, 150)),
+        st.integers(0, 4),
+    ),
+    min_size=0,
+    max_size=12,
+).map(lambda ds: sorted(ds, key=lambda d: d[1]))
+files_st = st.lists(docs_st, min_size=1, max_size=12)
+
+
+def _run_emitter(files, min_chunk, pin_window, budget, seed=0):
+    """Feed ``files`` through one emitter; return (docs in, docs out) as
+    ``{doc_id: tokens}`` plus the emitter."""
+    rng = np.random.default_rng(seed)
+    em = _FusedChunkEmitter(
+        EncodeOptions(max_chunk_values=MAX_CHUNK),
+        task_id=0,
+        min_chunk_values=min_chunk,
+        buffer_budget_values=budget,
+        pin_window=pin_window,
+    )
+    want = {}
+    for f, docs in enumerate(files):
+        lengths = np.array([n for n, _ in docs], dtype=np.int64)
+        buckets = np.array([b for _, b in docs], dtype=np.int64)
+        values = rng.integers(-1000, 1000, int(lengths.sum()), dtype=np.int32)
+        ids = [f"f{f:02d}-{i:03d}" for i in range(len(docs))]
+        off = np.concatenate(([0], np.cumsum(lengths)))
+        for i, d in enumerate(ids):
+            want[d] = values[off[i] : off[i + 1]].tolist()
+        em.add_file(pa.array(ids, pa.string()), lengths, values, buckets)
+    em.flush()
+    got = {}
+    for row, docs in zip(em.rows, em.chunk_docs):
+        lengths, values = decode_block_row(
+            row["payload"], row["lengths_blob"], row["checksum"]
+        )
+        assert row["n_rows"] == len(docs) == lengths.size
+        off = np.concatenate(([0], np.cumsum(lengths)))
+        for i, d in enumerate(docs.to_pylist()):
+            assert d not in got, f"doc {d} emitted twice"
+            got[d] = values[off[i] : off[i + 1]].tolist()
+    return want, got, em
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    files=files_st,
+    min_chunk=st.sampled_from([0, 16, MAX_CHUNK]),
+    pin_window=st.sampled_from([1, 2, 8]),
+    budget=st.sampled_from([MAX_CHUNK, 2 * MAX_CHUNK, 1 << 20]),
+)
+# the reported repro: 6 docs in, 3 of them zero-token, 3 came out
+@example(
+    files=[[(40, 0), (40, 0), (0, 0), (5, 1), (0, 2), (0, 2)]],
+    min_chunk=16, pin_window=8, budget=1 << 20,
+)
+# zero-token docs alone
+@example(files=[[(0, 0), (0, 0), (0, 1)]], min_chunk=16, pin_window=8,
+         budget=1 << 20)
+@example(files=[[(0, 0), (0, 3)]], min_chunk=0, pin_window=8, budget=1 << 20)
+# a bucket of only zero-token docs between full buckets
+@example(files=[[(30, 0), (0, 1), (0, 1), (30, 2)]], min_chunk=16,
+         pin_window=8, budget=1 << 20)
+# docs longer than max_chunk_values, around zero-token docs
+@example(files=[[(0, 0), (150, 0), (0, 0), (90, 1)]], min_chunk=16,
+         pin_window=8, budget=1 << 20)
+# every doc in one bucket, across files
+@example(files=[[(10, 0)] * 5, [(0, 0)] * 3, [(70, 0), (0, 0)]],
+         min_chunk=16, pin_window=8, budget=1 << 20)
+# many files: pin-window and budget drains, tails of zero-token docs held
+@example(
+    files=[[(40, 0), (40, 0), (0, 0), (5, 1), (0, 2)] for _ in range(10)],
+    min_chunk=16, pin_window=2, budget=MAX_CHUNK,
+)
+def test_emitter_conserves_docs_and_tokens(files, min_chunk, pin_window,
+                                           budget):
+    want, got, _ = _run_emitter(files, min_chunk, pin_window, budget)
+    assert got == want
+
+
+def test_emitter_chunks_respect_bucket_range():
+    """Every emitted chunk's [bucket, bucket_max] covers the buckets of its
+    docs, zero-token ones included, and strict mode keeps chunks pure."""
+    files = [[(30, 0), (0, 1), (0, 1), (30, 2), (0, 3)]]
+    bucket_of = {f"f00-{i:03d}": b for i, (_, b) in enumerate(files[0])}
+    for min_chunk in (0, 16):
+        _, got, em = _run_emitter(files, min_chunk, 8, 1 << 20)
+        assert len(got) == 5
+        for r, docs in zip(em.rows, em.chunk_docs):
+            buckets = {bucket_of[d] for d in docs.to_pylist()}
+            assert r["bucket"] == min(buckets)
+            assert r["bucket_max"] == max(buckets)
+            if min_chunk == 0:
+                assert r["bucket"] == r["bucket_max"]
+
+
+def test_task_count_check_raises_on_lost_docs_or_tasks():
+    from collections import namedtuple
+
+    from mapbox_vector_tile_spark.engine.exchange import _check_task_counts
+
+    Row = namedtuple("Row", "task_id n_rows_read n_rows")
+    groups = [(0, ["a"]), (1, ["b"])]
+    _check_task_counts(groups, [Row(0, 5, 5), Row(1, 0, 0)])
+    with pytest.raises(RuntimeError, match=r"mismatches \[\(1, 6, 3\)\]"):
+        _check_task_counts(groups, [Row(0, 5, 5), Row(1, 6, 3)])
+    with pytest.raises(RuntimeError, match=r"manifest row \[1\]"):
+        _check_task_counts(groups, [Row(0, 5, 5)])
+
+
+def test_fused_direct_keeps_zero_token_docs_and_empty_files(spark, tmp_path):
+    """One input file with zero-token docs (a whole bucket's worth) plus
+    one empty file: every doc comes back with its tokens."""
+    from mapbox_vector_tile_spark.engine.decode import decode_dataframe
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
+
+    schema = pa.schema([
+        ("doc_id", pa.string()),
+        ("tokens", pa.list_(pa.int32())),
+        ("n_tok", pa.int32()),
+    ])
+    rng = np.random.default_rng(7)
+    lengths = [0, 300, 0, 0, 0, 0, 5000, 0, 40, 0, 0, 0]
+    tokens = [rng.integers(0, 50_000, n).astype(np.int32).tolist()
+              for n in lengths]
+    ids = [f"doc-{i:08d}" for i in range(len(lengths))]
+    src = tmp_path / "tokens"
+    src.mkdir()
+    pq.write_table(
+        pa.table([ids, tokens, lengths], schema=schema),
+        str(src / "part-0.parquet"),
+    )
+    pq.write_table(schema.empty_table(), str(src / "part-1.parquet"))
+
+    out = str(tmp_path / "blocks")
+    for min_chunk in (None, 0):
+        summary = exchange_encode_fused_direct(
+            spark, str(src), out, 4, n_tasks=2,
+            options=EncodeOptions(max_chunk_values=1024),
+            min_chunk_values=min_chunk,
+        )
+        assert summary["n_rows"] == len(ids)
+        assert summary["n_values"] == sum(lengths)
+        got = {
+            r.doc_id: list(r.tokens)
+            for r in decode_dataframe(spark.read.parquet(out)).collect()
+        }
+        assert got == dict(zip(ids, tokens))

@@ -5,11 +5,9 @@ from pyspark.sql import functions as F
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.decode import decode_dataframe
 from mapbox_vector_tile_spark.engine.encode import EncodeOptions, encode_dataframe
+from mapbox_vector_tile_spark.engine.exchange import exchange_encode_fused_direct
 from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
-from mapbox_vector_tile_spark.sources.parquet_direct import (
-    decode_blocks_direct,
-    encode_parquet_direct,
-)
+from mapbox_vector_tile_spark.sources.parquet_direct import decode_blocks_direct
 
 
 def test_direct_encode_decode_roundtrip(spark, tmp_path):
@@ -18,41 +16,25 @@ def test_direct_encode_decode_roundtrip(spark, tmp_path):
     G.corpus_dataframe(spark, n, num_partitions=4).write.parquet(tokens_pq)
     static = spark.read.parquet(tokens_pq)
 
-    blocks = encode_parquet_direct(spark, tokens_pq)
     blocks_pq = str(tmp_path / "blocks")
-    blocks.write.parquet(blocks_pq)
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, 4)
 
-    # same totals as the DataFrame-API encode
+    # same doc and token totals as the DataFrame-API encode
     df_blocks = encode_dataframe(static, EncodeOptions())
     a = spark.read.parquet(blocks_pq).agg(
-        F.sum("n_values"), F.sum("n_rows"), F.sum("bytes_enc")
+        F.sum("n_values"), F.sum("n_rows")
     ).first()
-    b = df_blocks.agg(F.sum("n_values"), F.sum("n_rows"), F.sum("bytes_enc")).first()
+    b = df_blocks.agg(F.sum("n_values"), F.sum("n_rows")).first()
     assert tuple(a) == tuple(b)
 
     # decode via both paths -> bit-identical to the original
     for decoded in (
         decode_blocks_direct(spark, blocks_pq),
         decode_dataframe(spark.read.parquet(blocks_pq)),
+        decode_dataframe(df_blocks),
     ):
         res = verify_roundtrip(static, decoded).first()
         assert (res.n_docs, res.n_match, res.n_mismatch) == (n, n, 0)
-
-
-def test_direct_encode_bucket_from_dir(spark, tmp_path):
-    n = 300
-    from mapbox_vector_tile_spark.engine.partitioning import size_weighted_repartition
-
-    tokens = G.corpus_dataframe(spark, n, num_partitions=2)
-    bucketed = size_weighted_repartition(tokens, 4, sample_fraction=1.0)
-    p = str(tmp_path / "bucketed")
-    bucketed.write.partitionBy("bucket").parquet(p)
-
-    blocks = encode_parquet_direct(spark, p, bucket_from_dir=True)
-    got = {r.bucket for r in blocks.select("bucket").distinct().collect()}
-    assert got == {0, 1, 2, 3}
-    res = verify_roundtrip(tokens, decode_dataframe(blocks)).first()
-    assert res.n_mismatch == 0 and res.n_docs == n
 
 
 def test_write_corpus_parquet_direct_matches_dataframe(spark, tmp_path):
@@ -79,7 +61,6 @@ def test_decode_row_range_splitting(spark, tmp_path):
         decode_blocks_direct,
         decode_stats_direct,
         decoded_doc_checksums_direct,
-        encode_parquet_direct,
         list_parquet_files,
     )
 
@@ -87,12 +68,11 @@ def test_decode_row_range_splitting(spark, tmp_path):
     tokens_pq = str(tmp_path / "tokens")
     blocks_pq = str(tmp_path / "blocks")
     G.corpus_dataframe(spark, n, num_partitions=1).write.parquet(tokens_pq)
-    # small max_chunk -> many block rows inside a single output file
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-
-    encode_parquet_direct(
-        spark, tokens_pq, EncodeOptions(max_chunk_values=4096)
-    ).coalesce(1).write.parquet(blocks_pq)
+    # small max_chunk, one task -> many block rows inside one output file
+    exchange_encode_fused_direct(
+        spark, tokens_pq, blocks_pq, 4, n_tasks=1,
+        options=EncodeOptions(max_chunk_values=4096),
+    )
     files = [f for f in list_parquet_files(blocks_pq)]
     assert len(files) == 1
 
@@ -198,21 +178,15 @@ def test_row_sliced_read_prunes_row_groups(tmp_path):
 
 
 def test_decode_to_parquet_direct_roundtrip(spark, tmp_path):
-    from mapbox_vector_tile_spark.engine import generator as G
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-    from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
     from mapbox_vector_tile_spark.sources.parquet_direct import (
         decode_to_parquet_direct,
-        encode_parquet_direct,
     )
 
     tokens_pq = str(tmp_path / "tokens")
     blocks_pq = str(tmp_path / "blocks")
     out_pq = str(tmp_path / "decoded")
     G.corpus_dataframe(spark, 300, num_partitions=3).write.parquet(tokens_pq)
-    encode_parquet_direct(spark, tokens_pq, EncodeOptions()).write.parquet(
-        blocks_pq
-    )
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, 4)
     n = decode_to_parquet_direct(spark, blocks_pq, out_pq, n_tasks=2)
     assert n == 300
     res = verify_roundtrip(

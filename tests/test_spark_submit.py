@@ -1,6 +1,7 @@
 """End-to-end spark-submit --py-files deployment test (north-rule form):
-interrupted run + resumed run via separate spark-submit invocations equals an
-uninterrupted encode, verified by decoding the output."""
+interrupted run + resumed runs via separate spark-submit invocations follow
+the task resume contract and equal an uninterrupted encode, verified by
+decoding the output."""
 
 import json
 import os
@@ -23,7 +24,9 @@ def test_spark_submit_encode_resume(spark, tmp_path):
 
     n = 300
     tokens_pq = str(tmp_path / "tokens")
-    G.corpus_dataframe(spark, n, num_partitions=2).write.parquet(tokens_pq)
+    # more input files than the job's 4 tasks: every task owns a file
+    # group, and a crash after 2 tasks leaves 2 pending
+    G.corpus_dataframe(spark, n, num_partitions=8).write.parquet(tokens_pq)
 
     zip_path = subprocess.run(
         ["python", os.path.join(ROOT, "tools", "build_pyfiles.py")],
@@ -48,10 +51,16 @@ def test_spark_submit_encode_resume(spark, tmp_path):
         assert r.returncode == 0, r.stderr[-2000:]
         return json.loads(r.stdout.strip().splitlines()[-1])
 
-    s1 = submit(["--fail-after", "2"])  # simulated crash after 2 buckets
-    assert s1["buckets_processed"] == 2
-    s2 = submit([])  # resume
-    assert s2["buckets_processed"] == s2["buckets_total"] - 2
+    s1 = submit(["--fail-after", "2"])  # simulated crash after 2 tasks
+    assert s1["tasks_total"] == 4
+    assert (s1["tasks_pending"], s1["tasks_processed"]) == (2, 2)
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+    s2 = submit([])  # resume: only the pending tasks run
+    assert s2["tasks_processed"] == s2["tasks_pending"] == 2
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert os.path.exists(os.path.join(out, "_manifest.json"))
+    s3 = submit([])  # nothing pending
+    assert s3["tasks_processed"] == s3["tasks_pending"] == 0
 
     blocks = spark.read.parquet(out)
     res = verify_roundtrip(

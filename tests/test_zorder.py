@@ -85,7 +85,9 @@ def test_fused_encode_zorder_clusters_length(spark, tmp_path):
     """Encode with the Z-curve cluster key: roundtrip stays exact and the
     chunks' LENGTH spans become bounded (2-D zone-map locality in the
     real blocks), unlike the doc-ordered layout."""
-    from mapbox_vector_tile_spark.engine.exchange import exchange_encode_fused
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
 
     src = str(tmp_path / "tokens")
     tok = G.corpus_dataframe(spark, N_DOCS, num_partitions=4)
@@ -95,13 +97,16 @@ def test_fused_encode_zorder_clusters_length(spark, tmp_path):
 
     # small chunks so layout (not chunk granularity) decides the spans
     opts = EncodeOptions(max_chunk_values=8192)
-    blocks_z = exchange_encode_fused(
-        spark, src, num_buckets=8, options=opts,
+    out_z, out_d = str(tmp_path / "blocks_z"), str(tmp_path / "blocks_d")
+    exchange_encode_fused_direct(
+        spark, src, out_z, num_buckets=8, options=opts,
         key_fn=zorder_doc_len_key, key_cols=("doc_id", "n_tok"),
-    ).cache()
-    blocks_d = exchange_encode_fused(
-        spark, src, num_buckets=8, options=opts
-    ).cache()
+    )
+    exchange_encode_fused_direct(
+        spark, src, out_d, num_buckets=8, options=opts
+    )
+    blocks_z = spark.read.parquet(out_z).cache()
+    blocks_d = spark.read.parquet(out_d).cache()
 
     # correctness is layout-independent
     from mapbox_vector_tile_spark.engine.decode import decode_dataframe
