@@ -4,8 +4,7 @@
         jobs/decode_job.py \
         --input  /path/to/blocks_table \
         --output /path/to/tokens_out \
-        [--verify-against /path/to/original_tokens] [--no-checksum] \
-        [--doc-range LO:HI]
+        [--verify-against /path/to/original_tokens] [--doc-range LO:HI]
 
 Decodes every block worker-side (pyarrow scan -> numpy kernels -> pyarrow
 parquet sink; token arrays never cross the JVM row boundary) and optionally
@@ -30,8 +29,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", required=True, help="tokens output path")
     p.add_argument("--verify-against", default=None,
                    help="original tokens parquet to checksum-verify against")
-    p.add_argument("--no-checksum", action="store_true",
-                   help="skip per-block crc32 validation")
     p.add_argument("--n-tasks", type=int, default=None)
     p.add_argument("--doc-range", default=None, metavar="LO:HI",
                    help="selective decode of doc_id in [LO, HI): fragments "
@@ -58,7 +55,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.input,
         args.output,
-        verify_checksum=not args.no_checksum,
         n_tasks=args.n_tasks,
         doc_range=doc_range,
     )

@@ -56,6 +56,22 @@ def decode_block_row(
     return lengths, values
 
 
+def tokens_batch(doc_ids, lengths, values, source=None) -> pa.RecordBatch:
+    """``(doc_id, tokens, n_tok[, source])`` batch from one decode's flat
+    output: ``lengths`` per doc, ``values`` concatenated in doc order."""
+    offsets = np.zeros(lengths.size + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    tokens = pa.LargeListArray.from_arrays(
+        pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
+    ).cast(pa.list_(pa.int32()))
+    arrays = [doc_ids, tokens, pa.array(lengths.astype(np.int32), pa.int32())]
+    if source is None:
+        return pa.RecordBatch.from_arrays(arrays, schema=_OUT_ARROW_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        arrays + [source], schema=_SRC_ARROW_SCHEMA
+    )
+
+
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
 # for normal (~64k-value) chunks, but tiny chunks (selective decodes,
 # min_chunk=0 stores, upsert deltas) would pay per-batch Arrow/JVM overhead
@@ -84,25 +100,8 @@ def decode_dataframe(
     remapped vocabulary back to the original. Applied as a Catalyst
     expression over the decoded frame, so it stays JVM-side."""
 
-    out_schema = _SRC_ARROW_SCHEMA if with_source else _OUT_ARROW_SCHEMA
-
     _FLUSH_VALUES = DECODE_FLUSH_VALUES
     _FLUSH_ROWS = DECODE_FLUSH_ROWS
-
-    def _build(doc_ids, lengths, values, srcs):
-        offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        tokens = pa.LargeListArray.from_arrays(
-            pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-        ).cast(pa.list_(pa.int32()))
-        arrays = [
-            doc_ids,
-            tokens,
-            pa.array(lengths.astype(np.int32), pa.int32()),
-        ]
-        if with_source:
-            arrays.append(srcs)
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..codec.strings import decode_string_chunk
@@ -115,7 +114,7 @@ def decode_dataframe(
 
         def flush():
             nonlocal b_nvals, b_nrows
-            out = _build(
+            out = tokens_batch(
                 pa.concat_arrays(b_docs) if len(b_docs) > 1 else b_docs[0],
                 np.concatenate(b_lens) if len(b_lens) > 1 else b_lens[0],
                 np.concatenate(b_vals) if len(b_vals) > 1 else b_vals[0],
@@ -153,8 +152,8 @@ def decode_dataframe(
                     and (values.size >= _FLUSH_VALUES
                          or lengths.size >= _FLUSH_ROWS)
                 ):
-                    yield _build(doc_ids_col[i].values, lengths, values,
-                                 srcs)
+                    yield tokens_batch(doc_ids_col[i].values, lengths,
+                                       values, srcs)
                     continue
                 b_docs.append(doc_ids_col[i].values)
                 b_lens.append(lengths)
@@ -298,19 +297,7 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
                     values, _ = decode_block_gather(payload, idx)
                 else:
                     values = np.zeros(0, dtype=np.int32)
-                offsets = np.zeros(out_lens.size + 1, dtype=np.int64)
-                np.cumsum(out_lens, out=offsets[1:])
-                tokens = pa.LargeListArray.from_arrays(
-                    pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-                ).cast(pa.list_(pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids.filter(mask_pa),
-                        tokens,
-                        pa.array(out_lens.astype(np.int32), pa.int32()),
-                    ],
-                    schema=_OUT_ARROW_SCHEMA,
-                )
+                yield tokens_batch(doc_ids.filter(mask_pa), out_lens, values)
 
     cols = [
         "doc_ids", "lengths_blob", "payload", "checksum",
@@ -411,18 +398,8 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
                     values, _ = decode_block_gather(payload, idx)
                 else:
                     values = np.zeros(0, dtype=np.int32)
-                offsets = np.zeros(out_lens.size + 1, dtype=np.int64)
-                np.cumsum(out_lens, out=offsets[1:])
-                tokens = pa.LargeListArray.from_arrays(
-                    pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-                ).cast(pa.list_(pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids.take(pa.array(sel, pa.int64())),
-                        tokens,
-                        pa.array(out_lens.astype(np.int32), pa.int32()),
-                    ],
-                    schema=_OUT_ARROW_SCHEMA,
+                yield tokens_batch(
+                    doc_ids.take(pa.array(sel, pa.int64())), out_lens, values
                 )
 
     return hit.mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)

@@ -28,7 +28,6 @@ retires the sidecar, exactly Iceberg's rewrite_data_files + delete cleanup.
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,8 +35,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..codec import blocks as B
-from .decode import TOKENS_OUT_SPARK_SCHEMA, _OUT_ARROW_SCHEMA
+from .decode import TOKENS_OUT_SPARK_SCHEMA, decode_block_row, tokens_batch
 
 
 def write_deletes(deletes_df: DataFrame, path: str) -> None:
@@ -100,33 +98,21 @@ def decode_with_deletes(
                 lo = int(np.searchsorted(del_arr, mins[i].as_py(), "left"))
                 hi = int(np.searchsorted(del_arr, maxs[i].as_py(), "right"))
                 rel = del_arr[lo:hi]
-                payload = memoryview(payloads[i].as_buffer())
-                if verify_checksum and zlib.crc32(payload) != checksums[i].as_py():
-                    raise ValueError("payload checksum mismatch (corrupt block)")
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
-                values = B.decode_block(payload)
-                offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-                np.cumsum(lengths, out=offsets[1:])
-                tokens = pa.LargeListArray.from_arrays(
-                    pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-                ).cast(pa.list_(pa.int32()))
+                lengths, values = decode_block_row(
+                    memoryview(payloads[i].as_buffer()),
+                    memoryview(lengths_blobs[i].as_buffer()),
+                    checksums[i].as_py() if verify_checksum else None,
+                )
                 doc_ids = doc_ids_col[i].values
-                n_tok = pa.array(lengths.astype(np.int32), pa.int32())
+                out = tokens_batch(doc_ids, lengths, values)
                 if rel.size:
                     docs_np = np.asarray(doc_ids.to_pylist(), dtype=object)
                     keep = ~np.isin(docs_np, rel)
                     if not keep.any():
                         continue
                     if not keep.all():
-                        mask = pa.array(keep)
-                        doc_ids = doc_ids.filter(mask)
-                        tokens = tokens.filter(mask)
-                        n_tok = n_tok.filter(mask)
-                yield pa.RecordBatch.from_arrays(
-                    [doc_ids, tokens, n_tok], schema=_OUT_ARROW_SCHEMA
-                )
+                        out = out.filter(pa.array(keep))
+                yield out
 
     joined = _with_delete_array(blocks_df, deletes_df)
     cols = [

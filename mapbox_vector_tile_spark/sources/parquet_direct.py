@@ -16,6 +16,7 @@ comes from the table's manifest instead of a directory listing.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -325,25 +326,6 @@ def group_files_by_size(files: list[str], n_tasks: int) -> list[list[str]]:
     return [sorted(g) for g in groups if g]
 
 
-def file_task_dataframe(
-    spark: SparkSession, files: list[str], n_tasks: int | None = None
-) -> DataFrame:
-    """One task row per file group; Spark schedules/retries, pyarrow reads.
-
-    ``n_tasks=None`` keeps one file per task; passing a target groups small
-    fragments together (decode fan-in — many small blocks files otherwise
-    pay a fixed Arrow/scheduling overhead each)."""
-    groups = (
-        [[f] for f in files] if n_tasks is None
-        else group_files_by_size(files, n_tasks)
-    )
-    return task_rows_dataframe(
-        spark,
-        [(i, g) for i, g in enumerate(groups)],
-        "task_id int, paths array<string>",
-    )
-
-
 _TASK_SCHEMA = (
     "task_id int, paths array<string>, los array<long>, his array<long>"
 )
@@ -351,13 +333,16 @@ _TASK_SCHEMA = (
 
 def block_task_dataframe(
     spark: SparkSession, files: list[str], n_tasks: int | None = None
-) -> DataFrame:
-    """Task planning with sub-file splits: when there are fewer files than
-    ``n_tasks``, large files are split into row ranges (row counts from the
+) -> tuple[DataFrame, int]:
+    """The direct scans' task plan and its task count (ids ``0..n-1``).
+
+    One task per file when ``n_tasks`` is ``None``, size-balanced file
+    groups when there are at least ``n_tasks`` files. With fewer files than
+    tasks, large files are split into row ranges (row counts from the
     write-side ``_manifest.json`` when present — the table-format manifest
     seam — else a distributed footer scan; the driver never loops over
-    footers), so DECODE parallelism is decoupled from however many files
-    the encode side happened to write. ``hi == -1`` means "to end"."""
+    footers), so scan parallelism is decoupled from however many files the
+    writer happened to produce. ``hi == -1`` means "to end"."""
     if n_tasks is None or len(files) >= n_tasks:
         groups = (
             [[f] for f in files] if n_tasks is None
@@ -378,24 +363,7 @@ def block_task_dataframe(
         rows = [
             (i, [p], [lo], [hi]) for i, (p, lo, hi) in enumerate(specs)
         ]
-    rows = [r for r in rows if r[1]]
-    return task_rows_dataframe(spark, rows, _TASK_SCHEMA)
-
-
-def _iter_task_files(tb: pa.RecordBatch):
-    """Yield ``(task_id, [(path, lo, hi), ...])`` from a task batch of
-    either schema (with or without the row-range columns)."""
-    names = tb.schema.names
-    task_ids = tb.column("task_id").to_pylist()
-    paths_col = tb.column("paths").to_pylist()
-    if "los" in names:
-        los_col = tb.column("los").to_pylist()
-        his_col = tb.column("his").to_pylist()
-    else:
-        los_col = [[0] * len(p) for p in paths_col]
-        his_col = [[-1] * len(p) for p in paths_col]
-    for task_id, paths, los, his in zip(task_ids, paths_col, los_col, his_col):
-        yield task_id, list(zip(paths, los, his))
+    return task_rows_dataframe(spark, rows, _TASK_SCHEMA), len(rows)
 
 
 def _read_block_batches(
@@ -432,77 +400,148 @@ def _read_block_batches(
         )
 
 
-def decode_stats_direct(
-    spark: SparkSession,
-    blocks_path: str,
-    verify_checksum: bool = True,
-    n_tasks: int | None = None,
-) -> DataFrame:
-    """Decode every block but emit only per-task stats (n_rows, n_values,
-    pmod token checksum) — measures pure decode throughput without shipping
-    the decoded arrays back to the JVM. The checksum still proves the decode
-    actually ran over every value. ``n_tasks`` coalesces small block files
-    per task (fan-in: fixed Arrow/scheduling overhead per file otherwise
-    caps decode scaling) — or, when files are FEWER than tasks, splits them
-    into row ranges (:func:`block_task_dataframe`), so decode parallelism
-    never depends on the encode side's file count."""
-    from ..engine import decode as D
+def _iter_chunks(
+    items: list[tuple[str, int, int]],
+    tokens: bool = False,
+    doc_range: tuple[str, str] | None = None,
+):
+    """Yield ``(doc_ids, lengths, values)`` per chunk of one task's
+    ``(path, lo, hi)`` items: one per blocks row (CRC-checked decode), or
+    one per record batch of a tokens table (``tokens=True``).
 
-    files = list_parquet_files(blocks_path)
-    tasks = block_task_dataframe(spark, files, n_tasks)
-    MOD = 1_000_000_007
+    Counts are checked at this boundary: each blocks row must decode to its
+    stored ``n_rows`` docs (and as many doc ids) and ``n_values`` tokens,
+    and a row range must read exactly ``hi - lo`` rows; a mismatch raises
+    ``ValueError`` naming the file and row. ``doc_range=(lo, hi)`` skips
+    blocks rows whose ``[min_doc_id, max_doc_id]`` zone map misses the
+    range without touching their payload, and trims boundary chunks to the
+    docs inside it."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from ..engine import decode as D
+    from ..engine import encode as E
+
+    if tokens:
+        cols, batch_size = ["doc_id", "tokens"], 4096
+    else:
+        cols, batch_size = [
+            "doc_ids", "lengths_blob", "payload", "checksum", "n_rows",
+            "n_values",
+        ], 64
+    if doc_range is not None:
+        cols += ["min_doc_id", "max_doc_id"]
+        id_lo, id_hi = doc_range
+    for path, lo, hi in items:
+        row = lo
+        for batch in _read_block_batches(path, cols, lo, hi, batch_size):
+            base, row = row, row + batch.num_rows
+            if tokens:
+                yield (batch.column("doc_id"),) + E._flatten_tokens(batch)
+                continue
+            payloads = batch.column("payload")
+            lb = batch.column("lengths_blob")
+            dids = batch.column("doc_ids")
+            cks = batch.column("checksum").to_pylist()
+            want_rows = batch.column("n_rows").to_pylist()
+            want_vals = batch.column("n_values").to_pylist()
+            if doc_range is not None:
+                zmin = batch.column("min_doc_id").to_pylist()
+                zmax = batch.column("max_doc_id").to_pylist()
+            for i in range(batch.num_rows):
+                # null zone map (empty-doc_ids chunk or pre-zonemap
+                # writer) -> conservative keep
+                if (doc_range is not None and zmin[i] is not None
+                        and zmax[i] is not None
+                        and (zmax[i] < id_lo or zmin[i] >= id_hi)):
+                    continue  # zone map: payload untouched
+                lengths, values = D.decode_block_row(
+                    memoryview(payloads[i].as_buffer()),
+                    memoryview(lb[i].as_buffer()),
+                    cks[i],
+                )
+                doc_ids = dids[i].values
+                if not (lengths.size == len(doc_ids) == want_rows[i]
+                        and values.size == want_vals[i]):
+                    raise ValueError(
+                        f"{path} row {base + i}: decoded {lengths.size} "
+                        f"docs ({len(doc_ids)} ids) and {values.size} "
+                        f"tokens, the row stores {want_rows[i]} docs and "
+                        f"{want_vals[i]} tokens"
+                    )
+                if doc_range is not None:
+                    keep = pc.and_(
+                        pc.greater_equal(doc_ids, id_lo),
+                        pc.less(doc_ids, id_hi),
+                    ).to_numpy(zero_copy_only=False)
+                    if not keep.any():
+                        continue
+                    if not keep.all():
+                        values = values[np.repeat(keep, lengths)]
+                        lengths = lengths[keep]
+                        doc_ids = doc_ids.filter(pa.array(keep))
+                yield doc_ids, lengths, values
+        if hi >= 0 and row != hi:
+            raise ValueError(
+                f"{path}: read {row - lo} rows of the planned range "
+                f"[{lo}, {hi})"
+            )
+
+
+def _scan(
+    spark: SparkSession,
+    files: list[str],
+    n_tasks: int | None,
+    reduce_task,
+    schema: str,
+    **chunk_kw,
+) -> tuple[DataFrame, int]:
+    """The direct scans' one task loop: plan ``files`` with
+    :func:`block_task_dataframe`, then in each task hand
+    ``reduce_task(task_id, chunks)`` the task's :func:`_iter_chunks`
+    stream; it yields the task's output batches. Returns the mapped
+    DataFrame and the planned task count."""
+    tasks, n_planned = block_task_dataframe(spark, files, n_tasks)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
         for tb in batches:
-            for _tid, items in _iter_task_files(tb):
-                n_rows = n_values = cks = 0
-                for path, lo, hi in items:
-                    cols = ["lengths_blob", "payload", "checksum"]
-                    for batch in _read_block_batches(path, cols, lo, hi):
-                        payloads = batch.column("payload")
-                        lb = batch.column("lengths_blob")
-                        ck = batch.column("checksum")
-                        for i in range(batch.num_rows):
-                            lengths, values = D.decode_block_row(
-                                memoryview(payloads[i].as_buffer()),
-                                memoryview(lb[i].as_buffer()),
-                                ck[i].as_py() if verify_checksum else None,
-                            )
-                            n_rows += int(lengths.size)
-                            n_values += int(values.size)
-                            # int64-accumulator sum, no astype copy (saves
-                            # 8 B/token of traffic on the pure-decode path)
-                            cks = (cks + int(values.sum(dtype=np.int64) % MOD)) % MOD
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "n_rows": [n_rows],
-                        "n_values": [n_values],
-                        "tok_cks": [cks],
-                    },
-                    schema=pa.schema(
-                        [("n_rows", pa.int64()), ("n_values", pa.int64()),
-                         ("tok_cks", pa.int64())]
-                    ),
+            for task_id, paths, los, his in zip(
+                *(tb.column(c).to_pylist()
+                  for c in ("task_id", "paths", "los", "his"))
+            ):
+                yield from reduce_task(
+                    task_id, _iter_chunks(list(zip(paths, los, his)),
+                                          **chunk_kw)
                 )
 
-    return tasks.mapInArrow(fn, "n_rows long, n_values long, tok_cks long")
+    return tasks.mapInArrow(fn, schema), n_planned
+
+
+def _check_planned_tasks(n_planned: int, written) -> None:
+    """Raise unless each of the ``n_planned`` tasks returned a row."""
+    missing = sorted(set(range(n_planned)) - {r.task_id for r in written})
+    if missing:
+        raise RuntimeError(
+            f"direct decode count check failed: tasks without a result "
+            f"row {missing}"
+        )
 
 
 def decode_to_parquet_direct(
     spark: SparkSession,
     blocks_path: str,
     out_path: str,
-    verify_checksum: bool = True,
     n_tasks: int | None = None,
     doc_range: tuple[str, str] | None = None,
 ) -> int:
     """Decode a blocks dataset straight to a tokens parquet dataset — the
     inverse of the fused encode's worker-side sink: each task decodes its
-    block-file group and writes one tokens file with pyarrow (deterministic
-    name, atomic rename, ``_SUCCESS`` marker), so the decoded arrays never
-    cross the JVM row boundary. Returns rows written.
+    share of the plan (:func:`block_task_dataframe`) and writes one tokens
+    file with pyarrow (deterministic name, atomic rename), so the decoded
+    arrays never cross the JVM row boundary. ``out_path`` is cleared first;
+    ``_manifest.json`` and ``_SUCCESS`` follow once every task reported.
+    An empty result is one empty part file with the tokens schema, so it
+    reads back as zero rows. Returns rows written.
 
     ``doc_range=(lo, hi)`` makes this the worker-side-sink twin of the
     Catalyst selective path (:func:`blocks_scan` + ``decode_doc_range``):
@@ -510,114 +549,53 @@ def decode_to_parquet_direct(
     whose ``[min_doc_id, max_doc_id]`` envelope misses the range skip
     without touching their payload, and boundary chunks row-trim after
     decode."""
-    import numpy as np
-
     from ..engine import decode as D
 
     files = list_parquet_files(blocks_path)
     if not files:
         raise ValueError(f"no parquet files under {blocks_path}")
-    lo = hi = None
     if doc_range is not None:
-        lo, hi = doc_range
-        files = prune_files_by_doc_range(files, lo, hi)
-        if not files:
-            os.makedirs(out_path, exist_ok=True)
-            write_file_manifest(out_path, {})
-            with open(os.path.join(out_path, "_SUCCESS"), "w"):
-                pass
-            return 0
-    os.makedirs(out_path, exist_ok=True)
-    tasks = file_task_dataframe(spark, files, n_tasks)
+        files = prune_files_by_doc_range(files, *doc_range)
+    shutil.rmtree(out_path, ignore_errors=True)
+    os.makedirs(out_path)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for tb in batches:
-            task_ids = tb.column("task_id").to_pylist()
-            for task_id, paths in zip(task_ids, tb.column("paths").to_pylist()):
-                parts = []
-                for path in paths:
-                    pf = pq.ParquetFile(path)
-                    cols = ["doc_ids", "lengths_blob", "payload", "checksum"]
-                    if lo is not None:
-                        cols += ["min_doc_id", "max_doc_id"]
-                    for batch in pf.iter_batches(batch_size=64, columns=cols):
-                        payloads = batch.column("payload")
-                        lb = batch.column("lengths_blob")
-                        cks = batch.column("checksum")
-                        dids = batch.column("doc_ids")
-                        zmin = (batch.column("min_doc_id")
-                                if lo is not None else None)
-                        zmax = (batch.column("max_doc_id")
-                                if lo is not None else None)
-                        for i in range(batch.num_rows):
-                            if lo is not None:
-                                zlo, zhi = zmin[i].as_py(), zmax[i].as_py()
-                                # null zone map (empty-doc_ids chunk or
-                                # pre-zonemap writer) -> conservative keep
-                                if (zlo is not None and zhi is not None
-                                        and (zhi < lo or zlo >= hi)):
-                                    continue  # zone map: payload untouched
-                            lengths, values = D.decode_block_row(
-                                memoryview(payloads[i].as_buffer()),
-                                memoryview(lb[i].as_buffer()),
-                                cks[i].as_py() if verify_checksum else None,
-                            )
-                            offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-                            np.cumsum(lengths, out=offsets[1:])
-                            tokens = pa.LargeListArray.from_arrays(
-                                pa.array(offsets, pa.int64()),
-                                pa.array(values, pa.int32()),
-                            ).cast(pa.list_(pa.int32()))
-                            out_batch = pa.RecordBatch.from_arrays(
-                                [
-                                    dids[i].values,
-                                    tokens,
-                                    pa.array(
-                                        lengths.astype(np.int32), pa.int32()
-                                    ),
-                                ],
-                                schema=D._OUT_ARROW_SCHEMA,
-                            )
-                            if lo is not None:
-                                ids = np.asarray(
-                                    dids[i].values.to_pylist(), object
-                                )
-                                sel = np.flatnonzero(
-                                    (ids >= lo) & (ids < hi)
-                                )
-                                if sel.size == 0:
-                                    continue
-                                if sel.size < out_batch.num_rows:
-                                    out_batch = out_batch.take(
-                                        pa.array(sel.astype(np.int64))
-                                    )
-                            parts.append(out_batch)
-                n_rows = sum(p.num_rows for p in parts)
-                if parts:
-                    table = pa.Table.from_batches(parts, D._OUT_ARROW_SCHEMA)
-                    final = os.path.join(
-                        out_path, f"part-{task_id:05d}.parquet"
-                    )
-                    write_parquet_atomic(table, final)
-                yield pa.RecordBatch.from_pydict(
-                    {"task_id": [task_id], "n_rows": [n_rows]},
-                    schema=pa.schema(
-                        [("task_id", pa.int32()), ("n_rows", pa.int64())]
-                    ),
-                )
+    def part(task_id: int) -> str:
+        return f"part-{task_id:05d}.parquet"
 
-    written = tasks.mapInArrow(fn, "task_id int, n_rows long").collect()
-    write_file_manifest(
-        out_path,
-        {
-            f"part-{r.task_id:05d}.parquet": int(r.n_rows)
-            for r in written
-            if r.n_rows
-        },
-    )
+    def write_part(task_id, chunks):
+        batches = [D.tokens_batch(*c) for c in chunks]
+        n_rows = sum(b.num_rows for b in batches)
+        if n_rows:
+            write_parquet_atomic(
+                pa.Table.from_batches(batches, D._OUT_ARROW_SCHEMA),
+                os.path.join(out_path, part(task_id)),
+            )
+        yield pa.RecordBatch.from_pydict(
+            {"task_id": [task_id], "n_rows": [n_rows]},
+            schema=pa.schema(
+                [("task_id", pa.int32()), ("n_rows", pa.int64())]
+            ),
+        )
+
+    written, n_planned = [], 0
+    if files:
+        scan, n_planned = _scan(
+            spark, files, n_tasks, write_part, "task_id int, n_rows long",
+            doc_range=doc_range,
+        )
+        written = scan.collect()
+    _check_planned_tasks(n_planned, written)
+    counts = {part(r.task_id): int(r.n_rows) for r in written if r.n_rows}
+    if not counts:
+        write_parquet_atomic(
+            D._OUT_ARROW_SCHEMA.empty_table(),
+            os.path.join(out_path, part(0)),
+        )
+        counts = {part(0): 0}
+    write_file_manifest(out_path, counts)
     with open(os.path.join(out_path, "_SUCCESS"), "w"):
         pass
-    return sum(r.n_rows for r in written)
+    return sum(counts.values())
 
 
 _CKS_SCHEMA = "doc_id string, n_tok long, tok_cks long, tok_wcks long"
@@ -653,159 +631,34 @@ def _doc_cks_batch(doc_ids: pa.Array, lengths, values) -> pa.RecordBatch:
     )
 
 
+def _checksum_scan(
+    spark: SparkSession, path: str, n_tasks: int | None, tokens: bool
+) -> DataFrame:
+    files = list_parquet_files(path)
+    if not files:
+        raise ValueError(f"no parquet files under {path}")
+    return _scan(
+        spark, files, n_tasks,
+        lambda _task_id, chunks: (_doc_cks_batch(*c) for c in chunks),
+        _CKS_SCHEMA, tokens=tokens,
+    )[0]
+
+
 def doc_checksums_direct(
-    spark: SparkSession,
-    tokens_path: str,
-    n_tasks: int | None = None,
-    batch_rows: int = 4096,
+    spark: SparkSession, tokens_path: str, n_tasks: int | None = None
 ) -> DataFrame:
     """Worker-side columnar scan of a tokens parquet dataset -> per-doc
     checksum rows. The arrays never reach the JVM — only (doc_id, n_tok,
     cks, wcks) metadata rows do, which makes the round-trip verify a
     metadata join instead of a full-array exchange."""
-    from ..engine import encode as E
-
-    files = list_parquet_files(tokens_path)
-    if not files:
-        raise ValueError(f"no parquet files under {tokens_path}")
-    tasks = file_task_dataframe(spark, files, n_tasks)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for tb in batches:
-            for path in (
-                p for ps in tb.column("paths").to_pylist() for p in ps
-            ):
-                pf = pq.ParquetFile(path)
-                for batch in pf.iter_batches(
-                    batch_size=batch_rows, columns=["doc_id", "tokens"]
-                ):
-                    if batch.num_rows == 0:
-                        continue
-                    lengths, values = E._flatten_tokens(batch)
-                    doc_ids = batch.column("doc_id")
-                    if isinstance(doc_ids, pa.ChunkedArray):
-                        doc_ids = doc_ids.combine_chunks()
-                    yield _doc_cks_batch(doc_ids, lengths, values)
-
-    return tasks.mapInArrow(fn, _CKS_SCHEMA)
+    return _checksum_scan(spark, tokens_path, n_tasks, tokens=True)
 
 
 def decoded_doc_checksums_direct(
-    spark: SparkSession,
-    blocks_path: str,
-    verify_checksum: bool = True,
-    n_tasks: int | None = None,
+    spark: SparkSession, blocks_path: str, n_tasks: int | None = None
 ) -> DataFrame:
     """Decode every block worker-side and emit per-doc checksum rows (same
     schema as :func:`doc_checksums_direct`) — the decoded arrays stay in the
     worker; only checksum metadata crosses to the JVM. Files split into row
     ranges when fewer than ``n_tasks`` (:func:`block_task_dataframe`)."""
-    from ..engine import decode as D
-
-    files = list_parquet_files(blocks_path)
-    if not files:
-        raise ValueError(f"no parquet files under {blocks_path}")
-    tasks = block_task_dataframe(spark, files, n_tasks)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for tb in batches:
-            for _tid, items in _iter_task_files(tb):
-                for path, lo, hi in items:
-                    cols = ["doc_ids", "lengths_blob", "payload", "checksum"]
-                    for batch in _read_block_batches(path, cols, lo, hi):
-                        payloads = batch.column("payload")
-                        lb = batch.column("lengths_blob")
-                        cks_col = batch.column("checksum")
-                        dids = batch.column("doc_ids")
-                        for i in range(batch.num_rows):
-                            lengths, values = D.decode_block_row(
-                                memoryview(payloads[i].as_buffer()),
-                                memoryview(lb[i].as_buffer()),
-                                cks_col[i].as_py() if verify_checksum else None,
-                            )
-                            yield _doc_cks_batch(
-                                dids[i].values, lengths, values
-                            )
-
-    return tasks.mapInArrow(fn, _CKS_SCHEMA)
-
-
-def decode_blocks_direct(
-    spark: SparkSession,
-    blocks_path: str,
-    verify_checksum: bool = True,
-    n_tasks: int | None = None,
-    flush_values: int = 1 << 22,
-) -> DataFrame:
-    """Worker-side columnar scan of a blocks parquet dataset -> tokens DF.
-
-    Decoded blocks are coalesced into ~``flush_values``-token output
-    RecordBatches (fan-in): emitting one Arrow batch per block makes small
-    blocks pay a fixed per-batch transfer cost that caps decode scaling.
-    Files split into row ranges when fewer than ``n_tasks``
-    (:func:`block_task_dataframe`).
-    """
-    from ..engine import decode as D
-
-    files = list_parquet_files(blocks_path)
-    if not files:
-        raise ValueError(f"no parquet files under {blocks_path}")
-    tasks = block_task_dataframe(spark, files, n_tasks)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        acc_docs: list[pa.Array] = []
-        acc_lengths: list[np.ndarray] = []
-        acc_values: list[np.ndarray] = []
-        acc_nvals = 0
-
-        def flush() -> Iterator[pa.RecordBatch]:
-            nonlocal acc_docs, acc_lengths, acc_values, acc_nvals
-            if not acc_docs:
-                return
-            lengths = np.concatenate(acc_lengths)
-            values = (
-                np.concatenate(acc_values) if acc_values
-                else np.zeros(0, dtype=np.int32)
-            )
-            offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-            np.cumsum(lengths, out=offsets[1:])
-            tokens = pa.LargeListArray.from_arrays(
-                pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-            ).cast(pa.list_(pa.int32()))
-            out = pa.RecordBatch.from_arrays(
-                [
-                    pa.concat_arrays(acc_docs),
-                    tokens,
-                    pa.array(lengths.astype(np.int32), pa.int32()),
-                ],
-                schema=D._OUT_ARROW_SCHEMA,
-            )
-            acc_docs, acc_lengths, acc_values, acc_nvals = [], [], [], 0
-            yield out
-
-        for tb in batches:
-            for _tid, items in _iter_task_files(tb):
-                for path, lo, hi in items:
-                    cols = ["doc_ids", "lengths_blob", "payload", "checksum"]
-                    for batch in _read_block_batches(path, cols, lo, hi):
-                        payloads = batch.column("payload")
-                        lb = batch.column("lengths_blob")
-                        cks = batch.column("checksum")
-                        dids = batch.column("doc_ids")
-                        for i in range(batch.num_rows):
-                            lengths, values = D.decode_block_row(
-                                memoryview(payloads[i].as_buffer()),
-                                memoryview(lb[i].as_buffer()),
-                                cks[i].as_py() if verify_checksum else None,
-                            )
-                            acc_docs.append(dids[i].values)
-                            acc_lengths.append(lengths)
-                            acc_values.append(values)
-                            acc_nvals += int(values.size)
-                            if acc_nvals >= flush_values:
-                                yield from flush()
-        yield from flush()
-
-    return tasks.mapInArrow(fn, D.TOKENS_OUT_SPARK_SCHEMA)
+    return _checksum_scan(spark, blocks_path, n_tasks, tokens=False)

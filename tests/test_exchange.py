@@ -98,7 +98,7 @@ def test_regime_key_matches_spark_expr(spark, tokens_pq):
 
 def test_exchange_encode_decode_roundtrip(spark, tokens_pq, tmp_path):
     from mapbox_vector_tile_spark.sources.parquet_direct import (
-        decode_blocks_direct,
+        decode_to_parquet_direct,
     )
 
     blocks_pq = str(tmp_path / "blocks")
@@ -110,7 +110,11 @@ def test_exchange_encode_decode_roundtrip(spark, tokens_pq, tmp_path):
     # chunks are bucket-homogeneous and cover all buckets
     assert blocks.select("bucket").distinct().count() == N_BUCKETS
     assert blocks.filter(F.col("bucket") != F.col("bucket_max")).count() == 0
-    decoded = decode_blocks_direct(spark, blocks_pq, n_tasks=4)
+    out_pq = str(tmp_path / "decoded")
+    assert decode_to_parquet_direct(spark, blocks_pq, out_pq, n_tasks=4) == (
+        N_DOCS
+    )
+    decoded = spark.read.parquet(out_pq)
     res = verify_roundtrip(spark.read.parquet(tokens_pq), decoded).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (N_DOCS, N_DOCS, 0)
 
@@ -391,6 +395,7 @@ def test_direct_doc_range_decode_matches_catalyst(spark, tmp_path):
     )
     from mapbox_vector_tile_spark.sources.parquet_direct import (
         decode_to_parquet_direct,
+        doc_checksums_direct,
     )
 
     tokens = str(tmp_path / "toks_rng")
@@ -415,7 +420,8 @@ def test_direct_doc_range_decode_matches_catalyst(spark, tmp_path):
     }
     assert got == want and n == len(want) > 0
 
-    # disjoint range: zero rows, valid empty dataset with _SUCCESS
+    # disjoint range: zero rows, valid empty dataset with _SUCCESS that
+    # reads back and checksums as zero rows
     import os
 
     out2 = str(tmp_path / "dec_empty")
@@ -423,6 +429,8 @@ def test_direct_doc_range_decode_matches_catalyst(spark, tmp_path):
         spark, blocks, out2, doc_range=("doc-99999000", "doc-99999999")
     ) == 0
     assert os.path.exists(os.path.join(out2, "_SUCCESS"))
+    assert spark.read.parquet(out2).count() == 0
+    assert doc_checksums_direct(spark, out2).count() == 0
 
 
 def test_blocks_files_metadata_table(spark, tmp_path):

@@ -7,7 +7,9 @@ from mapbox_vector_tile_spark.engine.decode import decode_dataframe
 from mapbox_vector_tile_spark.engine.encode import EncodeOptions, encode_dataframe
 from mapbox_vector_tile_spark.engine.exchange import exchange_encode_fused_direct
 from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
-from mapbox_vector_tile_spark.sources.parquet_direct import decode_blocks_direct
+from mapbox_vector_tile_spark.sources.parquet_direct import (
+    decode_to_parquet_direct,
+)
 
 
 def test_direct_encode_decode_roundtrip(spark, tmp_path):
@@ -28,8 +30,10 @@ def test_direct_encode_decode_roundtrip(spark, tmp_path):
     assert tuple(a) == tuple(b)
 
     # decode via both paths -> bit-identical to the original
+    out_pq = str(tmp_path / "decoded")
+    assert decode_to_parquet_direct(spark, blocks_pq, out_pq) == n
     for decoded in (
-        decode_blocks_direct(spark, blocks_pq),
+        spark.read.parquet(out_pq),
         decode_dataframe(spark.read.parquet(blocks_pq)),
         decode_dataframe(df_blocks),
     ):
@@ -58,8 +62,6 @@ def test_decode_row_range_splitting(spark, tmp_path):
     from mapbox_vector_tile_spark.engine import generator as G
     from mapbox_vector_tile_spark.sources.parquet_direct import (
         block_task_dataframe,
-        decode_blocks_direct,
-        decode_stats_direct,
         decoded_doc_checksums_direct,
         list_parquet_files,
     )
@@ -76,21 +78,19 @@ def test_decode_row_range_splitting(spark, tmp_path):
     files = [f for f in list_parquet_files(blocks_pq)]
     assert len(files) == 1
 
-    plan = block_task_dataframe(spark, files, 6)
-    assert plan.count() >= 6  # split into >= n_tasks row ranges
+    plan, n_planned = block_task_dataframe(spark, files, 6)
+    # split into >= n_tasks row ranges
+    assert plan.count() == n_planned >= 6
 
     tokens = spark.read.parquet(tokens_pq)
     want = tokens.agg(F.sum("n_tok")).first()[0]
-    got = (
-        decode_stats_direct(spark, blocks_pq, n_tasks=6)
-        .agg(F.sum("n_values"))
-        .first()[0]
-    )
-    assert got == want
     cks = decoded_doc_checksums_direct(spark, blocks_pq, n_tasks=6)
+    assert cks.agg(F.sum("n_tok")).first()[0] == want
     assert cks.count() == n
-    decoded = decode_blocks_direct(spark, blocks_pq, n_tasks=6)
-    res = verify_roundtrip(tokens, decoded).first()
+    out_pq = str(tmp_path / "decoded")
+    assert decode_to_parquet_direct(spark, blocks_pq, out_pq, n_tasks=6) == n
+    assert len(list_parquet_files(out_pq)) > 1  # the sink splits too
+    res = verify_roundtrip(tokens, spark.read.parquet(out_pq)).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (n, n, 0)
 
 
@@ -178,10 +178,6 @@ def test_row_sliced_read_prunes_row_groups(tmp_path):
 
 
 def test_decode_to_parquet_direct_roundtrip(spark, tmp_path):
-    from mapbox_vector_tile_spark.sources.parquet_direct import (
-        decode_to_parquet_direct,
-    )
-
     tokens_pq = str(tmp_path / "tokens")
     blocks_pq = str(tmp_path / "blocks")
     out_pq = str(tmp_path / "decoded")
@@ -225,3 +221,108 @@ def test_task_rows_dataframe_balanced_partitions(spark):
         # and the plan has no exchange at all
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
+
+
+def test_decode_to_parquet_direct_rerun_replaces_output(spark, tmp_path):
+    """A rerun into the same directory leaves only its own part files:
+    fewer tasks, or a narrower doc range, must not read back rows of the
+    earlier run."""
+    from mapbox_vector_tile_spark.sources.parquet_direct import (
+        list_parquet_files,
+    )
+
+    n = 400
+    tokens_pq = str(tmp_path / "tokens")
+    blocks_pq = str(tmp_path / "blocks")
+    out_pq = str(tmp_path / "decoded")
+    G.corpus_dataframe(spark, n, num_partitions=8).write.parquet(tokens_pq)
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, 8, n_tasks=8)
+    assert len(list_parquet_files(blocks_pq)) == 8
+
+    assert decode_to_parquet_direct(spark, blocks_pq, out_pq, n_tasks=8) == n
+    assert decode_to_parquet_direct(spark, blocks_pq, out_pq, n_tasks=2) == n
+    assert spark.read.parquet(out_pq).count() == n
+
+    got = decode_to_parquet_direct(
+        spark, blocks_pq, out_pq, doc_range=("doc-00000100", "doc-00000110")
+    )
+    assert got == 10
+    assert spark.read.parquet(out_pq).count() == 10
+
+
+def test_direct_scans_check_stored_counts(spark, tmp_path):
+    """A blocks row whose stored n_values disagrees with its decode, or a
+    row range the file cannot fill, fails every direct scan loudly; the
+    sink then commits no _manifest.json or _SUCCESS."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from mapbox_vector_tile_spark.sources.parquet_direct import (
+        decoded_doc_checksums_direct,
+        list_parquet_files,
+    )
+
+    tokens_pq = str(tmp_path / "tokens")
+    blocks_pq = str(tmp_path / "blocks")
+    G.corpus_dataframe(spark, 300, num_partitions=1).write.parquet(tokens_pq)
+    exchange_encode_fused_direct(
+        spark, tokens_pq, blocks_pq, 4, n_tasks=1,
+        options=EncodeOptions(max_chunk_values=4096),
+    )
+    (path,) = list_parquet_files(blocks_pq)
+    good = pq.read_table(path)
+    n_values = good.column("n_values").to_numpy().copy()
+    n_values[3] += 1
+    i = good.schema.get_field_index("n_values")
+    pq.write_table(good.set_column(i, "n_values", pa.array(n_values)), path)
+
+    def scans(n_tasks):
+        yield lambda: decoded_doc_checksums_direct(
+            spark, blocks_pq, n_tasks=n_tasks
+        ).collect()
+        yield lambda: decode_to_parquet_direct(
+            spark, blocks_pq, str(tmp_path / "out"), n_tasks=n_tasks
+        )
+
+    for n_tasks in (None, 3):  # whole file, and row ranges
+        for scan in scans(n_tasks):
+            with pytest.raises(Exception, match=f"{path} row 3: decoded"):
+                scan()
+    out = str(tmp_path / "out")
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(out, "_manifest.json"))
+
+    # a manifest that promises more rows than the file holds: the last
+    # row range comes back short
+    pq.write_table(good, path)
+    man_path = os.path.join(blocks_pq, "_manifest.json")
+    with open(man_path) as fh:
+        man = json.load(fh)
+    rel = os.path.relpath(path, blocks_pq)
+    n_chunks = man["row_counts"][rel]
+    assert n_chunks == good.num_rows > 3
+    man["row_counts"][rel] = n_chunks + 2
+    with open(man_path, "w") as fh:
+        json.dump(man, fh)
+    for scan in scans(3):
+        with pytest.raises(Exception, match="rows of the planned range"):
+            scan()
+
+
+def test_check_planned_tasks_raises_on_missing_task():
+    from types import SimpleNamespace
+
+    import pytest
+
+    from mapbox_vector_tile_spark.sources.parquet_direct import (
+        _check_planned_tasks,
+    )
+
+    rows = [SimpleNamespace(task_id=t) for t in (0, 2)]
+    _check_planned_tasks(2, rows[:1] + [SimpleNamespace(task_id=1)])
+    with pytest.raises(RuntimeError, match=r"result row \[1, 3\]"):
+        _check_planned_tasks(4, rows)

@@ -68,3 +68,45 @@ def test_spark_submit_encode_resume(spark, tmp_path):
     ).first()
     assert (res.n_docs, res.n_match, res.n_mismatch) == (n, n, 0)
     assert blocks.agg(F.sum("bytes_enc")).first()[0] > 0
+
+
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
+def test_spark_submit_decode_verify(spark, tmp_path):
+    """decode_job end to end: a full decode verifies against the original
+    tokens, and a doc range that matches no doc decodes and verifies as an
+    empty slice."""
+    from mapbox_vector_tile_spark.engine import generator as G
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
+
+    n = 300
+    tokens_pq = str(tmp_path / "tokens")
+    blocks_pq = str(tmp_path / "blocks")
+    G.corpus_dataframe(spark, n, num_partitions=4).write.parquet(tokens_pq)
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, 4)
+    zip_path = subprocess.run(
+        ["python", os.path.join(ROOT, "tools", "build_pyfiles.py")],
+        capture_output=True, text=True, cwd=ROOT, check=True,
+    ).stdout.strip()
+
+    def submit(extra):
+        cmd = [
+            SPARK_SUBMIT, "--master", "local[2]",
+            "--py-files", zip_path,
+            "--conf", "spark.ui.enabled=false",
+            "--conf", "spark.sql.shuffle.partitions=4",
+            os.path.join(ROOT, "jobs", "decode_job.py"),
+            "--input", blocks_pq, "--output", str(tmp_path / "decoded"),
+            "--verify-against", tokens_pq,
+        ] + extra
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
+        assert r.returncode == 0, r.stderr[-2000:]
+        return json.loads(r.stdout.strip().splitlines()[-1])
+
+    full = submit([])
+    assert (full["rows_decoded"], full["n_docs"], full["n_mismatch"]) == (
+        n, n, 0
+    )
+    empty = submit(["--doc-range", "doc-99999000:doc-99999999"])
+    assert (empty["rows_decoded"], empty["n_mismatch"]) == (0, 0)
