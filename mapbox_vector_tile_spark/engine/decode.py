@@ -72,6 +72,51 @@ def tokens_batch(doc_ids, lengths, values, source=None) -> pa.RecordBatch:
     )
 
 
+def _gather_docs(cols: dict, i: int, sel: np.ndarray, verify_checksum: bool):
+    """Tokens of the docs at positions ``sel`` of blocks row ``i``:
+    ``(out_lens, values)``. ``cols`` maps the blocks columns to their Arrow
+    arrays. The chunk's decoded lengths must agree with its doc ids and
+    stored ``n_rows``, and sum to its stored ``n_values``; the payload CRC
+    is checked before the gather."""
+    from ..codec.gather import decode_block_gather
+
+    payload = memoryview(cols["payload"][i].as_buffer())
+    if verify_checksum and zlib.crc32(payload) != cols["checksum"][i].as_py():
+        raise ValueError("payload checksum mismatch (corrupt block)")
+    lengths = B.decode_block(
+        memoryview(cols["lengths_blob"][i].as_buffer())
+    ).astype(np.int64)
+    n_docs = len(cols["doc_ids"][i].values)
+    n_rows = cols["n_rows"][i].as_py()
+    n_values = cols["n_values"][i].as_py()
+    if not lengths.size == n_docs == n_rows or int(lengths.sum()) != n_values:
+        raise ValueError(
+            f"chunk {cols['chunk_id'][i].as_py()} "
+            f"[{cols['min_doc_id'][i].as_py()}, "
+            f"{cols['max_doc_id'][i].as_py()}]: {lengths.size} lengths "
+            f"summing to {int(lengths.sum())}, {n_docs} doc ids, stored "
+            f"n_rows {n_rows} and n_values {n_values}"
+        )
+    starts = np.zeros(lengths.size, dtype=np.int64)
+    np.cumsum(lengths[:-1], out=starts[1:])
+    out_lens = lengths[sel]
+    total_out = int(out_lens.sum())
+    if not total_out:
+        return out_lens, np.zeros(0, dtype=np.int32)
+    out_starts = np.zeros(out_lens.size, dtype=np.int64)
+    np.cumsum(out_lens[:-1], out=out_starts[1:])
+    idx = np.arange(total_out, dtype=np.int64)
+    idx += np.repeat(starts[sel] - out_starts, out_lens)
+    return out_lens, decode_block_gather(payload, idx)[0]
+
+
+# columns the gather decoders read from each blocks row
+_GATHER_COLS = [
+    "chunk_id", "n_rows", "n_values", "doc_ids", "lengths_blob", "payload",
+    "checksum", "min_doc_id", "max_doc_id",
+]
+
+
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
 # for normal (~64k-value) chunks, but tiny chunks (selective decodes,
 # min_chunk=0 stores, upsert deltas) would pay per-batch Arrow/JVM overhead
@@ -175,6 +220,35 @@ def decode_dataframe(
     return transform(out) if transform is not None else out
 
 
+def _pack_survivors(pruned):
+    """``pruned`` with a ``rebalance`` hint when that runs its decode in
+    fewer Python tasks, else unchanged.
+
+    On a plain file scan the Python decode runs inside the scan's tasks, so
+    a read pays one Python task per file split even when only a few chunks
+    survive the zone map. Behind the hint the scan stays parallel and AQE
+    (with its default parallelism-first coalescing) packs the survivors'
+    encoded rows toward ``total / parallelism`` bytes per task, but no less
+    than its minimum partition size (1 MB by default): few survivors decode
+    in one task, many in about ``parallelism`` tasks. So the hint saves
+    tasks only when the scan has more splits than the session's default
+    parallelism; with fewer splits it would add a shuffle of every survivor
+    and save none. A plan that already has an exchange (AQE wraps it) has
+    its decode stage sized by that exchange, and with AQE off Spark would
+    drop the hint; both keep their shape. Counting the splits plans the
+    scan on the driver and starts no job.
+    """
+    spark = pruned.sparkSession
+    if spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+        return pruned
+    plan = pruned._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return pruned
+    if plan.execute().getNumPartitions() > spark.sparkContext.defaultParallelism:
+        return pruned.hint("rebalance")
+    return pruned
+
+
 def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     """Selective decode of ``doc_id in [lo, hi)`` via zone-map pruning.
 
@@ -184,6 +258,14 @@ def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     the reader (``PushedFilters``), so pruned row groups never read their
     ``payload`` bytes at all. Surviving chunks decode normally and a row
     filter trims boundary chunks that straddle the range.
+
+    Task shape: the zone-map filter runs in the parallel scan, one task per
+    file split, and pruned row groups never leave it. When the scan has
+    more splits than the session's default parallelism, the survivors'
+    encoded rows cross one ``rebalance`` exchange into fewer Python tasks
+    (see :func:`_pack_survivors`): a range inside one commit of a
+    many-file snapshot table decodes in one Python task. Otherwise each
+    scan task decodes its own survivors.
 
     The point-lookup / range-scan analog of the reference decoding a single
     requested layer out of a multi-layer tile rather than the whole tile
@@ -198,7 +280,7 @@ def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     pruned = blocks_df.filter(
         (F.col("max_doc_id") >= lo) & (F.col("min_doc_id") < hi)
     )
-    out = decode_dataframe(pruned, **decode_kwargs)
+    out = decode_dataframe(_pack_survivors(pruned), **decode_kwargs)
     return out.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
 
@@ -223,7 +305,17 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
        :func:`~..codec.gather.decode_block_gather` resolves the positions
        codec-aware (RLE/CONSTANT/PAGED chunks never inflate their full
        value stream; a one-doc lookup in a sequential-codec chunk still
-       decodes once but ships one doc across Arrow/JVM).
+       decodes once but ships one doc across Arrow/JVM). The chunk's
+       decoded lengths are checked against its doc ids and its stored
+       ``n_rows`` and ``n_values``, and its payload CRC before the gather.
+
+    Task shape: layers 1 and 2 run in the parallel scan, one task per file
+    split, so pruned row groups never leave it. When the scan has more
+    splits than the session's default parallelism, the survivors' encoded
+    rows cross one ``rebalance`` exchange into fewer Python tasks (see
+    :func:`_pack_survivors`): a few ids of a many-file snapshot table
+    decode in one Python task, not one per file. Otherwise each scan task
+    runs layer 3 itself.
 
     ``ids`` must be point-lookup sized (the literal array and the broadcast
     of it bound the driver plan; ~10^4 is comfortable). For bulk subsets
@@ -233,8 +325,6 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     (/root/reference/mapbox_vector_tile/decoder.py:146-160).
     """
     from pyspark.sql import functions as F
-
-    from ..codec.gather import decode_block_gather
 
     ids = sorted(set(ids))
     if not ids:
@@ -256,54 +346,29 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
         import pyarrow.compute as pc
 
         for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            checksums = batch.column("checksum")
-            doc_ids_col = batch.column("doc_ids")
-            mins = batch.column("min_doc_id")
-            maxs = batch.column("max_doc_id")
+            cols = {c: batch.column(c) for c in _GATHER_COLS}
             for i in range(batch.num_rows):
                 # re-narrow the sorted id set to this chunk's span so the
                 # membership test is against the few ids that can match
-                lo = int(np.searchsorted(ids_np, mins[i].as_py(), "left"))
-                hi = int(np.searchsorted(ids_np, maxs[i].as_py(), "right"))
+                lo = int(np.searchsorted(
+                    ids_np, cols["min_doc_id"][i].as_py(), "left"))
+                hi = int(np.searchsorted(
+                    ids_np, cols["max_doc_id"][i].as_py(), "right"))
                 if lo == hi:
                     continue  # zone-map false positive at batch level
-                doc_ids = doc_ids_col[i].values
+                doc_ids = cols["doc_ids"][i].values
                 mask_pa = pc.is_in(doc_ids, value_set=want_set[lo:hi])
                 mask = mask_pa.to_numpy(zero_copy_only=False)
                 if not mask.any():
                     continue
-                payload = memoryview(payloads[i].as_buffer())
-                if verify_checksum and zlib.crc32(payload) != checksums[
-                    i
-                ].as_py():
-                    raise ValueError(
-                        "payload checksum mismatch (corrupt block)"
-                    )
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
-                starts = np.zeros(lengths.size, dtype=np.int64)
-                np.cumsum(lengths[:-1], out=starts[1:])
-                sel = np.flatnonzero(mask)
-                out_lens = lengths[sel]
-                total_out = int(out_lens.sum())
-                if total_out:
-                    out_starts = np.zeros(out_lens.size, dtype=np.int64)
-                    np.cumsum(out_lens[:-1], out=out_starts[1:])
-                    idx = np.arange(total_out, dtype=np.int64)
-                    idx += np.repeat(starts[sel] - out_starts, out_lens)
-                    values, _ = decode_block_gather(payload, idx)
-                else:
-                    values = np.zeros(0, dtype=np.int32)
+                out_lens, values = _gather_docs(
+                    cols, i, np.flatnonzero(mask), verify_checksum
+                )
                 yield tokens_batch(doc_ids.filter(mask_pa), out_lens, values)
 
-    cols = [
-        "doc_ids", "lengths_blob", "payload", "checksum",
-        "min_doc_id", "max_doc_id",
-    ]
-    return pruned.select(*cols).mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)
+    return _pack_survivors(pruned.select(*_GATHER_COLS)).mapInArrow(
+        fn, TOKENS_OUT_SPARK_SCHEMA
+    )
 
 
 def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
@@ -343,8 +408,6 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
     """
     from pyspark.sql import functions as F
 
-    from ..codec.gather import decode_block_gather
-
     ids = (
         ids_df.select(F.col("doc_id").cast("string").alias("doc_id"))
         .distinct()
@@ -357,47 +420,21 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
         .groupBy("chunk_id")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("__want"))
     )
-    hit = blocks_df.join(matched, "chunk_id").select(
-        "doc_ids", "lengths_blob", "payload", "checksum", "__want"
-    )
+    hit = blocks_df.join(matched, "chunk_id").select(*_GATHER_COLS, "__want")
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            checksums = batch.column("checksum")
-            doc_ids_col = batch.column("doc_ids")
+            cols = {c: batch.column(c) for c in _GATHER_COLS}
             wants = batch.column("__want")
             for i in range(batch.num_rows):
-                doc_ids = doc_ids_col[i].values
+                doc_ids = cols["doc_ids"][i].values
                 want = np.asarray(wants[i].values, dtype=object)
                 sel = np.flatnonzero(
                     np.isin(np.asarray(doc_ids, dtype=object), want)
                 ).astype(np.int64)
                 if sel.size == 0:
                     continue
-                payload = memoryview(payloads[i].as_buffer())
-                if verify_checksum and zlib.crc32(payload) != checksums[
-                    i
-                ].as_py():
-                    raise ValueError(
-                        "payload checksum mismatch (corrupt block)"
-                    )
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
-                starts = np.zeros(lengths.size, dtype=np.int64)
-                np.cumsum(lengths[:-1], out=starts[1:])
-                out_lens = lengths[sel]
-                total_out = int(out_lens.sum())
-                if total_out:
-                    out_starts = np.zeros(out_lens.size, dtype=np.int64)
-                    np.cumsum(out_lens[:-1], out=out_starts[1:])
-                    idx = np.arange(total_out, dtype=np.int64)
-                    idx += np.repeat(starts[sel] - out_starts, out_lens)
-                    values, _ = decode_block_gather(payload, idx)
-                else:
-                    values = np.zeros(0, dtype=np.int32)
+                out_lens, values = _gather_docs(cols, i, sel, verify_checksum)
                 yield tokens_batch(
                     doc_ids.take(pa.array(sel, pa.int64())), out_lens, values
                 )

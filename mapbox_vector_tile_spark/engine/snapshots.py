@@ -37,9 +37,11 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .decode import decode_dataframe
 from .deletes import decode_with_deletes
+from .encode import BLOCKS_SPARK_SCHEMA
 
 
 def _snap_path(root: str, sid: int) -> str:
@@ -100,6 +102,25 @@ def _commit(root: str, operation: str, new_data: list[str],
     return sid
 
 
+def _check_blocks_schema(blocks_df: DataFrame) -> None:
+    """Every data file of a snapshot table has the blocks schema, so that
+    readers can pass it instead of inferring it; a frame with any other
+    columns or types is refused before anything is written."""
+    want = StructType.fromDDL(BLOCKS_SPARK_SCHEMA).simpleString()
+    got = blocks_df.schema.simpleString()
+    if got != want:
+        raise ValueError(
+            f"blocks frame schema {got} differs from the blocks table "
+            f"schema {want}"
+        )
+
+
+def _read_data_files(spark: SparkSession, root: str, files: list[str]):
+    return spark.read.schema(BLOCKS_SPARK_SCHEMA).parquet(
+        *(os.path.join(root, f) for f in files)
+    )
+
+
 def _rel_parquet_files(root: str, subdir: str) -> list[str]:
     out = []
     for dirpath, _dirs, files in os.walk(os.path.join(root, subdir)):
@@ -121,7 +142,12 @@ def commit_append(
     carry ``"_subdir"`` to override the data directory name — a retried
     writer must use a FRESH directory per attempt so a partial write from
     a crashed attempt (unreferenced by any manifest — invisible to readers,
-    reaped by :func:`orphan_files`) can never collide with the retry."""
+    reaped by :func:`orphan_files`) can never collide with the retry.
+
+    ``blocks_df`` must have exactly the blocks schema
+    (``encode.BLOCKS_SPARK_SCHEMA``); otherwise ``ValueError`` is raised
+    before anything is written."""
+    _check_blocks_schema(blocks_df)
     meta = dict(meta or {})
     subdir = meta.pop("_subdir", None) or f"s{(current_snapshot_id(root) or 0) + 1}"
     out_dir = os.path.join(root, "data", subdir)
@@ -145,7 +171,10 @@ def commit_rewrite(root: str, blocks_df: DataFrame) -> int:
     """Commit a full rewrite (e.g. :func:`..compact.compact_blocks` output,
     or deletes applied for real): the new snapshot references ONLY the
     rewritten files and drops all delete sidecars — the rewrite_data_files
-    commit shape. Prior snapshots keep reading the old files until expired."""
+    commit shape. Prior snapshots keep reading the old files until expired.
+    ``blocks_df`` is checked against the blocks schema as in
+    :func:`commit_append`."""
+    _check_blocks_schema(blocks_df)
     sid = (current_snapshot_id(root) or 0) + 1
     out_dir = os.path.join(root, "data", f"s{sid}")
     blocks_df.write.mode("error").parquet(out_dir)
@@ -158,14 +187,17 @@ def commit_rewrite(root: str, blocks_df: DataFrame) -> int:
 def read_blocks_at(
     spark: SparkSession, root: str, snapshot_id: int | None = None
 ) -> DataFrame:
-    """Blocks DataFrame of exactly one snapshot's data files (time travel)."""
+    """Blocks DataFrame of exactly one snapshot's data files (time travel).
+
+    The files are read with the blocks schema that every commit checked, so
+    planning the read starts no Spark job."""
     sid = current_snapshot_id(root) if snapshot_id is None else snapshot_id
     if sid is None:
         raise ValueError(f"table at {root} has no snapshots")
     snap = read_snapshot(root, sid)
     if not snap["data_files"]:
         raise ValueError(f"snapshot {sid} has no data files")
-    return spark.read.parquet(*(os.path.join(root, f) for f in snap["data_files"]))
+    return _read_data_files(spark, root, snap["data_files"])
 
 
 def decode_at(
@@ -213,10 +245,7 @@ def incremental_changes(
         )
     new_data = [f for f in hi["data_files"] if f not in set(lo["data_files"])]
     inserted = (
-        decode_dataframe(
-            spark.read.parquet(*(os.path.join(root, f) for f in new_data)),
-            **decode_kw,
-        )
+        decode_dataframe(_read_data_files(spark, root, new_data), **decode_kw)
         if new_data
         else spark.createDataFrame(
             [], "doc_id string, tokens array<int>, n_tok int"
