@@ -56,15 +56,20 @@ def decode_block_row(
     return lengths, values
 
 
-def tokens_batch(doc_ids, lengths, values, source=None) -> pa.RecordBatch:
+def tokens_batch(
+    doc_ids, lengths, values, source=None, n_tok=None
+) -> pa.RecordBatch:
     """``(doc_id, tokens, n_tok[, source])`` batch from one decode's flat
-    output: ``lengths`` per doc, ``values`` concatenated in doc order."""
+    output: ``lengths`` per doc, ``values`` concatenated in doc order.
+    ``n_tok`` defaults to ``lengths``; truncating decoders pass the
+    original lengths."""
     offsets = np.zeros(lengths.size + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     tokens = pa.LargeListArray.from_arrays(
         pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
     ).cast(pa.list_(pa.int32()))
-    arrays = [doc_ids, tokens, pa.array(lengths.astype(np.int32), pa.int32())]
+    n_tok = lengths if n_tok is None else n_tok
+    arrays = [doc_ids, tokens, pa.array(n_tok.astype(np.int32), pa.int32())]
     if source is None:
         return pa.RecordBatch.from_arrays(arrays, schema=_OUT_ARROW_SCHEMA)
     return pa.RecordBatch.from_arrays(
@@ -72,49 +77,74 @@ def tokens_batch(doc_ids, lengths, values, source=None) -> pa.RecordBatch:
     )
 
 
-def _gather_docs(cols: dict, i: int, sel: np.ndarray, verify_checksum: bool):
-    """Tokens of the docs at positions ``sel`` of blocks row ``i``:
-    ``(out_lens, values)``. ``cols`` maps the blocks columns to their Arrow
-    arrays. The chunk's decoded lengths must agree with its doc ids and
-    stored ``n_rows``, and sum to its stored ``n_values``; the payload CRC
-    is checked before the gather."""
-    from ..codec.gather import decode_block_gather
+# the blocks columns every Catalyst decoder reads: the stream, its CRC and
+# the stored counts its decoded lengths are checked against
+_DECODE_COLS = [
+    "doc_ids", "n_rows", "n_values", "lengths_blob", "payload", "checksum",
+]
 
+
+def _check_counts(cols: dict, i: int, lengths: np.ndarray) -> None:
+    """Raise ``ValueError`` naming blocks row ``i``'s chunk (by its doc-id
+    span) unless its decoded ``lengths`` agree with its doc ids and stored
+    ``n_rows`` and sum to its stored ``n_values``. ``cols`` maps the
+    :data:`_DECODE_COLS` to their Arrow arrays."""
+    doc_ids = cols["doc_ids"][i].values
+    n_rows = cols["n_rows"][i].as_py()
+    n_values = cols["n_values"][i].as_py()
+    total = int(lengths.sum())
+    if lengths.size == len(doc_ids) == n_rows and total == n_values:
+        return
+    span = f"{doc_ids[0]}..{doc_ids[-1]}" if len(doc_ids) else "no doc ids"
+    raise ValueError(
+        f"chunk [{span}]: {lengths.size} lengths summing to {total}, "
+        f"{len(doc_ids)} doc ids, stored n_rows {n_rows} and "
+        f"n_values {n_values}"
+    )
+
+
+def _checked_lengths(cols: dict, i: int, verify_checksum: bool):
+    """``(payload, lengths)`` of blocks row ``i``: the payload CRC checked
+    when asked, the decoded lengths checked by :func:`_check_counts`."""
     payload = memoryview(cols["payload"][i].as_buffer())
     if verify_checksum and zlib.crc32(payload) != cols["checksum"][i].as_py():
         raise ValueError("payload checksum mismatch (corrupt block)")
     lengths = B.decode_block(
         memoryview(cols["lengths_blob"][i].as_buffer())
     ).astype(np.int64)
-    n_docs = len(cols["doc_ids"][i].values)
-    n_rows = cols["n_rows"][i].as_py()
-    n_values = cols["n_values"][i].as_py()
-    if not lengths.size == n_docs == n_rows or int(lengths.sum()) != n_values:
-        raise ValueError(
-            f"chunk {cols['chunk_id'][i].as_py()} "
-            f"[{cols['min_doc_id'][i].as_py()}, "
-            f"{cols['max_doc_id'][i].as_py()}]: {lengths.size} lengths "
-            f"summing to {int(lengths.sum())}, {n_docs} doc ids, stored "
-            f"n_rows {n_rows} and n_values {n_values}"
-        )
-    starts = np.zeros(lengths.size, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=starts[1:])
-    out_lens = lengths[sel]
+    _check_counts(cols, i, lengths)
+    return payload, lengths
+
+
+def _gather_spans(payload, starts: np.ndarray, out_lens: np.ndarray):
+    """Values at flat positions ``[starts[d], starts[d] + out_lens[d])`` of
+    each doc ``d``, concatenated, via the codec-aware positional gather.
+    Spans must be disjoint and ascending."""
+    from ..codec.gather import decode_block_gather
+
     total_out = int(out_lens.sum())
     if not total_out:
-        return out_lens, np.zeros(0, dtype=np.int32)
+        return np.zeros(0, dtype=np.int32)
     out_starts = np.zeros(out_lens.size, dtype=np.int64)
     np.cumsum(out_lens[:-1], out=out_starts[1:])
     idx = np.arange(total_out, dtype=np.int64)
-    idx += np.repeat(starts[sel] - out_starts, out_lens)
-    return out_lens, decode_block_gather(payload, idx)[0]
+    idx += np.repeat(starts - out_starts, out_lens)
+    return decode_block_gather(payload, idx)[0]
 
 
-# columns the gather decoders read from each blocks row
-_GATHER_COLS = [
-    "chunk_id", "n_rows", "n_values", "doc_ids", "lengths_blob", "payload",
-    "checksum", "min_doc_id", "max_doc_id",
-]
+def _doc_starts(lengths: np.ndarray) -> np.ndarray:
+    """Flat start position of each doc in its chunk's value stream."""
+    starts = np.zeros(lengths.size, dtype=np.int64)
+    np.cumsum(lengths[:-1], out=starts[1:])
+    return starts
+
+
+def _gather_docs(cols: dict, i: int, sel: np.ndarray, verify_checksum: bool):
+    """Tokens of the docs at positions ``sel`` of blocks row ``i``:
+    ``(out_lens, values)``, after the checks of :func:`_checked_lengths`."""
+    payload, lengths = _checked_lengths(cols, i, verify_checksum)
+    out_lens = lengths[sel]
+    return out_lens, _gather_spans(payload, _doc_starts(lengths)[sel], out_lens)
 
 
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
@@ -134,6 +164,9 @@ def decode_dataframe(
     transform=None,
 ):
     """blocks DataFrame -> ``(doc_id, tokens, n_tok[, source])`` DataFrame.
+
+    Every chunk's decoded lengths are checked against its doc ids and its
+    stored ``n_rows`` and ``n_values`` (``ValueError`` naming the chunk).
 
     ``with_source`` additionally decodes the per-chunk DICT+FSST string blob
     (requires blocks encoded with ``string_col``).
@@ -171,19 +204,18 @@ def decode_dataframe(
             return out
 
         for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            checksums = batch.column("checksum")
-            doc_ids_col = batch.column("doc_ids")
+            cols = {c: batch.column(c) for c in _DECODE_COLS}
+            doc_ids_col = cols["doc_ids"]
             src_col = batch.column("source_blob") if with_source else None
             for i in range(batch.num_rows):
                 # zero-copy views into the Arrow batch: the compressed
                 # stream is never duplicated on the decode hot path
                 lengths, values = decode_block_row(
-                    memoryview(payloads[i].as_buffer()),
-                    memoryview(lengths_blobs[i].as_buffer()),
-                    checksums[i].as_py() if verify_checksum else None,
+                    memoryview(cols["payload"][i].as_buffer()),
+                    memoryview(cols["lengths_blob"][i].as_buffer()),
+                    cols["checksum"][i].as_py() if verify_checksum else None,
                 )
+                _check_counts(cols, i, lengths)
                 srcs = None
                 if with_source:
                     blob = src_col[i].as_py()
@@ -212,9 +244,7 @@ def decode_dataframe(
         if b_docs:
             yield flush()
 
-    cols = ["doc_ids", "lengths_blob", "payload", "checksum"] + (
-        ["source_blob"] if with_source else []
-    )
+    cols = _DECODE_COLS + (["source_blob"] if with_source else [])
     schema_str = TOKENS_SRC_OUT_SPARK_SCHEMA if with_source else TOKENS_OUT_SPARK_SCHEMA
     out = blocks_df.select(*cols).mapInArrow(fn, schema_str)
     return transform(out) if transform is not None else out
@@ -342,11 +372,13 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
         )
     )
 
+    id_cols = _DECODE_COLS + ["min_doc_id", "max_doc_id"]
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
         for batch in batches:
-            cols = {c: batch.column(c) for c in _GATHER_COLS}
+            cols = {c: batch.column(c) for c in id_cols}
             for i in range(batch.num_rows):
                 # re-narrow the sorted id set to this chunk's span so the
                 # membership test is against the few ids that can match
@@ -366,7 +398,7 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
                 )
                 yield tokens_batch(doc_ids.filter(mask_pa), out_lens, values)
 
-    return _pack_survivors(pruned.select(*_GATHER_COLS)).mapInArrow(
+    return _pack_survivors(pruned.select(*id_cols)).mapInArrow(
         fn, TOKENS_OUT_SPARK_SCHEMA
     )
 
@@ -420,11 +452,11 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
         .groupBy("chunk_id")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("__want"))
     )
-    hit = blocks_df.join(matched, "chunk_id").select(*_GATHER_COLS, "__want")
+    hit = blocks_df.join(matched, "chunk_id").select(*_DECODE_COLS, "__want")
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols = {c: batch.column(c) for c in _GATHER_COLS}
+            cols = {c: batch.column(c) for c in _DECODE_COLS}
             wants = batch.column("__want")
             for i in range(batch.num_rows):
                 doc_ids = cols["doc_ids"][i].values
@@ -464,54 +496,7 @@ def decode_prefix_dataframe(blocks_df, k: int, verify_checksum: bool = True):
     """
     if k < 0:
         raise ValueError("prefix length k must be >= 0")
-
-    from ..codec.gather import decode_block_gather
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            checksums = batch.column("checksum")
-            doc_ids_col = batch.column("doc_ids")
-            for i in range(batch.num_rows):
-                payload = memoryview(payloads[i].as_buffer())
-                if verify_checksum and zlib.crc32(payload) != checksums[
-                    i
-                ].as_py():
-                    raise ValueError(
-                        "payload checksum mismatch (corrupt block)"
-                    )
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
-                out_lens = np.minimum(lengths, k)
-                total_out = int(out_lens.sum())
-                if total_out:
-                    starts = np.zeros(lengths.size, dtype=np.int64)
-                    np.cumsum(lengths[:-1], out=starts[1:])
-                    out_starts = np.zeros(out_lens.size, dtype=np.int64)
-                    np.cumsum(out_lens[:-1], out=out_starts[1:])
-                    idx = np.arange(total_out, dtype=np.int64)
-                    idx += np.repeat(starts - out_starts, out_lens)
-                    values, _ = decode_block_gather(payload, idx)
-                else:
-                    values = np.zeros(0, dtype=np.int32)
-                offsets = np.zeros(out_lens.size + 1, dtype=np.int64)
-                np.cumsum(out_lens, out=offsets[1:])
-                tokens = pa.LargeListArray.from_arrays(
-                    pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-                ).cast(pa.list_(pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids_col[i].values,
-                        tokens,
-                        pa.array(lengths.astype(np.int32), pa.int32()),
-                    ],
-                    schema=_OUT_ARROW_SCHEMA,
-                )
-
-    cols = ["doc_ids", "lengths_blob", "payload", "checksum"]
-    return blocks_df.select(*cols).mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)
+    return _truncated_dataframe(blocks_df, k, verify_checksum, tail=False)
 
 
 def decode_padded_dataframe(
@@ -559,53 +544,27 @@ def decode_suffix_dataframe(blocks_df, k: int, verify_checksum: bool = True):
     """
     if k < 0:
         raise ValueError("suffix length k must be >= 0")
+    return _truncated_dataframe(blocks_df, k, verify_checksum, tail=True)
 
-    from ..codec.gather import decode_block_gather
+
+def _truncated_dataframe(blocks_df, k: int, verify_checksum: bool, tail: bool):
+    """``tokens[:k]`` (or ``tokens[-k:]`` when ``tail``) per doc, with the
+    original ``n_tok``: each doc's kept span becomes one sorted gather index
+    (spans are disjoint and ascending because doc spans are). Each chunk is
+    checked by :func:`_checked_lengths` first."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            checksums = batch.column("checksum")
-            doc_ids_col = batch.column("doc_ids")
+            cols = {c: batch.column(c) for c in _DECODE_COLS}
             for i in range(batch.num_rows):
-                payload = memoryview(payloads[i].as_buffer())
-                if verify_checksum and zlib.crc32(payload) != checksums[
-                    i
-                ].as_py():
-                    raise ValueError(
-                        "payload checksum mismatch (corrupt block)"
-                    )
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
+                payload, lengths = _checked_lengths(cols, i, verify_checksum)
                 out_lens = np.minimum(lengths, k)
-                total_out = int(out_lens.sum())
-                if total_out:
-                    starts = np.zeros(lengths.size, dtype=np.int64)
-                    np.cumsum(lengths[:-1], out=starts[1:])
-                    # suffix span of doc d starts at starts[d] + n_d - out_d
-                    sel_starts = starts + lengths - out_lens
-                    out_starts = np.zeros(out_lens.size, dtype=np.int64)
-                    np.cumsum(out_lens[:-1], out=out_starts[1:])
-                    idx = np.arange(total_out, dtype=np.int64)
-                    idx += np.repeat(sel_starts - out_starts, out_lens)
-                    values, _ = decode_block_gather(payload, idx)
-                else:
-                    values = np.zeros(0, dtype=np.int32)
-                offsets = np.zeros(out_lens.size + 1, dtype=np.int64)
-                np.cumsum(out_lens, out=offsets[1:])
-                tokens = pa.LargeListArray.from_arrays(
-                    pa.array(offsets, pa.int64()), pa.array(values, pa.int32())
-                ).cast(pa.list_(pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids_col[i].values,
-                        tokens,
-                        pa.array(lengths.astype(np.int32), pa.int32()),
-                    ],
-                    schema=_OUT_ARROW_SCHEMA,
+                starts = _doc_starts(lengths)
+                if tail:
+                    starts += lengths - out_lens
+                values = _gather_spans(payload, starts, out_lens)
+                yield tokens_batch(
+                    cols["doc_ids"][i].values, out_lens, values, n_tok=lengths
                 )
 
-    cols = ["doc_ids", "lengths_blob", "payload", "checksum"]
-    return blocks_df.select(*cols).mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)
+    return blocks_df.select(*_DECODE_COLS).mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)

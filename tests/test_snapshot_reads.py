@@ -20,6 +20,8 @@ from mapbox_vector_tile_spark.engine.decode import (
     decode_doc_ids,
     decode_doc_ids_df,
     decode_doc_range,
+    decode_prefix_dataframe,
+    decode_suffix_dataframe,
 )
 from mapbox_vector_tile_spark.engine.encode import BLOCKS_SPARK_SCHEMA
 from mapbox_vector_tile_spark.streaming.snapshot_sink import commit_micro_batch
@@ -235,24 +237,29 @@ def test_commits_refuse_other_schemas(spark, table, tmp_path):
     assert not os.path.exists(os.path.join(root, "snapshots"))
 
 
-def test_gather_decoders_check_stored_counts(spark, tmp_path):
-    """A blocks row whose stored n_values disagrees with its lengths fails
-    both gather decoders when a read touches it; other chunks still read."""
+def _bump_stored_count(spark, tmp_path, column: str = "n_values"):
+    """A 2-commit table whose first blocks row stores ``column`` one too
+    high; returns its blocks frame and a doc id of that chunk."""
     root = str(tmp_path / "tbl")
     _commit_batches(spark, root, 2)
     snap = S.read_snapshot(root, S.current_snapshot_id(root))
     path = os.path.join(root, snap["data_files"][0])
     good = pq.read_table(path)
     bad_doc = good.column("doc_ids")[0].values[1].as_py()
-    n_values = good.column("n_values").to_numpy().copy()
-    n_values[0] += 1
-    i = good.schema.get_field_index("n_values")
-    pq.write_table(good.set_column(i, "n_values", pa.array(n_values)), path)
+    counts = good.column(column).to_numpy().copy()
+    counts[0] += 1
+    i = good.schema.get_field_index(column)
+    pq.write_table(good.set_column(i, column, pa.array(counts)), path)
     # the rewritten file no longer matches the local file system's checksum
     crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
     os.remove(crc)
+    return S.read_blocks_at(spark, root), bad_doc
 
-    blocks = S.read_blocks_at(spark, root)
+
+def test_gather_decoders_check_stored_counts(spark, tmp_path):
+    """A blocks row whose stored n_values disagrees with its lengths fails
+    both gather decoders when a read touches it; other chunks still read."""
+    blocks, bad_doc = _bump_stored_count(spark, tmp_path)
     with pytest.raises(Exception, match=r"stored n_rows \d+ and n_values"):
         decode_doc_ids(blocks, [bad_doc]).collect()
     ids_df = spark.createDataFrame([(bad_doc,)], "doc_id string")
@@ -260,3 +267,23 @@ def test_gather_decoders_check_stored_counts(spark, tmp_path):
         decode_doc_ids_df(blocks, ids_df).collect()
     ok = G.doc_id_str([BATCH_DOCS + 1])
     assert [r.doc_id for r in decode_doc_ids(blocks, ok).collect()] == ok
+
+
+@pytest.mark.parametrize("column", ["n_values", "n_rows"])
+def test_scan_decoders_check_stored_counts(spark, tmp_path, column):
+    """The full, range, prefix and suffix decoders check every chunk's
+    decoded lengths against its stored counts and name the chunk; a range
+    read that misses the bad chunk still reads."""
+    blocks, bad_doc = _bump_stored_count(spark, tmp_path, column)
+    bad = rf"chunk \[doc-\d+\.\.doc-\d+\]: .*stored n_rows \d+ and n_values"
+    reads = [
+        decode_dataframe(blocks),
+        decode_doc_range(blocks, bad_doc, bad_doc + "~"),
+        decode_prefix_dataframe(blocks, 4),
+        decode_suffix_dataframe(blocks, 4),
+    ]
+    for read in reads:
+        with pytest.raises(Exception, match=bad):
+            read.collect()
+    lo, hi = G.doc_id_str([BATCH_DOCS, 2 * BATCH_DOCS])
+    assert decode_doc_range(blocks, lo, hi).count() == BATCH_DOCS

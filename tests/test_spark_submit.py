@@ -110,3 +110,35 @@ def test_spark_submit_decode_verify(spark, tmp_path):
     )
     empty = submit(["--doc-range", "doc-99999000:doc-99999999"])
     assert (empty["rows_decoded"], empty["n_mismatch"]) == (0, 0)
+
+
+def test_build_pyfiles_is_reproducible(tmp_path, monkeypatch):
+    """Unchanged sources rebuild the --py-files zip byte-identical, whatever
+    their file times (a fresh checkout sets new ones), so the tracked
+    dist/mvt_spark.zip stays clean after the submit tests rebuild it."""
+    import sys
+    import zipfile
+
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
+    try:
+        import build_pyfiles
+    finally:
+        sys.path.pop(0)
+    first = build_pyfiles.build(str(tmp_path / "a.zip"))
+    # the same sources in another checkout, with other file times
+    checkout = tmp_path / "checkout"
+    shutil.copytree(
+        os.path.join(ROOT, "mapbox_vector_tile_spark"),
+        checkout / "mapbox_vector_tile_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    for dp, _, files in os.walk(checkout):
+        for f in files:
+            os.utime(os.path.join(dp, f), (1_000_000_000, 1_000_000_000))
+    monkeypatch.setattr(build_pyfiles, "ROOT", str(checkout))
+    second = build_pyfiles.build(str(tmp_path / "b.zip"))
+    with open(first, "rb") as a, open(second, "rb") as b:
+        assert a.read() == b.read()
+    names = zipfile.ZipFile(first).namelist()
+    assert names == sorted(names)
+    assert "mapbox_vector_tile_spark/__init__.py" in names
