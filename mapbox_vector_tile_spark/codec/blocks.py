@@ -476,8 +476,3 @@ def block_info(buf: bytes | memoryview) -> BlockInfo:
 
 def header_size() -> int:
     return _HDR.size
-
-
-def _mvt_stream(a: np.ndarray) -> np.ndarray:
-    """Back-compat alias: zigzag(delta-from-0) of an array."""
-    return ChunkAnalysis(a).mvt_zz

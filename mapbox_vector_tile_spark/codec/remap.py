@@ -39,15 +39,11 @@ import numpy as np
 
 from . import kernels as K
 from .blocks import (
-    BITPACK_ZZ,
     CONSTANT,
-    DELTA_ZZ_BITPACK,
-    DELTA_ZZ_VARINT,
     DICT_BITPACK,
     DICT_ESCAPE,
     MAGIC,
     PAGED,
-    RAW,
     RLE,
     VERSION,
     _CONST,
@@ -78,28 +74,6 @@ def _apply(fn: MapFn, vals: np.ndarray) -> np.ndarray:
     ):
         raise ValueError("remapped values overflow int32")
     return out.astype(np.int32)
-
-
-def make_table_map(
-    keys: np.ndarray, values: np.ndarray, default: int | None = None
-) -> MapFn:
-    """Vectorized old-id -> new-id lookup — the broadcast-table production
-    shape (tokenizer merge tables). ``default=None`` keeps unmapped ids;
-    an int (e.g. an UNK id) replaces them."""
-    keys = np.asarray(keys, dtype=np.int64)
-    order = np.argsort(keys, kind="stable")
-    keys, values = keys[order], np.asarray(values, dtype=np.int64)[order]
-    if keys.size > 1 and (np.diff(keys) == 0).any():
-        raise ValueError("duplicate keys in remap table")
-
-    def fn(a: np.ndarray) -> np.ndarray:
-        pos = np.searchsorted(keys, a)
-        pos_c = np.minimum(pos, max(keys.size - 1, 0))
-        hit = (keys.size > 0) & (keys[pos_c] == a)
-        base = a if default is None else np.full_like(a, default)
-        return np.where(hit, values[pos_c], base)
-
-    return fn
 
 
 def make_range_shift_map(lo: int, hi: int, offset: int) -> MapFn:

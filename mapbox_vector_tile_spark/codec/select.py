@@ -20,7 +20,6 @@ the analog of the reference's bounded geometry-repair retry loop
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -107,36 +106,6 @@ def _paged_bound(an: ChunkAnalysis, ps: int) -> int:
         wt = int(np.ceil(np.log2(max(int(t.max() - t.min()), 1) + 1)))
         total += B.header_size() + 10 + (tail * wt + 7) // 8
     return B.paged_size([]) + 4 * (n_full + (1 if tail else 0)) + total
-
-
-@dataclass(frozen=True)
-class ChunkStats:
-    """Distribution stats for one chunk (the codec-selection features)."""
-
-    n: int
-    card_estimate: int
-    n_runs: int
-    width_zz: int        # bit-width of zigzag(values)
-    width_range: int     # bit-width of (max - min)
-    width_delta_zz: int  # bit-width of zigzag(deltas)
-    vmin: int
-    vmax: int
-
-
-def chunk_stats(a: np.ndarray, analysis: ChunkAnalysis | None = None) -> ChunkStats:
-    an = analysis or ChunkAnalysis(a)
-    if an.n == 0:
-        return ChunkStats(0, 0, 0, 0, 0, 0, 0, 0)
-    return ChunkStats(
-        n=an.n,
-        card_estimate=an.card_sample,
-        n_runs=an.n_runs,  # one boolean reduction; never builds run arrays
-        width_zz=an.width_zz,
-        width_range=an.width_range,
-        width_delta_zz=an.width_delta_zz,
-        vmin=an.vmin,
-        vmax=an.vmax,
-    )
 
 
 def _nbits_bytes(n: int, w: int) -> int:

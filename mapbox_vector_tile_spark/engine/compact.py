@@ -46,12 +46,13 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from .decode import decode_block_row
+from .decode import _all_values, _checked_lengths
 from .encode import (
     _BLOCKS_ARROW_SCHEMA,
     BLOCKS_SPARK_SCHEMA,
     EncodeOptions,
     _encode_chunk,
+    blocks_batch,
 )
 
 _META_FIELDS = [f.name for f in _BLOCKS_ARROW_SCHEMA if f.name != "doc_ids"]
@@ -71,8 +72,10 @@ def compact_blocks(
     already at or near target size — pass through UNCHANGED (no decode,
     no re-encode, byte-identical payload), so compaction is cheap and
     idempotent on already-compact tables. Multi-member groups are decoded,
-    concatenated (junctions recorded as PAGED segment bounds), and
-    re-encoded with full codec auto-selection.
+    each member checked like every Catalyst decode (payload CRC when
+    ``verify_checksum``, decoded lengths against its doc ids and stored
+    ``n_rows``/``n_values``), concatenated (junctions recorded as PAGED
+    segment bounds), and re-encoded with full codec auto-selection.
 
     Output ``chunk_id`` is ``(bucket << 40) | group`` and ``part_id`` is
     the bucket — unique per output row since every (bucket, group) emits
@@ -129,12 +132,10 @@ def compact_blocks(
                 return
             decoded = []
             for m in members:
-                lengths, values = decode_block_row(
-                    m["payload"],
-                    m["lengths_blob"],
-                    m["checksum"] if verify_checksum else None,
+                payload, lengths = _checked_lengths(
+                    m["_cols"], m["_i"], verify_checksum
                 )
-                decoded.append((m, lengths, values))
+                decoded.append((m, lengths, _all_values(payload, lengths)))
             lengths = np.concatenate([d[1] for d in decoded])
             values = np.concatenate([d[2] for d in decoded])
             sizes = np.array([d[2].size for d in decoded], dtype=np.int64)
@@ -177,25 +178,10 @@ def compact_blocks(
         def flush() -> pa.RecordBatch | None:
             if not out_rows:
                 return None
-            offs = np.zeros(len(out_docs) + 1, dtype=np.int64)
-            np.cumsum([len(d) for d in out_docs], out=offs[1:])
-            doc_lists = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()),
-                pa.concat_arrays([d.cast(pa.string()) for d in out_docs])
-                if out_docs
-                else pa.array([], pa.string()),
-            )
-            cols = [
-                doc_lists
-                if f.name == "doc_ids"
-                else pa.array([r[f.name] for r in out_rows], f.type)
-                for f in _BLOCKS_ARROW_SCHEMA
-            ]
+            batch = blocks_batch(out_rows, out_docs)
             out_rows.clear()
             out_docs.clear()
-            return pa.RecordBatch.from_arrays(
-                cols, schema=_BLOCKS_ARROW_SCHEMA
-            )
+            return batch
 
         # a group may span record batches: members carry across batch
         # boundaries and are emitted only on a key change (or at the end),
@@ -219,6 +205,8 @@ def compact_blocks(
                 }
                 m["doc_ids"] = cols["doc_ids"][i].values
                 m["_group"] = key[1]
+                # the member's Arrow row, for the checked decode
+                m["_cols"], m["_i"] = cols, i
                 members.append(m)
             b = flush()
             if b is not None:

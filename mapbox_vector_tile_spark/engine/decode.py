@@ -48,12 +48,18 @@ def decode_block_row(
     if checksum is not None and zlib.crc32(payload) != checksum:
         raise ValueError("payload checksum mismatch (corrupt block)")
     lengths = B.decode_block(lengths_blob).astype(np.int64)
+    return lengths, _all_values(payload, lengths)
+
+
+def _all_values(payload, lengths: np.ndarray) -> np.ndarray:
+    """The payload's whole value stream, which must hold ``sum(lengths)``
+    values."""
     values = B.decode_block(payload)
     if values.size != int(lengths.sum()):
         raise ValueError(
             f"decoded value count {values.size} != sum(lengths) {int(lengths.sum())}"
         )
-    return lengths, values
+    return values
 
 
 def tokens_batch(
@@ -77,43 +83,38 @@ def tokens_batch(
     )
 
 
-# the blocks columns every Catalyst decoder reads: the stream, its CRC and
+# the blocks columns every checked row read takes: the stream, its CRC and
 # the stored counts its decoded lengths are checked against
 _DECODE_COLS = [
     "doc_ids", "n_rows", "n_values", "lengths_blob", "payload", "checksum",
 ]
 
 
-def _check_counts(cols: dict, i: int, lengths: np.ndarray) -> None:
-    """Raise ``ValueError`` naming blocks row ``i``'s chunk (by its doc-id
-    span) unless its decoded ``lengths`` agree with its doc ids and stored
-    ``n_rows`` and sum to its stored ``n_values``. ``cols`` maps the
-    :data:`_DECODE_COLS` to their Arrow arrays."""
-    doc_ids = cols["doc_ids"][i].values
-    n_rows = cols["n_rows"][i].as_py()
-    n_values = cols["n_values"][i].as_py()
-    total = int(lengths.sum())
-    if lengths.size == len(doc_ids) == n_rows and total == n_values:
-        return
-    span = f"{doc_ids[0]}..{doc_ids[-1]}" if len(doc_ids) else "no doc ids"
-    raise ValueError(
-        f"chunk [{span}]: {lengths.size} lengths summing to {total}, "
-        f"{len(doc_ids)} doc ids, stored n_rows {n_rows} and "
-        f"n_values {n_values}"
-    )
-
-
 def _checked_lengths(cols: dict, i: int, verify_checksum: bool):
-    """``(payload, lengths)`` of blocks row ``i``: the payload CRC checked
-    when asked, the decoded lengths checked by :func:`_check_counts`."""
+    """``(payload, lengths)`` of blocks row ``i``, where ``cols`` maps the
+    :data:`_DECODE_COLS` to their Arrow arrays. The payload CRC is checked
+    when asked; the decoded lengths must agree with the row's doc ids and
+    stored ``n_rows`` and sum to its stored ``n_values``, else
+    ``ValueError`` names the chunk by its doc-id span. The payload is a
+    zero-copy view and is not decoded here."""
     payload = memoryview(cols["payload"][i].as_buffer())
     if verify_checksum and zlib.crc32(payload) != cols["checksum"][i].as_py():
         raise ValueError("payload checksum mismatch (corrupt block)")
     lengths = B.decode_block(
         memoryview(cols["lengths_blob"][i].as_buffer())
     ).astype(np.int64)
-    _check_counts(cols, i, lengths)
-    return payload, lengths
+    doc_ids = cols["doc_ids"][i].values
+    n_rows = cols["n_rows"][i].as_py()
+    n_values = cols["n_values"][i].as_py()
+    total = int(lengths.sum())
+    if lengths.size == len(doc_ids) == n_rows and total == n_values:
+        return payload, lengths
+    span = f"{doc_ids[0]}..{doc_ids[-1]}" if len(doc_ids) else "no doc ids"
+    raise ValueError(
+        f"chunk [{span}]: {lengths.size} lengths summing to {total}, "
+        f"{len(doc_ids)} doc ids, stored n_rows {n_rows} and "
+        f"n_values {n_values}"
+    )
 
 
 def _gather_spans(payload, starts: np.ndarray, out_lens: np.ndarray):
@@ -137,14 +138,6 @@ def _doc_starts(lengths: np.ndarray) -> np.ndarray:
     starts = np.zeros(lengths.size, dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
     return starts
-
-
-def _gather_docs(cols: dict, i: int, sel: np.ndarray, verify_checksum: bool):
-    """Tokens of the docs at positions ``sel`` of blocks row ``i``:
-    ``(out_lens, values)``, after the checks of :func:`_checked_lengths`."""
-    payload, lengths = _checked_lengths(cols, i, verify_checksum)
-    out_lens = lengths[sel]
-    return out_lens, _gather_spans(payload, _doc_starts(lengths)[sel], out_lens)
 
 
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
@@ -208,14 +201,8 @@ def decode_dataframe(
             doc_ids_col = cols["doc_ids"]
             src_col = batch.column("source_blob") if with_source else None
             for i in range(batch.num_rows):
-                # zero-copy views into the Arrow batch: the compressed
-                # stream is never duplicated on the decode hot path
-                lengths, values = decode_block_row(
-                    memoryview(cols["payload"][i].as_buffer()),
-                    memoryview(cols["lengths_blob"][i].as_buffer()),
-                    cols["checksum"][i].as_py() if verify_checksum else None,
-                )
-                _check_counts(cols, i, lengths)
+                payload, lengths = _checked_lengths(cols, i, verify_checksum)
+                values = _all_values(payload, lengths)
                 srcs = None
                 if with_source:
                     blob = src_col[i].as_py()
@@ -326,18 +313,18 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
        plain column predicate, so on a parquet/Iceberg blocks table it
        reaches the scan (``PushedFilters``) and non-overlapping row groups
        never read their ``payload`` bytes;
-    2. a per-chunk containment test of each requested id against
-       ``[min_doc_id, max_doc_id]`` (``F.exists`` over the literal id
-       array, O(|ids|) work per *chunk row*, zone-map-sized — prunes the
-       envelope's interior chunks when the set is scattered);
-    3. worker-side, the surviving chunk decodes ONLY the requested docs:
-       the lengths stream gives each doc's flat span and
+    2. per chunk, the requested ids inside ``[min_doc_id, max_doc_id]``
+       become its sorted ``__want`` array (``F.filter`` over the literal
+       id array, O(|ids|) work per *chunk row*, zone-map-sized), and
+       chunks with an empty ``__want`` drop — this prunes the envelope's
+       interior chunks when the set is scattered;
+    3. worker-side (:func:`_decode_wanted`), each surviving chunk tests
+       its own ``doc_ids`` against ``__want`` and decodes ONLY the
+       matching docs: the lengths stream gives each doc's flat span and
        :func:`~..codec.gather.decode_block_gather` resolves the positions
        codec-aware (RLE/CONSTANT/PAGED chunks never inflate their full
        value stream; a one-doc lookup in a sequential-codec chunk still
-       decodes once but ships one doc across Arrow/JVM). The chunk's
-       decoded lengths are checked against its doc ids and its stored
-       ``n_rows`` and ``n_values``, and its payload CRC before the gather.
+       decodes once but ships one doc across Arrow/JVM).
 
     Task shape: layers 1 and 2 run in the parallel scan, one task per file
     split, so pruned row groups never leave it. When the scan has more
@@ -359,47 +346,20 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     ids = sorted(set(ids))
     if not ids:
         raise ValueError("ids must be a non-empty collection of doc ids")
-    ids_np = np.array(ids, dtype=object)
-    want_set = pa.array(ids, pa.string())
 
-    id_arr = F.array(*[F.lit(d) for d in ids])
-    pruned = blocks_df.filter(
-        (F.col("max_doc_id") >= ids[0]) & (F.col("min_doc_id") <= ids[-1])
-    ).filter(
-        F.exists(
-            id_arr,
-            lambda d: (d >= F.col("min_doc_id")) & (d <= F.col("max_doc_id")),
-        )
+    want = F.filter(
+        F.array(*[F.lit(d) for d in ids]),
+        lambda d: (d >= F.col("min_doc_id")) & (d <= F.col("max_doc_id")),
     )
-
-    id_cols = _DECODE_COLS + ["min_doc_id", "max_doc_id"]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            cols = {c: batch.column(c) for c in id_cols}
-            for i in range(batch.num_rows):
-                # re-narrow the sorted id set to this chunk's span so the
-                # membership test is against the few ids that can match
-                lo = int(np.searchsorted(
-                    ids_np, cols["min_doc_id"][i].as_py(), "left"))
-                hi = int(np.searchsorted(
-                    ids_np, cols["max_doc_id"][i].as_py(), "right"))
-                if lo == hi:
-                    continue  # zone-map false positive at batch level
-                doc_ids = cols["doc_ids"][i].values
-                mask_pa = pc.is_in(doc_ids, value_set=want_set[lo:hi])
-                mask = mask_pa.to_numpy(zero_copy_only=False)
-                if not mask.any():
-                    continue
-                out_lens, values = _gather_docs(
-                    cols, i, np.flatnonzero(mask), verify_checksum
-                )
-                yield tokens_batch(doc_ids.filter(mask_pa), out_lens, values)
-
-    return _pack_survivors(pruned.select(*id_cols)).mapInArrow(
-        fn, TOKENS_OUT_SPARK_SCHEMA
+    hit = (
+        blocks_df.filter(
+            (F.col("max_doc_id") >= ids[0]) & (F.col("min_doc_id") <= ids[-1])
+        )
+        .select(*_DECODE_COLS, want.alias("__want"))
+        .filter(F.size("__want") > 0)
+    )
+    return _pack_survivors(hit).mapInArrow(
+        _decode_wanted(verify_checksum), TOKENS_OUT_SPARK_SCHEMA
     )
 
 
@@ -424,8 +384,8 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
        read;
     3. worker-side, each surviving chunk membership-tests its OWN
        ``doc_ids`` against ``__want`` and decodes only the matching
-       docs' spans via the codec-aware positional gather, exactly as the
-       literal-id path does.
+       docs' spans via the codec-aware positional gather — the same
+       worker (:func:`_decode_wanted`) as the literal-id path.
 
     Joining back id VALUES (not positions) makes ``chunk_id``
     collisions harmless: ``chunk_id`` is only unique within one encode
@@ -453,25 +413,37 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
         .agg(F.sort_array(F.collect_set("doc_id")).alias("__want"))
     )
     hit = blocks_df.join(matched, "chunk_id").select(*_DECODE_COLS, "__want")
+    return hit.mapInArrow(
+        _decode_wanted(verify_checksum), TOKENS_OUT_SPARK_SCHEMA
+    )
+
+
+def _decode_wanted(verify_checksum: bool):
+    """``mapInArrow`` function over blocks rows that carry a ``__want`` id
+    array: each row's docs whose ids are in ``__want``, gathered after the
+    checks of :func:`_checked_lengths`. A row none of whose docs is wanted
+    decodes neither its lengths nor its payload."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
         for batch in batches:
             cols = {c: batch.column(c) for c in _DECODE_COLS}
             wants = batch.column("__want")
             for i in range(batch.num_rows):
                 doc_ids = cols["doc_ids"][i].values
-                want = np.asarray(wants[i].values, dtype=object)
-                sel = np.flatnonzero(
-                    np.isin(np.asarray(doc_ids, dtype=object), want)
-                ).astype(np.int64)
-                if sel.size == 0:
+                hit = pc.is_in(doc_ids, value_set=wants[i].values)
+                sel = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
+                if not sel.size:
                     continue
-                out_lens, values = _gather_docs(cols, i, sel, verify_checksum)
-                yield tokens_batch(
-                    doc_ids.take(pa.array(sel, pa.int64())), out_lens, values
+                payload, lengths = _checked_lengths(cols, i, verify_checksum)
+                out_lens = lengths[sel]
+                values = _gather_spans(
+                    payload, _doc_starts(lengths)[sel], out_lens
                 )
+                yield tokens_batch(doc_ids.filter(hit), out_lens, values)
 
-    return hit.mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)
+    return fn
 
 
 def decode_prefix_dataframe(blocks_df, k: int, verify_checksum: bool = True):

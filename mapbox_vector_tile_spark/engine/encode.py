@@ -264,6 +264,24 @@ def _encode_chunk(
     }
 
 
+def blocks_batch(rows: list[dict], chunk_docs: list[pa.Array]) -> pa.RecordBatch:
+    """Blocks-table batch from :func:`_encode_chunk` rows and each row's
+    doc ids (``chunk_docs[k]`` belongs to ``rows[k]``)."""
+    offs = np.zeros(len(chunk_docs) + 1, dtype=np.int64)
+    np.cumsum([len(d) for d in chunk_docs], out=offs[1:])
+    doc_lists = pa.ListArray.from_arrays(
+        pa.array(offs, pa.int32()),
+        pa.concat_arrays([d.cast(pa.string()) for d in chunk_docs]),
+    )
+    cols = [
+        doc_lists
+        if f.name == "doc_ids"
+        else pa.array([r[f.name] for r in rows], f.type)
+        for f in _BLOCKS_ARROW_SCHEMA
+    ]
+    return pa.RecordBatch.from_arrays(cols, schema=_BLOCKS_ARROW_SCHEMA)
+
+
 def encode_dataframe(
     df,
     options: EncodeOptions | None = None,
@@ -304,13 +322,14 @@ def encode_dataframe(
             row_starts = chunk_row_starts(lengths, opts.max_chunk_values, forced)
             val_offsets = np.concatenate(([0], np.cumsum(lengths)))
             rows = []
-            chunk_bounds = []
+            chunk_docs = []
             for a, b in zip(row_starts[:-1], row_starts[1:]):
                 if a == b:
                     continue
+                chunk_docs.append(doc_ids.slice(a, b - a))
                 rows.append(
                     _encode_chunk(
-                        doc_ids.slice(a, b - a),
+                        chunk_docs[-1],
                         lengths[a:b],
                         values[val_offsets[a] : val_offsets[b]],
                         opts,
@@ -320,25 +339,9 @@ def encode_dataframe(
                         source_all[a:b] if source_all is not None else None,
                     )
                 )
-                chunk_bounds.append(a)
                 seq += 1
             if rows:
-                # columnar assembly; doc_ids column = zero-copy list view
-                # over the input batch's doc_id array
-                chunk_bounds.append(row_starts[-1])
-                doc_id_lists = pa.ListArray.from_arrays(
-                    pa.array(chunk_bounds, pa.int32()),
-                    doc_ids.combine_chunks() if hasattr(doc_ids, "combine_chunks") else doc_ids,
-                )
-                cols = []
-                for field in _BLOCKS_ARROW_SCHEMA:
-                    if field.name == "doc_ids":
-                        cols.append(doc_id_lists)
-                    else:
-                        cols.append(
-                            pa.array([r[field.name] for r in rows], field.type)
-                        )
-                yield pa.RecordBatch.from_arrays(cols, schema=_BLOCKS_ARROW_SCHEMA)
+                yield blocks_batch(rows, chunk_docs)
 
     cols = ["doc_id", "tokens"] + ([bucket_col] if bucket_col else []) + (
         [string_col] if string_col else []

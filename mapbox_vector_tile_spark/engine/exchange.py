@@ -489,22 +489,11 @@ class _FusedChunkEmitter:
         self.seq += 1
 
     def batch(self) -> pa.RecordBatch | None:
-        from .encode import _BLOCKS_ARROW_SCHEMA
+        from .encode import blocks_batch
 
         if not self.rows:
             return None
-        offs = np.zeros(len(self.chunk_docs) + 1, dtype=np.int64)
-        np.cumsum([len(d) for d in self.chunk_docs], out=offs[1:])
-        doc_id_lists = pa.ListArray.from_arrays(
-            pa.array(offs, pa.int32()), pa.concat_arrays(self.chunk_docs)
-        )
-        cols = [
-            doc_id_lists
-            if f.name == "doc_ids"
-            else pa.array([r[f.name] for r in self.rows], f.type)
-            for f in _BLOCKS_ARROW_SCHEMA
-        ]
-        return pa.RecordBatch.from_arrays(cols, schema=_BLOCKS_ARROW_SCHEMA)
+        return blocks_batch(self.rows, self.chunk_docs)
 
 
 def exchange_encode_fused_direct(

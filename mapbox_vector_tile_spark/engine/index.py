@@ -859,29 +859,6 @@ def update_token_index(
     return cells.mapInArrow(merge, INDEX_SPARK_SCHEMA)
 
 
-def write_token_index(index_df: DataFrame, path: str, n_files: int = 8) -> None:
-    """Persist the index clustered by ``(tok, segment)``.
-
-    ``repartitionByRange(tok)`` + within-file sort gives every parquet
-    file a tight token zone map, so a point lookup prunes at BOTH file
-    level (range partitioning) and row-group level (min/max statistics) —
-    the pushed ``tok = x`` predicate is asserted in tests. On a real
-    deployment this is the difference between touching one file and
-    touching the fleet."""
-    (
-        index_df.repartitionByRange(int(n_files), "tok")
-        .sortWithinPartitions("tok", "segment")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def read_token_index(spark, path: str) -> DataFrame:
-    """Scan a persisted index; lookups on the result push their token
-    predicate into the parquet reader."""
-    return spark.read.parquet(path)
-
-
 def index_token_stats(index_df: DataFrame) -> DataFrame:
     """Per-token ``(n_docs, n_hits)`` from manifest columns alone — no
     posting blob is decoded (segments are disjoint doc ranges, so sums

@@ -19,7 +19,7 @@ import pyarrow as pa
 from ..codec import blocks as B
 from ..codec import select as S
 from ..codec.analysis import ChunkAnalysis
-from .decode import decode_block_row
+from .decode import _all_values, _checked_lengths
 from .encode import _BLOCKS_ARROW_SCHEMA, BLOCKS_SPARK_SCHEMA
 
 
@@ -31,20 +31,23 @@ def reoptimize_blocks(blocks_df, validate: bool = False):
     round-trips every rewritten payload before swapping it in (decode-after-
     encode, the analog of the reference's post-optimise assert) and keeps the
     original on any mismatch.
+
+    Every row is read through the checked row path first (payload CRC,
+    decoded lengths against the stored counts), so a corrupt payload
+    fails the rewrite instead of being re-encoded under a fresh checksum.
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
 
         for batch in batches:
-            cols = {name: batch.column(name).to_pylist() for name in
+            arrays = {name: batch.column(name) for name in batch.schema.names}
+            cols = {name: arrays[name].to_pylist() for name in
                     batch.schema.names if name != "doc_ids"}
             doc_ids = batch.column("doc_ids")
             for i in range(batch.num_rows):
-                lengths, values = decode_block_row(
-                    cols["payload"][i], cols["lengths_blob"][i], None
-                )
-                an = ChunkAnalysis(values)
+                stored, lengths = _checked_lengths(arrays, i, True)
+                an = ChunkAnalysis(_all_values(stored, lengths))
                 cid = S.choose_codec(an.a, an)
                 payload = B.encode_block(an.a, cid, an)
                 if validate and not np.array_equal(

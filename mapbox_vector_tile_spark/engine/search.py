@@ -22,10 +22,6 @@ Plan shape (graded for 100x scale):
   within a chunk by the encode contract) — no token explode, no join;
 - output is hit docs only (typically tiny); the final ``orderBy`` is a
   shuffle of result rows, not of token data.
-
-A stats variant reports per-codec pruning effectiveness (chunks touched,
-values decoded vs stored) — the observability a 100 TB operator needs to
-prove its scan really is metadata-bounded.
 """
 
 from __future__ import annotations
@@ -42,20 +38,6 @@ _HITS_ARROW_SCHEMA = pa.schema(
     [("doc_id", pa.string()), ("n_hits", pa.int64())]
 )
 HITS_SPARK_SCHEMA = "doc_id string, n_hits long"
-
-_STATS_ARROW_SCHEMA = pa.schema(
-    [
-        ("codec", pa.string()),
-        ("n_chunks", pa.int64()),
-        ("n_values", pa.int64()),
-        ("values_decoded", pa.int64()),
-        ("n_hits", pa.int64()),
-    ]
-)
-STATS_SPARK_SCHEMA = (
-    "codec string, n_chunks long, n_values long, values_decoded long, "
-    "n_hits long"
-)
 
 
 def _doc_counts(
@@ -222,73 +204,6 @@ def search_phrase(blocks_df, x: int, y: int):
         fn, HITS_SPARK_SCHEMA
     )
     return out.withColumnRenamed("n_hits", "n_pairs").orderBy("doc_id")
-
-
-def search_token_stats(blocks_df, x: int):
-    """Per-codec pruning telemetry for a probe of ``x``.
-
-    ``values_decoded`` counts O(n_values)-proportional stream
-    materializations (0 for chunks answered from codec params / value
-    tables / run metadata) — ``values_decoded / n_values`` is the scan's
-    pushdown ratio.
-    """
-    x = int(x)
-    has_bloom = "token_bloom" in blocks_df.columns
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec.bloom import might_contain
-
-        for batch in batches:
-            payloads = batch.column("payload")
-            codecs = batch.column("codec")
-            n_values = batch.column("n_values")
-            blooms = batch.column("token_bloom") if has_bloom else None
-            agg: dict[str, list[int]] = {}
-            for i in range(batch.num_rows):
-                if blooms is not None and not might_contain(
-                    None if not blooms[i].is_valid
-                    else memoryview(blooms[i].as_buffer()),
-                    x,
-                ):
-                    pos, dec = np.empty(0, np.int64), 0
-                else:
-                    pos, dec = hit_positions(
-                        memoryview(payloads[i].as_buffer()), x
-                    )
-                c = agg.setdefault(codecs[i].as_py(), [0, 0, 0, 0])
-                c[0] += 1
-                c[1] += n_values[i].as_py()
-                c[2] += dec
-                c[3] += pos.size
-            if agg:
-                keys = sorted(agg)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(keys, pa.string()),
-                        pa.array([agg[k][0] for k in keys], pa.int64()),
-                        pa.array([agg[k][1] for k in keys], pa.int64()),
-                        pa.array([agg[k][2] for k in keys], pa.int64()),
-                        pa.array([agg[k][3] for k in keys], pa.int64()),
-                    ],
-                    schema=_STATS_ARROW_SCHEMA,
-                )
-
-    from pyspark.sql import functions as F
-
-    stat_cols = ["payload", "codec", "n_values"] + (
-        ["token_bloom"] if has_bloom else []
-    )
-    partial = blocks_df.select(*stat_cols).mapInArrow(fn, STATS_SPARK_SCHEMA)
-    return (
-        partial.groupBy("codec")
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("n_values").alias("n_values"),
-            F.sum("values_decoded").alias("values_decoded"),
-            F.sum("n_hits").alias("n_hits"),
-        )
-        .orderBy("codec")
-    )
 
 
 def search_token_range(blocks_df, lo: int, hi: int):

@@ -5,7 +5,7 @@ every mutation (append of freshly encoded blocks, an equality-delete
 sidecar, a compaction rewrite) is a COMMIT that writes an immutable
 snapshot manifest and atomically swaps a current-pointer file — data files
 themselves are append-only and never edited, so any historical snapshot
-remains readable forever (time travel) until explicitly expired.
+remains readable forever (time travel).
 
 Layout under the table root::
 
@@ -26,9 +26,7 @@ plans from manifest metadata alone.
 Reference parity: the reference has no table layer (it returns one encoded
 tile per call), but its round-trip contract is per-tile immutability —
 this module is where that contract lives once tiles become a mutable-by-
-commit table. Deletes compose with :mod:`.deletes` (merge-on-read);
-``expire_snapshots`` + ``orphan_files`` are the `expire_snapshots` /
-`remove_orphan_files` maintenance analogs.
+commit table. Deletes compose with :mod:`.deletes` (merge-on-read).
 """
 
 from __future__ import annotations
@@ -141,8 +139,8 @@ def commit_append(
     sink's ``batch_id`` for exactly-once replay detection). ``meta`` may
     carry ``"_subdir"`` to override the data directory name — a retried
     writer must use a FRESH directory per attempt so a partial write from
-    a crashed attempt (unreferenced by any manifest — invisible to readers,
-    reaped by :func:`orphan_files`) can never collide with the retry.
+    a crashed attempt (unreferenced by any manifest — invisible to readers)
+    can never collide with the retry.
 
     ``blocks_df`` must have exactly the blocks schema
     (``encode.BLOCKS_SPARK_SCHEMA``); otherwise ``ValueError`` is raised
@@ -171,7 +169,7 @@ def commit_rewrite(root: str, blocks_df: DataFrame) -> int:
     """Commit a full rewrite (e.g. :func:`..compact.compact_blocks` output,
     or deletes applied for real): the new snapshot references ONLY the
     rewritten files and drops all delete sidecars — the rewrite_data_files
-    commit shape. Prior snapshots keep reading the old files until expired.
+    commit shape. Prior snapshots keep reading the old files.
     ``blocks_df`` is checked against the blocks schema as in
     :func:`commit_append`."""
     _check_blocks_schema(blocks_df)
@@ -314,7 +312,7 @@ def set_ref(
 
 def resolve_ref(root: str, name: str) -> int:
     """Snapshot id a ref points at; raises on unknown names and on refs
-    whose snapshot has been expired (a dangling ref is an error, not an
+    whose snapshot manifest is gone (a dangling ref is an error, not an
     empty table)."""
     refs = _read_refs(root)
     if name not in refs:
@@ -322,62 +320,3 @@ def resolve_ref(root: str, name: str) -> int:
     sid = int(refs[name]["snapshot_id"])
     read_snapshot(root, sid)
     return sid
-
-
-def drop_ref(root: str, name: str) -> None:
-    """Remove a ref (tags included — dropping is how a tag is retired)."""
-    refs = _read_refs(root)
-    if name not in refs:
-        raise KeyError(f"unknown ref {name!r}")
-    del refs[name]
-    _write_refs(root, refs)
-
-
-def list_refs(root: str) -> dict[str, dict]:
-    """Name -> ``{kind, snapshot_id}`` mapping (copy)."""
-    return dict(_read_refs(root))
-
-
-def decode_at_ref(spark: SparkSession, root: str, name: str, **kw):
-    """Time travel by name: :func:`decode_at` of the ref's snapshot."""
-    return decode_at(spark, root, resolve_ref(root, name), **kw)
-
-
-def expire_snapshots(root: str, keep_last: int = 1) -> list[int]:
-    """Drop all but the newest ``keep_last`` snapshot manifests; returns the
-    expired ids. Data files stay until :func:`orphan_files` cleanup."""
-    log = snapshot_log(root)
-    expired = [s["snapshot_id"] for s in log[:-keep_last]] if keep_last else [
-        s["snapshot_id"] for s in log
-    ]
-    cur = current_snapshot_id(root)
-    pinned = {
-        r["snapshot_id"]: name for name, r in _read_refs(root).items()
-    }
-    for sid in expired:
-        if sid == cur:
-            raise ValueError("refusing to expire the current snapshot")
-        if sid in pinned:
-            raise ValueError(
-                f"refusing to expire snapshot {sid}: pinned by ref "
-                f"{pinned[sid]!r} (drop the ref first)"
-            )
-        os.remove(_snap_path(root, sid))
-    return expired
-
-
-def orphan_files(root: str) -> list[str]:
-    """Data/delete files referenced by NO live snapshot (safe to delete
-    after :func:`expire_snapshots`) — the remove_orphan_files analog.
-    Returns table-relative paths; caller decides when to unlink."""
-    live: set[str] = set()
-    for s in snapshot_log(root):
-        live.update(s["data_files"])
-        live.update(s["delete_files"])
-    return [
-        f
-        for sub in ("data", "deletes")
-        if os.path.isdir(os.path.join(root, sub))
-        for f in _rel_parquet_files(root, sub)
-        if f not in live
-    ]

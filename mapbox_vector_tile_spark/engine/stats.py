@@ -7,10 +7,6 @@ work; only param-opaque codecs inflate their streams. One ``mapInArrow``
 pass emits a per-chunk partial row — Catalyst's hash aggregate does the
 combine, so the shuffle carries one tiny row per chunk, never token data
 (exactly the map-side-combine shape a 100 TB stats scan needs).
-
-``token_value_stats_by_codec`` is the telemetry twin: per-codec
-``values_decoded / n_values`` is the scan's pushdown ratio, the number
-that proves the scan is metadata-bounded on clustered corpora.
 """
 
 from __future__ import annotations
@@ -23,17 +19,14 @@ from pyspark.sql import DataFrame, functions as F
 
 _PARTIAL_ARROW_SCHEMA = pa.schema(
     [
-        ("codec", pa.string()),
         ("n_values", pa.int64()),
         ("sum_tok", pa.int64()),
         ("tok_min", pa.int64()),
         ("tok_max", pa.int64()),
-        ("values_decoded", pa.int64()),
     ]
 )
 _PARTIAL_SPARK_SCHEMA = (
-    "codec string, n_values long, sum_tok long, tok_min long, tok_max long, "
-    "values_decoded long"
+    "n_values long, sum_tok long, tok_min long, tok_max long"
 )
 
 
@@ -43,21 +36,20 @@ def _chunk_partials(blocks_df: DataFrame, need_sum: bool) -> DataFrame:
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             payloads = batch.column("payload")
-            codecs = batch.column("codec")
+            # value_stats' fifth field (values decoded) is not aggregated
             rows = [
-                (codecs[i].as_py(),)
-                + value_stats(memoryview(payloads[i].as_buffer()), need_sum)
+                value_stats(memoryview(payloads[i].as_buffer()), need_sum)[:4]
                 for i in range(batch.num_rows)
             ]
             if rows:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([r[j] for r in rows],
                               _PARTIAL_ARROW_SCHEMA.field(j).type)
-                     for j in range(6)],
+                     for j in range(4)],
                     schema=_PARTIAL_ARROW_SCHEMA,
                 )
 
-    return blocks_df.select("payload", "codec").mapInArrow(
+    return blocks_df.select("payload").mapInArrow(
         fn, _PARTIAL_SPARK_SCHEMA
     )
 
@@ -73,23 +65,6 @@ def token_value_stats(blocks_df: DataFrame, need_sum: bool = True) -> DataFrame:
         F.max("tok_max").alias("tok_max"),
     ]
     return partial.agg(*aggs)
-
-
-def token_value_stats_by_codec(
-    blocks_df: DataFrame, need_sum: bool = True
-) -> DataFrame:
-    """Per-codec pushdown telemetry: ``values_decoded`` counts O(n)-
-    proportional stream materializations (0 = answered from metadata)."""
-    partial = _chunk_partials(blocks_df, need_sum)
-    return (
-        partial.groupBy("codec")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum("n_values").alias("n_values"),
-            F.sum("values_decoded").alias("values_decoded"),
-        )
-        .orderBy("codec")
-    )
 
 
 def distinct_token_count(blocks_df: DataFrame) -> DataFrame:

@@ -112,22 +112,6 @@ def verify_roundtrip_checksums(
     )
 
 
-def assert_unique_doc_ids(df: DataFrame) -> None:
-    """Fail fast on duplicate ``doc_id`` — the engine contract analog of the
-    reference raising on duplicate layer names
-    (/root/reference/mapbox_vector_tile/encoder.py:44-48, SURVEY §2.8)."""
-    dup = (
-        df.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .limit(5)
-        .collect()
-    )
-    if dup:
-        ids = ", ".join(sorted(r.doc_id for r in dup))
-        raise ValueError(f"duplicate doc_id values (first few): {ids}")
-
-
 def transform_tokens(df: DataFrame, a: int, b: int, m: int) -> DataFrame:
     """Pluggable per-token affine remap ``t -> (a*t + b) mod m`` — the analog
     of the reference's custom coordinate transformer hook

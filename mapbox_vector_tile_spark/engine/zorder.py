@@ -78,38 +78,6 @@ def zorder_key_sql(dim1: str, dim2: str, bits: int = Z_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_doc_len_key(table):
-    """Arrow-side cluster key for the fused exchange: ``{zkey:010d}|doc_id``
-    where zkey = interleave(doc number, n_tok).
-
-    Drop-in for ``exchange_encode_fused_direct(key_fn=...,
-    key_cols=("doc_id", "n_tok"))`` — blocks then cluster along the Z-curve, so every chunk's
-    zone maps bound BOTH the doc range and the length band (the
-    2-D-pruning layout the audit above measures). Vectorized per BIT over
-    numpy, zero per-row Python; the decimal zkey is left-padded to fixed
-    width so byte-wise key comparison (``_utf8_fixed_bytes``) matches
-    numeric order.
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    doc = table.column("doc_id")
-    if isinstance(doc, pa.ChunkedArray):
-        doc = doc.combine_chunks()
-    ln = table.column("n_tok")
-    if isinstance(ln, pa.ChunkedArray):
-        ln = ln.combine_chunks()
-    num = pc.cast(pc.utf8_slice_codeunits(doc, 4, 12), pa.int64()).to_numpy()
-    lnv = ln.to_numpy().astype(np.int64)
-    z = np.zeros(len(num), np.int64)
-    for i in range(Z_BITS):
-        z |= ((num >> i) & 1) << (2 * i)
-        z |= ((lnv >> i) & 1) << (2 * i + 1)
-    zs = pc.utf8_lpad(pc.cast(pa.array(z), pa.string()), 10, "0")
-    return pc.binary_join_element_wise(zs, doc, "|")
-
-
 def _dims(tokens: DataFrame) -> DataFrame:
     return tokens.select(
         doc_num_expr().alias("doc_num"),

@@ -6,7 +6,7 @@ zlib-deflated PNG (:mod:`.png`) for images, PCM16 or G.711 mu-law WAV
 (:mod:`.g711`) for audio, and two video containers: RIFF/AVI
 (uncompressed DIB frames, or motion-JPEG whose frames are baseline
 JPEGs decoded by the pure-numpy ITU-T T.81 codec in :mod:`.jpeg`) and
-animated GIF (LZW, :mod:`.gif`) — so feature extraction operates on
+animated GIF (LZW, :mod:`.gif`) — so content statistics operate on
 actual pixels/samples/frames, not hashes, including through COMPRESSED
 codecs on all three modality paths (:func:`decode_image` /
 :func:`decode_wav` / :func:`decode_video` sniff the container
@@ -18,17 +18,15 @@ libs exist.
 
 Pattern: ``mapInPandas`` over an assets table
 ``(asset_id string, kind string, payload binary, meta map<string,string>)``;
-one Arrow batch in -> one feature batch out, never per-row Python dispatch
+one Arrow batch in -> one statistics batch out, never per-row Python dispatch
 at the Spark boundary (the per-asset decode loop is the work itself).
 """
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,10 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 ASSETS_SCHEMA = "asset_id string, kind string, payload binary, meta map<string,string>"
-FEATURES_SCHEMA = (
-    "asset_id string, kind string, n_bytes long, crc32 long, "
-    "width int, height int, feat array<float>, status string"
-)
 CONTENT_STATS_SCHEMA = (
     "asset_id string, kind string, n_bytes long, width long, height long, "
     "sum1 long, sum2 long, vmin long, vmax long, zcross long"
@@ -57,8 +51,6 @@ except Exception:
     REAL_DECODERS_AVAILABLE = False
 
 REAL_VIDEO_DECODER = True  # RIFF/AVI (DIB + MJPEG) and GIF, numpy only
-
-FEAT_DIM = 16
 
 
 # ---------------------------------------------------------------------------
@@ -492,121 +484,8 @@ def decode_avi_frames(payload: bytes, indices: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# feature extraction (real content statistics; FEAT_DIM floats)
+# content statistics
 # ---------------------------------------------------------------------------
-
-def _image_features(px: np.ndarray) -> np.ndarray:
-    h, w, _ = px.shape
-    f = np.zeros(FEAT_DIM, dtype=np.float32)
-    f[0], f[1] = w / 64.0, h / 64.0
-    flat = px.reshape(-1, 3).astype(np.float32) / 255.0
-    f[2:5] = flat.mean(axis=0)
-    f[5:8] = flat.std(axis=0)
-    f[8:11] = flat.min(axis=0)
-    f[11:14] = flat.max(axis=0)
-    f[14] = w / max(h, 1)
-    f[15] = float(px.mean()) / 255.0
-    return f
-
-
-def _audio_features(samples: np.ndarray, rate: int) -> np.ndarray:
-    f = np.zeros(FEAT_DIM, dtype=np.float32)
-    s = samples.astype(np.float32) / 32768.0
-    n = max(s.size, 1)
-    f[0] = s.size / 1e4
-    f[1] = rate / 48000.0
-    f[2] = s.mean() if s.size else 0.0
-    f[3] = float(np.sqrt((s * s).mean())) if s.size else 0.0  # RMS
-    f[4] = s.min() if s.size else 0.0
-    f[5] = s.max() if s.size else 0.0
-    if s.size > 1:
-        f[6] = float(np.count_nonzero(np.diff(np.signbit(s)))) / n  # ZCR
-    return f
-
-
-def _video_features(frames: np.ndarray, fps: int) -> np.ndarray:
-    """Per-clip statistics over REAL decoded frames: spatial stats of the
-    mean frame plus temporal motion energy (mean |frame diff|)."""
-    t, h, w, _ = frames.shape
-    f = np.zeros(FEAT_DIM, dtype=np.float32)
-    f[0], f[1] = w / 64.0, h / 64.0
-    flat = frames.reshape(t, -1, 3).astype(np.float32) / 255.0
-    mean_frame = flat.mean(axis=0)
-    f[2:5] = mean_frame.mean(axis=0)
-    f[5:8] = mean_frame.std(axis=0)
-    f[8] = t / 32.0
-    f[9] = fps / 60.0
-    if t > 1:
-        f[10] = float(np.abs(np.diff(flat, axis=0)).mean())  # motion energy
-    f[14] = w / max(h, 1)
-    f[15] = float(frames.mean()) / 255.0
-    return f
-
-
-def _fake_features(payload: bytes) -> np.ndarray:
-    """Deterministic stand-in for formats with no decoder in this sandbox:
-    a pure function of the payload bytes, stable across engines."""
-    h = hashlib.md5(payload).digest()
-    return (
-        np.frombuffer(h, dtype=np.uint8).astype(np.float32).repeat(2)[:FEAT_DIM]
-        / 255.0
-    )
-
-
-def extract_features(assets: DataFrame) -> DataFrame:
-    """assets table -> per-asset features via Arrow-batched ``mapInPandas``.
-
-    image -> real BMP decode (pixel statistics); audio -> real WAV decode
-    (RMS/ZCR etc.); video -> real AVI decode (spatial + motion stats);
-    unknown kinds -> deterministic payload-hash features."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for asset_id, kind, payload in zip(
-                pdf["asset_id"], pdf["kind"], pdf["payload"]
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                # one malformed asset must not fail the whole stage: decode
-                # errors become a status row with null features, and the
-                # pipeline keeps going (quarantine via status != 'ok')
-                status, feat, w, hgt = "ok", None, -1, -1
-                try:
-                    if kind == "image":
-                        px = decode_image(payload)
-                        hgt, w, _ = px.shape
-                        feat = _image_features(px)
-                    elif kind == "audio":
-                        samples, rate = decode_wav(payload)
-                        feat = _audio_features(samples, rate)
-                    elif kind == "video":
-                        frames, fps = decode_video(payload)
-                        _t, hgt, w, _ = frames.shape
-                        feat = _video_features(frames, fps)
-                    else:  # unknown kind: deterministic payload features
-                        feat = _fake_features(payload)
-                except Exception as e:  # noqa: BLE001 — quarantine, not crash
-                    status = f"error: {type(e).__name__}: {e}"[:200]
-                    feat, w, hgt = None, -1, -1
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "kind": kind,
-                        "n_bytes": len(payload),
-                        "crc32": zlib.crc32(payload),
-                        "width": w,
-                        "height": hgt,
-                        "feat": feat.tolist() if feat is not None else None,
-                        "status": status,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return assets.select("asset_id", "kind", "payload").mapInPandas(
-        fn, FEATURES_SCHEMA
-    )
 
 
 def content_stats(assets: DataFrame) -> DataFrame:
@@ -844,31 +723,6 @@ FRAME_STATS_SCHEMA = (
     "asset_id string, t long, width long, height long, "
     "sum1 long, sum2 long, vmin long, vmax long, zcross long"
 )
-
-
-def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan* (which frames to decode): the REAL frame
-    count parsed from the avih header (``dwTotalFrames``), the rest pure
-    Catalyst. Only the 4 header bytes are touched per asset — the heavy
-    frame decode is deferred to :func:`sample_frame_stats`."""
-    import pyspark.sql.types as T
-
-    @F.pandas_udf(T.IntegerType())
-    def n_frames_udf(payloads: pd.Series) -> pd.Series:
-        out = np.full(len(payloads), -1, dtype=np.int32)
-        for j, p in enumerate(payloads):
-            try:
-                out[j] = _avi_headers(bytes(p))[0]
-            except Exception:  # noqa: BLE001 — malformed: n_frames = -1
-                pass
-        return pd.Series(out)
-
-    n_frames = n_frames_udf("payload")
-    return assets.filter(F.col("kind") == "video").select(
-        "asset_id",
-        n_frames.alias("n_frames"),
-        F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)).alias("frame_indices"),
-    )
 
 
 def sample_frame_stats(assets: DataFrame, every_n: int = 2) -> DataFrame:

@@ -1000,19 +1000,6 @@ def commit_append(
     return _commit(table_path, live + new_files, [], "append", branch)
 
 
-def commit_delete_files(table_path: str, remove_paths: set[str]) -> dict:
-    """Remove whole data files (Iceberg 'delete' operation expressed as
-    DELETED manifest entries; the parquet files themselves stay for time
-    travel, like real Iceberg until expire-snapshots)."""
-    meta = load_metadata(table_path)
-    cur = _plan_files(
-        table_path, meta, meta["current-snapshot-id"], content=None
-    )
-    keep = [f for f in cur if f.file_path not in remove_paths]
-    gone = [f for f in cur if f.file_path in remove_paths]
-    return _commit(table_path, keep, gone, "delete")
-
-
 # ---------------------------------------------------------------------------
 # scan planning
 # ---------------------------------------------------------------------------
@@ -1039,7 +1026,7 @@ def publish_branch(table_path: str, branch: str) -> dict:
 
 def drop_branch(table_path: str, branch: str) -> dict:
     """WAP reject: drop the staging ref; main never saw the audit's
-    commits (their snapshots stay in history, unreferenced — expirable)."""
+    commits (their snapshots stay in history, unreferenced)."""
     meta = load_metadata(table_path)
     if branch not in meta.get("refs", {}):
         raise ValueError(f"unknown branch {branch!r}")
@@ -1491,38 +1478,6 @@ def commit_equality_deletes(
     return _commit(table_path, live + [new], [], "delete")
 
 
-def commit_position_deletes(
-    table_path: str, delete_rows: list[tuple[str, int]]
-) -> dict:
-    """Commit row-level deletes as a v2 position-delete file: parquet of
-    ``(file_path, pos)`` sorted by that pair (spec ordering), registered
-    through a content=1 manifest. Existing data/delete files carry over.
-    This is the SMALL-SET form (the driver writes one delete file; use it
-    for explicit, bounded row lists); predicate-driven deletes go through
-    :func:`delete_where`, whose workers write the delete fragments so
-    matched positions never reach the driver."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    meta = load_metadata(table_path)
-    seq = meta["last-sequence-number"] + 1
-    rows = sorted(delete_rows)
-    tbl = pa.table({
-        "file_path": pa.array([r[0] for r in rows], type=pa.string()),
-        "pos": pa.array([r[1] for r in rows], type=pa.int64()),
-    })
-    dd = os.path.join(table_path, "data", f"deletes-seq={seq}")
-    os.makedirs(dd, exist_ok=True)
-    path = os.path.join(dd, f"delete-{_det_uuid(f'{table_path}:del:{seq}')}.parquet")
-    pq.write_table(tbl, path)
-    live = _plan_files(
-        table_path, meta, meta["current-snapshot-id"], content=None
-    )
-    new = DataFile(path, len(rows), os.path.getsize(path),
-                   content=POSITION_DELETES)
-    return _commit(table_path, live + [new], [], "delete")
-
-
 def delete_where(spark, table_path: str, predicate: str) -> dict:
     """Row-level DELETE WHERE with a DISTRIBUTED position-delete writer:
     matching rows' (file, position) pairs are found via the metadata
@@ -1632,120 +1587,6 @@ def incremental_scan(
     return _scan_with_partitions(spark, meta, files, need_meta=False)
 
 
-def files_df(spark, table_path: str, snapshot_id: int | None = None):
-    """The ``files`` metadata table (SELECT * FROM t.files analog): one
-    row per live data/delete file of a snapshot, with partition values,
-    spec id, sequence number, and the recorded column bounds."""
-    import json as _json
-
-    meta = load_metadata(table_path)
-    rows = [
-        {
-            "content": f.content,
-            "file_path": f.file_path,
-            "record_count": f.record_count,
-            "file_size_in_bytes": f.file_size_in_bytes,
-            "sequence_number": f.sequence_number,
-            "spec_id": f.spec_id,
-            "partition": _json.dumps(f.partition or {}, sort_keys=True),
-            "lower_bounds": _json.dumps(f.lower_bounds or {},
-                                        sort_keys=True),
-            "upper_bounds": _json.dumps(f.upper_bounds or {},
-                                        sort_keys=True),
-        }
-        for f in _plan_files(table_path, meta, snapshot_id, content=None)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "content int, file_path string, record_count long, "
-        "file_size_in_bytes long, sequence_number long, spec_id int, "
-        "partition string, lower_bounds string, upper_bounds string",
-    )
-
-
-def manifests_df(spark, table_path: str, snapshot_id: int | None = None):
-    """The ``manifests`` metadata table: one row per manifest of a
-    snapshot's manifest list."""
-    meta = load_metadata(table_path)
-    snap = _snapshot(meta, snapshot_id)
-    with open(snap["manifest-list"], "rb") as fh:
-        _, _, manifests = A.read_ocf(fh.read())
-    rows = [
-        {
-            "path": m["manifest_path"],
-            "length": m["manifest_length"],
-            "partition_spec_id": m["partition_spec_id"],
-            "content": m["content"],
-            "sequence_number": m["sequence_number"],
-            "min_sequence_number": m["min_sequence_number"],
-            "added_snapshot_id": m["added_snapshot_id"],
-            "added_files_count": m["added_files_count"],
-            "existing_files_count": m["existing_files_count"],
-            "deleted_files_count": m["deleted_files_count"],
-        }
-        for m in manifests
-    ]
-    return spark.createDataFrame(
-        rows,
-        "path string, length long, partition_spec_id int, content int, "
-        "sequence_number long, min_sequence_number long, "
-        "added_snapshot_id long, added_files_count int, "
-        "existing_files_count int, deleted_files_count int",
-    )
-
-
-def partitions_df(spark, table_path: str, snapshot_id: int | None = None):
-    """The ``partitions`` metadata table: per (spec_id, partition value)
-    file/record totals of a snapshot's live data files — the metadata-only
-    answer to "how big is each partition"."""
-    import json as _json
-
-    meta = load_metadata(table_path)
-    agg: dict[tuple[int, str], list[int]] = {}
-    for f in _plan_files(table_path, meta, snapshot_id):
-        key = (f.spec_id, _json.dumps(f.partition or {}, sort_keys=True))
-        cur = agg.setdefault(key, [0, 0, 0])
-        cur[0] += 1
-        cur[1] += f.record_count
-        cur[2] += f.file_size_in_bytes
-    rows = [
-        {
-            "spec_id": sid,
-            "partition": part,
-            "file_count": v[0],
-            "record_count": v[1],
-            "total_size_in_bytes": v[2],
-        }
-        for (sid, part), v in sorted(agg.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "spec_id int, partition string, file_count long, "
-        "record_count long, total_size_in_bytes long",
-    )
-
-
-def snapshots_df(spark, table_path: str):
-    """The snapshots metadata table (SELECT * FROM t.snapshots analog)."""
-    meta = load_metadata(table_path)
-    rows = [
-        {
-            "snapshot_id": s["snapshot-id"],
-            "parent_id": s.get("parent-snapshot-id"),
-            "sequence_number": s["sequence-number"],
-            "operation": s["summary"]["operation"],
-            "added_files": int(s["summary"].get("added-data-files", "0")),
-            "deleted_files": int(s["summary"].get("deleted-data-files", "0")),
-        }
-        for s in meta["snapshots"]
-    ]
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id long, parent_id long, sequence_number long, "
-        "operation string, added_files int, deleted_files int",
-    )
-
-
 def rewrite_data_files(spark, table_path: str) -> dict:
     """Compaction (the rewrite_data_files action): read the current
     snapshot MERGE-ON-READ, write the surviving rows as fresh data files,
@@ -1771,51 +1612,6 @@ def rewrite_data_files(spark, table_path: str) -> dict:
     spec = _default_spec(meta)
     new_files = _write_data_files(df, data_dir, meta, spec)
     return _commit(table_path, new_files, cur, "replace")
-
-
-def expire_snapshots(table_path: str, keep_last: int = 1) -> dict:
-    """Snapshot expiration (the expire_snapshots maintenance action): keep
-    the newest ``keep_last`` snapshots plus anything a ref points at; drop
-    the rest from metadata and DELETE files no surviving snapshot
-    references (manifest lists, manifests, data/delete files). Bounds the
-    metadata tree and reclaims storage — time travel is traded away for
-    exactly the expired range, like real Iceberg."""
-    meta = load_metadata(table_path)
-    snaps = sorted(meta["snapshots"], key=lambda s: s["snapshot-id"])
-    keep_ids = {s["snapshot-id"] for s in snaps[-keep_last:]}
-    keep_ids |= {r["snapshot-id"] for r in meta.get("refs", {}).values()}
-    survivors = [s for s in snaps if s["snapshot-id"] in keep_ids]
-    expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-    if not expired:
-        return meta
-
-    def _referenced(snapshots: list[dict]) -> tuple[set, set]:
-        metas, datas = set(), set()
-        for s in snapshots:
-            metas.add(s["manifest-list"])
-            with open(s["manifest-list"], "rb") as fh:
-                _, _, manifests = A.read_ocf(fh.read())
-            for m in manifests:
-                metas.add(m["manifest_path"])
-                with open(m["manifest_path"], "rb") as fh:
-                    _, _, entries = A.read_ocf(fh.read())
-                for e in entries:
-                    datas.add(e["data_file"]["file_path"])
-        return metas, datas
-
-    live_meta, live_data = _referenced(survivors)
-    dead_meta, dead_data = _referenced(expired)
-    for p in sorted((dead_meta - live_meta) | (dead_data - live_data)):
-        if os.path.exists(p):
-            os.remove(p)
-    version = _read_version(table_path) + 1
-    meta["snapshots"] = survivors
-    meta["snapshot-log"] = [
-        e for e in meta["snapshot-log"] if e["snapshot-id"] in keep_ids
-    ]
-    meta["last-updated-ms"] = _EPOCH_MS + version
-    _write_metadata(table_path, meta, version)
-    return meta
 
 
 # ---------------------------------------------------------------------------

@@ -175,36 +175,6 @@ def blocks_scan(
     return spark.read.parquet(*files)
 
 
-def blocks_files_df(spark: SparkSession, blocks_path: str):
-    """The blocks store's ``files`` metadata table (the
-    :func:`..sources.iceberg.files_df` analog): one row per fragment with
-    its manifest row count, doc-id envelope, and size — all from
-    ``_manifest.json`` + a directory listing, no parquet footer opened.
-    Fragments predating zone-map manifests surface NULL envelopes (the
-    conservative readers keep them; this view is how an operator SEES
-    which fragments lack stats and would benefit from a rewrite)."""
-    files = list_parquet_files(blocks_path)
-    if not files:
-        raise ValueError(f"no parquet files under {blocks_path}")
-    counts = _manifest_row_counts(files) or {}
-    stats = manifest_file_stats(files)
-    rows = [
-        {
-            "file_path": f,
-            "n_chunks": counts.get(f),
-            "min_doc_id": (stats.get(f) or {}).get("min_doc_id"),
-            "max_doc_id": (stats.get(f) or {}).get("max_doc_id"),
-            "file_size_in_bytes": os.path.getsize(f),
-        }
-        for f in files
-    ]
-    return spark.createDataFrame(
-        rows,
-        "file_path string, n_chunks long, min_doc_id string, "
-        "max_doc_id string, file_size_in_bytes long",
-    )
-
-
 def task_rows_dataframe(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     """Task-plan DataFrame with deterministic, balanced task groups per
     Spark partition, from a JVM-side source (no exchange, no Python scan).

@@ -1,13 +1,12 @@
-"""Structured Streaming wrapper for the DECODE job — the inverse of
-:mod:`.encode_stream`: blocks arrive as a stream (e.g. a compaction or
-ingest job appends block files) and are decoded back to a tokens table
-incrementally.
+"""Structured Streaming wrapper for the DECODE job: blocks arrive as a
+stream (e.g. a compaction or ingest job appends block files) and are
+decoded back to a tokens table incrementally.
 
 ``decode_dataframe`` is a stateless Arrow-batched map, so it runs unchanged
 inside the micro-batch plan — no ``foreachBatch`` needed for the transform
 itself; the sink uses ``foreachBatch`` only to get idempotent
-``batch_id=``-partitioned writes (same at-least-once contract as the encode
-stream)."""
+``batch_id=``-partitioned writes (a replayed micro-batch overwrites its own
+partition)."""
 
 from __future__ import annotations
 

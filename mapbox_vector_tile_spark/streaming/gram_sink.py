@@ -9,7 +9,7 @@ covariance input stays current under ingest without ever re-reading the
 corpus, and (unlike the sketches) with zero approximation.
 
 Exactly-once on top of foreachBatch's at-least-once replay — the same
-ledger discipline as :mod:`.sketch_sink` / :mod:`.index_sink`:
+ledger discipline as :mod:`.index_sink`:
 uuid-suffixed version directories, a ``_versions.jsonl`` batch-id ledger
 (a replayed batch publishes nothing), and an ``os.replace``-swapped
 ``_current`` pointer.

@@ -1,7 +1,6 @@
 """Streaming encode sink that COMMITS: one snapshot per micro-batch.
 
-``encode_stream`` writes raw block files; this sink writes them INTO the
-snapshot table (:mod:`..engine.snapshots`), so a continuously ingesting
+This sink encodes each micro-batch INTO the snapshot table (:mod:`..engine.snapshots`), so a continuously ingesting
 corpus gets the full metadata-layer contract per micro-batch — atomic
 visibility (readers never see a half-written batch: files become visible
 only via the manifest pointer swap), time travel across ingest history,
@@ -12,7 +11,7 @@ Exactly-once on top of foreachBatch's at-least-once replay:
 
 - every attempt encodes into a FRESH uuid-suffixed data directory, so a
   crashed attempt leaves only unreferenced files (invisible to every
-  reader, reaped by ``orphan_files``) and can never collide with its retry;
+  reader) and can never collide with its retry;
 - the snapshot manifest records the micro-batch's ``batch_id``; a replayed
   batch finds it in the log and commits nothing — the dedup ledger is the
   table history itself, no side state.

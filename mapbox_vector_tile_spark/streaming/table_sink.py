@@ -4,7 +4,7 @@ Rows of an arbitrary relational table arrive as a stream; each
 micro-batch encodes EVERY column through its type's codec
 (:mod:`..engine.table_encode`) and lands one idempotent
 ``batch_id=``-partitioned blocks write — the table-store twin of the
-token encode stream (``encode_stream.py``).
+token snapshot sink (:mod:`.snapshot_sink`).
 
 Chunk ids stay a pure function of the ORDER KEY (``chunk = key >>
 log2(rows)``), so a chunk whose key range straddles a micro-batch
@@ -204,38 +204,6 @@ def start_table_upsert_stream(
     return writer.start()
 
 
-def compact_upsert_store(spark: SparkSession, store_root: str) -> str | None:
-    """Maintenance twin of the CoW MERGE sink: fold the live view (latest
-    version of every chunk) into ONE new full version, so read-side
-    version resolution returns to a single directory. Readers stay
-    correct throughout — the compacted version is only referenced once
-    its ledger line lands (same publish point as the sink), and
-    :func:`vacuum_upsert_store` afterwards drops every directory the
-    compaction fully shadows. ``None`` when the store has no versions.
-
-    The ledger entry carries ``compacted_through`` (the number of ledger
-    lines folded in) so vacuum knows which prior versions are shadowed
-    WITHOUT comparing chunk sets."""
-    log = upsert_version_log(store_root)
-    if not log:
-        return None
-    cur = read_current_table_blocks(spark, store_root)
-    vname = f"v{len(log) + 1}-{uuid.uuid4().hex[:8]}"
-    cur.write.parquet(os.path.join(store_root, vname))
-    with open(_upsert_log_path(store_root), "a") as f:
-        f.write(
-            json.dumps(
-                {
-                    "batch_id": -1,  # maintenance commits never collide
-                    "dir": vname,
-                    "compacted_through": len(log),
-                }
-            )
-            + "\n"
-        )
-    return vname
-
-
 def _shadowed_dirs(log: list[dict]) -> set[str]:
     """Dirs unreachable by readers: vacuum markers + every dir a tail
     fold covers."""
@@ -253,9 +221,7 @@ def compact_upsert_tail(
     and mark those tail dirs fully shadowed. Cost is O(the tail's rows) —
     the recent CoW deltas, i.e. the store's churn — never O(table); the
     folded dirs become vacuum-able immediately, so read-side version
-    fan-in AND disk reclaim stay proportional to churn. The full
-    :func:`compact_upsert_store` (O(table)) remains the periodic deep
-    step that collapses everything to one directory.
+    fan-in AND disk reclaim stay proportional to churn.
 
     Correctness leans on the suffix property: the fold carries, per
     chunk, the highest-version row AMONG THE TAIL, and the fold's ledger
@@ -269,7 +235,7 @@ def compact_upsert_tail(
     still a suffix and the argument holds). This keeps reader fan-in
     bounded at one fold dir + the fresh tail between full compactions —
     without absorption it would grow by one dir per fold
-    (n_batches/compact_every) until the next ``compact_upsert_store``.
+    (n_batches/compact_every).
 
     No-op (returns ``dir=None``) when fewer than ``min_tail`` DATA
     versions landed since the last maintenance point (a carried-forward
@@ -322,43 +288,3 @@ def compact_upsert_tail(
             + "\n"
         )
     return {"dir": vname, "folded_versions": fresh}
-
-
-def vacuum_upsert_store(store_root: str) -> list[str]:
-    """Drop version directories fully shadowed by a later compaction:
-    every ledger line at index < the newest ``compacted_through`` is
-    unreachable (the compaction holds the latest copy of every chunk
-    those versions contributed). Returns the removed directory names.
-    The ledger keeps its lines (history stays auditable); removed dirs
-    are recorded with ``"vacuumed": true`` markers appended."""
-    import shutil
-
-    log = upsert_version_log(store_root)
-    horizon = 0
-    for v in log:
-        if "compacted_through" in v:
-            horizon = max(horizon, int(v["compacted_through"]))
-    already = {
-        v["dir"] for v in log if v.get("vacuumed")
-    }
-    # fold-shadowed dirs reclaim regardless of the full-compaction
-    # horizon: a tail fold fully covers them by construction
-    fold_covered = set()
-    for v in log:
-        fold_covered.update(v.get("folds_dirs", []))
-    removed = []
-    candidates = [v["dir"] for v in log[:horizon] if "dir" in v] + sorted(
-        fold_covered
-    )
-    for d in candidates:
-        if d in already or d in (set(removed)):
-            continue
-        path = os.path.join(store_root, d)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        removed.append(d)
-    if removed:
-        with open(_upsert_log_path(store_root), "a") as f:
-            for d in removed:
-                f.write(json.dumps({"dir": d, "vacuumed": True}) + "\n")
-    return removed

@@ -3,8 +3,7 @@
 Unit layer: `value_stats` equals numpy reductions on the decoded array for
 every codec and corpus shape, and `values_decoded == 0` where the codec
 carries the answer (CONSTANT, RLE, dict min/max). Spark layer:
-`token_value_stats` matches a full-decode aggregate; the telemetry proves
-RLE/dict regimes never inflate for min/max."""
+`token_value_stats` matches a full-decode aggregate."""
 
 import numpy as np
 import pytest
@@ -17,10 +16,7 @@ from mapbox_vector_tile_spark.codec.analysis import ChunkAnalysis
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.decode import decode_dataframe
 from mapbox_vector_tile_spark.engine.encode import EncodeOptions, encode_dataframe
-from mapbox_vector_tile_spark.engine.stats import (
-    token_value_stats,
-    token_value_stats_by_codec,
-)
+from mapbox_vector_tile_spark.engine.stats import token_value_stats
 
 RNG = np.random.default_rng(23)
 
@@ -117,9 +113,6 @@ def test_spark_stats_match_decode(spark):
     )
     assert (got.n_values, got.sum_tok, got.tok_min, got.tok_max) == tuple(want)
 
-    tele = token_value_stats_by_codec(blocks, need_sum=False).collect()
-    assert sum(r.n_values for r in tele) == got.n_values
-
 
 def test_pushdown_on_clustered_table(spark):
     # regime-homogeneous chunks (the flagship's clustered shape) let the
@@ -142,13 +135,11 @@ def test_pushdown_on_clustered_table(spark):
     )
     assert (got.tok_min, got.tok_max) == tuple(want)
 
-    tele = token_value_stats_by_codec(blocks, need_sum=False).collect()
-    by = {r.codec: r for r in tele}
-    for codec in ("constant", "rle", "dict_bitpack", "dict_escape"):
-        if codec in by:
-            assert by[codec].values_decoded == 0
-    assert any(r.values_decoded == 0 and r.n_values > 0 for r in tele)
-    assert sum(r.values_decoded for r in tele) < sum(r.n_values for r in tele)
+    # some chunk answers min/max from codec metadata alone
+    rows = blocks.select("n_values", "payload").collect()
+    stats = [value_stats(r.payload, need_sum=False) for r in rows]
+    assert any(s[4] == 0 and r.n_values > 0 for s, r in zip(stats, rows))
+    assert sum(s[4] for s in stats) < sum(r.n_values for r in rows)
 
 
 def test_distinct_values_matches_numpy_all_codecs():

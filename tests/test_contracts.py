@@ -1,15 +1,13 @@
-"""Engine contracts from SURVEY §2.8: option validation, duplicate doc ids,
-custom transformer hook."""
+"""Engine contracts from SURVEY §2.8: option validation and the custom
+transformer hook (duplicate doc ids are the write-audit gate's check,
+``tests/test_wap.py``)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-from mapbox_vector_tile_spark.engine.verify import (
-    assert_unique_doc_ids,
-    transform_tokens,
-)
+from mapbox_vector_tile_spark.engine.verify import transform_tokens
 
 
 def test_unknown_codec_rejected():
@@ -21,15 +19,6 @@ def test_unknown_codec_rejected():
 def test_unknown_option_rejected():
     with pytest.raises(TypeError):
         EncodeOptions(bogus=True)
-
-
-def test_duplicate_doc_id_fail_fast(spark):
-    # analog of duplicate layer name raising, encoder.py:44-48
-    df = G.corpus_dataframe(spark, 50, num_partitions=1)
-    assert_unique_doc_ids(df)  # clean passes
-    dup = df.union(df.limit(3))
-    with pytest.raises(ValueError, match="duplicate doc_id"):
-        assert_unique_doc_ids(dup)
 
 
 def test_transform_tokens_affine(spark):

@@ -2,9 +2,8 @@
 
 Correctness: decode_with_deletes == plain decode minus the deleted doc ids,
 exact array equality per doc, across delete shapes (empty set, scattered,
-clustered range, whole-chunk, everything). Scale evidence: the zone-map
-gate really skips untouched chunks (`delete_scan_stats` counts them in pure
-Catalyst) and the sidecar write/read round-trips.
+clustered range, whole-chunk, everything), and a delete sidecar committed
+to a snapshot table applies at read time.
 """
 
 import pytest
@@ -13,12 +12,8 @@ from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-from mapbox_vector_tile_spark.engine.deletes import (
-    decode_with_deletes,
-    delete_scan_stats,
-    read_deletes,
-    write_deletes,
-)
+from mapbox_vector_tile_spark.engine import snapshots as S
+from mapbox_vector_tile_spark.engine.deletes import decode_with_deletes
 from mapbox_vector_tile_spark.engine.encode import EncodeOptions, encode_dataframe
 
 N_DOCS = 400
@@ -82,21 +77,13 @@ def test_nonexistent_ids_are_noops(spark, corpus, blocks):
     assert decode_with_deletes(blocks, dels).count() == N_DOCS
 
 
-def test_zone_map_skips_untouched_chunks(spark, corpus, blocks):
-    # a clustered range should touch a strict subset of chunks
-    dels = corpus.select("doc_id").filter(
-        F.expr("doc_id >= 'doc-00000100' and doc_id < 'doc-00000120'")
-    )
-    row = delete_scan_stats(blocks, dels).first()
-    assert row.docs_deleted == 20
-    assert 0 < row.chunks_touched < row.chunks_total
-
-
 def test_sidecar_roundtrip(spark, corpus, blocks, tmp_path):
-    path = str(tmp_path / "deletes")
+    root = str(tmp_path / "tbl")
     dels = corpus.select("doc_id").filter(
         F.expr("substring(doc_id, 5, 8) % 17 = 3")
     )
-    write_deletes(dels, path)
-    got = _sorted_rows(decode_with_deletes(blocks, read_deletes(spark, path)))
+    S.commit_append(root, blocks)
+    sid = S.commit_deletes(root, dels)
+    assert S.read_snapshot(root, sid)["delete_files"]
+    got = _sorted_rows(S.decode_at(spark, root))
     assert got == _expect(blocks, dels)

@@ -434,14 +434,15 @@ def test_direct_doc_range_decode_matches_catalyst(spark, tmp_path):
 
 
 def test_blocks_files_metadata_table(spark, tmp_path):
-    """blocks_files_df: per-fragment counts + doc envelopes from the
-    manifest alone — no parquet footers opened (poison-proof)."""
+    """Per-fragment chunk counts + doc envelopes come from the manifest
+    alone — no parquet footers opened (poison-proof)."""
     from mapbox_vector_tile_spark.engine.exchange import (
         exchange_encode_fused_direct,
     )
     from mapbox_vector_tile_spark.sources.parquet_direct import (
-        blocks_files_df,
+        file_row_counts,
         list_parquet_files,
+        manifest_file_stats,
     )
 
     tokens = str(tmp_path / "toks_meta")
@@ -459,9 +460,8 @@ def test_blocks_files_metadata_table(spark, tmp_path):
             size = fh.tell()
             fh.seek(size - 4)
             fh.write(b"XXXX")
-    meta = blocks_files_df(spark, out)
-    rows = meta.collect()
-    assert len(rows) == len(files)
-    assert all(r.n_chunks and r.n_chunks > 0 for r in rows)
-    assert all(r.min_doc_id <= r.max_doc_id for r in rows)
-    assert all(r.file_size_in_bytes > 0 for r in rows)
+    counts = file_row_counts(spark, files)
+    stats = manifest_file_stats(files)
+    assert sorted(counts) == sorted(stats) == sorted(files)
+    assert all(n > 0 for n in counts.values())
+    assert all(s["min_doc_id"] <= s["max_doc_id"] for s in stats.values())

@@ -111,25 +111,14 @@ def test_iceberg_append_and_time_travel(spark, tmp_path):
     assert ICE.read_table(spark, tp).count() == 180
     assert ICE.read_table(spark, tp, snapshot_id=1).count() == 120
     # snapshot lineage + operations
-    snaps = {r.snapshot_id: r for r in ICE.snapshots_df(spark, tp).collect()}
-    assert snaps[2].parent_id == 1 and snaps[1].parent_id is None
-    assert snaps[2].operation == "append"
+    snaps = {s["snapshot-id"]: s for s in ICE.load_metadata(tp)["snapshots"]}
+    assert snaps[2]["parent-snapshot-id"] == 1
+    assert snaps[1]["parent-snapshot-id"] is None
+    assert snaps[2]["summary"]["operation"] == "append"
     # content matches the generator exactly at both snapshots
     want = {r.doc_id for r in G.corpus_dataframe(spark, 180, 2).collect()}
     got = {r.doc_id for r in ICE.read_table(spark, tp).collect()}
     assert got == want
-
-
-def test_iceberg_delete_files_commit(spark, tmp_path):
-    tp = _table(spark, tmp_path)
-    rm = {f.file_path for f in ICE.plan_scan(tp) if "seq=2" in f.file_path}
-    assert rm
-    ICE.commit_delete_files(tp, rm)
-    assert ICE.read_table(spark, tp).count() == 120
-    # time travel still sees the pre-delete snapshot
-    assert ICE.read_table(spark, tp, snapshot_id=2).count() == 180
-    # data sequence numbers survive the manifest rewrite (spec inheritance)
-    assert all(f.sequence_number == 1 for f in ICE.plan_scan(tp))
 
 
 def test_iceberg_metadata_is_java_valid_avro(spark, tmp_path):
@@ -279,7 +268,7 @@ def test_iceberg_branch_wap(spark, tmp_path):
     want = {r.doc_id for r in G.corpus_dataframe(spark, 200, 2).collect()}
     assert got == want
     # publish was metadata-only: no extra snapshot was created by it
-    snaps = ICE.snapshots_df(spark, tp).count()
+    snaps = len(ICE.load_metadata(tp)["snapshots"])
     assert snaps == 3  # base append + rejected stage + published stage
 
 
@@ -331,24 +320,6 @@ def test_iceberg_rewrite_data_files(spark, tmp_path):
     assert list_parquet_files(f"iceberg://{tp}")  # accepted again
     # pre-compaction snapshot still readable (old layout kept)
     assert ICE.read_table(spark, tp, snapshot_id=2).count() == 180
-
-
-def test_iceberg_expire_snapshots(spark, tmp_path):
-    tp = _table(spark, tmp_path)
-    ICE.delete_where(
-        spark, tp, "doc_id >= 'doc-00000030' AND doc_id < 'doc-00000050'"
-    )
-    ICE.rewrite_data_files(spark, tp)  # snapshots 1-4
-    n_files_before = sum(len(fs) for _, _, fs in os.walk(tp))
-    ICE.expire_snapshots(tp, keep_last=1)
-    meta = ICE.load_metadata(tp)
-    assert [s["snapshot-id"] for s in meta["snapshots"]] == [4]
-    # expired-only files are gone from disk, current read unaffected
-    n_files_after = sum(len(fs) for _, _, fs in os.walk(tp))
-    assert n_files_after < n_files_before
-    assert ICE.read_table(spark, tp).count() == 160
-    with pytest.raises(ValueError):
-        ICE.read_table(spark, tp, snapshot_id=2)  # time travel traded away
 
 
 def test_iceberg_identity_partitioning(spark, tmp_path):
@@ -559,7 +530,7 @@ def test_iceberg_bounds_pruning(spark, tmp_path):
 
 def test_iceberg_incremental_scan_and_metadata_tables(spark, tmp_path):
     """Incremental append reads select files by data sequence number
-    alone; files/manifests/partitions metadata tables expose the tree."""
+    alone; the scan plan exposes each file's spec, partition and bounds."""
     tp = str(tmp_path / "inc")
     corpus = G.corpus_dataframe(spark, 300, 2)
     a = corpus.filter(F.col("doc_id") < "doc-00000100")
@@ -588,21 +559,12 @@ def test_iceberg_incremental_scan_and_metadata_tables(spark, tmp_path):
             ICE.incremental_scan(spark, tp, 2).select("source").collect()}
     assert srcs == {r.source for r in c.select("source").distinct().collect()}
 
-    files = ICE.files_df(spark, tp)
     plan = ICE.plan_scan(tp)
-    assert files.count() == len(plan)
-    frow = files.filter(F.col("sequence_number") == 1).first()
-    assert '"source":' in frow.partition  # wave a: partitioned
-    assert '"n_tok"' in frow.lower_bounds  # bounds recorded
-
-    man = ICE.manifests_df(spark, tp)
-    assert man.count() >= 2  # two specs -> at least two manifests
-    assert {r.partition_spec_id for r in man.collect()} == {0, 1}
-
-    parts = ICE.partitions_df(spark, tp)
-    rows = parts.collect()
-    assert sum(r.record_count for r in rows) == 300
-    assert {r.spec_id for r in rows} == {0, 1}
+    wave_a = [f for f in plan if f.sequence_number == 1]
+    assert wave_a and all("source" in f.partition for f in wave_a)
+    assert all("n_tok" in f.lower_bounds for f in wave_a)  # bounds recorded
+    assert sum(f.record_count for f in plan) == 300
+    assert {f.spec_id for f in plan} == {0, 1}
 
 
 def test_iceberg_incremental_scan_skips_replace_snapshots(spark, tmp_path):

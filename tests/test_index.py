@@ -162,26 +162,6 @@ def test_incremental_update_rejects_duplicate_inserts(spark):
         dup.collect()
 
 
-def test_persisted_index_lookup_pushes_predicate(spark, tmp_path):
-    from mapbox_vector_tile_spark.engine.index import (
-        read_token_index,
-        write_token_index,
-    )
-
-    decoded = _decoded(spark, n=200)
-    idx = build_token_index(decoded, lo=0, hi=15)
-    path = str(tmp_path / "index")
-    write_token_index(idx, path, n_files=4)
-    stored = read_token_index(spark, path)
-
-    q = lookup_token(stored, 7)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "EqualTo(tok,7)" in plan
-    got = {r.doc_id: r.n_hits for r in q.collect()}
-    want = {r.doc_id: r.n_hits for r in lookup_token(idx, 7).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_postings_compress_as_dgaps(spark):
     decoded = _decoded(spark)
     idx = build_token_index(decoded, lo=0, hi=7)

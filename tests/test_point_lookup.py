@@ -1,6 +1,7 @@
 """Point-lookup decode: explicit doc-id sets resolved through zone-map
 pruning + in-chunk positional gather; parity vs full decode."""
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,22 +58,37 @@ def test_point_lookup_duplicate_and_unsorted_ids(blocks, full):
 
 def test_point_lookup_prunes_chunks(blocks):
     ids = ["doc-00000007", "doc-00000380"]
-    id_arr = F.array(*[F.lit(d) for d in ids])
+    want = F.filter(
+        F.array(*[F.lit(d) for d in ids]),
+        lambda d: (d >= F.col("min_doc_id")) & (d <= F.col("max_doc_id")),
+    )
     n_all = blocks.count()
     n_kept = (
         blocks.filter(
             (F.col("max_doc_id") >= ids[0]) & (F.col("min_doc_id") <= ids[-1])
         )
-        .filter(
-            F.exists(
-                id_arr,
-                lambda d: (d >= F.col("min_doc_id"))
-                & (d <= F.col("max_doc_id")),
-            )
-        )
+        .filter(F.size(want) > 0)
         .count()
     )
     assert 0 < n_kept < n_all  # containment pruning really drops chunks
+
+
+def test_unwanted_rows_decode_nothing():
+    """The id lookups' worker skips a row none of whose docs is wanted
+    before reading its lengths or payload; a wanted doc in the same row
+    reaches the checked decode."""
+    from mapbox_vector_tile_spark.engine.decode import _decode_wanted
+
+    def rows(want):
+        return [pa.RecordBatch.from_pydict({
+            "doc_ids": [["doc-a", "doc-b"]], "n_rows": [2], "n_values": [3],
+            "lengths_blob": [b"junk"], "payload": [b"junk"], "checksum": [0],
+            "__want": [want],
+        })]
+
+    assert list(_decode_wanted(True)(iter(rows(["doc-c"])))) == []
+    with pytest.raises(ValueError, match="checksum"):
+        list(_decode_wanted(True)(iter(rows(["doc-a"]))))
 
 
 def test_point_lookup_rejects_empty_set(blocks):

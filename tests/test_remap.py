@@ -17,7 +17,6 @@ from mapbox_vector_tile_spark.codec import blocks as B
 from mapbox_vector_tile_spark.codec.analysis import ChunkAnalysis
 from mapbox_vector_tile_spark.codec.remap import (
     make_range_shift_map,
-    make_table_map,
     remap_block,
 )
 from mapbox_vector_tile_spark.engine import generator as G
@@ -43,10 +42,16 @@ ALL_CODECS = [
     B.PAGED,
 ]
 
+def _table_map(table: dict):
+    """Old-id -> new-id lookup; unmapped ids pass through."""
+    return lambda a: np.array([table.get(int(x), int(x)) for x in a],
+                              dtype=np.int64)
+
+
 MAPS = [
     make_range_shift_map(0, 255, 1_000_000),
     lambda a: np.clip(a, -1000, 1000),  # non-injective
-    make_table_map([0, 1, 2, 42], [7, 7, 9, -42]),
+    _table_map({0: 7, 1: 7, 2: 9, 42: -42}),
 ]
 
 
@@ -137,19 +142,6 @@ def test_remap_overflow_fails_fast():
     buf = B.encode_block(a, B.CONSTANT, ChunkAnalysis(a))
     with pytest.raises(ValueError, match="overflow"):
         remap_block(buf, lambda v: v + 100)
-
-
-def test_table_map_semantics():
-    fn = make_table_map([5, 9], [50, 90], default=0)
-    np.testing.assert_array_equal(
-        fn(np.array([5, 9, 7], np.int64)), [50, 90, 0]
-    )
-    fn = make_table_map([5, 9], [50, 90])  # identity fallthrough
-    np.testing.assert_array_equal(
-        fn(np.array([5, 9, 7], np.int64)), [50, 90, 7]
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        make_table_map([5, 5], [1, 2])
 
 
 def test_remap_blocks_spark_matches_catalyst_transform(spark):

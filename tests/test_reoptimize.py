@@ -1,5 +1,8 @@
 """optimise_tile analog: re-encode stored blocks smaller, losslessly."""
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
@@ -31,3 +34,22 @@ def test_reoptimize_is_noop_on_optimal_blocks(spark):
     b = re_blocks.agg(F.sum("bytes_enc"), F.sum("checksum")).first()
     assert tuple(a) == tuple(b)
     blocks.unpersist()
+
+
+def test_reoptimize_refuses_corrupt_payload(spark, tmp_path):
+    """A payload byte flipped after the write fails the rewrite; it is not
+    re-encoded under a fresh checksum."""
+    tokens = G.corpus_dataframe(spark, 50, num_partitions=1)
+    good = encode_dataframe(tokens, EncodeOptions(codec="raw")).toArrow()
+    payloads = good.column("payload").to_pylist()
+    bad = bytearray(payloads[0])
+    bad[-1] ^= 0x01  # a value byte of the RAW stream: still decodes
+    payloads[0] = bytes(bad)
+    i = good.schema.get_field_index("payload")
+    path = str(tmp_path / "corrupt.parquet")
+    pq.write_table(
+        good.set_column(i, "payload", pa.array(payloads, pa.binary())), path
+    )
+    corrupt = spark.read.parquet(path)
+    with pytest.raises(Exception, match="checksum mismatch"):
+        reoptimize_blocks(corrupt).collect()

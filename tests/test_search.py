@@ -176,10 +176,8 @@ def test_search_stats_prune_low_card_corpus(spark):
 
     from mapbox_vector_tile_spark.engine.encode import EncodeOptions, encode_dataframe
     from mapbox_vector_tile_spark.engine.generator import corpus_dataframe
-    from mapbox_vector_tile_spark.engine.search import (
-        search_token,
-        search_token_stats,
-    )
+    from mapbox_vector_tile_spark.codec.search import hit_positions
+    from mapbox_vector_tile_spark.engine.search import search_token
 
     # regime 2 docs only (doc_id % 8 == 2, not boundary): tokens in [0, 64)
     tokens = corpus_dataframe(spark, 1600).filter(
@@ -187,10 +185,12 @@ def test_search_stats_prune_low_card_corpus(spark):
         & (F.expr("cast(substr(doc_id, 5) as long) % 131") != 13)
     )
     blocks = encode_dataframe(tokens, EncodeOptions())
-    stats = search_token_stats(blocks, 9999).collect()
-    assert sum(r["n_values"] for r in stats) > 0
-    assert sum(r["values_decoded"] for r in stats) == 0  # all pruned
-    assert sum(r["n_hits"] for r in stats) == 0
+    rows = blocks.select("n_values", "payload").collect()
+    assert sum(r.n_values for r in rows) > 0
+    # every chunk answers from its codec parameters: nothing decoded
+    for r in rows:
+        hits, decoded = hit_positions(r.payload, 9999)
+        assert hits.size == 0 and decoded == 0
     assert search_token(blocks, 9999).count() == 0
 
 

@@ -1,8 +1,10 @@
 """Point and range reads on a snapshot table laid out like an ingest table:
 one data file per micro-batch commit. Results are bit-exact against a full
 decode plus a filter; the survivors of the zone-map filter decode in as few
-Python tasks as their bytes need; planning a read starts no Spark job; and
-commits refuse frames that are not blocks-shaped."""
+Python tasks as their bytes need; planning a read starts no Spark job;
+commits refuse frames that are not blocks-shaped; and every decoder, and
+compaction, refuses a chunk whose stored counts disagree with its
+lengths."""
 
 import os
 from contextlib import contextmanager
@@ -15,6 +17,7 @@ from pyspark.sql import functions as F
 
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine import snapshots as S
+from mapbox_vector_tile_spark.engine.compact import compact_blocks
 from mapbox_vector_tile_spark.engine.decode import (
     decode_dataframe,
     decode_doc_ids,
@@ -23,6 +26,7 @@ from mapbox_vector_tile_spark.engine.decode import (
     decode_prefix_dataframe,
     decode_suffix_dataframe,
 )
+from mapbox_vector_tile_spark.engine.deletes import decode_with_deletes
 from mapbox_vector_tile_spark.engine.encode import BLOCKS_SPARK_SCHEMA
 from mapbox_vector_tile_spark.streaming.snapshot_sink import commit_micro_batch
 
@@ -127,6 +131,26 @@ def test_doc_ids_reads_match_full_decode(spark, table, full):
     missing = ["doc-", "doc-00000050x", "zzz"]
     assert _check(decode_doc_ids(blocks, missing), full,
                   lambda c: pc.is_in(c, pa.array(missing))) == 0
+
+
+def test_doc_ids_overloads_agree(spark, table, full):
+    """The literal and the DataFrame id lookups return the same docs, bit
+    for bit: ids in two files, a zero-token doc, and an id inside a
+    chunk's doc-id span that the chunk does not hold."""
+    blocks = S.read_blocks_at(spark, table)
+    zero = full.filter(pc.equal(full.column("n_tok"), 0)).column("doc_id")
+    inside = G.doc_id_str([BATCH_DOCS + 50])[0] + "x"  # never written
+    spans = blocks.filter(
+        (F.col("min_doc_id") <= inside) & (F.col("max_doc_id") >= inside)
+    ).select("doc_ids").collect()
+    assert spans and all(inside not in r.doc_ids for r in spans)
+    ids = G.doc_id_str([BATCH_DOCS - 3, 2 * BATCH_DOCS + 7])
+    ids += [zero[0].as_py(), inside]
+    ids_df = spark.createDataFrame([(d,) for d in ids], "doc_id string")
+    want = lambda c: pc.is_in(c, pa.array(ids))  # noqa: E731
+    n = _check(decode_doc_ids(blocks, ids), full, want)
+    assert n == len(set(ids)) - 1
+    assert _check(decode_doc_ids_df(blocks, ids_df), full, want) == n
 
 
 def test_doc_range_reads_match_full_decode(spark, table, full):
@@ -237,6 +261,9 @@ def test_commits_refuse_other_schemas(spark, table, tmp_path):
     assert not os.path.exists(os.path.join(root, "snapshots"))
 
 
+_BAD_CHUNK = r"chunk \[doc-\d+\.\.doc-\d+\]: .*stored n_rows \d+ and n_values"
+
+
 def _bump_stored_count(spark, tmp_path, column: str = "n_values"):
     """A 2-commit table whose first blocks row stores ``column`` one too
     high; returns its blocks frame and a doc id of that chunk."""
@@ -271,19 +298,34 @@ def test_gather_decoders_check_stored_counts(spark, tmp_path):
 
 @pytest.mark.parametrize("column", ["n_values", "n_rows"])
 def test_scan_decoders_check_stored_counts(spark, tmp_path, column):
-    """The full, range, prefix and suffix decoders check every chunk's
-    decoded lengths against its stored counts and name the chunk; a range
-    read that misses the bad chunk still reads."""
+    """The full, range, prefix, suffix and merge-on-read decoders check
+    every chunk's decoded lengths against its stored counts and name the
+    chunk; a range read that misses the bad chunk still reads."""
     blocks, bad_doc = _bump_stored_count(spark, tmp_path, column)
-    bad = rf"chunk \[doc-\d+\.\.doc-\d+\]: .*stored n_rows \d+ and n_values"
+    no_deletes = spark.createDataFrame([("zzz",)], "doc_id string")
     reads = [
         decode_dataframe(blocks),
         decode_doc_range(blocks, bad_doc, bad_doc + "~"),
         decode_prefix_dataframe(blocks, 4),
         decode_suffix_dataframe(blocks, 4),
+        decode_with_deletes(blocks, no_deletes),
     ]
     for read in reads:
-        with pytest.raises(Exception, match=bad):
+        with pytest.raises(Exception, match=_BAD_CHUNK):
             read.collect()
     lo, hi = G.doc_id_str([BATCH_DOCS, 2 * BATCH_DOCS])
     assert decode_doc_range(blocks, lo, hi).count() == BATCH_DOCS
+
+
+@pytest.mark.parametrize("column", ["n_values", "n_rows"])
+def test_compaction_checks_stored_counts(spark, tmp_path, column):
+    """Compaction decodes a multi-member group only through the checked
+    row path: a member whose stored counts disagree with its lengths fails
+    the rewrite instead of being re-encoded with fresh counts."""
+    blocks, _ = _bump_stored_count(spark, tmp_path, column)
+    assert blocks.count() >= 2
+    assert blocks.select("bucket").distinct().count() == 1
+    # a target above the table's size puts every chunk in one group
+    total = blocks.agg(F.sum("n_values")).first()[0]
+    with pytest.raises(Exception, match=_BAD_CHUNK):
+        compact_blocks(blocks, target_chunk_values=2 * total).collect()

@@ -2,9 +2,9 @@
 
 Append/delete/rewrite commits produce immutable snapshots; decode_at(sid)
 reproduces exactly the table as of that commit (bit-identical token
-arrays), delete commits never touch data files, rewrites strand the old
-files for orphan cleanup only after their snapshots expire, and the
-current-pointer swap is atomic."""
+arrays), delete commits never touch data files, a rewrite applies the
+deletes while older snapshots stay readable, and the current-pointer swap
+is atomic."""
 
 import os
 
@@ -81,25 +81,13 @@ def test_delete_commit_adds_no_data_files(table):
     assert [s["parent_id"] for s in log] == [None, 1, 2]
 
 
-def test_rewrite_then_expire_strands_orphans(spark, corpus, table):
+def test_rewrite_applies_deletes(spark, corpus, table):
     # apply the deletes for real: rewrite from the merged view
     rewritten = encode_dataframe(S.decode_at(spark, table), EncodeOptions())
     sid = S.commit_rewrite(table, rewritten)
     snap = S.read_snapshot(table, sid)
     assert snap["operation"] == "rewrite" and snap["delete_files"] == []
     assert _ids(S.decode_at(spark, table, sid)) == _expected_ids(
-        corpus, "substring(doc_id, 5, 8) % 17 <> 3"
-    )
-    # everything is still referenced by live snapshots 1-3
-    assert S.orphan_files(table) == []
-    expired = S.expire_snapshots(table, keep_last=1)
-    assert expired == [1, 2, 3]
-    orphans = S.orphan_files(table)
-    assert orphans and all(
-        f.startswith(("data/s1", "data/s2", "deletes/s3")) for f in orphans
-    )
-    # live snapshot unaffected
-    assert _ids(S.decode_at(spark, table)) == _expected_ids(
         corpus, "substring(doc_id, 5, 8) % 17 <> 3"
     )
 
@@ -137,11 +125,6 @@ def test_incremental_changes(spark, corpus, tmp_path):
         S.incremental_changes(spark, root, 2, 4)
 
 
-def test_expire_refuses_current(spark, table):
-    with pytest.raises(ValueError):
-        S.expire_snapshots(table, keep_last=0)
-
-
 def test_empty_table_reads_fail(spark, tmp_path):
     with pytest.raises(ValueError):
         S.read_blocks_at(spark, str(tmp_path))
@@ -164,27 +147,18 @@ def test_refs_tag_branch_lifecycle(spark, corpus, tmp_path):
     assert S.set_ref(table, "main", hi, kind="branch") == hi
     assert S.resolve_ref(table, "train-v1") == lo
     # decode by name == decode by id
-    assert _ids(S.decode_at_ref(spark, table, "train-v1")) == _ids(
-        S.decode_at(spark, table, lo)
-    )
+    named = S.decode_at(spark, table, S.resolve_ref(table, "train-v1"))
+    assert _ids(named) == _ids(S.decode_at(spark, table, lo))
     # tags are write-once; branches move
     with pytest.raises(ValueError):
         S.set_ref(table, "train-v1", hi, kind="tag")
     assert S.set_ref(table, "main", lo, kind="branch") == lo
     # re-pinning a tag to the SAME snapshot is a no-op, not an error
     assert S.set_ref(table, "train-v1", lo, kind="tag") == lo
-    # pinned snapshots refuse to expire until the ref drops
-    with pytest.raises(ValueError):
-        S.expire_snapshots(table, keep_last=1)
-    S.drop_ref(table, "train-v1")
-    S.drop_ref(table, "main")
-    assert "train-v1" not in S.list_refs(table)
     with pytest.raises(KeyError):
-        S.resolve_ref(table, "train-v1")
+        S.resolve_ref(table, "never-created")
 
 
 def test_refs_reject_dangling_targets(table):
     with pytest.raises(FileNotFoundError):
         S.set_ref(table, "nope", 99_999)
-    with pytest.raises(KeyError):
-        S.drop_ref(table, "never-created")

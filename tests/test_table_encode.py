@@ -872,70 +872,16 @@ def test_timestamp_kind_native_roundtrip_and_scan(spark):
     assert got_ids == set(range(101))
 
 
-def test_compact_and_vacuum_upsert_store(spark, events, tmp_path):
-    import os
-
-    from mapbox_vector_tile_spark.engine.table_encode import decode_table
-    from mapbox_vector_tile_spark.streaming.table_sink import (
-        compact_upsert_store,
-        read_current_table_blocks,
-        start_table_upsert_stream,
-        upsert_micro_batch,
-        upsert_version_log,
-        vacuum_upsert_store,
-    )
-
-    store = str(tmp_path / "store")
-    ev = events.select(
-        "event_id", "ts_us", "user_id", "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_c"), "props",
-    )
-    # three upsert waves via the micro-batch primitive
-    upsert_micro_batch(spark, store, ev.filter("event_id < 400"), 0,
-                       "event_id", ev.schema, 128)
-    upsert_micro_batch(spark, store, ev.filter("event_id >= 400"), 1,
-                       "event_id", ev.schema, 128)
-    upd = ev.filter("event_id < 100").withColumn(
-        "event_type", F.lit("updated"))
-    upsert_micro_batch(spark, store, upd, 2, "event_id", ev.schema, 128)
-    before = decode_table(
-        read_current_table_blocks(spark, store), ev.schema
-    ).collect()
-
-    vname = compact_upsert_store(spark, store)
-    assert vname is not None
-    removed = vacuum_upsert_store(store)
-    assert len(removed) == 3  # the three pre-compaction versions
-    for d in removed:
-        assert not os.path.exists(os.path.join(store, d))
-    # live view unchanged, now resolved from ONE directory
-    after = decode_table(
-        read_current_table_blocks(spark, store), ev.schema
-    ).collect()
-    key = lambda r: r.event_id  # noqa: E731
-    assert sorted(before, key=key) == sorted(after, key=key)
-    # replay of an already-applied batch still no-ops after compaction
-    assert upsert_micro_batch(spark, store, upd, 2, "event_id",
-                              ev.schema, 128) is None
-    # a second compact + vacuum round reclaims the first compaction too
-    compact_upsert_store(spark, store)
-    removed2 = vacuum_upsert_store(store)
-    assert vname in removed2
-
-
 def test_tail_fold_absorbs_previous_fold(spark, events, tmp_path):
     """Successive tail folds cascade: fold N absorbs fold N-1's dir, so
-    reader fan-in between full compactions stays at one fold dir + the
-    fresh tail — it does NOT grow by one dir per fold."""
-    import os
-
+    reader fan-in stays at one fold dir + the fresh tail — it does NOT
+    grow by one dir per fold."""
     from mapbox_vector_tile_spark.engine.table_encode import decode_table
     from mapbox_vector_tile_spark.streaming.table_sink import (
         compact_upsert_tail,
         read_current_table_blocks,
         upsert_micro_batch,
         upsert_version_log,
-        vacuum_upsert_store,
     )
 
     store = str(tmp_path / "cascade_store")
@@ -960,16 +906,6 @@ def test_tail_fold_absorbs_previous_fold(spark, events, tmp_path):
     fold2 = next(v for v in log if v.get("dir") == res2["dir"])
     assert res1["dir"] in fold2["folds_dirs"]
 
-    # after vacuum, exactly ONE live dir remains (bounded fan-in)
-    removed = vacuum_upsert_store(store)
-    assert res1["dir"] in removed
-    live_dirs = {
-        v["dir"] for v in upsert_version_log(store)
-        if "dir" in v and not v.get("vacuumed")
-        and os.path.exists(os.path.join(store, v["dir"]))
-    }
-    assert live_dirs == {res2["dir"]}
-
     out = decode_table(
         read_current_table_blocks(spark, store), ev.schema
     ).collect()
@@ -983,18 +919,15 @@ def test_tail_fold_absorbs_previous_fold(spark, events, tmp_path):
 
 def test_incremental_tail_compaction(spark, events, tmp_path):
     """compact_upsert_tail folds the version suffix since the last
-    maintenance point: O(churn) write, folded dirs immediately
-    vacuum-able, latest-per-key resolution unchanged."""
+    maintenance point: O(churn) write, latest-per-key resolution
+    unchanged."""
     import os
 
     from mapbox_vector_tile_spark.engine.table_encode import decode_table
     from mapbox_vector_tile_spark.streaming.table_sink import (
-        compact_upsert_store,
         compact_upsert_tail,
         read_current_table_blocks,
         upsert_micro_batch,
-        upsert_version_log,
-        vacuum_upsert_store,
     )
 
     store = str(tmp_path / "inc_store")
@@ -1032,20 +965,6 @@ def test_incremental_tail_compaction(spark, events, tmp_path):
         for r in after if r.event_id < 200
     )
 
-    # folded dirs reclaim WITHOUT a full compaction
-    removed = vacuum_upsert_store(store)
-    log = upsert_version_log(store)
-    folded_dirs = next(
-        v["folds_dirs"] for v in log if "folds_dirs" in v
-    )
-    assert set(removed) == set(folded_dirs)
-    for d in removed:
-        assert not os.path.exists(os.path.join(store, d))
-    after2 = decode_table(
-        read_current_table_blocks(spark, store), ev.schema
-    ).collect()
-    assert sorted(after2, key=key) == sorted(before, key=key)
-
     # tail reset: an immediate second fold is a no-op
     res2 = compact_upsert_tail(spark, store)
     assert res2["dir"] is None and res2["folded_versions"] == 0
@@ -1057,9 +976,6 @@ def test_incremental_tail_compaction(spark, events, tmp_path):
     # replay safety unchanged
     assert upsert_micro_batch(spark, store, upd3, 3, "event_id",
                               ev.schema, 128) is None
-    # full compaction still collapses the whole store afterwards
-    compact_upsert_store(spark, store)
-    vacuum_upsert_store(store)
     final = decode_table(
         read_current_table_blocks(spark, store), ev.schema
     ).collect()

@@ -1,8 +1,7 @@
 """Z-order layout: interleave exactness, grid locality, 2-D pruning win,
-and end-to-end fused encode clustered along the Z-curve."""
+and a snapshot table rewritten along the Z-curve."""
 
 import numpy as np
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,15 +9,11 @@ from mapbox_vector_tile_spark.codec.blocks import decode_block
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
 from mapbox_vector_tile_spark.engine.zorder import (
-    LINEAR_SHIFT,
-    RECT,
     Z_BITS,
     Z_SHIFT,
-    zorder_doc_len_key,
     zorder_key_expr,
     zorder_pruning_audit,
     zorder_zone_maps,
-    zorder_doc_len_key as _key_fn,
 )
 
 N_DOCS = 500
@@ -48,20 +43,6 @@ def test_interleave_matches_reference(spark):
         assert r.z == _interleave_py(r.a, r.b), (r.a, r.b)
 
 
-def test_key_fn_matches_expr(tokens):
-    t = pa.table(
-        {
-            "doc_id": [f"doc-{i:08d}" for i in (0, 7, 499)],
-            "n_tok": [0, 997, 8192],
-        }
-    )
-    keys = zorder_doc_len_key(t).to_pylist()
-    for row, key in zip(t.to_pylist(), keys):
-        num = int(row["doc_id"][4:])
-        z = _interleave_py(num, row["n_tok"])
-        assert key == f"{z:010d}|{row['doc_id']}"
-
-
 def test_zone_map_cells_are_bounded_rectangles(tokens):
     cell = 1 << (Z_SHIFT // 2)  # 256: each grid cell spans <= 256 per dim
     for r in zorder_zone_maps(tokens).collect():
@@ -79,56 +60,6 @@ def test_pruning_audit_zorder_wins_on_rectangle(tokens):
     # and everything matched is inside what was touched
     assert z.rows_touched >= z.rows_matched
     assert l.rows_touched >= l.rows_matched
-
-
-def test_fused_encode_zorder_clusters_length(spark, tmp_path):
-    """Encode with the Z-curve cluster key: roundtrip stays exact and the
-    chunks' LENGTH spans become bounded (2-D zone-map locality in the
-    real blocks), unlike the doc-ordered layout."""
-    from mapbox_vector_tile_spark.engine.exchange import (
-        exchange_encode_fused_direct,
-    )
-
-    src = str(tmp_path / "tokens")
-    tok = G.corpus_dataframe(spark, N_DOCS, num_partitions=4)
-    tok.write.parquet(src)
-
-    from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-
-    # small chunks so layout (not chunk granularity) decides the spans
-    opts = EncodeOptions(max_chunk_values=8192)
-    out_z, out_d = str(tmp_path / "blocks_z"), str(tmp_path / "blocks_d")
-    exchange_encode_fused_direct(
-        spark, src, out_z, num_buckets=8, options=opts,
-        key_fn=zorder_doc_len_key, key_cols=("doc_id", "n_tok"),
-    )
-    exchange_encode_fused_direct(
-        spark, src, out_d, num_buckets=8, options=opts
-    )
-    blocks_z = spark.read.parquet(out_z).cache()
-    blocks_d = spark.read.parquet(out_d).cache()
-
-    # correctness is layout-independent
-    from mapbox_vector_tile_spark.engine.decode import decode_dataframe
-
-    v = verify_roundtrip(tok, decode_dataframe(blocks_z)).first()
-    assert v.n_mismatch == 0 and v.n_docs == N_DOCS
-
-    def len_spans(blocks) -> list[int]:
-        spans = []
-        for r in blocks.select("lengths_blob").collect():
-            lens = decode_block(memoryview(r.lengths_blob))
-            if len(lens):
-                spans.append(int(lens.max() - lens.min()))
-        return spans
-
-    z_spans, d_spans = len_spans(blocks_z), len_spans(blocks_d)
-    # doc-ordered chunks mix the whole length domain; z-ordered chunks
-    # stay inside a narrow band (grid cell = 256 wide, minus the 8192
-    # outlier cell) — compare medians to be robust to tail chunks
-    assert np.median(z_spans) < np.median(d_spans) / 4
-    blocks_z.unpersist()
-    blocks_d.unpersist()
 
 
 def test_optimize_zorder_table(spark, tmp_path):
