@@ -370,7 +370,6 @@ def _dec_for_patch(buf: memoryview, n: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 _PGD = struct.Struct("<iq")  # page_size, n_pages
-PAGED_FIXED_OVERHEAD = _PGD.size
 
 
 def paged_size(page_sizes: list[int]) -> int:

@@ -37,19 +37,6 @@ MOD = 1_000_000_007  # checksum modulus (pmod on both sides)
 
 SOURCES = ["web", "books", "code", "wiki", "forum"]
 
-N_REGIMES = 9
-REGIME_NAMES = [
-    "constant",
-    "long_runs",
-    "low_card",
-    "sorted_ids",
-    "clustered",
-    "zipf_ish",
-    "uniform",
-    "sawtooth",
-    "boundary",
-]
-
 
 # ---------------------------------------------------------------------------
 # numpy side

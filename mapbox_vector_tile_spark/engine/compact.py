@@ -6,10 +6,10 @@ applied at CHUNK granularity: streaming encodes (micro-batches), resumed
 jobs, and per-bucket tails all produce sub-``max_chunk_values`` chunks
 metadata (manifest row, lengths blob, zone-map entries, scheduling unit)
 is amortized over too few values. Compaction decodes each undersized
-group once, re-encodes it as one full chunk (former chunk junctions
-become PAGED segment bounds, exactly like the fused emitter's merged
-tails — ``engine/exchange.py``), and passes already-compact chunks
-through byte-for-byte untouched.
+group once, re-encodes it as one full chunk through the chunker's parts
+helper (``engine/encode._encode_parts``, so former chunk junctions
+become PAGED segment bounds exactly as in the emitter's merged tails),
+and passes already-compact chunks through byte-for-byte untouched.
 
 What compaction buys — and what it doesn't: PAYLOAD bytes stay ~equal
 (measured +0.2-0.3%: small frames fit local distributions better, and
@@ -43,15 +43,16 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 
+from ..codec.strings import decode_string_chunk
 from .decode import _all_values, _checked_lengths
 from .encode import (
     _BLOCKS_ARROW_SCHEMA,
     BLOCKS_SPARK_SCHEMA,
     EncodeOptions,
-    _encode_chunk,
+    _BucketAcc,
+    _encode_parts,
     blocks_batch,
 )
 
@@ -130,47 +131,32 @@ def compact_blocks(
                 out_rows.append(row)
                 out_docs.append(m["doc_ids"])
                 return
-            decoded = []
-            for m in members:
+            blobs = [m["source_blob"] for m in members]
+            if any(b is not None for b in blobs) and None in blobs:
+                raise ValueError(
+                    "cannot compact: some chunks in a group carry a "
+                    "source_blob and others do not"
+                )
+            parts = _BucketAcc()
+            for m, blob in zip(members, blobs):
                 payload, lengths = _checked_lengths(
                     m["_cols"], m["_i"], verify_checksum
                 )
-                decoded.append((m, lengths, _all_values(payload, lengths)))
-            lengths = np.concatenate([d[1] for d in decoded])
-            values = np.concatenate([d[2] for d in decoded])
-            sizes = np.array([d[2].size for d in decoded], dtype=np.int64)
-            seg = np.cumsum(sizes)[:-1]
-            seg = seg[(seg > 0) & (seg < int(values.size))]
-            docs = pa.concat_arrays(
-                [d[0]["doc_ids"].cast(pa.string()) for d in decoded]
-            )
-            src_vals = None
-            blobs = [d[0]["source_blob"] for d in decoded]
-            if any(b is not None for b in blobs):
-                from ..codec.strings import decode_string_chunk
-
-                if any(b is None for b in blobs):
-                    raise ValueError(
-                        "cannot compact: some chunks in a group carry a "
-                        "source_blob and others do not"
-                    )
-                src_vals = [
-                    s for b in blobs for s in decode_string_chunk(b)
-                ]
-            bucket = min(int(d[0]["bucket"]) for d in decoded)
-            bucket_max = max(int(d[0]["bucket_max"]) for d in decoded)
-            group = int(decoded[0][0]["_group"])
-            row = _encode_chunk(
-                docs,
-                lengths,
-                values,
+                parts.add(
+                    m["doc_ids"],
+                    lengths,
+                    _all_values(payload, lengths),
+                    None if blob is None
+                    else pa.array(decode_string_chunk(blob), pa.string()),
+                )
+            bucket = min(int(m["bucket"]) for m in members)
+            row, docs = _encode_parts(
+                parts,
                 opts,
                 bucket,
-                group,
+                int(members[0]["_group"]),
                 bucket,
-                source_vals=src_vals,
-                seg_values=seg if seg.size else None,
-                bucket_max=bucket_max,
+                max(int(m["bucket_max"]) for m in members),
             )
             out_rows.append(row)
             out_docs.append(docs)

@@ -27,9 +27,6 @@ def doc_id_str(ids: np.ndarray) -> list[str]:
     return [f"doc-{int(i):08d}" for i in ids]
 
 
-DOC_ID_STR_SQL = "printf('doc-%08d', doc_id)"  # DuckDB-side equivalent
-
-
 def tokens_batch(ids: np.ndarray) -> pa.RecordBatch:
     """One Arrow batch of the corpus for integer doc ids."""
     ids = np.asarray(ids, dtype=np.int64)

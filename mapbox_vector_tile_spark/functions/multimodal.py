@@ -50,8 +50,6 @@ try:
 except Exception:
     REAL_DECODERS_AVAILABLE = False
 
-REAL_VIDEO_DECODER = True  # RIFF/AVI (DIB + MJPEG) and GIF, numpy only
-
 
 # ---------------------------------------------------------------------------
 # BMP (24-bit uncompressed, BITMAPINFOHEADER) — real codec, numpy only
@@ -208,8 +206,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 # what makes frame SAMPLING scale: :func:`decode_avi_frames` seeks straight
 # to the sampled frames and never touches the other frames' bytes.
 # ---------------------------------------------------------------------------
-
-_AVIH_OFF = 32  # byte offset of the avih payload (dwMicroSecPerFrame)
 
 
 def encode_avi(frames: np.ndarray, fps: int = 10) -> bytes:

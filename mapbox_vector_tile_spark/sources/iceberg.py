@@ -334,8 +334,6 @@ def manifest_entry_schema(partition_fields: list[dict] | None = None) -> dict:
     }
 
 
-MANIFEST_ENTRY_SCHEMA = manifest_entry_schema()
-
 # entry statuses (spec)
 EXISTING, ADDED, DELETED = 0, 1, 2
 

@@ -407,7 +407,9 @@ def _iter_chunks(
         for batch in _read_block_batches(path, cols, lo, hi, batch_size):
             base, row = row, row + batch.num_rows
             if tokens:
-                yield (batch.column("doc_id"),) + E._flatten_tokens(batch)
+                yield (batch.column("doc_id"),) + E._flatten_tokens(
+                    batch.column("tokens")
+                )
                 continue
             payloads = batch.column("payload")
             lb = batch.column("lengths_blob")

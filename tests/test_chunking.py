@@ -1,20 +1,15 @@
 """chunk_row_starts: vectorized chunk-cut placement (searchsorted) must
-reproduce the original per-row greedy loop exactly (forced boundaries at
-bucket changes + value-budget cuts)."""
+reproduce the original per-row greedy loop of value-budget cuts exactly."""
 
 import numpy as np
 
 from mapbox_vector_tile_spark.engine.encode import chunk_row_starts
 
 
-def _reference_loop(lengths, max_chunk_values, forced=()):
-    must_split = set(int(x) for x in forced)
+def _reference_loop(lengths, max_chunk_values):
     row_starts = [0]
     acc = 0
     for i, ln in enumerate(lengths):
-        if i in must_split and i > row_starts[-1]:
-            row_starts.append(i)
-            acc = 0
         acc += int(ln)
         if acc >= max_chunk_values and i + 1 < len(lengths):
             row_starts.append(i + 1)
@@ -37,24 +32,6 @@ def test_matches_reference_loop_randomized():
         n = int(rng.integers(0, 50))
         lengths = rng.integers(0, 40, size=n).astype(np.int64)
         max_vals = int(rng.integers(1, 120))
-        # random forced boundaries (bucket changes)
-        n_forced = int(rng.integers(0, 5))
-        forced = np.unique(rng.integers(1, max(n, 2), size=n_forced))
-        forced = forced[forced < n] if n else np.array([], dtype=np.int64)
-        got = chunk_row_starts(lengths, max_vals, forced)
-        want = _reference_loop(lengths, max_vals, forced)
-        assert got == want, (trial, lengths.tolist(), max_vals, forced.tolist())
-
-
-def test_matches_reference_loop_bucket_runs():
-    # bucket-change boundaries exactly as encode_dataframe derives them
-    rng = np.random.default_rng(11)
-    for _ in range(50):
-        n = int(rng.integers(1, 80))
-        lengths = rng.integers(0, 30, size=n).astype(np.int64)
-        buckets = np.sort(rng.integers(0, 4, size=n))
-        forced = np.flatnonzero(np.diff(buckets) != 0) + 1
-        max_vals = int(rng.integers(5, 200))
-        assert chunk_row_starts(lengths, max_vals, forced) == _reference_loop(
-            lengths, max_vals, forced
-        )
+        got = chunk_row_starts(lengths, max_vals)
+        want = _reference_loop(lengths, max_vals)
+        assert got == want, (trial, lengths.tolist(), max_vals)

@@ -1,11 +1,13 @@
-"""Doc conservation through the fused encode's chunk emitter.
+"""Doc conservation through the engine's one chunk emitter.
 
 Property: whatever the layout — zero-token docs, buckets holding only
 zero-token docs, docs longer than ``max_chunk_values``, one bucket, many
-files forcing pin-window and budget drains — the doc ids and per-doc tokens
-that come out of the emitted chunks equal those that went in. The emitter
-is pure Python, so the property runs without a Spark session; one Spark case
-drives the same edges through ``exchange_encode_fused_direct``.
+files forcing pin-window and budget drains — the doc ids, per-doc tokens
+and per-doc source strings that come out of the emitted chunks equal those
+that went in. The emitter is pure Python, so the property runs without a
+Spark session; Spark cases drive the same edges through
+``exchange_encode_fused_direct`` and check that it and ``encode_dataframe``
+read their token input through the same checks and build the same chunks.
 """
 
 import numpy as np
@@ -14,9 +16,12 @@ import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
+from mapbox_vector_tile_spark.codec.strings import decode_string_chunk
 from mapbox_vector_tile_spark.engine.decode import decode_block_row
-from mapbox_vector_tile_spark.engine.encode import EncodeOptions
-from mapbox_vector_tile_spark.engine.exchange import _FusedChunkEmitter
+from mapbox_vector_tile_spark.engine.encode import (
+    EncodeOptions,
+    _FusedChunkEmitter,
+)
 
 MAX_CHUNK = 64
 
@@ -33,9 +38,11 @@ docs_st = st.lists(
 files_st = st.lists(docs_st, min_size=1, max_size=12)
 
 
-def _run_emitter(files, min_chunk, pin_window, budget, seed=0):
+def _run_emitter(files, min_chunk, pin_window, budget, seed=0,
+                 with_source=False):
     """Feed ``files`` through one emitter; return (docs in, docs out) as
-    ``{doc_id: tokens}`` plus the emitter."""
+    ``{doc_id: tokens}`` (``{doc_id: (tokens, source)}`` ``with_source``)
+    plus the emitter."""
     rng = np.random.default_rng(seed)
     em = _FusedChunkEmitter(
         EncodeOptions(max_chunk_values=MAX_CHUNK),
@@ -51,9 +58,17 @@ def _run_emitter(files, min_chunk, pin_window, budget, seed=0):
         values = rng.integers(-1000, 1000, int(lengths.sum()), dtype=np.int32)
         ids = [f"f{f:02d}-{i:03d}" for i in range(len(docs))]
         off = np.concatenate(([0], np.cumsum(lengths)))
+        # sources repeat and some are empty, as in a real source column
+        sources = [f"src{f % 3}-{i % 4}" if i % 5 else ""
+                   for i in range(len(docs))] if with_source else None
         for i, d in enumerate(ids):
             want[d] = values[off[i] : off[i + 1]].tolist()
-        em.add_file(pa.array(ids, pa.string()), lengths, values, buckets)
+            if with_source:
+                want[d] = (want[d], sources[i])
+        em.add_file(
+            pa.array(ids, pa.string()), lengths, values, buckets,
+            None if sources is None else pa.array(sources, pa.string()),
+        )
     em.flush()
     got = {}
     for row, docs in zip(em.rows, em.chunk_docs):
@@ -62,9 +77,16 @@ def _run_emitter(files, min_chunk, pin_window, budget, seed=0):
         )
         assert row["n_rows"] == len(docs) == lengths.size
         off = np.concatenate(([0], np.cumsum(lengths)))
+        if with_source:
+            sources = decode_string_chunk(row["source_blob"])
+            assert len(sources) == len(docs)
+        else:
+            assert row["source_blob"] is None
         for i, d in enumerate(docs.to_pylist()):
             assert d not in got, f"doc {d} emitted twice"
             got[d] = values[off[i] : off[i + 1]].tolist()
+            if with_source:
+                got[d] = (got[d], sources[i])
     return want, got, em
 
 
@@ -74,33 +96,36 @@ def _run_emitter(files, min_chunk, pin_window, budget, seed=0):
     min_chunk=st.sampled_from([0, 16, MAX_CHUNK]),
     pin_window=st.sampled_from([1, 2, 8]),
     budget=st.sampled_from([MAX_CHUNK, 2 * MAX_CHUNK, 1 << 20]),
+    with_source=st.booleans(),
 )
 # the reported repro: 6 docs in, 3 of them zero-token, 3 came out
 @example(
     files=[[(40, 0), (40, 0), (0, 0), (5, 1), (0, 2), (0, 2)]],
-    min_chunk=16, pin_window=8, budget=1 << 20,
+    min_chunk=16, pin_window=8, budget=1 << 20, with_source=False,
 )
 # zero-token docs alone
 @example(files=[[(0, 0), (0, 0), (0, 1)]], min_chunk=16, pin_window=8,
-         budget=1 << 20)
-@example(files=[[(0, 0), (0, 3)]], min_chunk=0, pin_window=8, budget=1 << 20)
+         budget=1 << 20, with_source=False)
+@example(files=[[(0, 0), (0, 3)]], min_chunk=0, pin_window=8, budget=1 << 20,
+         with_source=True)
 # a bucket of only zero-token docs between full buckets
 @example(files=[[(30, 0), (0, 1), (0, 1), (30, 2)]], min_chunk=16,
-         pin_window=8, budget=1 << 20)
+         pin_window=8, budget=1 << 20, with_source=True)
 # docs longer than max_chunk_values, around zero-token docs
 @example(files=[[(0, 0), (150, 0), (0, 0), (90, 1)]], min_chunk=16,
-         pin_window=8, budget=1 << 20)
+         pin_window=8, budget=1 << 20, with_source=False)
 # every doc in one bucket, across files
 @example(files=[[(10, 0)] * 5, [(0, 0)] * 3, [(70, 0), (0, 0)]],
-         min_chunk=16, pin_window=8, budget=1 << 20)
+         min_chunk=16, pin_window=8, budget=1 << 20, with_source=True)
 # many files: pin-window and budget drains, tails of zero-token docs held
 @example(
     files=[[(40, 0), (40, 0), (0, 0), (5, 1), (0, 2)] for _ in range(10)],
-    min_chunk=16, pin_window=2, budget=MAX_CHUNK,
+    min_chunk=16, pin_window=2, budget=MAX_CHUNK, with_source=True,
 )
 def test_emitter_conserves_docs_and_tokens(files, min_chunk, pin_window,
-                                           budget):
-    want, got, _ = _run_emitter(files, min_chunk, pin_window, budget)
+                                           budget, with_source):
+    want, got, _ = _run_emitter(files, min_chunk, pin_window, budget,
+                                with_source=with_source)
     assert got == want
 
 
@@ -120,18 +145,33 @@ def test_emitter_chunks_respect_bucket_range():
                 assert r["bucket"] == r["bucket_max"]
 
 
-def test_task_count_check_raises_on_lost_docs_or_tasks():
+def test_emitter_flush_raises_on_lost_docs():
+    """An emitter whose chunks lose docs fails at flush instead of writing
+    a short table."""
+
+    class Lossy(_FusedChunkEmitter):
+        def _emit_merged(self, group):  # drops every merged tail
+            pass
+
+    em = Lossy(EncodeOptions(max_chunk_values=MAX_CHUNK), task_id=3,
+               min_chunk_values=16)
+    em.add_file(pa.array(["a", "b", "c"]), np.array([40, 40, 5]),
+                np.arange(85, dtype=np.int32), np.array([0, 0, 1]))
+    with pytest.raises(RuntimeError,
+                       match="task 3 was given 3 docs and emitted 2"):
+        em.flush()
+
+
+def test_task_count_check_raises_on_missing_tasks():
     from collections import namedtuple
 
     from mapbox_vector_tile_spark.engine.exchange import _check_task_counts
 
-    Row = namedtuple("Row", "task_id n_rows_read n_rows")
+    Row = namedtuple("Row", "task_id n_rows")
     groups = [(0, ["a"]), (1, ["b"])]
-    _check_task_counts(groups, [Row(0, 5, 5), Row(1, 0, 0)])
-    with pytest.raises(RuntimeError, match=r"mismatches \[\(1, 6, 3\)\]"):
-        _check_task_counts(groups, [Row(0, 5, 5), Row(1, 6, 3)])
+    _check_task_counts(groups, [Row(0, 5), Row(1, 0)])
     with pytest.raises(RuntimeError, match=r"manifest row \[1\]"):
-        _check_task_counts(groups, [Row(0, 5, 5)])
+        _check_task_counts(groups, [Row(0, 5)])
 
 
 def test_fused_direct_keeps_zero_token_docs_and_empty_files(spark, tmp_path):
@@ -174,3 +214,99 @@ def test_fused_direct_keeps_zero_token_docs_and_empty_files(spark, tmp_path):
             for r in decode_dataframe(spark.read.parquet(out)).collect()
         }
         assert got == dict(zip(ids, tokens))
+
+
+def _tokens_file(path, tokens, token_type=pa.int32()):
+    ids = [f"doc-{i:08d}" for i in range(len(tokens))]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(ids, pa.string()),
+            "tokens": pa.array(tokens, pa.list_(token_type)),
+            "n_tok": pa.array([len(t) for t in tokens], pa.int32()),
+        }),
+        str(path),
+    )
+    return ids
+
+
+def test_fused_direct_rejects_null_token_elements(spark, tmp_path):
+    """A null inside a token array is an error on the bulk path, as it is
+    for ``encode_dataframe``; it is not stored as ``-2**31``."""
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
+
+    src = tmp_path / "tokens"
+    src.mkdir()
+    _tokens_file(src / "part-0.parquet", [[1, None, 3], [4]])
+    with pytest.raises(Exception,
+                       match="tokens arrays must not contain null elements"):
+        exchange_encode_fused_direct(
+            spark, str(src), str(tmp_path / "blocks"), 1, n_tasks=1
+        )
+
+
+@pytest.mark.parametrize("encoder", ["encode_dataframe", "fused_direct"])
+def test_bigint_tokens_are_range_checked(spark, tmp_path, encoder):
+    """``array<bigint>`` tokens outside int32 raise on both encoders;
+    in-range ones round-trip bit-exact."""
+    from mapbox_vector_tile_spark.engine.decode import decode_dataframe
+    from mapbox_vector_tile_spark.engine.encode import encode_dataframe
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
+
+    def encode(tokens, name):
+        src = tmp_path / name
+        src.mkdir()
+        ids = _tokens_file(src / "part-0.parquet", tokens, pa.int64())
+        out = str(tmp_path / f"{name}-blocks")
+        if encoder == "encode_dataframe":
+            encode_dataframe(spark.read.parquet(str(src))).write.parquet(out)
+        else:
+            exchange_encode_fused_direct(spark, str(src), out, 1, n_tasks=1)
+        return ids, out
+
+    with pytest.raises(Exception, match="Integer value 2147483653 not in range"):
+        encode([[1, 2**31 + 5, 3]], "over")
+    tokens = [[1, -(2**31), 2**31 - 1], [], [7] * 9]
+    ids, out = encode(tokens, "inrange")
+    got = {
+        r.doc_id: list(r.tokens)
+        for r in decode_dataframe(spark.read.parquet(out)).collect()
+    }
+    assert got == dict(zip(ids, tokens))
+
+
+def test_dataframe_and_bulk_encoders_build_the_same_chunks(spark, tmp_path):
+    """One sorted file, one partition, one Arrow batch, one bucket: the
+    DataFrame encoder and the bulk sink cut and encode the same chunks."""
+    import zlib
+
+    from mapbox_vector_tile_spark.engine.encode import encode_dataframe
+    from mapbox_vector_tile_spark.engine.exchange import (
+        exchange_encode_fused_direct,
+    )
+
+    rng = np.random.default_rng(3)
+    lengths = rng.integers(0, 400, 300)
+    lengths[::17] = 0
+    tokens = [(rng.integers(0, 5000, n) * (1 + i % 3)).tolist()
+              for i, n in enumerate(lengths)]
+    src = tmp_path / "tokens"
+    src.mkdir()
+    _tokens_file(src / "part-0.parquet", tokens)
+    opts = EncodeOptions(max_chunk_values=8192)
+
+    def chunks(rows):
+        return [(r.checksum, r.lengths_blob, zlib.crc32(r.payload))
+                for r in sorted(rows, key=lambda r: r.chunk_id)]
+
+    df_rows = encode_dataframe(
+        spark.read.parquet(str(src)).coalesce(1), opts
+    ).collect()
+    out = str(tmp_path / "blocks")
+    exchange_encode_fused_direct(spark, str(src), out, 1, opts, n_tasks=1)
+    bulk_rows = spark.read.parquet(out).collect()
+    assert len(df_rows) > 3
+    assert chunks(df_rows) == chunks(bulk_rows)

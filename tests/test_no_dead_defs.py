@@ -1,4 +1,5 @@
-"""Every top-level def in the package has a caller outside the tests.
+"""Every top-level def and constant in the package has a caller outside
+the tests.
 
 The entry points are the deployment jobs (``jobs/``), the benchmark
 (``perfbench/``), the tools (``tools/``), the driver benches (``bench*.py``)
@@ -8,13 +9,21 @@ so two defs that share a name in different modules do not keep each other
 alive. A module's top-level code is live once a live context imports the
 module or one of its submodules.
 
-Run ``python tests/test_no_dead_defs.py`` to print the unreachable defs.
+A module-level constant (``NAME = ...``) is live when some package module
+or entry point names it anywhere besides its assignments, comments and
+docstrings included. Dunder names (``__all__``) are read by Python itself
+and are not counted as constants.
+
+Run ``python tests/test_no_dead_defs.py`` to print the unreachable defs and
+the unnamed constants.
 """
 
 from __future__ import annotations
 
 import ast
+import collections
 import pathlib
+import re
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 PKG = "mapbox_vector_tile_spark"
@@ -45,19 +54,61 @@ def _module_name(path: pathlib.Path) -> str:
     return ".".join(parts)
 
 
-def _top_defs(tree: ast.Module):
-    """Function and class defs at module level, also under ``if``/``try``."""
+def _top_statements(tree: ast.Module):
+    """Module-level statements, also under ``if``/``try``."""
     stack = list(tree.body)
     while stack:
         node = stack.pop()
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                             ast.ClassDef)):
-            yield node
-        elif isinstance(node, (ast.If, ast.Try)):
+        if isinstance(node, (ast.If, ast.Try)):
             stack.extend(node.body + node.orelse
                          + getattr(node, "finalbody", []))
             for h in getattr(node, "handlers", []):
                 stack.extend(h.body)
+        else:
+            yield node
+
+
+def _top_defs(tree: ast.Module):
+    """Function and class defs at module level, also under ``if``/``try``."""
+    for node in _top_statements(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node
+
+
+def _constant_names(tree: ast.Module):
+    """Names bound by module-level ``NAME = ...`` / ``A, B = ...`` /
+    ``NAME: T = ...`` assignments, one per binding."""
+    for node in _top_statements(tree):
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign) and node.value is not None:
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            for n in (t.elts if isinstance(t, ast.Tuple) else [t]):
+                if isinstance(n, ast.Name) and not (
+                        n.id.startswith("__") and n.id.endswith("__")):
+                    yield n.id
+
+
+def unnamed_constants() -> list[str]:
+    """Package constants that no package module or entry point names
+    anywhere but in their own assignments."""
+    files = sorted((REPO / PKG).rglob("*.py"))
+    roots = sorted({p for g in ROOT_GLOBS for p in REPO.glob(g)})
+    words = collections.Counter()
+    for path in files + roots:
+        words.update(re.findall(r"\w+", path.read_text()))
+    bound: dict[str, list[str]] = collections.defaultdict(list)
+    for path in files:
+        for name in _constant_names(ast.parse(path.read_text())):
+            bound[name].append(_module_name(path))
+    return sorted(
+        f"{mod}.{name}"
+        for name, mods in bound.items() if words[name] <= len(mods)
+        for mod in mods)
 
 
 class _Graph:
@@ -234,6 +285,14 @@ def test_every_package_def_has_a_caller():
         + "\n  ".join(dead))
 
 
+def test_every_package_constant_is_named():
+    unnamed = unnamed_constants()
+    assert not unnamed, (
+        "module-level constants that nothing but their own assignment "
+        "names (delete them, or give them a reader):\n  "
+        + "\n  ".join(unnamed))
+
+
 def test_oracles_exist():
     g = _Graph()
     for qual in ORACLES:
@@ -247,3 +306,5 @@ if __name__ == "__main__":
         mod, name = qual.rsplit(".", 1)
         node = g.defs[mod][name]
         print(f"{qual}\t{node.end_lineno - node.lineno + 1}")
+    for qual in unnamed_constants():
+        print(f"{qual}\tconstant")
