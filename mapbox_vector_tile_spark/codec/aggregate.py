@@ -33,33 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import kernels as K
-from .blocks import (
-    BITPACK_ZZ,
-    CONSTANT,
-    DELTA_ZZ_BITPACK,
-    DELTA_ZZ_VARINT,
-    DICT_BITPACK,
-    DICT_ESCAPE,
-    FOR_BITPACK,
-    FOR_PATCH,
-    MAGIC,
-    PAGED,
-    RAW,
-    RLE,
-    VERSION,
-    _BPZZ,
-    _CONST,
-    _DESC,
-    _DICT,
-    _FOR,
-    _HDR,
-    _PFOR,
-    _PGD,
-    _RLE,
-    _DECODERS,
-    _nbytes,
-)
+from . import blocks as B
 
 Stats = tuple[int, int | None, int | None, int | None, int]
 
@@ -68,139 +42,83 @@ _EMPTY: Stats = (0, 0, None, None, 0)
 
 def value_stats(buf: bytes | memoryview, need_sum: bool = True) -> Stats:
     """``(n, sum, min, max, values_decoded)`` of one framed block."""
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
-    if n == 0:
+    v = B.read_view(buf)
+    if v is None:
         return _EMPTY
-    return _STATS_BODY[codec_id](mv[_HDR.size :], n, need_sum)
+    return _STATS_BODY[v.codec_id](v, need_sum)
 
 
-def _from_array(a: np.ndarray, n: int) -> Stats:
-    a64 = a.astype(np.int64)
-    return n, int(a64.sum()), int(a64.min()), int(a64.max()), n
+def _stats_decode(v, need_sum: bool) -> Stats:
+    a64 = B.decode_view(v).astype(np.int64)
+    return v.n, int(a64.sum()), int(a64.min()), int(a64.max()), v.n
 
 
-def _stats_decode(codec_id: int):
-    def fn(body: memoryview, n: int, need_sum: bool) -> Stats:
-        return _from_array(_DECODERS[codec_id](body, n), n)
-
-    return fn
+def _stats_const(v, need_sum: bool) -> Stats:
+    return v.n, v.n * v.value, v.value, v.value, 0
 
 
-def _stats_const(body: memoryview, n: int, need_sum: bool) -> Stats:
-    (v,) = _CONST.unpack_from(body)
-    return n, n * v, v, v, 0
-
-
-def _stats_bitpack_zz(body: memoryview, n: int, need_sum: bool) -> Stats:
-    (w,) = _BPZZ.unpack_from(body)
-    zz = K.bitunpack(body[_BPZZ.size :], w, n)
-    vals = K.zigzag_decode(zz).astype(np.int64)
-    return n, int(vals.sum()), int(vals.min()), int(vals.max()), n
-
-
-def _stats_for_bitpack(body: memoryview, n: int, need_sum: bool) -> Stats:
-    lo, w = _FOR.unpack_from(body)
-    rel = K.bitunpack(body[_FOR.size :], w, n).astype(np.int64)
-    # absolute array never built: reductions over the relative stream + lo
+def _stats_rel(v, lo: int, rel: np.ndarray) -> Stats:
+    """Stats from the relative stream ``rel`` (int64) of a FOR-style view
+    with base ``lo``; the absolute array is never built."""
     return (
-        n,
-        n * lo + int(rel.sum()),
-        lo + int(rel.min()),
-        lo + int(rel.max()),
-        n,
+        v.n, v.n * lo + int(rel.sum()), lo + int(rel.min()),
+        lo + int(rel.max()), v.n,
     )
 
 
-def _stats_rle(body: memoryview, n: int, need_sum: bool) -> Stats:
-    r, lw, vmin, vw = _RLE.unpack_from(body)
-    off = _RLE.size
-    lens_end = off + _nbytes(r, lw)
-    lens = K.bitunpack(body[off:lens_end], lw, r).astype(np.int64) + 1
-    vals = vmin + K.bitunpack(body[lens_end:], vw, r).astype(np.int64)
-    return (
-        n,
-        int((vals * lens).sum()),
-        int(vals.min()),
-        int(vals.max()),
-        0,
-    )
+def _stats_for_bitpack(v, need_sum: bool) -> Stats:
+    return _stats_rel(v, v.lo, v.rel.unpack().astype(np.int64))
 
 
-def _stats_dict_bitpack(body: memoryview, n: int, need_sum: bool) -> Stats:
-    c, tmin, tw, iw = _DICT.unpack_from(body)
-    off = _DICT.size
-    table = tmin + K.bitunpack(body[off : off + _nbytes(c, tw)], tw, c).astype(
-        np.int64
-    )
+def _stats_for_patch(v, need_sum: bool) -> Stats:
+    rel = v.base.unpack().astype(np.int64)
+    if v.n_exc:
+        rel[v.pos.unpack().astype(np.int64)] = (
+            v.exc.unpack().astype(np.int64) + (1 << v.w)
+        )
+    return _stats_rel(v, v.lo, rel)
+
+
+def _stats_rle(v, need_sum: bool) -> Stats:
+    lens = B.run_lengths(v)
+    vals = v.vmin + v.vals.unpack().astype(np.int64)
+    return v.n, int((vals * lens).sum()), int(vals.min()), int(vals.max()), 0
+
+
+def _stats_dict_bitpack(v, need_sum: bool) -> Stats:
+    table = v.tmin + v.table.unpack().astype(np.int64)
     mn, mx = int(table.min()), int(table.max())
     if not need_sum:
-        return n, None, mn, mx, 0
-    idx = K.bitunpack(body[off + _nbytes(c, tw) :], iw, n)
-    counts = np.bincount(idx.astype(np.int64), minlength=c)[:c]
-    return n, int((table * counts).sum()), mn, mx, n
+        return v.n, None, mn, mx, 0
+    counts = np.bincount(v.idx.unpack().astype(np.int64), minlength=v.c)[: v.c]
+    return v.n, int((table * counts).sum()), mn, mx, v.n
 
 
-def _stats_dict_escape(body: memoryview, n: int, need_sum: bool) -> Stats:
-    k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(body)
-    off = _DESC.size
-    head_end = off + _nbytes(c, hw)
-    codes_end = head_end + _nbytes(n, k)
-    table = hmin + K.bitunpack(body[off:head_end], hw, c).astype(np.int64)
+def _stats_dict_escape(v, need_sum: bool) -> Stats:
+    table = v.hmin + v.head.unpack().astype(np.int64)
     mn, mx = int(table.min()), int(table.max())
     esc = None
-    if n_esc:
-        esc = emin + K.bitunpack(body[codes_end:], ew, n_esc).astype(np.int64)
+    if v.n_esc:
+        esc = v.emin + v.esc.unpack().astype(np.int64)
         mn, mx = min(mn, int(esc.min())), max(mx, int(esc.max()))
     if not need_sum:
-        return n, None, mn, mx, 0
-    codes = K.bitunpack(body[head_end:codes_end], k, n).astype(np.int64)
-    esc_code = (1 << k) - 1
-    counts = np.bincount(codes, minlength=esc_code + 1)
-    s = int((table * counts[:c]).sum())
+        return v.n, None, mn, mx, 0
+    esc_code = (1 << v.k) - 1
+    counts = np.bincount(
+        v.codes.unpack().astype(np.int64), minlength=esc_code + 1
+    )
+    s = int((table * counts[: v.c]).sum())
     if esc is not None:
         s += int(esc.sum())
-    return n, s, mn, mx, n
+    return v.n, s, mn, mx, v.n
 
 
-def _stats_for_patch(body: memoryview, n: int, need_sum: bool) -> Stats:
-    lo, w, n_exc, pos_w, ew = _PFOR.unpack_from(body)
-    off = _PFOR.size
-    rel = K.bitunpack(body[off : off + _nbytes(n, w)], w, n).astype(np.int64)
-    if n_exc:
-        off += _nbytes(n, w)
-        pos = K.bitunpack(
-            body[off : off + _nbytes(n_exc, pos_w)], pos_w, n_exc
-        ).astype(np.int64)
-        off += _nbytes(n_exc, pos_w)
-        exc = K.bitunpack(body[off:], ew, n_exc).astype(np.int64) + (1 << w)
-        rel[pos] = exc
-    # reductions over the patched relative stream; absolute array never built
-    return (
-        n,
-        n * lo + int(rel.sum()),
-        lo + int(rel.min()),
-        lo + int(rel.max()),
-        n,
-    )
-
-
-def _stats_paged(body: memoryview, n: int, need_sum: bool) -> Stats:
-    _, n_pages = _PGD.unpack_from(body)
-    off = _PGD.size
-    lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-    off += 4 * n_pages
+def _stats_paged(v, need_sum: bool) -> Stats:
     total = s = decoded = 0
     mn = mx = None
     have_sum = True
-    for ln in lens:
-        frame = body[off : off + int(ln)]
-        off += int(ln)
-        pn, ps, pmn, pmx, pd = value_stats(frame, need_sum)
+    for _, page in B.iter_pages(v):
+        pn, ps, pmn, pmx, pd = value_stats(page, need_sum)
         total += pn
         decoded += pd
         if ps is None:
@@ -214,17 +132,17 @@ def _stats_paged(body: memoryview, n: int, need_sum: bool) -> Stats:
 
 
 _STATS_BODY = {
-    RAW: _stats_decode(RAW),
-    CONSTANT: _stats_const,
-    BITPACK_ZZ: _stats_bitpack_zz,
-    FOR_BITPACK: _stats_for_bitpack,
-    DELTA_ZZ_BITPACK: _stats_decode(DELTA_ZZ_BITPACK),
-    DELTA_ZZ_VARINT: _stats_decode(DELTA_ZZ_VARINT),
-    RLE: _stats_rle,
-    DICT_BITPACK: _stats_dict_bitpack,
-    DICT_ESCAPE: _stats_dict_escape,
-    PAGED: _stats_paged,
-    FOR_PATCH: _stats_for_patch,
+    B.RAW: _stats_decode,
+    B.CONSTANT: _stats_const,
+    B.BITPACK_ZZ: _stats_decode,
+    B.FOR_BITPACK: _stats_for_bitpack,
+    B.DELTA_ZZ_BITPACK: _stats_decode,
+    B.DELTA_ZZ_VARINT: _stats_decode,
+    B.RLE: _stats_rle,
+    B.DICT_BITPACK: _stats_dict_bitpack,
+    B.DICT_ESCAPE: _stats_dict_escape,
+    B.PAGED: _stats_paged,
+    B.FOR_PATCH: _stats_for_patch,
 }
 
 
@@ -235,59 +153,29 @@ def distinct_values(buf: bytes | memoryview) -> tuple[np.ndarray, int]:
     value table (O(table), zero stream decode), RLE returns unique run
     values, CONSTANT its single value — only param-opaque codecs inflate.
     """
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
-    if n == 0:
+    v = B.read_view(buf)
+    if v is None:
         return np.empty(0, np.int32), 0
-    body = mv[_HDR.size :]
-    if codec_id == CONSTANT:
-        (v,) = _CONST.unpack_from(body)
-        return np.array([v], np.int32), 0
-    if codec_id == RLE:
-        r, lw, vmin, vw = _RLE.unpack_from(body)
-        off = _RLE.size
-        lens_end = off + _nbytes(r, lw)
-        vals = vmin + K.bitunpack(body[lens_end:], vw, r).astype(np.int64)
-        return np.unique(vals).astype(np.int32), 0
-    if codec_id == DICT_BITPACK:
-        c, tmin, tw, _iw = _DICT.unpack_from(body)
-        off = _DICT.size
-        table = tmin + K.bitunpack(
-            body[off : off + _nbytes(c, tw)], tw, c
-        ).astype(np.int64)
+    if v.codec_id == B.CONSTANT:
+        return np.array([v.value], np.int32), 0
+    if v.codec_id == B.RLE:
+        return np.unique(v.vals.values(v.vmin)), 0
+    if v.codec_id == B.DICT_BITPACK:
         # every table entry occurs (frequency-ordered build contract)
-        return np.sort(table).astype(np.int32), 0
-    if codec_id == DICT_ESCAPE:
-        k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(body)
-        off = _DESC.size
-        head_end = off + _nbytes(c, hw)
-        codes_end = head_end + _nbytes(n, k)
-        table = hmin + K.bitunpack(body[off:head_end], hw, c).astype(np.int64)
-        if n_esc:
-            esc = emin + K.bitunpack(body[codes_end:], ew, n_esc).astype(
-                np.int64
-            )
-            table = np.concatenate([table, esc])
-        return np.unique(table).astype(np.int32), (n_esc if n_esc else 0)
-    if codec_id == PAGED:
-        _, n_pages = _PGD.unpack_from(body)
-        off = _PGD.size
-        lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-        off += 4 * n_pages
-        parts = []
-        decoded = 0
-        for ln in lens:
-            frame = body[off : off + int(ln)]
-            off += int(ln)
-            vals, dec = distinct_values(frame)
+        return np.sort(v.table.values(v.tmin)), 0
+    if v.codec_id == B.DICT_ESCAPE:
+        table = v.head.values(v.hmin)
+        if v.n_esc:
+            table = np.concatenate([table, v.esc.values(v.emin)])
+        return np.unique(table), v.n_esc
+    if v.codec_id == B.PAGED:
+        parts, decoded = [], 0
+        for _, page in B.iter_pages(v):
+            vals, dec = distinct_values(page)
             parts.append(vals)
             decoded += dec
         return np.unique(np.concatenate(parts)), decoded
-    return np.unique(_DECODERS[codec_id](body, n)), n
+    return np.unique(B.decode_view(v)), v.n
 
 
 def range_histogram(
@@ -302,71 +190,50 @@ def range_histogram(
     ``values`` is sorted ascending; counts are exact.
     """
     lo, hi = int(lo), int(hi)
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
+    v = B.read_view(buf)
     empty = (np.empty(0, np.int64), np.empty(0, np.int64), 0)
-    if n == 0 or hi < lo:
+    if v is None or hi < lo:
         return empty
-    body = mv[_HDR.size :]
-    if codec_id == CONSTANT:
-        (v,) = _CONST.unpack_from(body)
-        if lo <= v <= hi:
-            return np.array([v], np.int64), np.array([n], np.int64), 0
+    if v.codec_id == B.CONSTANT:
+        if lo <= v.value <= hi:
+            return np.array([v.value], np.int64), np.array([v.n], np.int64), 0
         return empty
-    if codec_id == RLE:
-        r, lw, vmin, vw = _RLE.unpack_from(body)
-        off = _RLE.size
-        lens_end = off + _nbytes(r, lw)
-        vals = vmin + K.bitunpack(body[lens_end:], vw, r).astype(np.int64)
+    if v.codec_id == B.RLE:
+        vals = v.vmin + v.vals.unpack().astype(np.int64)
         m = (vals >= lo) & (vals <= hi)
         if not m.any():
             return empty
-        lens = K.bitunpack(body[off:lens_end], lw, r).astype(np.int64) + 1
         uv, inv = np.unique(vals[m], return_inverse=True)
         counts = np.zeros(uv.size, np.int64)
-        np.add.at(counts, inv, lens[m])
+        np.add.at(counts, inv, B.run_lengths(v)[m])
         return uv, counts, 0
-    if codec_id == DICT_BITPACK:
-        c, tmin, tw, iw = _DICT.unpack_from(body)
-        off = _DICT.size
-        table = tmin + K.bitunpack(
-            body[off : off + _nbytes(c, tw)], tw, c
-        ).astype(np.int64)
+    if v.codec_id == B.DICT_BITPACK:
+        table = v.tmin + v.table.unpack().astype(np.int64)
         in_range = (table >= lo) & (table <= hi)
         if not in_range.any():
             return empty
-        idx = K.bitunpack(body[off + _nbytes(c, tw) :], iw, n)
-        code_counts = np.bincount(idx.astype(np.int64), minlength=c)[:c]
+        idx = v.idx.unpack().astype(np.int64)
+        code_counts = np.bincount(idx, minlength=v.c)[: v.c]
         keep = in_range & (code_counts > 0)
         order = np.argsort(table[keep], kind="stable")
-        return table[keep][order], code_counts[keep][order], n
-    if codec_id == PAGED:
-        _, n_pages = _PGD.unpack_from(body)
-        off = _PGD.size
-        lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-        off += 4 * n_pages
+        return table[keep][order], code_counts[keep][order], v.n
+    if v.codec_id == B.PAGED:
         acc: dict[int, int] = {}
         decoded = 0
-        for ln in lens:
-            frame = body[off : off + int(ln)]
-            off += int(ln)
-            uv, cnt, dec = range_histogram(frame, lo, hi)
+        for _, page in B.iter_pages(v):
+            uv, cnt, dec = range_histogram(page, lo, hi)
             decoded += dec
-            for v, c_ in zip(uv.tolist(), cnt.tolist()):
-                acc[v] = acc.get(v, 0) + c_
+            for val, c in zip(uv.tolist(), cnt.tolist()):
+                acc[val] = acc.get(val, 0) + c
         if not acc:
             return np.empty(0, np.int64), np.empty(0, np.int64), decoded
         keys = np.array(sorted(acc), np.int64)
         return keys, np.array([acc[int(k)] for k in keys], np.int64), decoded
     # generic: any codec with a registered decoder (incl. DICT_ESCAPE,
     # FOR/zigzag — exact, O(n))
-    a = _DECODERS[codec_id](body, n).astype(np.int64)
+    a = B.decode_view(v).astype(np.int64)
     m = (a >= lo) & (a <= hi)
     if not m.any():
-        return np.empty(0, np.int64), np.empty(0, np.int64), n
+        return np.empty(0, np.int64), np.empty(0, np.int64), v.n
     uv, cnt = np.unique(a[m], return_counts=True)
-    return uv, cnt.astype(np.int64), n
+    return uv, cnt.astype(np.int64), v.n

@@ -11,6 +11,15 @@ assumptions about what the encoder "would have" picked — the engine contract
 analog of the reference decoder tolerating foreign encoders
 (/root/reference/mapbox_vector_tile/decoder.py:68-80, SURVEY.md §2.8).
 
+The frame layout lives only in this module: :data:`_LAYOUTS` names each
+codec's param struct and payload sections once. Every reader — the
+decoders here, positional gather, value search, aggregate pushdown and
+remap — parses frames through :func:`read_frame` (magic, version, codec
+id), :func:`sections` (params plus bounds-checked section views, nothing
+unpacked) and :func:`iter_pages` (the PAGED page table); every writer
+goes through :func:`pack_frame`. A malformed frame raises ``ValueError``
+naming the bad field, whichever reader meets it.
+
 Encoders take a :class:`~.analysis.ChunkAnalysis` so derived arrays computed
 during codec selection are reused, never recomputed (bandwidth is the scale
 constraint). Codec ids are stable on-disk identifiers; never renumber.
@@ -19,7 +28,11 @@ constraint). Codec ids are stable on-disk identifiers; never renumber.
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import NamedTuple
 
 import numpy as np
 
@@ -69,81 +82,271 @@ def _rel_u32(a: np.ndarray, lo: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# per-codec encode of the params+payload section (from ChunkAnalysis)
-# and decode (from the raw buffer)
+# the frame layout: one param struct and an ordered list of payload
+# sections per codec, read by `sections` and written by `pack_frame`
+# ---------------------------------------------------------------------------
+
+class Section(NamedTuple):
+    """One payload section: ``count`` values of ``width`` bits, bit-packed
+    by :func:`kernels.bitpack`, in the bounds-checked view ``buf``. RAW
+    values and the PAGED page table are little-endian 32-bit words
+    instead, and ``width`` None marks a stream that runs to the end of the
+    frame (varints, PAGED page frames)."""
+
+    buf: memoryview
+    count: int
+    width: int | None
+
+    def unpack(self) -> np.ndarray:
+        """The section's values as uint32."""
+        return K.bitunpack(self.buf, self.width, self.count)
+
+    def values(self, lo: int) -> np.ndarray:
+        """The int32 values of a section stored as offsets from ``lo``."""
+        return (self.unpack() + np.uint32(lo & 0xFFFFFFFF)).view(np.int32)
+
+
+class _Layout(NamedTuple):
+    params: struct.Struct
+    view: type  # named tuple: codec_id, n, the params, then the sections
+    spec: Callable  # view with its params set -> [(count, width)] per section
+
+
+def _layout(codec_id: int, fmt: str, params: str, secs: str, spec) -> _Layout:
+    fields = f"codec_id n {params} {secs}".split()
+    return _Layout(
+        struct.Struct(fmt), namedtuple(CODEC_NAMES[codec_id], fields), spec
+    )
+
+
+_LAYOUTS = {
+    RAW: _layout(RAW, "<", "", "values", lambda v: [(v.n, 32)]),
+    CONSTANT: _layout(CONSTANT, "<i", "value", "", lambda v: []),
+    BITPACK_ZZ: _layout(BITPACK_ZZ, "<B", "w", "zz", lambda v: [(v.n, v.w)]),
+    FOR_BITPACK: _layout(
+        FOR_BITPACK, "<qB", "lo w", "rel", lambda v: [(v.n, v.w)]
+    ),
+    DELTA_ZZ_BITPACK: _layout(
+        DELTA_ZZ_BITPACK, "<iB", "first w", "zz", lambda v: [(v.n - 1, v.w)]
+    ),
+    DELTA_ZZ_VARINT: _layout(
+        DELTA_ZZ_VARINT, "<", "", "stream", lambda v: [(v.n, None)]
+    ),
+    RLE: _layout(
+        RLE, "<qBqB", "r lw vmin vw", "lens vals",
+        lambda v: [(v.r, v.lw), (v.r, v.vw)],
+    ),
+    DICT_BITPACK: _layout(
+        DICT_BITPACK, "<qqBB", "c tmin tw iw", "table idx",
+        lambda v: [(v.c, v.tw), (v.n, v.iw)],
+    ),
+    # k = code width (escape code 2^k - 1), c = head cardinality
+    DICT_ESCAPE: _layout(
+        DICT_ESCAPE, "<BHqqBqB", "k c n_esc hmin hw emin ew",
+        "head codes esc",
+        lambda v: [(v.c, v.hw), (v.n, v.k), (v.n_esc, v.ew)],
+    ),
+    PAGED: _layout(
+        PAGED, "<iq", "page_size n_pages", "page_bytes pages",
+        lambda v: [(v.n_pages, 32), (v.n_pages, None)],
+    ),
+    FOR_PATCH: _layout(
+        FOR_PATCH, "<qBqBB", "lo w n_exc pos_w ew", "base pos exc",
+        lambda v: [(v.n, v.w), (v.n_exc, v.pos_w), (v.n_exc, v.ew)],
+    ),
+}
+
+
+def read_frame(buf: bytes | memoryview) -> tuple[int, int, memoryview]:
+    """``(codec_id, n_values, body)`` of one frame, after checking its
+    magic, version and codec id; ``ValueError`` names the bad field."""
+    mv = memoryview(buf)
+    if len(mv) < _HDR.size:
+        raise ValueError(
+            f"block frame of {len(mv)} bytes is shorter than its "
+            f"{_HDR.size}-byte header"
+        )
+    magic, version, codec_id, n = _HDR.unpack_from(mv)
+    if magic != MAGIC:
+        raise ValueError(f"bad block magic {magic!r}")
+    if version != VERSION:
+        raise ValueError(f"unsupported block version {version}")
+    if codec_id not in CODEC_NAMES:
+        raise ValueError(f"unknown block codec id {codec_id}")
+    if n < 0:
+        raise ValueError(f"negative block value count {n}")
+    return codec_id, n, mv[_HDR.size :]
+
+
+def sections(codec_id: int, n: int, body: memoryview):
+    """The params of a ``codec_id`` frame body holding ``n`` values plus a
+    bounds-checked :class:`Section` per payload section, as one named tuple
+    (fields as in :data:`_LAYOUTS`). Nothing is unpacked. ``ValueError``
+    names a section that has a bad count or width or does not fit."""
+    lay = _LAYOUTS[codec_id]
+    name = CODEC_NAMES[codec_id]
+    if len(body) < lay.params.size:
+        raise ValueError(
+            f"{name} frame truncated: {len(body)} body bytes, its params "
+            f"need {lay.params.size}"
+        )
+    fields = (codec_id, n, *lay.params.unpack_from(body))
+    names = lay.view._fields[len(fields) :]
+    specs = lay.spec(lay.view(*fields, *(None,) * len(names)))
+    off, secs = lay.params.size, []
+    for sec, (count, width) in zip(names, specs):
+        if count < 0 or not (width is None or 0 <= width <= 32):
+            raise ValueError(
+                f"{name} frame: section {sec} has count {count} and width "
+                f"{width}"
+            )
+        end = len(body) if width is None else off + _nbytes(count, width)
+        if end > len(body):
+            raise ValueError(
+                f"{name} frame truncated: section {sec} needs bytes "
+                f"[{off}, {end}) of {len(body)}"
+            )
+        secs.append(Section(body[off:end], count, width))
+        off = end
+    return lay.view(*fields, *secs)
+
+
+def read_view(buf: bytes | memoryview):
+    """:func:`sections` of one frame, or ``None`` when it holds no values."""
+    codec_id, n, body = read_frame(buf)
+    return sections(codec_id, n, body) if n else None
+
+
+def iter_pages(v) -> Iterator[tuple[int, memoryview]]:
+    """``(value_offset, page_frame)`` per page of a PAGED view. Each page
+    must fit the frame and the pages' value counts must sum to the frame's
+    ``n``; ``ValueError`` otherwise."""
+    pages = v.pages.buf
+    off = value_off = 0
+    for i, ln in enumerate(np.frombuffer(v.page_bytes.buf, "<u4").tolist()):
+        if off + ln > len(pages):
+            raise ValueError(
+                f"paged frame truncated: page {i} needs bytes "
+                f"[{off}, {off + ln}) of {len(pages)}"
+            )
+        page = pages[off : off + ln]
+        page_n = read_frame(page)[1]
+        yield value_off, page
+        off += ln
+        value_off += page_n
+    if value_off != v.n:
+        raise ValueError(
+            f"paged frame's pages hold {value_off} values, its header "
+            f"says {v.n}"
+        )
+
+
+def run_lengths(v) -> np.ndarray:
+    """The int64 run lengths of an RLE view; they must sum to its ``n``."""
+    lens = v.lens.unpack().astype(np.int64) + 1  # run length >= 1
+    if int(lens.sum()) != v.n:
+        raise ValueError(
+            f"rle frame: runs cover {int(lens.sum())} values, its header "
+            f"says {v.n}"
+        )
+    return lens
+
+
+def pack_frame(codec_id: int, n: int, params: tuple = (), *secs) -> bytes:
+    """The writer twin of :func:`sections`: the frame of ``n`` values from
+    ``codec_id``'s param fields and its section bytes in layout order."""
+    return b"".join((
+        _HDR.pack(MAGIC, VERSION, codec_id, n),
+        _LAYOUTS[codec_id].params.pack(*params),
+        *secs,
+    ))
+
+
+def pack_offsets(vals: np.ndarray) -> tuple[int, int, bytes]:
+    """``(lo, width, packed)``: int32 ``vals`` bit-packed as offsets from
+    their minimum ``lo`` — every value table's stored form; ``(0, 0, b"")``
+    when empty."""
+    if not vals.size:
+        return 0, 0, b""
+    lo = int(vals.min())
+    rel = _rel_u32(np.ascontiguousarray(vals, dtype=np.int32), lo)
+    w = K.bit_width(rel)
+    return lo, w, K.bitpack(rel, w)
+
+
+def pack_paged(n: int, page_size: int, pages: list[bytes]) -> bytes:
+    """A PAGED frame of ``n`` values over framed sub-blocks ``pages``."""
+    table = np.array([len(b) for b in pages], dtype="<u4").tobytes()
+    return pack_frame(PAGED, n, (page_size, len(pages)), table, *pages)
+
+
+def _body_size(codec_id: int, **fields) -> int:
+    """Exact params+payload bytes of a ``codec_id`` body with ``fields``."""
+    lay = _LAYOUTS[codec_id]
+    return lay.params.size + sum(
+        _nbytes(c, w) for c, w in lay.spec(SimpleNamespace(**fields))
+    )
+
+
+# ---------------------------------------------------------------------------
+# per-codec encode (from ChunkAnalysis) and decode (from a section view)
 # ---------------------------------------------------------------------------
 
 def _enc_raw(an: ChunkAnalysis) -> bytes:
-    return an.a.astype("<i4", copy=False).tobytes()
+    return pack_frame(RAW, an.n, (), an.a.astype("<i4", copy=False).tobytes())
 
 
-def _dec_raw(buf: memoryview, n: int) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<i4", count=n).astype(np.int32, copy=False)
-
-
-_CONST = struct.Struct("<i")
+def _dec_raw(v) -> np.ndarray:
+    return np.frombuffer(v.values.buf, dtype="<i4").astype(np.int32, copy=False)
 
 
 def _enc_constant(an: ChunkAnalysis) -> bytes:
     if an.vmin != an.vmax:
         raise ValueError("CONSTANT codec requires a constant array")
-    return _CONST.pack(int(an.a[0]))
+    return pack_frame(CONSTANT, an.n, (int(an.a[0]),))
 
 
-def _dec_constant(buf: memoryview, n: int) -> np.ndarray:
-    (v,) = _CONST.unpack_from(buf)
-    return np.full(n, v, dtype=np.int32)
-
-
-_BPZZ = struct.Struct("<B")
+def _dec_constant(v) -> np.ndarray:
+    return np.full(v.n, v.value, dtype=np.int32)
 
 
 def _enc_bitpack_zz(an: ChunkAnalysis) -> bytes:
     w = an.width_zz
-    return _BPZZ.pack(w) + K.bitpack(an.zz, w)
+    return pack_frame(BITPACK_ZZ, an.n, (w,), K.bitpack(an.zz, w))
 
 
-def _dec_bitpack_zz(buf: memoryview, n: int) -> np.ndarray:
-    (w,) = _BPZZ.unpack_from(buf)
-    return K.zigzag_decode(K.bitunpack(buf[_BPZZ.size :], w, n))
-
-
-_FOR = struct.Struct("<qB")
+def _dec_bitpack_zz(v) -> np.ndarray:
+    return K.zigzag_decode(v.zz.unpack())
 
 
 def _enc_for_bitpack(an: ChunkAnalysis) -> bytes:
-    lo = an.vmin
+    lo, w = an.vmin, an.width_range
     rel = _rel_u32(an.a, lo)
-    w = an.width_range
-    return _FOR.pack(lo, w) + K.bitpack(rel, w)
+    return pack_frame(FOR_BITPACK, an.n, (lo, w), K.bitpack(rel, w))
 
 
-def _dec_for_bitpack(buf: memoryview, n: int) -> np.ndarray:
-    lo, w = _FOR.unpack_from(buf)
-    rel = K.bitunpack(buf[_FOR.size :], w, n)
-    return (rel + np.uint32(lo & 0xFFFFFFFF)).view(np.int32)
-
-
-_DZB = struct.Struct("<iB")
+def _dec_for_bitpack(v) -> np.ndarray:
+    return v.rel.values(v.lo)
 
 
 def _enc_delta_zz_bitpack(an: ChunkAnalysis) -> bytes:
     w = an.width_delta_zz
-    return _DZB.pack(an.first, w) + K.bitpack(an.zzd, w)
+    return pack_frame(
+        DELTA_ZZ_BITPACK, an.n, (an.first, w), K.bitpack(an.zzd, w)
+    )
 
 
-def _dec_delta_zz_bitpack(buf: memoryview, n: int) -> np.ndarray:
-    first, w = _DZB.unpack_from(buf)
-    zz = K.bitunpack(buf[_DZB.size :], w, n - 1)
-    return K.delta_decode(first, K.zigzag_decode(zz))
+def _dec_delta_zz_bitpack(v) -> np.ndarray:
+    return K.delta_decode(v.first, K.zigzag_decode(v.zz.unpack()))
 
 
 def _enc_delta_zz_varint(an: ChunkAnalysis) -> bytes:
-    return K.varint_encode(an.mvt_zz)  # uint32-native, no upcast copy
+    # uint32-native, no upcast copy
+    return pack_frame(DELTA_ZZ_VARINT, an.n, (), K.varint_encode(an.mvt_zz))
 
 
-def _dec_delta_zz_varint(buf: memoryview, n: int) -> np.ndarray:
-    zz = K.varint_decode(buf, n, dtype=np.uint32)
+def _dec_delta_zz_varint(v) -> np.ndarray:
+    zz = K.varint_decode(v.stream.buf, v.n, dtype=np.uint32)
     # zigzag-decode in place (zz is freshly owned): one sign temp
     sign = np.uint32(0) - (zz & np.uint32(1))
     np.right_shift(zz, np.uint32(1), out=zz)
@@ -151,66 +354,38 @@ def _dec_delta_zz_varint(buf: memoryview, n: int) -> np.ndarray:
     return np.cumsum(zz, dtype=np.uint32).view(np.int32)
 
 
-_RLE = struct.Struct("<qBqB")  # n_runs, len_width, val_min, val_width
-
-
 def _enc_rle(an: ChunkAnalysis) -> bytes:
     vals, lens = an.runs
-    r = vals.size
     lens_rel = (lens - 1).astype(np.uint32)  # run length >= 1
     lw = K.bit_width(lens_rel)
-    vmin = int(vals.min())
-    vrel = _rel_u32(np.ascontiguousarray(vals, dtype=np.int32), vmin)
-    vw = K.bit_width(vrel)
-    return _RLE.pack(r, lw, vmin, vw) + K.bitpack(lens_rel, lw) + K.bitpack(vrel, vw)
+    vmin, vw, packed = pack_offsets(vals)
+    return pack_frame(
+        RLE, an.n, (vals.size, lw, vmin, vw), K.bitpack(lens_rel, lw), packed
+    )
 
 
-def _dec_rle(buf: memoryview, n: int) -> np.ndarray:
-    r, lw, vmin, vw = _RLE.unpack_from(buf)
-    off = _RLE.size
-    lens = K.bitunpack(buf[off : off + _nbytes(r, lw)], lw, r).astype(np.int64) + 1
-    off += _nbytes(r, lw)
-    vals = (K.bitunpack(buf[off:], vw, r) + np.uint32(vmin & 0xFFFFFFFF)).view(np.int32)
-    return K.rle_inflate(vals, lens)
-
-
-_DICT = struct.Struct("<qqBB")  # cardinality, table_min, table_width, idx_width
+def _dec_rle(v) -> np.ndarray:
+    return K.rle_inflate(v.vals.values(v.vmin), run_lengths(v))
 
 
 def _enc_dict_bitpack(an: ChunkAnalysis) -> bytes:
     table, idx = K.dict_encode(an.a)
     c = table.size
-    tmin = int(table.min())
-    trel = _rel_u32(np.ascontiguousarray(table, dtype=np.int32), tmin)
-    tw = K.bit_width(trel)
+    tmin, tw, packed = pack_offsets(table)
     iw = K.bit_width(max(c - 1, 0))
-    return (
-        _DICT.pack(c, tmin, tw, iw)
-        + K.bitpack(trel, tw)
-        + K.bitpack(idx.astype(np.uint32), iw)
+    return pack_frame(
+        DICT_BITPACK, an.n, (c, tmin, tw, iw),
+        packed, K.bitpack(idx.astype(np.uint32), iw),
     )
 
 
-def _dec_dict_bitpack(buf: memoryview, n: int) -> np.ndarray:
-    c, tmin, tw, iw = _DICT.unpack_from(buf)
-    off = _DICT.size
-    table = (
-        K.bitunpack(buf[off : off + _nbytes(c, tw)], tw, c)
-        + np.uint32(tmin & 0xFFFFFFFF)
-    ).view(np.int32)
-    idx = K.bitunpack(buf[off + _nbytes(c, tw) :], iw, n)
-    return K.dict_decode(table, idx)
-
-
-# k, head_card, n_escapes, head_min, head_width, esc_min, esc_width
-_DESC = struct.Struct("<BHqqBqB")
+def _dec_dict_bitpack(v) -> np.ndarray:
+    return K.dict_decode(v.table.values(v.tmin), v.idx.unpack())
 
 
 def dict_escape_sizes(n: int, c: int, hw: int, k: int, n_esc: int, ew: int) -> int:
     """Exact params+payload size for DICT_ESCAPE (shared with the selector)."""
-    return (
-        _DESC.size + _nbytes(c, hw) + _nbytes(n, k) + _nbytes(n_esc, ew)
-    )
+    return _body_size(DICT_ESCAPE, n=n, c=c, hw=hw, k=k, n_esc=n_esc, ew=ew)
 
 
 def dict_escape_params(an: ChunkAnalysis) -> tuple[int, int, int, int, int]:
@@ -233,43 +408,23 @@ def dict_escape_params(an: ChunkAnalysis) -> tuple[int, int, int, int, int]:
 def _enc_dict_escape(an: ChunkAnalysis) -> bytes:
     head, valid, codes, n_esc = an.heavy()
     k, c, hw, n_esc, ew = dict_escape_params(an)
-    escape = np.uint32((1 << k) - 1)
     codes = codes.copy()
-    codes[~valid] = escape
-    hmin = int(head.min())
-    hrel = _rel_u32(np.ascontiguousarray(head, dtype=np.int32), hmin)
-    esc_vals = an.a[~valid]
-    if esc_vals.size:
-        emin = int(esc_vals.min())
-        erel = _rel_u32(np.ascontiguousarray(esc_vals, dtype=np.int32), emin)
-    else:
-        emin, erel = 0, np.zeros(0, dtype=np.uint32)
-    return (
-        _DESC.pack(k, c, n_esc, hmin, hw, emin, ew)
-        + K.bitpack(hrel, hw)
-        + K.bitpack(codes, k)
-        + K.bitpack(erel, ew)
+    codes[~valid] = np.uint32((1 << k) - 1)
+    hmin, _, head_packed = pack_offsets(head)
+    emin, _, esc_packed = pack_offsets(an.a[~valid])
+    return pack_frame(
+        DICT_ESCAPE, an.n, (k, c, n_esc, hmin, hw, emin, ew),
+        head_packed, K.bitpack(codes, k), esc_packed,
     )
 
 
-def _dec_dict_escape(buf: memoryview, n: int) -> np.ndarray:
-    k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(buf)
-    off = _DESC.size
-    head = (
-        K.bitunpack(buf[off : off + _nbytes(c, hw)], hw, c)
-        + np.uint32(hmin & 0xFFFFFFFF)
-    ).view(np.int32)
-    off += _nbytes(c, hw)
-    codes = K.bitunpack(buf[off : off + _nbytes(n, k)], k, n)
-    off += _nbytes(n, k)
-    esc_vals = (
-        K.bitunpack(buf[off:], ew, n_esc) + np.uint32(emin & 0xFFFFFFFF)
-    ).view(np.int32)
-    escape = np.uint32((1 << k) - 1)
-    mask = codes == escape
-    out = np.empty(n, dtype=np.int32)
+def _dec_dict_escape(v) -> np.ndarray:
+    head = v.head.values(v.hmin)
+    codes = v.codes.unpack()
+    mask = codes == np.uint32((1 << v.k) - 1)
+    out = np.empty(v.n, dtype=np.int32)
     out[~mask] = np.take(head, codes[~mask].astype(np.int64))
-    out[mask] = esc_vals
+    out[mask] = v.esc.values(v.emin)
     return out
 
 
@@ -283,13 +438,9 @@ def _dec_dict_escape(buf: memoryview, n: int) -> np.ndarray:
 # varint stream (geom_encoder.py:47-76) handles outliers per-value instead.
 # ---------------------------------------------------------------------------
 
-# lo, base_width, n_exc, pos_width, exc_width
-_PFOR = struct.Struct("<qBqBB")
-
-
 def for_patch_size(n: int, w: int, n_exc: int, pos_w: int, ew: int) -> int:
     """Exact params+payload size for FOR_PATCH (shared with the selector)."""
-    return _PFOR.size + _nbytes(n, w) + _nbytes(n_exc, pos_w) + _nbytes(n_exc, ew)
+    return _body_size(FOR_PATCH, n=n, w=w, n_exc=n_exc, pos_w=pos_w, ew=ew)
 
 
 def for_patch_params(an: ChunkAnalysis) -> tuple[int, int, int, int]:
@@ -340,25 +491,19 @@ def _enc_for_patch(an: ChunkAnalysis) -> bytes:
         pos = np.zeros(0, dtype=np.uint32)
         exc = np.zeros(0, dtype=np.uint32)
         base = rel
-    return (
-        _PFOR.pack(lo, w, n_exc, pos_w, ew)
-        + K.bitpack(base, w)
-        + K.bitpack(pos, pos_w)
-        + K.bitpack(exc, ew)
+    return pack_frame(
+        FOR_PATCH, an.n, (lo, w, n_exc, pos_w, ew),
+        K.bitpack(base, w), K.bitpack(pos, pos_w), K.bitpack(exc, ew),
     )
 
 
-def _dec_for_patch(buf: memoryview, n: int) -> np.ndarray:
-    lo, w, n_exc, pos_w, ew = _PFOR.unpack_from(buf)
-    off = _PFOR.size
-    rel = K.bitunpack(buf[off : off + _nbytes(n, w)], w, n)
-    if n_exc:
-        off += _nbytes(n, w)
-        pos = K.bitunpack(buf[off : off + _nbytes(n_exc, pos_w)], pos_w, n_exc)
-        off += _nbytes(n_exc, pos_w)
-        exc = K.bitunpack(buf[off:], ew, n_exc) + np.uint32(1 << w)
-        rel[pos.astype(np.int64)] = exc
-    return (rel + np.uint32(lo & 0xFFFFFFFF)).view(np.int32)
+def _dec_for_patch(v) -> np.ndarray:
+    rel = v.base.unpack()
+    if v.n_exc:
+        rel[v.pos.unpack().astype(np.int64)] = v.exc.unpack() + np.uint32(
+            1 << v.w
+        )
+    return (rel + np.uint32(v.lo & 0xFFFFFFFF)).view(np.int32)
 
 
 # ---------------------------------------------------------------------------
@@ -369,12 +514,9 @@ def _dec_for_patch(buf: memoryview, n: int) -> np.ndarray:
 # foreign decoder can skip pages it does not understand.
 # ---------------------------------------------------------------------------
 
-_PGD = struct.Struct("<iq")  # page_size, n_pages
-
-
 def paged_size(page_sizes: list[int]) -> int:
     """Exact params+payload size for PAGED given framed sub-block sizes."""
-    return _PGD.size + 4 * len(page_sizes) + sum(page_sizes)
+    return _LAYOUTS[PAGED].params.size + 4 * len(page_sizes) + sum(page_sizes)
 
 
 def _enc_paged(an: ChunkAnalysis) -> bytes:
@@ -382,29 +524,16 @@ def _enc_paged(an: ChunkAnalysis) -> bytes:
 
     plans = S.paged_plan(an)
     subs = [encode_block(sub.a, cid, sub) for (sub, cid, _) in plans]
-    lens = np.array([len(b) for b in subs], dtype="<u4")
     # page_size 0 = variable (segment-aligned) pages; informational only —
     # sub-frames are self-describing and the decoder never reads this field
     sb = an.seg_bounds
     ps = 0 if (sb is not None and len(sb)) else S.PAGE_SIZE
-    return _PGD.pack(ps, len(subs)) + lens.tobytes() + b"".join(subs)
+    return pack_paged(an.n, ps, subs)
 
 
-def _dec_paged(buf: memoryview, n: int) -> np.ndarray:
-    _, n_pages = _PGD.unpack_from(buf)
-    off = _PGD.size
-    lens = np.frombuffer(buf, dtype="<u4", count=n_pages, offset=off)
-    off += 4 * n_pages
-    parts = []
-    for ln in lens:
-        parts.append(decode_block(buf[off : off + int(ln)]))
-        off += int(ln)
-    out = (
-        np.concatenate(parts) if parts else np.zeros(0, dtype=np.int32)
-    )
-    if out.size != n:
-        raise ValueError(f"paged decode produced {out.size} values, want {n}")
-    return out
+def _dec_paged(v) -> np.ndarray:
+    parts = [decode_block(page) for _, page in iter_pages(v)]
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int32)
 
 
 _ENCODERS = {
@@ -449,28 +578,37 @@ def encode_block(
     """Frame ``a`` (int32 array) as a self-describing block."""
     an = analysis or ChunkAnalysis(a)
     if an.n == 0:
-        return _HDR.pack(MAGIC, VERSION, RAW, 0)
-    body = _ENCODERS[codec_id](an)
-    return _HDR.pack(MAGIC, VERSION, codec_id, an.n) + body
+        return pack_frame(RAW, 0)
+    return _ENCODERS[codec_id](an)
 
 
 def decode_block(buf: bytes | memoryview) -> np.ndarray:
     """Inverse of :func:`encode_block`; dispatches on the stored codec id."""
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
-    if n == 0:
-        return np.zeros(0, dtype=np.int32)
-    return _DECODERS[codec_id](mv[_HDR.size :], n)
+    v = read_view(buf)
+    return np.zeros(0, dtype=np.int32) if v is None else decode_view(v)
+
+
+def decode_view(v) -> np.ndarray:
+    """Every value of a section view (:func:`sections`)."""
+    return _DECODERS[v.codec_id](v)
 
 
 def block_info(buf: bytes | memoryview) -> BlockInfo:
-    mv = memoryview(buf)
-    _, _, codec_id, n = _HDR.unpack_from(mv)
-    return BlockInfo(codec_id, CODEC_NAMES[codec_id], n, len(mv))
+    """Codec, value count and size of one frame, after the checks every
+    reader makes: header, section bounds and (PAGED) the page table.
+    Nothing is unpacked."""
+    codec_id, n, body = read_frame(buf)
+    if n:
+        v = sections(codec_id, n, body)
+        if codec_id == PAGED:
+            for _, page in iter_pages(v):
+                block_info(page)
+        # a varint stream's length is its count of final (< 0x80) bytes
+        if codec_id == DELTA_ZZ_VARINT and np.count_nonzero(
+            np.frombuffer(v.stream.buf, np.uint8) < 0x80
+        ) < n:
+            raise ValueError(f"delta_zz_varint frame truncated: under {n} varints")
+    return BlockInfo(codec_id, CODEC_NAMES[codec_id], n, _HDR.size + len(body))
 
 
 def header_size() -> int:

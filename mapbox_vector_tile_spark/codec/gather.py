@@ -15,7 +15,8 @@ RAW                   ``m`` values (fancy index over the frombuffer view —
                       numpy touches only the requested elements)
 PAGED                 pages containing no requested position are skipped
                       outright (their bytes are never parsed past the
-                      sub-frame header); covered pages recurse, so a
+                      sub-frame header, which the page iterator checks
+                      like every other); covered pages recurse, so a
                       CONSTANT or RLE page inside a PAGED chunk keeps its
                       pruning
 all others            full sequential decode + take (``n`` values)
@@ -38,7 +39,6 @@ from __future__ import annotations
 import numpy as np
 
 from . import blocks as B
-from . import kernels as K
 
 
 def decode_block_gather(
@@ -52,68 +52,41 @@ def decode_block_gather(
     codec-awareness telemetry (0 for CONSTANT, ``2*r`` for RLE, ``n`` for
     the sequential fallback).
     """
-    mv = memoryview(buf)
-    magic, version, codec_id, n = B._HDR.unpack_from(mv)
-    if magic != B.MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != B.VERSION:
-        raise ValueError(f"unsupported block version {version}")
+    codec_id, n, body = B.read_frame(buf)
     idx = np.asarray(idx, dtype=np.int64)
     if idx.size == 0:
         return np.zeros(0, dtype=np.int32), 0
     if idx[0] < 0 or idx[-1] >= n:
         raise IndexError(f"gather position out of range [0, {n})")
-    body = mv[B._HDR.size :]
+    v = B.sections(codec_id, n, body)
 
     if codec_id == B.CONSTANT:
-        (v,) = B._CONST.unpack_from(body)
-        return np.full(idx.size, v, dtype=np.int32), 0
+        return np.full(idx.size, v.value, dtype=np.int32), 0
 
     if codec_id == B.RLE:
-        r, lw, vmin, vw = B._RLE.unpack_from(body)
-        off = B._RLE.size
-        lens = (
-            K.bitunpack(body[off : off + B._nbytes(r, lw)], lw, r).astype(
-                np.int64
-            )
-            + 1
-        )
-        off += B._nbytes(r, lw)
-        vals = (
-            K.bitunpack(body[off:], vw, r) + np.uint32(vmin & 0xFFFFFFFF)
-        ).view(np.int32)
-        ends = np.cumsum(lens)
+        ends = np.cumsum(B.run_lengths(v))
         pos = np.searchsorted(ends, idx, side="right")
-        return vals[pos], 2 * r
+        return v.vals.values(v.vmin)[pos], 2 * v.r
 
     if codec_id == B.RAW:
-        a = np.frombuffer(body, dtype="<i4", count=n)
+        a = np.frombuffer(v.values.buf, dtype="<i4")
         return a[idx].astype(np.int32, copy=False), idx.size
 
     if codec_id == B.PAGED:
-        _, n_pages = B._PGD.unpack_from(body)
-        off = B._PGD.size
-        page_bytes = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-        off += 4 * n_pages
         parts: list[np.ndarray] = []
-        decoded = 0
-        base = 0
-        lo = 0
-        for ln in page_bytes:
-            sub = body[off : off + int(ln)]
-            off += int(ln)
-            _, _, _, pn = B._HDR.unpack_from(sub)
-            hi = int(np.searchsorted(idx, base + pn, side="left"))
+        decoded = lo = 0
+        for base, page in B.iter_pages(v):
+            page_n = B.read_frame(page)[1]
+            hi = int(np.searchsorted(idx, base + page_n, side="left"))
             if hi > lo:
-                vals, d = decode_block_gather(sub, idx[lo:hi] - base)
+                vals, d = decode_block_gather(page, idx[lo:hi] - base)
                 parts.append(vals)
                 decoded += d
             lo = hi
-            base += pn
         out = (
             np.concatenate(parts) if parts else np.zeros(0, dtype=np.int32)
         )
         return out, decoded
 
-    full = B._DECODERS[codec_id](body, n)
+    full = B.decode_view(v)
     return full[idx].astype(np.int32, copy=False), n

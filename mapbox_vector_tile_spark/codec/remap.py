@@ -37,25 +37,7 @@ from typing import Callable
 
 import numpy as np
 
-from . import kernels as K
-from .blocks import (
-    CONSTANT,
-    DICT_BITPACK,
-    DICT_ESCAPE,
-    MAGIC,
-    PAGED,
-    RLE,
-    VERSION,
-    _CONST,
-    _DESC,
-    _DICT,
-    _HDR,
-    _PGD,
-    _RLE,
-    _DECODERS,
-    _nbytes,
-    _rel_u32,
-)
+from . import blocks as B
 
 MapFn = Callable[[np.ndarray], np.ndarray]
 
@@ -91,113 +73,54 @@ def remap_block(buf: bytes | memoryview, fn: MapFn) -> tuple[bytes, int]:
 
     Returns ``(new_block_bytes, values_decoded)``; the new block is a
     normal self-describing frame (any decoder reads it)."""
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
+    codec_id, n, body = B.read_frame(buf)
     if n == 0:
-        return bytes(mv), 0
-    body = mv[_HDR.size :]
-    hdr = _HDR.pack(MAGIC, VERSION, codec_id, n)
+        return bytes(buf), 0
+    v = B.sections(codec_id, n, body)
 
-    if codec_id == CONSTANT:
-        (v,) = _CONST.unpack_from(body)
-        nv = _apply(fn, np.array([v], np.int32))
-        return hdr + _CONST.pack(int(nv[0])), 0
+    if codec_id == B.CONSTANT:
+        (nv,) = _apply(fn, np.array([v.value], np.int32)).tolist()
+        return B.pack_frame(B.CONSTANT, n, (nv,)), 0
 
-    if codec_id == RLE:
-        r, lw, vmin, vw = _RLE.unpack_from(body)
-        off = _RLE.size
-        lens_end = off + _nbytes(r, lw)
-        vals = (
-            K.bitunpack(body[lens_end:], vw, r)
-            + np.uint32(vmin & 0xFFFFFFFF)
-        ).view(np.int32)
-        nv = _apply(fn, vals)
-        nmin = int(nv.min())
-        nrel = _rel_u32(nv, nmin)
-        nw = K.bit_width(nrel)
-        return (
-            hdr
-            + _RLE.pack(r, lw, nmin, nw)
-            + bytes(body[off:lens_end])  # run lengths verbatim
-            + K.bitpack(nrel, nw)
+    if codec_id == B.RLE:
+        nmin, nw, packed = B.pack_offsets(_apply(fn, v.vals.values(v.vmin)))
+        return B.pack_frame(
+            B.RLE, n, (v.r, v.lw, nmin, nw),
+            v.lens.buf,  # run lengths verbatim
+            packed,
         ), 0
 
-    if codec_id == DICT_BITPACK:
-        c, tmin, tw, iw = _DICT.unpack_from(body)
-        off = _DICT.size
-        table = (
-            K.bitunpack(body[off : off + _nbytes(c, tw)], tw, c)
-            + np.uint32(tmin & 0xFFFFFFFF)
-        ).view(np.int32)
-        nt = _apply(fn, table)
-        nmin = int(nt.min())
-        nrel = _rel_u32(nt, nmin)
-        nw = K.bit_width(nrel)
-        return (
-            hdr
-            + _DICT.pack(c, nmin, nw, iw)
-            + K.bitpack(nrel, nw)
-            + bytes(body[off + _nbytes(c, tw) :])  # index stream verbatim
+    if codec_id == B.DICT_BITPACK:
+        nmin, nw, packed = B.pack_offsets(_apply(fn, v.table.values(v.tmin)))
+        return B.pack_frame(
+            B.DICT_BITPACK, n, (v.c, nmin, nw, v.iw),
+            packed,
+            v.idx.buf,  # index stream verbatim
         ), 0
 
-    if codec_id == DICT_ESCAPE:
-        k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(body)
-        off = _DESC.size
-        head = (
-            K.bitunpack(body[off : off + _nbytes(c, hw)], hw, c)
-            + np.uint32(hmin & 0xFFFFFFFF)
-        ).view(np.int32)
-        off += _nbytes(c, hw)
-        codes_bytes = bytes(body[off : off + _nbytes(n, k)])
-        off += _nbytes(n, k)
-        esc = (
-            K.bitunpack(body[off:], ew, n_esc)
-            + np.uint32(emin & 0xFFFFFFFF)
-        ).view(np.int32)
-        nh = _apply(fn, head)
-        nhmin = int(nh.min())
-        nhrel = _rel_u32(nh, nhmin)
-        nhw = K.bit_width(nhrel)
-        if n_esc:
-            ne = _apply(fn, esc)
-            nemin = int(ne.min())
-            nerel = _rel_u32(ne, nemin)
-            new = K.bit_width(nerel)
-        else:
-            nemin, nerel, new = 0, np.zeros(0, np.uint32), 0
-        return (
-            hdr
-            + _DESC.pack(k, c, n_esc, nhmin, nhw, nemin, new)
-            + K.bitpack(nhrel, nhw)
-            + codes_bytes  # code stream verbatim
-            + K.bitpack(nerel, new)
-        ), n_esc
+    if codec_id == B.DICT_ESCAPE:
+        hmin, hw, head = B.pack_offsets(_apply(fn, v.head.values(v.hmin)))
+        esc = v.esc.values(v.emin)
+        emin, ew, esc_packed = B.pack_offsets(_apply(fn, esc) if v.n_esc else esc)
+        return B.pack_frame(
+            B.DICT_ESCAPE, n, (v.k, v.c, v.n_esc, hmin, hw, emin, ew),
+            head,
+            v.codes.buf,  # code stream verbatim
+            esc_packed,
+        ), v.n_esc
 
-    if codec_id == PAGED:
-        ps, n_pages = _PGD.unpack_from(body)
-        off = _PGD.size
-        lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-        off += 4 * n_pages
+    if codec_id == B.PAGED:
         subs, decoded = [], 0
-        for ln in lens:
-            sub, dec = remap_block(body[off : off + int(ln)], fn)
+        for _, page in B.iter_pages(v):
+            sub, dec = remap_block(page, fn)
             subs.append(sub)
             decoded += dec
-            off += int(ln)
-        new_lens = np.array([len(b) for b in subs], dtype="<u4")
-        return (
-            hdr + _PGD.pack(ps, n_pages) + new_lens.tobytes() + b"".join(subs)
-        ), decoded
+        return B.pack_paged(n, v.page_size, subs), decoded
 
     # param-free codecs: decode -> map -> re-encode with fresh selection
     # (a general map need not preserve the delta/width structure the
     # original codec was chosen for)
     from . import select as S
 
-    a = _DECODERS[codec_id](body, n)
-    new_blk, _cid = S.encode_auto(_apply(fn, a))
+    new_blk, _cid = S.encode_auto(_apply(fn, B.decode_view(v)))
     return new_blk, n

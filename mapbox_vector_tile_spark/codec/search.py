@@ -33,33 +33,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import blocks as B
 from . import kernels as K
-from .blocks import (
-    BITPACK_ZZ,
-    CONSTANT,
-    DELTA_ZZ_BITPACK,
-    DELTA_ZZ_VARINT,
-    DICT_BITPACK,
-    DICT_ESCAPE,
-    FOR_BITPACK,
-    FOR_PATCH,
-    MAGIC,
-    PAGED,
-    RAW,
-    RLE,
-    VERSION,
-    _BPZZ,
-    _CONST,
-    _DESC,
-    _DICT,
-    _FOR,
-    _HDR,
-    _PFOR,
-    _PGD,
-    _RLE,
-    _DECODERS,
-    _nbytes,
-)
 
 _EMPTY = np.zeros(0, dtype=np.int64)
 
@@ -77,193 +52,158 @@ def _rel32(x: int, lo: int) -> int:
     return (x - lo) & 0xFFFFFFFF
 
 
-def _expand_runs(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Positions covered by runs ``[starts[i], starts[i]+lens[i])``."""
+def _matching_runs(v, match: np.ndarray) -> np.ndarray:
+    """Positions covered by the runs of RLE view ``v`` that ``match``
+    selects; callers read the run lengths only once some run matches."""
+    lens = B.run_lengths(v)
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))[match]
+    lens = lens[match]
     total = int(lens.sum())
     if total == 0:
         return _EMPTY
-    base = np.repeat(starts, lens)
-    local = np.arange(total, dtype=np.int64)
     run_first = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    return base + (local - np.repeat(run_first, lens))
+    return np.repeat(starts - run_first, lens) + np.arange(total, dtype=np.int64)
+
+
+def _paged(probe, v, *args) -> tuple[np.ndarray, int]:
+    """``probe`` over each self-describing page of PAGED view ``v``, the
+    page positions shifted to chunk offsets."""
+    parts: list[np.ndarray] = []
+    decoded = 0
+    for value_off, page in B.iter_pages(v):
+        pos, dec = probe(page, *args)
+        decoded += dec
+        if pos.size:
+            parts.append(pos + value_off)
+    if not parts:
+        return _EMPTY, decoded
+    return np.concatenate(parts), decoded
+
+
+def _probe(table: dict, buf, *args) -> tuple[np.ndarray, int]:
+    v = B.read_view(buf)
+    return (_EMPTY, 0) if v is None else table[v.codec_id](v, *args)
 
 
 def hit_positions(buf: bytes | memoryview, x: int) -> tuple[np.ndarray, int]:
     """All positions of value ``x`` in a framed block + values decoded."""
     if not (INT32_MIN <= x <= INT32_MAX):
         return _EMPTY, 0
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
-    if n == 0:
+    return _probe(_HIT_BODY, buf, int(x))
+
+
+def _hit_const(v, x: int) -> tuple[np.ndarray, int]:
+    if v.value != x:
         return _EMPTY, 0
-    return _HIT_BODY[codec_id](mv[_HDR.size :], n, int(x))
+    return np.arange(v.n, dtype=np.int64), 0
 
 
-def _hit_const(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    (v,) = _CONST.unpack_from(body)
-    if v != x:
-        return _EMPTY, 0
-    return np.arange(n, dtype=np.int64), 0
-
-
-def _hit_bitpack_zz(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    (w,) = _BPZZ.unpack_from(body)
+def _hit_bitpack_zz(v, x: int) -> tuple[np.ndarray, int]:
     zx = _zigzag32(x)
-    if w < 32 and zx >= (1 << w):
+    if v.w < 32 and zx >= (1 << v.w):
         return _EMPTY, 0
-    zz = K.bitunpack(body[_BPZZ.size :], w, n)
-    return np.nonzero(zz == np.uint32(zx))[0].astype(np.int64), n
+    return np.nonzero(v.zz.unpack() == np.uint32(zx))[0].astype(np.int64), v.n
 
 
-def _hit_for_bitpack(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    lo, w = _FOR.unpack_from(body)
-    rx = _rel32(x, lo)
-    if w < 32 and rx >= (1 << w):
+def _hit_for_bitpack(v, x: int) -> tuple[np.ndarray, int]:
+    rx = _rel32(x, v.lo)
+    if v.w < 32 and rx >= (1 << v.w):
         return _EMPTY, 0
-    rel = K.bitunpack(body[_FOR.size :], w, n)
-    return np.nonzero(rel == np.uint32(rx))[0].astype(np.int64), n
+    return np.nonzero(v.rel.unpack() == np.uint32(rx))[0].astype(np.int64), v.n
 
 
-def _hit_rle(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    r, lw, vmin, vw = _RLE.unpack_from(body)
-    rx = _rel32(x, vmin)
-    if vw < 32 and rx >= (1 << vw):
+def _hit_rle(v, x: int) -> tuple[np.ndarray, int]:
+    rx = _rel32(x, v.vmin)
+    if v.vw < 32 and rx >= (1 << v.vw):
         return _EMPTY, 0
-    off = _RLE.size
-    lens_end = off + _nbytes(r, lw)
-    vrel = K.bitunpack(body[lens_end:], vw, r)
-    match = vrel == np.uint32(rx)
+    match = v.vals.unpack() == np.uint32(rx)
     if not match.any():
         return _EMPTY, 0
-    lens = K.bitunpack(body[off:lens_end], lw, r).astype(np.int64) + 1
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    return _expand_runs(starts[match], lens[match]), 0
+    return _matching_runs(v, match), 0
 
 
-def _hit_dict_bitpack(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    c, tmin, tw, iw = _DICT.unpack_from(body)
-    rx = _rel32(x, tmin)
-    if tw < 32 and rx >= (1 << tw):
+def _hit_dict_bitpack(v, x: int) -> tuple[np.ndarray, int]:
+    rx = _rel32(x, v.tmin)
+    if v.tw < 32 and rx >= (1 << v.tw):
         return _EMPTY, 0
-    off = _DICT.size
-    trel = K.bitunpack(body[off : off + _nbytes(c, tw)], tw, c)
-    code = np.nonzero(trel == np.uint32(rx))[0]
+    code = np.nonzero(v.table.unpack() == np.uint32(rx))[0]
     if code.size == 0:
         return _EMPTY, 0
-    idx = K.bitunpack(body[off + _nbytes(c, tw) :], iw, n)
-    return np.nonzero(idx == np.uint32(code[0]))[0].astype(np.int64), n
+    idx = v.idx.unpack()
+    return np.nonzero(idx == np.uint32(code[0]))[0].astype(np.int64), v.n
 
 
-def _hit_dict_escape(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(body)
-    off = _DESC.size
-    head_end = off + _nbytes(c, hw)
-    codes_end = head_end + _nbytes(n, k)
-    hrx = _rel32(x, hmin)
+def _hit_dict_escape(v, x: int) -> tuple[np.ndarray, int]:
+    hrx = _rel32(x, v.hmin)
     head_code = -1
-    if hw == 32 or hrx < (1 << hw):
-        hrel = K.bitunpack(body[off:head_end], hw, c)
-        hit = np.nonzero(hrel == np.uint32(hrx))[0]
+    if v.hw == 32 or hrx < (1 << v.hw):
+        hit = np.nonzero(v.head.unpack() == np.uint32(hrx))[0]
         if hit.size:
             head_code = int(hit[0])
     esc_match = None
-    if n_esc:
-        erx = _rel32(x, emin)
-        if ew == 32 or erx < (1 << ew):
-            erel = K.bitunpack(body[codes_end:], ew, n_esc)
-            m = erel == np.uint32(erx)
+    if v.n_esc:
+        erx = _rel32(x, v.emin)
+        if v.ew == 32 or erx < (1 << v.ew):
+            m = v.esc.unpack() == np.uint32(erx)
             if m.any():
                 esc_match = m
     if head_code < 0 and esc_match is None:
         return _EMPTY, 0
-    codes = K.bitunpack(body[head_end:codes_end], k, n)
+    codes = v.codes.unpack()
     parts = []
     if head_code >= 0:
         parts.append(np.nonzero(codes == np.uint32(head_code))[0])
     if esc_match is not None:
-        esc_pos = np.nonzero(codes == np.uint32((1 << k) - 1))[0]
+        esc_pos = np.nonzero(codes == np.uint32((1 << v.k) - 1))[0]
         parts.append(esc_pos[esc_match])
     pos = parts[0] if len(parts) == 1 else np.sort(np.concatenate(parts))
-    return pos.astype(np.int64), n
+    return pos.astype(np.int64), v.n
 
 
-def _hit_for_patch(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    lo, w, n_exc, pos_w, ew = _PFOR.unpack_from(body)
-    rx = _rel32(x, lo)
-    base_end = _PFOR.size + _nbytes(n, w)
-    pos_end = base_end + _nbytes(n_exc, pos_w)
-    if w == 32 or rx < (1 << w):
-        rel = K.bitunpack(body[_PFOR.size : base_end], w, n)
-        hits = np.nonzero(rel == np.uint32(rx))[0].astype(np.int64)
+def _hit_for_patch(v, x: int) -> tuple[np.ndarray, int]:
+    rx = _rel32(x, v.lo)
+    if v.w == 32 or rx < (1 << v.w):
+        hits = np.nonzero(v.base.unpack() == np.uint32(rx))[0].astype(np.int64)
         # patched positions hold base code 0 but store values >= lo + 2^w:
         # exclude them when probing the base-zero value itself
-        if rx == 0 and n_exc and hits.size:
-            pos = K.bitunpack(
-                body[base_end:pos_end], pos_w, n_exc
-            ).astype(np.int64)
+        if rx == 0 and v.n_exc and hits.size:
+            pos = v.pos.unpack().astype(np.int64)
             hits = np.setdiff1d(hits, pos, assume_unique=True)
-        return hits, n
+        return hits, v.n
     # probe above the base domain: only the O(n_exc) exception arrays are
     # read — the O(n) base stream stays untouched (the PFOR pruning win)
-    if not n_exc:
+    if not v.n_exc:
         return _EMPTY, 0
-    erx = rx - (1 << w)
-    if ew < 32 and erx >= (1 << ew):
+    erx = rx - (1 << v.w)
+    if v.ew < 32 and erx >= (1 << v.ew):
         return _EMPTY, 0
-    exc = K.bitunpack(body[pos_end:], ew, n_exc)
-    m = exc == np.uint32(erx)
+    m = v.exc.unpack() == np.uint32(erx)
     if not m.any():
         return _EMPTY, 0
-    pos = K.bitunpack(body[base_end:pos_end], pos_w, n_exc).astype(np.int64)
-    return pos[m], 0
+    return v.pos.unpack().astype(np.int64)[m], 0
 
 
-def _hit_decode(codec_id: int):
-    def fn(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-        a = _DECODERS[codec_id](body, n)
-        return np.nonzero(a == np.int32(x))[0].astype(np.int64), n
-
-    return fn
+def _hit_decode(v, x: int) -> tuple[np.ndarray, int]:
+    a = B.decode_view(v)
+    return np.nonzero(a == np.int32(x))[0].astype(np.int64), v.n
 
 
-def _hit_paged(body: memoryview, n: int, x: int) -> tuple[np.ndarray, int]:
-    _, n_pages = _PGD.unpack_from(body)
-    off = _PGD.size
-    lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-    off += 4 * n_pages
-    parts: list[np.ndarray] = []
-    value_off = 0
-    decoded = 0
-    for ln in lens:
-        frame = body[off : off + int(ln)]
-        off += int(ln)
-        _, _, _, page_n = _HDR.unpack_from(frame)
-        pos, dec = hit_positions(frame, x)
-        decoded += dec
-        if pos.size:
-            parts.append(pos + value_off)
-        value_off += page_n
-    if not parts:
-        return _EMPTY, decoded
-    return np.concatenate(parts), decoded
+def _hit_paged(v, x: int) -> tuple[np.ndarray, int]:
+    return _paged(hit_positions, v, x)
 
 
 _HIT_BODY = {
-    RAW: _hit_decode(RAW),
-    CONSTANT: _hit_const,
-    BITPACK_ZZ: _hit_bitpack_zz,
-    FOR_BITPACK: _hit_for_bitpack,
-    DELTA_ZZ_BITPACK: _hit_decode(DELTA_ZZ_BITPACK),
-    DELTA_ZZ_VARINT: _hit_decode(DELTA_ZZ_VARINT),
-    RLE: _hit_rle,
-    DICT_BITPACK: _hit_dict_bitpack,
-    DICT_ESCAPE: _hit_dict_escape,
-    PAGED: _hit_paged,
-    FOR_PATCH: _hit_for_patch,
+    B.RAW: _hit_decode,
+    B.CONSTANT: _hit_const,
+    B.BITPACK_ZZ: _hit_bitpack_zz,
+    B.FOR_BITPACK: _hit_for_bitpack,
+    B.DELTA_ZZ_BITPACK: _hit_decode,
+    B.DELTA_ZZ_VARINT: _hit_decode,
+    B.RLE: _hit_rle,
+    B.DICT_BITPACK: _hit_dict_bitpack,
+    B.DICT_ESCAPE: _hit_dict_escape,
+    B.PAGED: _hit_paged,
+    B.FOR_PATCH: _hit_for_patch,
 }
 
 
@@ -286,26 +226,22 @@ def range_positions(
     if hi < lo or hi < INT32_MIN or lo > INT32_MAX:
         return _EMPTY, 0
     lo, hi = max(lo, INT32_MIN), min(hi, INT32_MAX)
-    mv = memoryview(buf)
-    magic, version, codec_id, n = _HDR.unpack_from(mv)
-    if magic != MAGIC:
-        raise ValueError(f"bad block magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported block version {version}")
-    if n == 0:
-        return _EMPTY, 0
-    return _RANGE_BODY[codec_id](mv[_HDR.size :], n, lo, hi)
+    return _probe(_RANGE_BODY, buf, lo, hi)
 
 
-def _range_const(body, n, lo, hi):
-    (v,) = _CONST.unpack_from(body)
-    if lo <= v <= hi:
-        return np.arange(n, dtype=np.int64), 0
+def _domain_hi(lo: int, w: int) -> int:
+    """Largest value a ``w``-bit offset from ``lo`` can store."""
+    return lo + ((1 << w) - 1 if w < 32 else 0xFFFFFFFF)
+
+
+def _range_const(v, lo, hi):
+    if lo <= v.value <= hi:
+        return np.arange(v.n, dtype=np.int64), 0
     return _EMPTY, 0
 
 
-def _range_bitpack_zz(body, n, lo, hi):
-    (w,) = _BPZZ.unpack_from(body)
+def _range_bitpack_zz(v, lo, hi):
+    w = v.w
     if w < 32:
         # w-bit zigzag codes cover exactly [-(2^(w-1)), 2^(w-1)-1]... shifted:
         # zz < 2^w  <=>  v in [-(2^(w-1)), 2^(w-1) - 1] for even/odd split
@@ -313,126 +249,99 @@ def _range_bitpack_zz(body, n, lo, hi):
         vmin = -((1 << w) // 2) if w else 0
         if hi < vmin or lo > vmax:
             return _EMPTY, 0
-    zz = K.bitunpack(body[_BPZZ.size :], w, n)
-    vals = K.zigzag_decode(zz)
+    vals = K.zigzag_decode(v.zz.unpack())
     return (
         np.nonzero((vals >= np.int32(max(lo, INT32_MIN)))
                    & (vals <= np.int32(min(hi, INT32_MAX))))[0].astype(np.int64),
-        n,
+        v.n,
     )
 
 
-def _range_for_bitpack(body, n, lo, hi):
-    base, w = _FOR.unpack_from(body)
-    dom_hi = base + ((1 << w) - 1 if w < 32 else 0xFFFFFFFF)
-    if hi < base or lo > dom_hi:
+def _range_for_bitpack(v, lo, hi):
+    if hi < v.lo or lo > _domain_hi(v.lo, v.w):
         return _EMPTY, 0
-    rel = K.bitunpack(body[_FOR.size :], w, n).astype(np.int64)
+    rel = v.rel.unpack().astype(np.int64)
     # compare in relative space: absolute array never rebuilt
-    rlo, rhi = max(lo - base, 0), hi - base
-    return np.nonzero((rel >= rlo) & (rel <= rhi))[0].astype(np.int64), n
+    rlo, rhi = max(lo - v.lo, 0), hi - v.lo
+    return np.nonzero((rel >= rlo) & (rel <= rhi))[0].astype(np.int64), v.n
 
 
-def _range_rle(body, n, lo, hi):
-    r, lw, vmin, vw = _RLE.unpack_from(body)
-    dom_hi = vmin + ((1 << vw) - 1 if vw < 32 else 0xFFFFFFFF)
-    if hi < vmin or lo > dom_hi:
+def _range_rle(v, lo, hi):
+    if hi < v.vmin or lo > _domain_hi(v.vmin, v.vw):
         return _EMPTY, 0
-    off = _RLE.size
-    lens_end = off + _nbytes(r, lw)
-    vals = vmin + K.bitunpack(body[lens_end:], vw, r).astype(np.int64)
+    vals = v.vmin + v.vals.unpack().astype(np.int64)
     match = (vals >= lo) & (vals <= hi)
     if not match.any():
         return _EMPTY, 0
-    lens = K.bitunpack(body[off:lens_end], lw, r).astype(np.int64) + 1
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    return _expand_runs(starts[match], lens[match]), 0
+    return _matching_runs(v, match), 0
 
 
-def _range_dict_bitpack(body, n, lo, hi):
-    c, tmin, tw, iw = _DICT.unpack_from(body)
-    off = _DICT.size
-    table = tmin + K.bitunpack(body[off : off + _nbytes(c, tw)], tw, c).astype(
-        np.int64
-    )
+def _range_dict_bitpack(v, lo, hi):
+    table = v.tmin + v.table.unpack().astype(np.int64)
     codes = np.nonzero((table >= lo) & (table <= hi))[0]
     if codes.size == 0:
         return _EMPTY, 0
-    idx = K.bitunpack(body[off + _nbytes(c, tw) :], iw, n)
+    idx = v.idx.unpack()
     if codes.size == 1:
         m = idx == np.uint32(codes[0])
     else:
-        in_range = np.zeros(c, dtype=bool)
+        in_range = np.zeros(v.c, dtype=bool)
         in_range[codes] = True
         m = in_range[idx]
-    return np.nonzero(m)[0].astype(np.int64), n
+    return np.nonzero(m)[0].astype(np.int64), v.n
 
 
-def _range_dict_escape(body, n, lo, hi):
-    k, c, n_esc, hmin, hw, emin, ew = _DESC.unpack_from(body)
-    off = _DESC.size
-    head_end = off + _nbytes(c, hw)
-    codes_end = head_end + _nbytes(n, k)
-    table = hmin + K.bitunpack(body[off:head_end], hw, c).astype(np.int64)
+def _range_dict_escape(v, lo, hi):
+    table = v.hmin + v.head.unpack().astype(np.int64)
     head_codes = np.nonzero((table >= lo) & (table <= hi))[0]
     esc_match = None
-    if n_esc:
-        esc = emin + K.bitunpack(body[codes_end:], ew, n_esc).astype(np.int64)
+    if v.n_esc:
+        esc = v.emin + v.esc.unpack().astype(np.int64)
         m = (esc >= lo) & (esc <= hi)
         if m.any():
             esc_match = m
     if head_codes.size == 0 and esc_match is None:
         return _EMPTY, 0
-    codes = K.bitunpack(body[head_end:codes_end], k, n)
+    codes = v.codes.unpack()
     parts = []
     if head_codes.size:
-        in_range = np.zeros(1 << k, dtype=bool)
+        in_range = np.zeros(1 << v.k, dtype=bool)
         in_range[head_codes] = True
         parts.append(np.nonzero(in_range[codes])[0])
     if esc_match is not None:
-        esc_pos = np.nonzero(codes == np.uint32((1 << k) - 1))[0]
+        esc_pos = np.nonzero(codes == np.uint32((1 << v.k) - 1))[0]
         parts.append(esc_pos[esc_match])
     pos = parts[0] if len(parts) == 1 else np.sort(np.concatenate(parts))
-    return pos.astype(np.int64), n
+    return pos.astype(np.int64), v.n
 
 
-def _range_for_patch(body, n, lo, hi):
-    base_lo, w, n_exc, pos_w, ew = _PFOR.unpack_from(body)
-    off = _PFOR.size
-    base_end = off + _nbytes(n, w)
-    pos_end = base_end + _nbytes(n_exc, pos_w)
-    base_dom_hi = base_lo + ((1 << w) - 1 if w < 32 else 0xFFFFFFFF)
-    exc_lo = base_lo + (1 << w)
-    exc_dom_hi = exc_lo + ((1 << ew) - 1 if ew < 32 else 0xFFFFFFFF)
-    want_base = not (hi < base_lo or lo > base_dom_hi)
-    want_exc = bool(n_exc) and not (hi < exc_lo or lo > exc_dom_hi)
+def _range_for_patch(v, lo, hi):
+    exc_lo = v.lo + (1 << v.w)
+    want_base = not (hi < v.lo or lo > _domain_hi(v.lo, v.w))
+    want_exc = bool(v.n_exc) and not (hi < exc_lo or lo > _domain_hi(exc_lo, v.ew))
     if not want_base and not want_exc:
         return _EMPTY, 0
     parts: list[np.ndarray] = []
     decoded = 0
     pos = None
     if want_base:
-        rel = K.bitunpack(body[off:base_end], w, n).astype(np.int64)
-        rlo, rhi = max(lo - base_lo, 0), hi - base_lo
+        rel = v.base.unpack().astype(np.int64)
+        rlo, rhi = max(lo - v.lo, 0), hi - v.lo
         m = (rel >= rlo) & (rel <= rhi)
-        decoded += n
-        if n_exc and rlo == 0:
+        decoded += v.n
+        if v.n_exc and rlo == 0:
             # patched positions hold 0 but store values above the base domain
-            pos = K.bitunpack(
-                body[base_end:pos_end], pos_w, n_exc
-            ).astype(np.int64)
+            pos = v.pos.unpack().astype(np.int64)
             m[pos] = False
         bh = np.nonzero(m)[0]
         if bh.size:
             parts.append(bh)
     if want_exc:
-        exc = K.bitunpack(body[pos_end:], ew, n_exc).astype(np.int64) + exc_lo
+        exc = v.exc.unpack().astype(np.int64) + exc_lo
         em = (exc >= lo) & (exc <= hi)
         if em.any():
             if pos is None:
-                pos = K.bitunpack(
-                    body[base_end:pos_end], pos_w, n_exc
-                ).astype(np.int64)
+                pos = v.pos.unpack().astype(np.int64)
             parts.append(pos[em])
     if not parts:
         return _EMPTY, decoded
@@ -440,51 +349,28 @@ def _range_for_patch(body, n, lo, hi):
     return out.astype(np.int64), decoded
 
 
-def _range_decode(codec_id: int):
-    def fn(body, n, lo, hi):
-        a = _DECODERS[codec_id](body, n)
-        return (
-            np.nonzero((a >= np.int32(lo)) & (a <= np.int32(hi)))[0].astype(
-                np.int64
-            ),
-            n,
-        )
-
-    return fn
+def _range_decode(v, lo, hi):
+    a = B.decode_view(v)
+    return (
+        np.nonzero((a >= np.int32(lo)) & (a <= np.int32(hi)))[0].astype(np.int64),
+        v.n,
+    )
 
 
-def _range_paged(body, n, lo, hi):
-    _, n_pages = _PGD.unpack_from(body)
-    off = _PGD.size
-    lens = np.frombuffer(body, dtype="<u4", count=n_pages, offset=off)
-    off += 4 * n_pages
-    parts: list[np.ndarray] = []
-    value_off = 0
-    decoded = 0
-    for ln in lens:
-        frame = body[off : off + int(ln)]
-        off += int(ln)
-        _, _, _, page_n = _HDR.unpack_from(frame)
-        pos, dec = range_positions(frame, lo, hi)
-        decoded += dec
-        if pos.size:
-            parts.append(pos + value_off)
-        value_off += page_n
-    if not parts:
-        return _EMPTY, decoded
-    return np.concatenate(parts), decoded
+def _range_paged(v, lo, hi):
+    return _paged(range_positions, v, lo, hi)
 
 
 _RANGE_BODY = {
-    RAW: _range_decode(RAW),
-    CONSTANT: _range_const,
-    BITPACK_ZZ: _range_bitpack_zz,
-    FOR_BITPACK: _range_for_bitpack,
-    DELTA_ZZ_BITPACK: _range_decode(DELTA_ZZ_BITPACK),
-    DELTA_ZZ_VARINT: _range_decode(DELTA_ZZ_VARINT),
-    RLE: _range_rle,
-    DICT_BITPACK: _range_dict_bitpack,
-    DICT_ESCAPE: _range_dict_escape,
-    PAGED: _range_paged,
-    FOR_PATCH: _range_for_patch,
+    B.RAW: _range_decode,
+    B.CONSTANT: _range_const,
+    B.BITPACK_ZZ: _range_bitpack_zz,
+    B.FOR_BITPACK: _range_for_bitpack,
+    B.DELTA_ZZ_BITPACK: _range_decode,
+    B.DELTA_ZZ_VARINT: _range_decode,
+    B.RLE: _range_rle,
+    B.DICT_BITPACK: _range_dict_bitpack,
+    B.DICT_ESCAPE: _range_dict_escape,
+    B.PAGED: _range_paged,
+    B.FOR_PATCH: _range_for_patch,
 }

@@ -42,6 +42,8 @@ def encode_string_chunk(
     n = arr.size
     if n == 0:
         return _HDR.pack(MAGIC, 0, 0, 0, 0)
+    if any(v is None for v in arr.tolist()):
+        raise ValueError("string column must not contain nulls")
     uniq, inverse, counts = np.unique(arr, return_inverse=True, return_counts=True)
     order = np.argsort(-counts, kind="stable")
     table = uniq[order]

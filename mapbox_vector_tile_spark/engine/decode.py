@@ -41,16 +41,6 @@ _SRC_ARROW_SCHEMA = pa.schema(
 )
 
 
-def decode_block_row(
-    payload: bytes, lengths_blob: bytes, checksum: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one blocks-table row into ``(lengths, flat_values)``."""
-    if checksum is not None and zlib.crc32(payload) != checksum:
-        raise ValueError("payload checksum mismatch (corrupt block)")
-    lengths = B.decode_block(lengths_blob).astype(np.int64)
-    return lengths, _all_values(payload, lengths)
-
-
 def _all_values(payload, lengths: np.ndarray) -> np.ndarray:
     """The payload's whole value stream, which must hold ``sum(lengths)``
     values."""

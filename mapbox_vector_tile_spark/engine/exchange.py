@@ -38,6 +38,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..sources.parquet_direct import (
+    check_planned_tasks,
     group_files_by_size,
     list_parquet_files,
     task_rows_dataframe,
@@ -440,18 +441,7 @@ def _fused_direct_run(
     manifest = tasks.mapInArrow(
         fn, from_arrow_schema(_MANIFEST_SCHEMA)
     ).collect()
-    _check_task_counts(groups, manifest)
-    return manifest
-
-
-def _check_task_counts(groups: list[tuple[int, list[str]]], manifest) -> None:
-    """Raise unless every planned task returned a manifest row (each
-    task's emitter already checked that it wrote the docs it read)."""
-    missing = sorted(
-        {tid for tid, _ in groups} - {r.task_id for r in manifest}
+    check_planned_tasks(
+        [tid for tid, _ in groups], manifest, "fused encode", "manifest"
     )
-    if missing:
-        raise RuntimeError(
-            f"fused encode count check failed: tasks without a manifest row "
-            f"{missing}"
-        )
+    return manifest

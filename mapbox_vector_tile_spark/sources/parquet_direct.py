@@ -67,60 +67,45 @@ def write_file_manifest(
     os.replace(tmp, path)
 
 
-def _manifest_row_counts(files: list[str]) -> dict[str, int] | None:
-    """Per-file row counts from ``_manifest.json`` sidecars, or ``None``
-    when any file is uncovered. Checks each file's directory, then one
-    level up (hive ``bucket=N/`` layouts keep fragments below the root)."""
+def _manifest_entries(files: list[str], key: str) -> dict:
+    """Each file's entry under ``key`` (``row_counts`` or ``file_stats``)
+    of the ``_manifest.json`` sidecars; files without one are left out.
+    Checks each file's directory, then one level up (hive ``bucket=N/``
+    layouts keep fragments below the root)."""
     import json
 
-    cache: dict[str, dict | None] = {}
-    counts: dict[str, int] = {}
+    cache: dict[str, dict] = {}
+    out = {}
     for f in files:
-        found = None
         d = os.path.dirname(f)
         for root in (d, os.path.dirname(d)):
             if root not in cache:
                 try:
                     with open(os.path.join(root, "_manifest.json")) as fh:
-                        cache[root] = json.load(fh).get("row_counts", {})
+                        cache[root] = json.load(fh)
                 except (OSError, ValueError):
-                    cache[root] = None
-            rc = cache[root]
-            if rc is not None:
-                rel = os.path.relpath(f, root)
-                if rel in rc:
-                    found = int(rc[rel])
-                    break
-        if found is None:
-            return None
-        counts[f] = found
-    return counts
+                    cache[root] = {}
+            entries = cache[root].get(key, {})
+            rel = os.path.relpath(f, root)
+            if rel in entries:
+                out[f] = entries[rel]
+                break
+    return out
+
+
+def _manifest_row_counts(files: list[str]) -> dict[str, int] | None:
+    """Per-file row counts from the manifests, or ``None`` when any file
+    is uncovered."""
+    counts = _manifest_entries(files, "row_counts")
+    if not all(f in counts for f in files):
+        return None
+    return {f: int(counts[f]) for f in files}
 
 
 def manifest_file_stats(files: list[str]) -> dict[str, dict]:
-    """Per-file zone maps from ``_manifest.json`` sidecars (same two-level
-    directory lookup as the row counts). Files without recorded stats just
-    don't appear — pruning treats them conservatively."""
-    import json
-
-    cache: dict[str, dict | None] = {}
-    out: dict[str, dict] = {}
-    for f in files:
-        d = os.path.dirname(f)
-        for root in (d, os.path.dirname(d)):
-            if root not in cache:
-                try:
-                    with open(os.path.join(root, "_manifest.json")) as fh:
-                        cache[root] = json.load(fh).get("file_stats", {})
-                except (OSError, ValueError):
-                    cache[root] = None
-            st = cache[root]
-            if st is not None:
-                rel = os.path.relpath(f, root)
-                if rel in st:
-                    out[f] = st[rel]
-                    break
-    return out
+    """Per-file zone maps from the manifests. Files without recorded stats
+    just don't appear — pruning treats them conservatively."""
+    return _manifest_entries(files, "file_stats")
 
 
 def prune_files_by_doc_range(
@@ -395,10 +380,7 @@ def _iter_chunks(
     if tokens:
         cols, batch_size = ["doc_id", "tokens"], 4096
     else:
-        cols, batch_size = [
-            "doc_ids", "lengths_blob", "payload", "checksum", "n_rows",
-            "n_values",
-        ], 64
+        cols, batch_size = list(D._DECODE_COLS), 64
     if doc_range is not None:
         cols += ["min_doc_id", "max_doc_id"]
         id_lo, id_hi = doc_range
@@ -411,12 +393,7 @@ def _iter_chunks(
                     batch.column("tokens")
                 )
                 continue
-            payloads = batch.column("payload")
-            lb = batch.column("lengths_blob")
-            dids = batch.column("doc_ids")
-            cks = batch.column("checksum").to_pylist()
-            want_rows = batch.column("n_rows").to_pylist()
-            want_vals = batch.column("n_values").to_pylist()
+            arrays = {c: batch.column(c) for c in D._DECODE_COLS}
             if doc_range is not None:
                 zmin = batch.column("min_doc_id").to_pylist()
                 zmax = batch.column("max_doc_id").to_pylist()
@@ -427,20 +404,15 @@ def _iter_chunks(
                         and zmax[i] is not None
                         and (zmax[i] < id_lo or zmin[i] >= id_hi)):
                     continue  # zone map: payload untouched
-                lengths, values = D.decode_block_row(
-                    memoryview(payloads[i].as_buffer()),
-                    memoryview(lb[i].as_buffer()),
-                    cks[i],
-                )
-                doc_ids = dids[i].values
-                if not (lengths.size == len(doc_ids) == want_rows[i]
-                        and values.size == want_vals[i]):
+                try:
+                    payload, lengths = D._checked_lengths(arrays, i, True)
+                    values = D._all_values(payload, lengths)
+                except ValueError as e:
                     raise ValueError(
-                        f"{path} row {base + i}: decoded {lengths.size} "
-                        f"docs ({len(doc_ids)} ids) and {values.size} "
-                        f"tokens, the row stores {want_rows[i]} docs and "
-                        f"{want_vals[i]} tokens"
-                    )
+                        f"{path} row {base + i}: decoded block disagrees "
+                        f"with the row: {e}"
+                    ) from e
+                doc_ids = arrays["doc_ids"][i].values
                 if doc_range is not None:
                     keep = pc.and_(
                         pc.greater_equal(doc_ids, id_lo),
@@ -489,13 +461,14 @@ def _scan(
     return tasks.mapInArrow(fn, schema), n_planned
 
 
-def _check_planned_tasks(n_planned: int, written) -> None:
-    """Raise unless each of the ``n_planned`` tasks returned a row."""
-    missing = sorted(set(range(n_planned)) - {r.task_id for r in written})
+def check_planned_tasks(planned, rows, job: str, row: str) -> None:
+    """Raise unless each task id in ``planned`` returned one of ``rows``
+    (each with a ``task_id``); ``job`` and ``row`` name the job and its
+    row kind in the message."""
+    missing = sorted(set(planned) - {r.task_id for r in rows})
     if missing:
         raise RuntimeError(
-            f"direct decode count check failed: tasks without a result "
-            f"row {missing}"
+            f"{job} count check failed: tasks without a {row} row {missing}"
         )
 
 
@@ -556,7 +529,7 @@ def decode_to_parquet_direct(
             doc_range=doc_range,
         )
         written = scan.collect()
-    _check_planned_tasks(n_planned, written)
+    check_planned_tasks(range(n_planned), written, "direct decode", "result")
     counts = {part(r.task_id): int(r.n_rows) for r in written if r.n_rows}
     if not counts:
         write_parquet_atomic(

@@ -6,6 +6,8 @@ the analog of the reference's per-geometry-type round-trip matrix
 (/root/reference/tests/test_encoder.py:54-129) and errors.wkt corpus.
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -155,3 +157,53 @@ def test_fallback_to_raw_on_forced_failure(monkeypatch):
     blk, cid = S.encode_auto(a, codec=B.RLE)
     assert cid == B.RAW
     np.testing.assert_array_equal(B.decode_block(blk), a)
+
+
+# sha256 (first 32 hex digits) over every CORPORA frame of one codec: the
+# stored format, so any change to a writer's bytes fails here
+ENCODE_DIGESTS = {
+    "raw": "fedad1b3fbaf6315d0e2363a2369bafd",
+    "constant": "73c358736e5450655e2a92699112174c",
+    "bitpack_zz": "8ec4b977ac6b0250af03f75bd10327f3",
+    "for_bitpack": "df8ac08c3e378e6ee51ef8d0e11dace2",
+    "delta_zz_bitpack": "9f2fd80e9842ceee66d27e265cd6bf0d",
+    "delta_zz_varint": "8486d2331a45dc07279f60b92a065f1d",
+    "rle": "235aed79a06f359b3386595a887467de",
+    "dict_bitpack": "7a615db7df17df3c2cd5230b0cc9ccb1",
+    "dict_escape": "297e16a47ff76af15056b46196413575",
+    "paged": "f1e775c94ffe01d758aac731eb0384cf",
+    "for_patch": "c2d1faecfad305500dc05fc62d491614",
+}
+# the same over remap_block(frame, t -> t + 7 on [0, 100]) of each frame
+REMAP_DIGESTS = {
+    "raw": "ec9bd64da4406134777a5970327a63b0",
+    "constant": "723b74c12d995ffb57645bc975cf15e8",
+    "bitpack_zz": "ec9bd64da4406134777a5970327a63b0",
+    "for_bitpack": "ec9bd64da4406134777a5970327a63b0",
+    "delta_zz_bitpack": "ec9bd64da4406134777a5970327a63b0",
+    "delta_zz_varint": "ec9bd64da4406134777a5970327a63b0",
+    "rle": "6cc4624ab636c6a2b1a9875a87495dee",
+    "dict_bitpack": "822880c7d8a325de32b29f7c2a7c7cef",
+    "dict_escape": "ec5e77ed1177279936579a095e20519a",
+    "paged": "fd82d4754f3604e6fcf80b3ecb70e726",
+    "for_patch": "ec9bd64da4406134777a5970327a63b0",
+}
+
+
+@pytest.mark.parametrize("codec", B.CODEC_NAMES, ids=B.CODEC_NAMES.get)
+def test_encoded_and_remapped_bytes_are_pinned(codec):
+    from mapbox_vector_tile_spark.codec.remap import make_range_shift_map, remap_block
+
+    enc, remap = hashlib.sha256(), hashlib.sha256()
+    for name, a in CORPORA.items():
+        try:
+            blk = B.encode_block(a, codec)
+        except ValueError:  # CONSTANT on varying data, DICT_ESCAPE headless
+            enc.update(name.encode() + (10).to_bytes(8, "little") + b"ValueError")
+            continue
+        enc.update(name.encode() + len(blk).to_bytes(8, "little") + blk)
+        out, _ = remap_block(blk, make_range_shift_map(0, 100, 7))
+        remap.update(name.encode() + len(out).to_bytes(8, "little") + out)
+    name = B.CODEC_NAMES[codec]
+    assert enc.hexdigest()[:32] == ENCODE_DIGESTS[name]
+    assert remap.hexdigest()[:32] == REMAP_DIGESTS[name]

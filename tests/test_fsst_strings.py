@@ -62,6 +62,11 @@ def test_string_chunk_edge_cases():
     assert decode_string_chunk(encode_string_chunk(vals)) == vals
 
 
+def test_string_chunk_rejects_nulls():
+    with pytest.raises(ValueError, match="must not contain nulls"):
+        encode_string_chunk(["a", None, "b"])
+
+
 def test_string_chunk_frequency_order():
     # most frequent value gets index 0 (smallest) — optimise.py:26-57 analog
     vals = ["b", "a", "b", "b", "c"]

@@ -17,10 +17,15 @@ import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from mapbox_vector_tile_spark.codec.strings import decode_string_chunk
-from mapbox_vector_tile_spark.engine.decode import decode_block_row
+from mapbox_vector_tile_spark.engine.decode import (
+    _DECODE_COLS,
+    _all_values,
+    _checked_lengths,
+)
 from mapbox_vector_tile_spark.engine.encode import (
     EncodeOptions,
     _FusedChunkEmitter,
+    blocks_batch,
 )
 
 MAX_CHUNK = 64
@@ -71,10 +76,12 @@ def _run_emitter(files, min_chunk, pin_window, budget, seed=0,
         )
     em.flush()
     got = {}
-    for row, docs in zip(em.rows, em.chunk_docs):
-        lengths, values = decode_block_row(
-            row["payload"], row["lengths_blob"], row["checksum"]
-        )
+    if em.rows:
+        batch = blocks_batch(em.rows, em.chunk_docs)
+        cols = {c: batch.column(c) for c in _DECODE_COLS}
+    for k, (row, docs) in enumerate(zip(em.rows, em.chunk_docs)):
+        payload, lengths = _checked_lengths(cols, k, True)
+        values = _all_values(payload, lengths)
         assert row["n_rows"] == len(docs) == lengths.size
         off = np.concatenate(([0], np.cumsum(lengths)))
         if with_source:
@@ -165,13 +172,15 @@ def test_emitter_flush_raises_on_lost_docs():
 def test_task_count_check_raises_on_missing_tasks():
     from collections import namedtuple
 
-    from mapbox_vector_tile_spark.engine.exchange import _check_task_counts
+    from mapbox_vector_tile_spark.sources.parquet_direct import (
+        check_planned_tasks,
+    )
 
     Row = namedtuple("Row", "task_id n_rows")
-    groups = [(0, ["a"]), (1, ["b"])]
-    _check_task_counts(groups, [Row(0, 5), Row(1, 0)])
+    tasks = [0, 1]
+    check_planned_tasks(tasks, [Row(0, 5), Row(1, 0)], "fused encode", "manifest")
     with pytest.raises(RuntimeError, match=r"manifest row \[1\]"):
-        _check_task_counts(groups, [Row(0, 5)])
+        check_planned_tasks(tasks, [Row(0, 5)], "fused encode", "manifest")
 
 
 def test_fused_direct_keeps_zero_token_docs_and_empty_files(spark, tmp_path):

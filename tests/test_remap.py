@@ -101,24 +101,18 @@ def test_metadata_codecs_decode_nothing_and_keep_streams_verbatim():
     blk, dec = remap_block(old, fn)
     assert dec == 0
     # run-length stream verbatim: same (r, lw) params, identical lens bytes
-    r, lw, _, _ = B._RLE.unpack_from(memoryview(old)[B._HDR.size :])
-    nr, nlw, _, _ = B._RLE.unpack_from(memoryview(blk)[B._HDR.size :])
-    assert (r, lw) == (nr, nlw)
-    o0 = B._HDR.size + B._RLE.size
-    assert old[o0 : o0 + B._nbytes(r, lw)] == blk[o0 : o0 + B._nbytes(r, lw)]
+    o, m = B.read_view(old), B.read_view(blk)
+    assert (o.r, o.lw) == (m.r, m.lw)
+    assert bytes(o.lens.buf) == bytes(m.lens.buf)
 
     dictish = RNG.integers(0, 16, 400).astype(np.int32)
     old = B.encode_block(dictish, B.DICT_BITPACK, ChunkAnalysis(dictish))
     blk, dec = remap_block(old, fn)
     assert dec == 0
     # index stream verbatim (cardinality and index width cannot change)
-    c, _, tw, iw = B._DICT.unpack_from(memoryview(old)[B._HDR.size :])
-    nc, _, ntw, niw = B._DICT.unpack_from(memoryview(blk)[B._HDR.size :])
-    assert (c, iw) == (nc, niw)
-    assert (
-        old[B._HDR.size + B._DICT.size + B._nbytes(c, tw) :]
-        == blk[B._HDR.size + B._DICT.size + B._nbytes(nc, ntw) :]
-    )
+    o, m = B.read_view(old), B.read_view(blk)
+    assert (o.c, o.iw) == (m.c, m.iw)
+    assert bytes(o.idx.buf) == bytes(m.idx.buf)
 
 
 def test_dict_escape_decodes_only_escapes():
@@ -133,7 +127,7 @@ def test_dict_escape_decodes_only_escapes():
         B.decode_block(blk), (a.astype(np.int64) + 100_000).astype(np.int32)
     )
     # cost is exactly the escape count — the code stream is never decoded
-    _, _, n_esc, *_ = B._DESC.unpack_from(memoryview(buf)[B._HDR.size :])
+    n_esc = B.read_view(buf).n_esc
     assert dec == n_esc < a.size // 2
 
 

@@ -42,3 +42,16 @@ def test_decode_without_source_requested_errors(spark):
     blocks = encode_dataframe(tokens, EncodeOptions())  # no string_col
     with pytest.raises(Exception, match="without string_col"):
         decode_dataframe(blocks, with_source=True).collect()
+
+
+def test_null_source_is_rejected_by_name(spark):
+    import pytest
+
+    tokens = G.corpus_dataframe(spark, 50, num_partitions=1)
+    one = tokens.first().doc_id
+    tokens = tokens.withColumn(
+        "source",
+        F.when(F.col("doc_id") == one, F.lit(None)).otherwise(F.col("source")),
+    )
+    with pytest.raises(Exception, match="must not contain nulls"):
+        encode_dataframe(tokens, EncodeOptions(), string_col="source").collect()

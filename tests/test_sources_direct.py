@@ -319,10 +319,13 @@ def test_check_planned_tasks_raises_on_missing_task():
     import pytest
 
     from mapbox_vector_tile_spark.sources.parquet_direct import (
-        _check_planned_tasks,
+        check_planned_tasks,
     )
 
     rows = [SimpleNamespace(task_id=t) for t in (0, 2)]
-    _check_planned_tasks(2, rows[:1] + [SimpleNamespace(task_id=1)])
+    check_planned_tasks(
+        range(2), rows[:1] + [SimpleNamespace(task_id=1)], "direct decode",
+        "result",
+    )
     with pytest.raises(RuntimeError, match=r"result row \[1, 3\]"):
-        _check_planned_tasks(4, rows)
+        check_planned_tasks(range(4), rows, "direct decode", "result")

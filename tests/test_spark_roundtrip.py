@@ -107,12 +107,19 @@ def test_chunk_splitting_bounded_memory(tokens_df):
 
 
 def test_checksum_detects_corruption(tokens_df, spark):
-    from mapbox_vector_tile_spark.engine.decode import decode_block_row
+    import pyarrow as pa
+
+    from mapbox_vector_tile_spark.engine.decode import (
+        _DECODE_COLS,
+        _checked_lengths,
+    )
 
     blocks = encode_dataframe(tokens_df)
     row = blocks.filter(F.col("n_values") > 0).first()
+    cols = {c: pa.array([getattr(row, c)]) for c in _DECODE_COLS}
+    cols["payload"] = pa.array([bytes(row.payload) + b"x"], pa.binary())
     with pytest.raises(ValueError, match="checksum"):
-        decode_block_row(row.payload + b"x", row.lengths_blob, row.checksum)
+        _checked_lengths(cols, 0, True)
 
 
 def test_decode_doc_range_zone_map_pruning(tokens_df, spark):
