@@ -90,7 +90,7 @@ def _stats_dict_bitpack(v, need_sum: bool) -> Stats:
     mn, mx = int(table.min()), int(table.max())
     if not need_sum:
         return v.n, None, mn, mx, 0
-    counts = np.bincount(v.idx.unpack().astype(np.int64), minlength=v.c)[: v.c]
+    counts = np.bincount(B.dict_codes(v).astype(np.int64), minlength=v.c)
     return v.n, int((table * counts).sum()), mn, mx, v.n
 
 
@@ -105,7 +105,7 @@ def _stats_dict_escape(v, need_sum: bool) -> Stats:
         return v.n, None, mn, mx, 0
     esc_code = (1 << v.k) - 1
     counts = np.bincount(
-        v.codes.unpack().astype(np.int64), minlength=esc_code + 1
+        B.dict_codes(v).astype(np.int64), minlength=esc_code + 1
     )
     s = int((table * counts[: v.c]).sum())
     if esc is not None:
@@ -152,6 +152,10 @@ def distinct_values(buf: bytes | memoryview) -> tuple[np.ndarray, int]:
     The COUNT(DISTINCT) pushdown primitive: dictionary chunks return their
     value table (O(table), zero stream decode), RLE returns unique run
     values, CONSTANT its single value — only param-opaque codecs inflate.
+    Dictionary chunks are answered from the table alone: their code stream
+    is never unpacked, so a code past the table
+    (:func:`..blocks.dict_codes`) goes unseen here; every reader that
+    unpacks the codes raises on it.
     """
     v = B.read_view(buf)
     if v is None:
@@ -212,8 +216,8 @@ def range_histogram(
         in_range = (table >= lo) & (table <= hi)
         if not in_range.any():
             return empty
-        idx = v.idx.unpack().astype(np.int64)
-        code_counts = np.bincount(idx, minlength=v.c)[: v.c]
+        idx = B.dict_codes(v).astype(np.int64)
+        code_counts = np.bincount(idx, minlength=v.c)
         keep = in_range & (code_counts > 0)
         order = np.argsort(table[keep], kind="stable")
         return table[keep][order], code_counts[keep][order], v.n

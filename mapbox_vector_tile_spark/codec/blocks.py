@@ -252,6 +252,36 @@ def run_lengths(v) -> np.ndarray:
     return lens
 
 
+def dict_codes(v) -> np.ndarray:
+    """The unpacked uint32 codes of a DICT_BITPACK or DICT_ESCAPE view,
+    checked against its value table: each code must index the table (or,
+    for DICT_ESCAPE, be the escape code ``2^k - 1``, once per escaped
+    value). The code stream is only known once unpacked, so every reader
+    of the codes takes them from here; ``ValueError`` names the codec, the
+    code and the table size."""
+    if v.codec_id == DICT_BITPACK:
+        codes = v.idx.unpack()
+        top = int(codes.max()) if codes.size else -1
+    else:
+        codes = v.codes.unpack()
+        esc = codes == np.uint32((1 << v.k) - 1)
+        n_esc = np.count_nonzero(esc)
+        if n_esc != v.n_esc:
+            raise ValueError(
+                f"dict_escape frame: {n_esc} escape codes, its params say "
+                f"{v.n_esc}"
+            )
+        top = -1 if n_esc == codes.size else int(
+            codes.max(initial=0, where=~esc)
+        )
+    if top >= v.c:
+        raise ValueError(
+            f"{CODEC_NAMES[v.codec_id]} frame: code {top} is past its "
+            f"{v.c}-entry table"
+        )
+    return codes
+
+
 def pack_frame(codec_id: int, n: int, params: tuple = (), *secs) -> bytes:
     """The writer twin of :func:`sections`: the frame of ``n`` values from
     ``codec_id``'s param fields and its section bytes in layout order."""
@@ -380,7 +410,7 @@ def _enc_dict_bitpack(an: ChunkAnalysis) -> bytes:
 
 
 def _dec_dict_bitpack(v) -> np.ndarray:
-    return K.dict_decode(v.table.values(v.tmin), v.idx.unpack())
+    return K.dict_decode(v.table.values(v.tmin), dict_codes(v))
 
 
 def dict_escape_sizes(n: int, c: int, hw: int, k: int, n_esc: int, ew: int) -> int:
@@ -420,7 +450,7 @@ def _enc_dict_escape(an: ChunkAnalysis) -> bytes:
 
 def _dec_dict_escape(v) -> np.ndarray:
     head = v.head.values(v.hmin)
-    codes = v.codes.unpack()
+    codes = dict_codes(v)
     mask = codes == np.uint32((1 << v.k) - 1)
     out = np.empty(v.n, dtype=np.int32)
     out[~mask] = np.take(head, codes[~mask].astype(np.int64))

@@ -129,7 +129,7 @@ def _hit_dict_bitpack(v, x: int) -> tuple[np.ndarray, int]:
     code = np.nonzero(v.table.unpack() == np.uint32(rx))[0]
     if code.size == 0:
         return _EMPTY, 0
-    idx = v.idx.unpack()
+    idx = B.dict_codes(v)
     return np.nonzero(idx == np.uint32(code[0]))[0].astype(np.int64), v.n
 
 
@@ -149,7 +149,7 @@ def _hit_dict_escape(v, x: int) -> tuple[np.ndarray, int]:
                 esc_match = m
     if head_code < 0 and esc_match is None:
         return _EMPTY, 0
-    codes = v.codes.unpack()
+    codes = B.dict_codes(v)
     parts = []
     if head_code >= 0:
         parts.append(np.nonzero(codes == np.uint32(head_code))[0])
@@ -281,7 +281,7 @@ def _range_dict_bitpack(v, lo, hi):
     codes = np.nonzero((table >= lo) & (table <= hi))[0]
     if codes.size == 0:
         return _EMPTY, 0
-    idx = v.idx.unpack()
+    idx = B.dict_codes(v)
     if codes.size == 1:
         m = idx == np.uint32(codes[0])
     else:
@@ -302,7 +302,7 @@ def _range_dict_escape(v, lo, hi):
             esc_match = m
     if head_codes.size == 0 and esc_match is None:
         return _EMPTY, 0
-    codes = v.codes.unpack()
+    codes = B.dict_codes(v)
     parts = []
     if head_codes.size:
         in_range = np.zeros(1 << v.k, dtype=bool)

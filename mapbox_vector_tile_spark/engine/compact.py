@@ -25,16 +25,14 @@ Reference parity note: the reference's ``optimise_tile``
 encoded form of ONE tile; compaction is the across-tile counterpart this
 engine adds for scale (the reference has no multi-tile maintenance pass).
 
-Plan shape (graded for 100x scale):
-- group assignment is a per-bucket window over a METADATA-ONLY projection
-  (chunk_id, bucket, part_id, n_values — the parquet scan prunes payload
-  columns), ~total_values / target rows, partitioned by bucket: no global
-  window, no payload bytes in the shuffle;
-- assignments broadcast-join back to the full rows (assignment side is
-  chunk-count-sized);
-- one payload shuffle, partitioned by (bucket, compact_group), sorted
-  within partitions so each group's members arrive contiguously;
-- a streaming mapInArrow merges each contiguous group with bounded carry
+Plan shape:
+- one payload shuffle, partitioned by bucket and sorted within partitions
+  in write order, so each bucket's chunks arrive contiguously. Group
+  assignment needs no key: ``chunk_id`` is only unique within one encode
+  run, and a snapshot table unions many runs, so a join on it would
+  repeat chunks;
+- a streaming mapInArrow assigns each chunk its group from the bucket's
+  running value count and merges each contiguous group with bounded carry
   (one group's rows), so worker memory is O(target values), never
   O(partition).
 """
@@ -67,9 +65,10 @@ def compact_blocks(
 ):
     """blocks DataFrame -> compacted blocks DataFrame.
 
-    Chunks are grouped per bucket in write order (``part_id, chunk_id``)
-    by a running value count: each group spans ~``target_chunk_values``
-    values (default ``opts.max_chunk_values``). Singleton groups — chunks
+    Chunks are grouped per bucket in write order (``part_id, chunk_id``,
+    ties broken by ``min_doc_id``) by a running value count: each group
+    spans ~``target_chunk_values`` values (default
+    ``opts.max_chunk_values``). Singleton groups — chunks
     already at or near target size — pass through UNCHANGED (no decode,
     no re-encode, byte-identical payload), so compaction is cheap and
     idempotent on already-compact tables. Multi-member groups are decoded,
@@ -85,33 +84,15 @@ def compact_blocks(
     doc-range-filtering readers (``min_doc_id``/``max_doc_id`` are
     recomputed by the re-encode; passthrough keeps the originals).
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     opts = opts or EncodeOptions()
     target = int(target_chunk_values or opts.max_chunk_values)
     if target <= 0:
         raise ValueError(f"target_chunk_values must be positive, got {target}")
 
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("part_id", "chunk_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    asg = (
-        blocks_df.select("chunk_id", "bucket", "part_id", "n_values")
-        .withColumn(
-            "_cum_before", F.coalesce(F.sum("n_values").over(w), F.lit(0))
-        )
-        .withColumn(
-            "compact_group", (F.col("_cum_before") / target).cast("long")
-        )
-        .select("chunk_id", "compact_group")
-    )
-    df = (
-        blocks_df.join(F.broadcast(asg), "chunk_id")
-        .repartition("bucket", "compact_group")
-        .sortWithinPartitions("bucket", "compact_group", "part_id", "chunk_id")
+    # min_doc_id breaks (part_id, chunk_id) ties between encode runs, so
+    # the merged chunks' bytes do not depend on the shuffle's order
+    df = blocks_df.repartition("bucket").sortWithinPartitions(
+        "bucket", "part_id", "chunk_id", "min_doc_id"
     )
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -169,26 +150,25 @@ def compact_blocks(
             out_docs.clear()
             return batch
 
-        # a group may span record batches: members carry across batch
-        # boundaries and are emitted only on a key change (or at the end),
-        # so every (bucket, group) yields exactly one output chunk
+        # a chunk's group is the bucket's value count before it over the
+        # target. A group may span record batches: members carry across
+        # batch boundaries and are emitted only on a key change (or at the
+        # end), so every (bucket, group) yields exactly one output chunk
+        cum_before = 0
         for batch in batches:
             names = batch.schema.names
             cols = {n: batch.column(n) for n in names}
             for i in range(batch.num_rows):
-                key = (
-                    int(cols["bucket"][i].as_py()),
-                    int(cols["compact_group"][i].as_py()),
-                )
+                bucket = int(cols["bucket"][i].as_py())
+                if cur_key is None or bucket != cur_key[0]:
+                    cum_before = 0
+                key = (bucket, cum_before // target)
+                cum_before += int(cols["n_values"][i].as_py())
                 if key != cur_key:
                     emit_group()
                     members = []
                     cur_key = key
-                m = {
-                    n: cols[n][i].as_py()
-                    for n in names
-                    if n not in ("doc_ids", "compact_group")
-                }
+                m = {n: cols[n][i].as_py() for n in names if n != "doc_ids"}
                 m["doc_ids"] = cols["doc_ids"][i].values
                 m["_group"] = key[1]
                 # the member's Arrow row, for the checked decode

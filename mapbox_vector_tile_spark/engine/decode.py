@@ -256,6 +256,42 @@ def _pack_survivors(pruned):
     return pruned
 
 
+def _scan_files_that_can_match(blocks_df, prune):
+    """``blocks_df`` re-read over only the data files ``prune(paths)``
+    keeps, when ``blocks_df`` is a bare parquet file scan (its analyzed
+    plan is one ``LogicalRelation`` with no partition columns); any other
+    frame comes back unchanged. ``prune`` takes and returns local paths;
+    files that are not local ``file:`` URIs are always kept. With every
+    file kept the frame comes back unchanged, and with none kept it is an
+    empty frame with the same schema. Planning starts no Spark job."""
+    from urllib.parse import unquote, urlparse
+
+    plan = blocks_df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return blocks_df
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().length()
+    ):
+        return blocks_df
+    uris = list(blocks_df.inputFiles())
+    local = {
+        u: unquote(urlparse(u).path) for u in uris if u.startswith("file:")
+    }
+    kept = set(prune(sorted(local.values())))
+    files = [
+        "file:" + local[u] if u in local else u
+        for u in uris if u not in local or local[u] in kept
+    ]
+    if len(files) == len(uris):
+        return blocks_df
+    if not files:
+        return blocks_df.limit(0)
+    return blocks_df.sparkSession.read.schema(blocks_df.schema).parquet(*files)
+
+
 def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     """Selective decode of ``doc_id in [lo, hi)`` via zone-map pruning.
 
@@ -266,13 +302,19 @@ def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     ``payload`` bytes at all. Surviving chunks decode normally and a row
     filter trims boundary chunks that straddle the range.
 
-    Task shape: the zone-map filter runs in the parallel scan, one task per
-    file split, and pruned row groups never leave it. When the scan has
-    more splits than the session's default parallelism, the survivors'
-    encoded rows cross one ``rebalance`` exchange into fewer Python tasks
-    (see :func:`_pack_survivors`): a range inside one commit of a
-    many-file snapshot table decodes in one Python task. Otherwise each
-    scan task decodes its own survivors.
+    Task shape: first, on the driver, a bare parquet scan drops every data
+    file whose doc-id envelope in its directory's ``_manifest.json`` (a
+    snapshot commit's or the direct sink's) misses the range
+    (:func:`_scan_files_that_can_match`), so a range inside one commit of
+    a many-file snapshot table scans one file in one task, with no
+    exchange. Files without recorded envelopes, and frames with any
+    operator above the scan, are scanned whole. Then the zone-map filter
+    runs in the parallel scan, one task per file split, and pruned row
+    groups never leave it. When the scan still has more splits than the
+    session's default parallelism, the survivors' encoded rows cross one
+    ``rebalance`` exchange into fewer Python tasks (see
+    :func:`_pack_survivors`). Otherwise each scan task decodes its own
+    survivors.
 
     The point-lookup / range-scan analog of the reference decoding a single
     requested layer out of a multi-layer tile rather than the whole tile
@@ -284,6 +326,11 @@ def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
     """
     from pyspark.sql import functions as F
 
+    from ..sources.parquet_direct import prune_files_by_doc_range
+
+    blocks_df = _scan_files_that_can_match(
+        blocks_df, lambda files: prune_files_by_doc_range(files, lo, hi)
+    )
     pruned = blocks_df.filter(
         (F.col("max_doc_id") >= lo) & (F.col("min_doc_id") < hi)
     )
@@ -316,11 +363,17 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
        value stream; a one-doc lookup in a sequential-codec chunk still
        decodes once but ships one doc across Arrow/JVM).
 
-    Task shape: layers 1 and 2 run in the parallel scan, one task per file
-    split, so pruned row groups never leave it. When the scan has more
-    splits than the session's default parallelism, the survivors' encoded
-    rows cross one ``rebalance`` exchange into fewer Python tasks (see
-    :func:`_pack_survivors`): a few ids of a many-file snapshot table
+    Task shape: first, on the driver, a bare parquet scan drops every data
+    file whose doc-id envelope in its directory's ``_manifest.json`` holds
+    none of the ids (:func:`_scan_files_that_can_match`), so ids of one
+    commit of a many-file snapshot table scan one file in one task, with
+    no exchange. Files without recorded envelopes, and frames with any
+    operator above the scan, are scanned whole. Then layers 1 and 2 run in
+    the parallel scan, one task per file split, so pruned row groups never
+    leave it. When the scan still has more splits than the session's
+    default parallelism, the survivors' encoded rows cross one
+    ``rebalance`` exchange into fewer Python tasks (see
+    :func:`_pack_survivors`): a few ids scattered over a many-file table
     decode in one Python task, not one per file. Otherwise each scan task
     runs layer 3 itself.
 
@@ -333,9 +386,14 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     """
     from pyspark.sql import functions as F
 
+    from ..sources.parquet_direct import prune_files_by_doc_ids
+
     ids = sorted(set(ids))
     if not ids:
         raise ValueError("ids must be a non-empty collection of doc ids")
+    blocks_df = _scan_files_that_can_match(
+        blocks_df, lambda files: prune_files_by_doc_ids(files, ids)
+    )
 
     want = F.filter(
         F.array(*[F.lit(d) for d in ids]),

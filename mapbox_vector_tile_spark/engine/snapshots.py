@@ -10,6 +10,8 @@ remains readable forever (time travel).
 Layout under the table root::
 
     data/s<id>/*.parquet      blocks fragments added by commit <id>
+    data/s<id>/_manifest.json per-file row counts and doc-id zone maps
+                              (min_doc_id, max_doc_id) of those fragments
     deletes/s<id>/*.parquet   equality-delete sidecars added by commit <id>
     snapshots/v<id>.json      {snapshot_id, parent_id, operation,
                                data_files: [...], delete_files: [...]}
@@ -21,7 +23,10 @@ optimistic-concurrency contract) then ``os.replace`` the ``_current``
 pointer (atomic on POSIX, the metadata-pointer swap). Readers resolve a
 snapshot id to explicit file lists and hand Spark exactly those paths —
 no directory listing races with concurrent writers, and a 100 TB reader
-plans from manifest metadata alone.
+plans from manifest metadata alone. Each commit writes its data
+directory's ``_manifest.json`` before the pointer swap; its per-file
+doc-id envelopes let point and range reads (:mod:`.decode`) drop whole
+files before Spark plans the scan. Files without one are read in full.
 
 Reference parity: the reference has no table layer (it returns one encoded
 tile per call), but its round-trip contract is per-tile immutability —
@@ -34,9 +39,11 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..sources.parquet_direct import write_file_manifest
 from .decode import decode_dataframe
 from .deletes import decode_with_deletes
 from .encode import BLOCKS_SPARK_SCHEMA
@@ -130,6 +137,47 @@ def _rel_parquet_files(root: str, subdir: str) -> list[str]:
     return sorted(out)
 
 
+def _file_envelope(path: str) -> tuple[int, dict | None]:
+    """Row count and doc-id zone map ``{min_doc_id, max_doc_id}`` of one
+    blocks file, from its parquet footer: the min of ``min_doc_id`` and the
+    max of ``max_doc_id`` over its row groups. The zone map is ``None`` when
+    the file holds no doc id or any non-empty row group lacks a min/max."""
+    md = pq.read_metadata(path)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    i_min, i_max = names.index("min_doc_id"), names.index("max_doc_id")
+    lo = hi = None
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        if not rg.num_rows:
+            continue
+        smin, smax = rg.column(i_min).statistics, rg.column(i_max).statistics
+        if not (smin is not None and smin.has_min_max
+                and smax is not None and smax.has_min_max):
+            return md.num_rows, None
+        lo = smin.min if lo is None else min(lo, smin.min)
+        hi = smax.max if hi is None else max(hi, smax.max)
+    if lo is None:
+        return md.num_rows, None
+    return md.num_rows, {"min_doc_id": lo, "max_doc_id": hi}
+
+
+def _write_data(root: str, subdir: str, blocks_df: DataFrame) -> list[str]:
+    """Write ``blocks_df`` to the fresh ``data/<subdir>`` and its
+    ``_manifest.json`` (row counts, plus a zone map for each file that has
+    one); returns the new files relative to ``root``."""
+    out_dir = os.path.join(root, "data", subdir)
+    blocks_df.write.mode("error").parquet(out_dir)
+    files = _rel_parquet_files(root, f"data/{subdir}")
+    row_counts, file_stats = {}, {}
+    for f in files:
+        key = os.path.relpath(os.path.join(root, f), out_dir)
+        row_counts[key], stats = _file_envelope(os.path.join(root, f))
+        if stats is not None:
+            file_stats[key] = stats
+    write_file_manifest(out_dir, row_counts, file_stats)
+    return files
+
+
 def commit_append(
     root: str, blocks_df: DataFrame, meta: dict | None = None
 ) -> int:
@@ -140,7 +188,9 @@ def commit_append(
     carry ``"_subdir"`` to override the data directory name — a retried
     writer must use a FRESH directory per attempt so a partial write from
     a crashed attempt (unreferenced by any manifest — invisible to readers)
-    can never collide with the retry.
+    can never collide with the retry. The new files' row counts and doc-id
+    zone maps, read from their parquet footers, go to the data directory's
+    ``_manifest.json`` before the commit.
 
     ``blocks_df`` must have exactly the blocks schema
     (``encode.BLOCKS_SPARK_SCHEMA``); otherwise ``ValueError`` is raised
@@ -148,10 +198,8 @@ def commit_append(
     _check_blocks_schema(blocks_df)
     meta = dict(meta or {})
     subdir = meta.pop("_subdir", None) or f"s{(current_snapshot_id(root) or 0) + 1}"
-    out_dir = os.path.join(root, "data", subdir)
-    blocks_df.write.mode("error").parquet(out_dir)
     return _commit(
-        root, "append", _rel_parquet_files(root, f"data/{subdir}"), [], meta=meta
+        root, "append", _write_data(root, subdir, blocks_df), [], meta=meta
     )
 
 
@@ -170,14 +218,12 @@ def commit_rewrite(root: str, blocks_df: DataFrame) -> int:
     or deletes applied for real): the new snapshot references ONLY the
     rewritten files and drops all delete sidecars — the rewrite_data_files
     commit shape. Prior snapshots keep reading the old files.
-    ``blocks_df`` is checked against the blocks schema as in
-    :func:`commit_append`."""
+    ``blocks_df`` is checked against the blocks schema, and the new data
+    directory gets its ``_manifest.json``, as in :func:`commit_append`."""
     _check_blocks_schema(blocks_df)
     sid = (current_snapshot_id(root) or 0) + 1
-    out_dir = os.path.join(root, "data", f"s{sid}")
-    blocks_df.write.mode("error").parquet(out_dir)
     return _commit(
-        root, "rewrite", _rel_parquet_files(root, f"data/s{sid}"), [],
+        root, "rewrite", _write_data(root, f"s{sid}", blocks_df), [],
         replace=True,
     )
 

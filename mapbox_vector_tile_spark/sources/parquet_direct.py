@@ -108,6 +108,21 @@ def manifest_file_stats(files: list[str]) -> dict[str, dict]:
     return _manifest_entries(files, "file_stats")
 
 
+def _prune_files(files: list[str], can_match) -> list[str]:
+    """The one file-level envelope test: keep each file whose manifest zone
+    map ``[min_doc_id, max_doc_id]`` passes ``can_match(mn, mx)``. A file
+    without recorded stats, or with the ``""``/null "no envelope" sentinel
+    (all its chunks had empty doc-id sets), is kept (conservative)."""
+    stats = manifest_file_stats(files)
+    keep = []
+    for f in files:
+        st = stats.get(f) or {}
+        mn, mx = st.get("min_doc_id"), st.get("max_doc_id")
+        if not mn or not mx or can_match(mn, mx):
+            keep.append(f)
+    return keep
+
+
 def prune_files_by_doc_range(
     files: list[str], lo: str | None, hi: str | None
 ) -> list[str]:
@@ -117,23 +132,23 @@ def prune_files_by_doc_range(
     turns a range query's planning cost from O(all files) into O(matching
     files + manifest read); the surviving files' row groups still prune
     again at the parquet level via the pushed zone-map predicate."""
-    stats = manifest_file_stats(files)
-    keep = []
-    for f in files:
-        st = stats.get(f)
-        if st is None:
-            keep.append(f)
-            continue
-        mn, mx = st.get("min_doc_id"), st.get("max_doc_id")
-        # "" is the sink's "no envelope" sentinel (all chunks had empty
-        # doc-id sets) — conservative keep, same as missing stats
-        if not mn or not mx:
-            keep.append(f)
-            continue
-        if (hi is not None and mn >= hi) or (lo is not None and mx < lo):
-            continue
-        keep.append(f)
-    return keep
+    return _prune_files(
+        files,
+        lambda mn, mx: (hi is None or mn < hi) and (lo is None or mx >= lo),
+    )
+
+
+def prune_files_by_doc_ids(files: list[str], ids: list[str]) -> list[str]:
+    """Drop files whose manifest zone map holds none of the sorted ``ids``
+    (one ``bisect`` per file); files without stats are kept, as in
+    :func:`prune_files_by_doc_range`."""
+    from bisect import bisect_left
+
+    def can_match(mn, mx):
+        i = bisect_left(ids, mn)
+        return i < len(ids) and ids[i] <= mx
+
+    return _prune_files(files, can_match)
 
 
 def blocks_scan(

@@ -174,3 +174,32 @@ def test_compact_table_snapshot_level(spark, tmp_path):
     assert v.n_mismatch == 0 and v.n_docs == 300
     v0 = verify_roundtrip(tok, S.decode_at(spark, root, 1)).first()
     assert v0.n_mismatch == 0
+
+
+def test_compact_table_over_many_commits(spark, tmp_path):
+    """Chunk ids restart with each encode run, so a snapshot of several
+    commits repeats them; compaction still writes every doc exactly once."""
+    from pyspark.sql import functions as F
+
+    from mapbox_vector_tile_spark.engine import generator as G
+    from mapbox_vector_tile_spark.engine import snapshots as S
+    from mapbox_vector_tile_spark.engine.compact import compact_table
+    from mapbox_vector_tile_spark.engine.encode import (
+        EncodeOptions,
+        encode_dataframe,
+    )
+    from mapbox_vector_tile_spark.engine.verify import verify_roundtrip
+
+    root = str(tmp_path / "tbl")
+    tok = G.corpus_dataframe(spark, 300, num_partitions=1)
+    for lo, hi in ((0, 100), (100, 200), (200, 300)):
+        lo, hi = G.doc_id_str([lo, hi])
+        part = tok.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        S.commit_append(root, encode_dataframe(part, EncodeOptions()))
+    ids = S.read_blocks_at(spark, root).select("chunk_id").collect()
+    assert len({r.chunk_id for r in ids}) < len(ids)
+    sid = compact_table(spark, root, target_chunk_values=1 << 30)
+    blocks = S.read_blocks_at(spark, root, sid)
+    assert blocks.agg(F.sum("n_rows")).first()[0] == 300
+    v = verify_roundtrip(tok, S.decode_at(spark, root, sid)).first()
+    assert v.n_mismatch == 0 and v.n_docs == 300

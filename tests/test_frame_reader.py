@@ -107,3 +107,69 @@ def test_sections_view_params_without_unpacking():
     assert B.read_view(B.encode_block(runs[:0], B.RLE)) is None
     paged = B.read_view(B.encode_block(np.tile(runs, 8), B.PAGED))
     assert [off for off, _ in B.iter_pages(paged)] == [0, 1 << 16]
+
+
+def _codes_past_table():
+    """codec name -> dictionary frame whose code stream names an entry past
+    its value table ``[5, 9, 11]``: DICT_BITPACK codes ``[0, 1, 2, 3, 0]``,
+    and DICT_ESCAPE 3-bit codes ``[0, 1, 2, 4, 0]`` (escape code 7, no
+    escaped values)."""
+    from mapbox_vector_tile_spark.codec import kernels as K
+
+    tmin, tw, table = B.pack_offsets(np.array([5, 9, 11], np.int32))
+    bitpack = B.pack_frame(
+        B.DICT_BITPACK, 5, (3, tmin, tw, 2), table,
+        K.bitpack(np.array([0, 1, 2, 3, 0], np.uint32), 2),
+    )
+    escape = B.pack_frame(
+        B.DICT_ESCAPE, 5, (3, 3, 0, tmin, tw, 0, 0), table,
+        K.bitpack(np.array([0, 1, 2, 4, 0], np.uint32), 3), b"",
+    )
+    return {"dict_bitpack": bitpack, "dict_escape": escape}
+
+
+CODES_PAST_TABLE = _codes_past_table()
+# every reader that unpacks a dictionary frame's codes
+CODE_READERS = {
+    "decode_block": B.decode_block,
+    "decode_block_gather": lambda b: decode_block_gather(
+        b, np.arange(5, dtype=np.int64)
+    ),
+    "hit_positions": lambda b: hit_positions(b, 5),
+    "range_positions": lambda b: range_positions(b, 0, 100),
+    "value_stats": value_stats,
+    "range_histogram": lambda b: range_histogram(b, 0, 100),
+}
+
+
+@pytest.mark.parametrize("codec", CODES_PAST_TABLE)
+@pytest.mark.parametrize("reader", CODE_READERS)
+def test_code_past_table_fails_every_code_reader(reader, codec):
+    """A code past the value table fails every reader that unpacks the
+    codes with one ``ValueError`` naming the codec, the code and the table
+    size: not an ``IndexError``, and not a sum that drops the value."""
+    with pytest.raises(ValueError, match=f"{codec} frame: code [34] is past "
+                                         "its 3-entry table"):
+        CODE_READERS[reader](CODES_PAST_TABLE[codec])
+
+
+def test_distinct_values_reads_only_the_table():
+    """``distinct_values`` answers a dictionary frame from its table alone,
+    so it never unpacks (or checks) the code stream."""
+    for frame in CODES_PAST_TABLE.values():
+        vals, decoded = distinct_values(frame)
+        assert vals.tolist() == [5, 9, 11] and decoded == 0
+
+
+def test_escape_count_must_match_params():
+    """A DICT_ESCAPE frame whose escape codes disagree with its stored
+    escape count fails instead of mis-assigning the escaped values."""
+    from mapbox_vector_tile_spark.codec import kernels as K
+
+    tmin, tw, table = B.pack_offsets(np.array([5, 9, 11], np.int32))
+    frame = B.pack_frame(
+        B.DICT_ESCAPE, 5, (3, 3, 1, tmin, tw, 0, 0), table,
+        K.bitpack(np.array([0, 1, 2, 7, 7], np.uint32), 3), b"",
+    )
+    with pytest.raises(ValueError, match="2 escape codes, its params say 1"):
+        B.decode_block(frame)

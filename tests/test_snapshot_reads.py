@@ -1,23 +1,29 @@
 """Point and range reads on a snapshot table laid out like an ingest table:
 one data file per micro-batch commit. Results are bit-exact against a full
-decode plus a filter; the survivors of the zone-map filter decode in as few
+decode plus a filter; reads scan only the data files whose doc-id zone map
+can match, and the survivors of the zone-map filter decode in as few
 Python tasks as their bytes need; planning a read starts no Spark job;
 commits refuse frames that are not blocks-shaped; and every decoder, and
 compaction, refuses a chunk whose stored counts disagree with its
 lengths."""
 
+import json
 import os
+import shutil
+import zlib
 from contextlib import contextmanager
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from mapbox_vector_tile_spark.codec import blocks as B
 from mapbox_vector_tile_spark.engine import generator as G
 from mapbox_vector_tile_spark.engine import snapshots as S
-from mapbox_vector_tile_spark.engine.compact import compact_blocks
+from mapbox_vector_tile_spark.engine.compact import compact_blocks, compact_table
 from mapbox_vector_tile_spark.engine.decode import (
     decode_dataframe,
     decode_doc_ids,
@@ -56,6 +62,24 @@ def table(spark, tmp_path_factory):
     snap = S.read_snapshot(root, S.current_snapshot_id(root))
     assert len(snap["data_files"]) == N_BATCHES
     return root
+
+
+def _copy_table(table: str, root: str, sidecars: bool = True) -> str:
+    """A copy of the snapshot table at ``table``; without its data
+    directories' ``_manifest.json`` sidecars unless ``sidecars``."""
+    shutil.copytree(table, root)
+    if not sidecars:
+        for d in os.listdir(os.path.join(root, "data")):
+            os.remove(os.path.join(root, "data", d, "_manifest.json"))
+    return root
+
+
+@pytest.fixture(scope="module")
+def bare(table, tmp_path_factory):
+    """The table as a writer from before per-file zone maps left it."""
+    return _copy_table(
+        table, str(tmp_path_factory.mktemp("snapreads") / "bare"), False
+    )
 
 
 @pytest.fixture(scope="module")
@@ -169,6 +193,179 @@ def test_doc_range_reads_match_full_decode(spark, table, full):
         assert got.first().n_tok == 0
 
 
+def _in(ids):
+    return lambda c: pc.is_in(c, pa.array(ids, pa.string()))
+
+
+def _between(lo, hi):
+    return lambda c: pc.and_(pc.greater_equal(c, lo), pc.less(c, hi))
+
+
+def _pruned_read(df, full: pa.Table, keep, n_files: int) -> int:
+    """``df`` scans ``n_files`` data files and equals the full decode
+    filtered by ``keep``; returns its doc count."""
+    assert len(df.inputFiles()) == n_files
+    return _check(df, full, keep)
+
+
+def test_manifests_hold_each_files_zone_map(spark, table):
+    """Every commit's data directory has a ``_manifest.json`` whose row
+    count and ``[min_doc_id, max_doc_id]`` per file are those of the
+    file's rows; the snapshot files and listings ignore the sidecar."""
+    snap = S.read_snapshot(table, S.current_snapshot_id(table))
+    for f in snap["data_files"]:
+        d, name = os.path.split(os.path.join(table, f))
+        with open(os.path.join(d, "_manifest.json")) as fh:
+            man = json.load(fh)
+        t = pq.read_table(os.path.join(d, name),
+                          columns=["min_doc_id", "max_doc_id"])
+        assert man["row_counts"] == {name: t.num_rows}
+        assert man["file_stats"] == {name: {
+            "min_doc_id": pc.min(t.column("min_doc_id")).as_py(),
+            "max_doc_id": pc.max(t.column("max_doc_id")).as_py(),
+        }}
+    listed = S._rel_parquet_files(table, "data")
+    assert listed == sorted(snap["data_files"])
+    assert all(f.endswith(".parquet") for f in listed)
+    log = S.snapshot_log(table)
+    assert [e["snapshot_id"] for e in log] == list(range(1, N_BATCHES + 1))
+    assert all(
+        "_manifest.json" not in f for e in log for f in e["data_files"]
+    )
+
+
+def test_pruned_doc_ids_reads_match_full_decode(spark, table, full):
+    blocks = S.read_blocks_at(spark, table)
+    three = G.doc_id_str([BATCH_DOCS + 4, 3 * BATCH_DOCS + 50,
+                          6 * BATCH_DOCS + 99])
+    assert _pruned_read(decode_doc_ids(blocks, three), full,
+                        _in(three), 3) == 3
+    # ids in no file's envelope read no file: zero rows, the real schema
+    nowhere = ["a", "doc-", "zzz"]
+    assert _pruned_read(decode_doc_ids(blocks, nowhere), full,
+                        _in(nowhere), 0) == 0
+    # an id inside one file's envelope that the file does not hold
+    inside = G.doc_id_str([BATCH_DOCS + 50])[0] + "x"
+    assert _pruned_read(decode_doc_ids(blocks, [inside]), full,
+                        _in([inside]), 1) == 0
+
+
+def test_pruned_doc_range_reads_match_full_decode(spark, table, full):
+    blocks = S.read_blocks_at(spark, table)
+    last = N_BATCHES * BATCH_DOCS
+    for (lo, hi), n_files, n_docs in (
+        (("doc-99999999", "zzz"), 0, 0),
+        (("a", "doc-"), 0, 0),
+        (G.doc_id_str([2 * BATCH_DOCS + 10, 2 * BATCH_DOCS + 11]), 1, 1),
+        (G.doc_id_str([3 * BATCH_DOCS, 4 * BATCH_DOCS]), 1, BATCH_DOCS),
+        (G.doc_id_str([0, last]), N_BATCHES, last),
+        (("", "zzz"), N_BATCHES, last),
+    ):
+        got = decode_doc_range(blocks, lo, hi)
+        assert _pruned_read(got, full, _between(lo, hi), n_files) == n_docs
+
+
+def test_time_travel_reads_prune_the_older_snapshot(spark, table):
+    """A read at an older snapshot prunes within that snapshot's files:
+    ids committed later find no file."""
+    old = S.read_blocks_at(spark, table, 3)
+    old_full = decode_dataframe(old).toArrow()
+    assert old_full.num_rows == 3 * BATCH_DOCS
+    ids = G.doc_id_str([BATCH_DOCS + 7, 6 * BATCH_DOCS + 7])
+    assert _pruned_read(decode_doc_ids(old, ids), old_full, _in(ids), 1) == 1
+    lo, hi = G.doc_id_str([2 * BATCH_DOCS - 5, 5 * BATCH_DOCS])
+    assert _pruned_read(decode_doc_range(old, lo, hi), old_full,
+                        _between(lo, hi), 2) == 5 + BATCH_DOCS
+
+
+def test_unpruned_reads_match(spark, table, bare, full):
+    """Without sidecars, and for a frame with an operator above the scan,
+    every file is scanned and the rows are the same."""
+    ids = G.doc_id_str([BATCH_DOCS + 4, 6 * BATCH_DOCS + 99])
+    lo, hi = G.doc_id_str([3 * BATCH_DOCS, 3 * BATCH_DOCS + 40])
+    for blocks in (
+        S.read_blocks_at(spark, bare),
+        S.read_blocks_at(spark, table).filter(F.col("n_rows") > 0),
+    ):
+        assert _pruned_read(decode_doc_ids(blocks, ids), full, _in(ids),
+                            N_BATCHES) == 2
+        assert _pruned_read(decode_doc_range(blocks, lo, hi), full,
+                            _between(lo, hi), N_BATCHES) == 40
+
+
+def test_incremental_changes_read_the_added_files(spark, table, full):
+    inserted, deleted = S.incremental_changes(spark, table, 2, 5)
+    assert deleted.count() == 0
+    lo, hi = G.doc_id_str([2 * BATCH_DOCS, 5 * BATCH_DOCS])
+    assert _pruned_read(inserted, full, _between(lo, hi), 3) == 3 * BATCH_DOCS
+
+
+def test_compacted_rewrite_has_zone_maps(spark, table, full, tmp_path):
+    """A ``commit_rewrite`` of ``compact_blocks`` output writes zone maps
+    for its new data directory; reads on it prune and match, and the
+    snapshot before the rewrite still reads its own files."""
+    root = _copy_table(table, str(tmp_path / "tbl"))
+    sid = compact_table(spark, root, target_chunk_values=1 << 30)
+    files = S.read_snapshot(root, sid)["data_files"]
+    assert {os.path.dirname(f) for f in files} == {f"data/s{sid}"}
+    with open(os.path.join(root, f"data/s{sid}", "_manifest.json")) as fh:
+        stats = json.load(fh)["file_stats"]
+    assert sorted(f"data/s{sid}/{k}" for k in stats) == sorted(files)
+    blocks = S.read_blocks_at(spark, root)
+    assert _check(decode_dataframe(blocks), full, lambda c: pc.is_valid(c)) \
+        == N_BATCHES * BATCH_DOCS
+    ids = G.doc_id_str([5, 5 * BATCH_DOCS + 5])
+    n_files = sum(
+        any(st["min_doc_id"] <= d <= st["max_doc_id"] for d in ids)
+        for st in stats.values()
+    )
+    assert _pruned_read(decode_doc_ids(blocks, ids), full, _in(ids),
+                        n_files) == 2
+    lo, hi = G.doc_id_str([BATCH_DOCS, BATCH_DOCS + 30])
+    assert _check(decode_doc_range(blocks, lo, hi), full,
+                  _between(lo, hi)) == 30
+    before = S.read_blocks_at(spark, root, sid - 1)
+    assert _pruned_read(decode_doc_ids(before, ids), full, _in(ids), 2) == 2
+
+
+def test_file_without_doc_ids_is_kept(spark, table, full, tmp_path):
+    """A committed file whose chunks all have empty doc-id sets has no
+    zone map (its min/max are null), so every read scans it; its chunks
+    hold no docs, so the rows are unchanged."""
+    root = _copy_table(table, str(tmp_path / "tbl"))
+    row = S.read_blocks_at(spark, root).limit(1).toArrow()
+    empty = B.encode_block(np.zeros(0, np.int32), B.RAW)
+    cols = {
+        "n_rows": 0, "n_values": 0, "doc_ids": [], "lengths_blob": empty,
+        "payload": empty, "checksum": zlib.crc32(empty),
+        "min_doc_id": None, "max_doc_id": None,
+    }
+    for name, value in cols.items():
+        i = row.schema.get_field_index(name)
+        row = row.set_column(
+            i, row.schema.field(i), pa.array([value], row.schema.field(i).type)
+        )
+    src = str(tmp_path / "empty_chunks")
+    os.makedirs(src)
+    pq.write_table(row, os.path.join(src, "part-0.parquet"))
+    sid = S.commit_append(
+        root, spark.read.schema(BLOCKS_SPARK_SCHEMA).parquet(src)
+    )
+    new = S.read_snapshot(root, sid)["data_files"][-1]
+    with open(os.path.join(root, os.path.dirname(new), "_manifest.json")) as fh:
+        man = json.load(fh)
+    assert list(man["row_counts"].values()) == [1]
+    assert "file_stats" not in man
+    blocks = S.read_blocks_at(spark, root)
+    ids = G.doc_id_str([2 * BATCH_DOCS + 3])
+    assert _pruned_read(decode_doc_ids(blocks, ids), full, _in(ids), 2) == 1
+    lo, hi = G.doc_id_str([BATCH_DOCS, BATCH_DOCS + 9])
+    assert _pruned_read(decode_doc_range(blocks, lo, hi), full,
+                        _between(lo, hi), 2) == 9
+    assert _pruned_read(decode_doc_ids(blocks, ["zzz"]), full,
+                        _in(["zzz"]), 1) == 0
+
+
 def _reads(blocks) -> dict:
     """A 5-id read scattered over the table and a 40-doc range inside one
     file, with their doc counts."""
@@ -179,14 +376,14 @@ def _reads(blocks) -> dict:
     }
 
 
-def test_survivors_decode_in_one_python_task(spark, table):
-    """With more scan splits than the session's parallelism, the zone-map
-    filter runs in the parallel scan (one task per file) and the surviving
-    chunks cross one AQE-sized exchange into one Python task. Planning the
-    reads starts no job."""
+def test_survivors_decode_in_one_python_task(spark, bare):
+    """On a table without per-file zone maps, with more scan splits than
+    the session's parallelism, the zone-map filter runs in the parallel
+    scan (one task per file) and the surviving chunks cross one AQE-sized
+    exchange into one Python task. Planning the reads starts no job."""
     with _session_conf(spark, _SCAN_CONF):
         with _job_group(spark, "snapshot-reads-plan"):
-            reads = _reads(S.read_blocks_at(spark, table))
+            reads = _reads(S.read_blocks_at(spark, bare))
         assert spark.sparkContext.statusTracker().getJobIdsForGroup(
             "snapshot-reads-plan") == []
         for name, (df, n) in reads.items():
@@ -197,6 +394,38 @@ def test_survivors_decode_in_one_python_task(spark, table):
             tasks = _stage_tasks(spark, group)
             assert tasks[0] == N_BATCHES, (name, tasks)
             assert tasks[-1] == 1, (name, tasks)
+
+
+def test_reads_scan_only_files_that_can_match(spark, table):
+    """With per-file zone maps, a read drops the files that cannot hold its
+    docs before Spark plans the scan. A range inside one file and ids of
+    the newest batch scan that one file in one task, with no exchange. The
+    5-id read keeps its 5 files, more splits than the session's
+    parallelism, so its survivors still cross one exchange into one Python
+    task. Planning the reads starts no job."""
+    with _session_conf(spark, _SCAN_CONF):
+        with _job_group(spark, "snapshot-pruned-plan"):
+            blocks = S.read_blocks_at(spark, table)
+            reads = _reads(blocks)
+            new = G.doc_id_str([(N_BATCHES - 1) * BATCH_DOCS + d
+                                for d in (5, 30, 99)])
+            reads["new_ids"] = (decode_doc_ids(blocks, new), 3)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup(
+            "snapshot-pruned-plan") == []
+        # name -> (files scanned, exchanges)
+        shape = {"ids": (5, 1), "range": (1, 0), "new_ids": (1, 0)}
+        for name, (df, n) in reads.items():
+            files, exchanges = shape[name]
+            assert len(df.inputFiles()) == files, name
+            assert _exchanges(df) == exchanges, name
+            group = f"snapshot-pruned-{name}"
+            with _job_group(spark, group):
+                assert df.toArrow().num_rows == n
+            tasks = _stage_tasks(spark, group)
+            assert tasks[0] == files, (name, tasks)
+            assert tasks[-1] == 1, (name, tasks)
+            if not exchanges:
+                assert tasks == [1], (name, tasks)
 
 
 def test_wide_read_decodes_in_parallel(spark, table):
@@ -215,12 +444,13 @@ def test_wide_read_decodes_in_parallel(spark, table):
     assert tasks[-1] == spark.sparkContext.defaultParallelism, tasks
 
 
-def test_reads_keep_their_shape_without_spare_splits(spark, table):
+def test_reads_keep_their_shape_without_spare_splits(spark, table, bare):
     """No exchange is added when it would save no Python task: a scan with
-    no more splits than the session's parallelism, or a blocks plan that
-    already has an exchange, decodes in the tasks it has."""
+    no more splits than the session's parallelism (here the whole table
+    without per-file zone maps), or a blocks plan that already has an
+    exchange, decodes in the tasks it has."""
     parallelism = spark.sparkContext.defaultParallelism
-    blocks = S.read_blocks_at(spark, table)
+    blocks = S.read_blocks_at(spark, bare)
     assert blocks.rdd.getNumPartitions() <= parallelism
     for name, (df, n) in _reads(blocks).items():
         assert _exchanges(df) == 0, name
