@@ -320,7 +320,8 @@ def encode_int64_column(
     (``codec/int64.py``: delta32 / delta-planes / planes, inner streams
     through the full int32 ladder). Same deterministic chunk contract as
     :func:`encode_scalar_column` — one shuffle on the chunk id, worker
-    memory O(chunk_rows), layout a pure function of the data."""
+    memory O(chunk_rows), layout a pure function of the data. A null value
+    fails the encode with ``ValueError`` naming ``value_col``."""
     from ..codec.int64 import INT64_MODE_NAMES, encode_int64_auto
 
     chunk = (
@@ -334,6 +335,12 @@ def encode_int64_column(
     )
 
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+        # pandas holds a null as NaN, which the int64 cast turns into -2^63
+        if pdf["v"].isna().any():
+            raise ValueError(
+                f"encode_int64_column: column {value_col!r} holds a null, "
+                "which has no int64 encoding"
+            )
         pdf = pdf.sort_values("k", ignore_index=True)
         a = pdf["v"].to_numpy(np.int64)
         payload, mode = encode_int64_auto(a)

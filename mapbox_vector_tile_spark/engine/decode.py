@@ -10,6 +10,7 @@ Round-trip bit-identity is the core contract, the analog of
 
 from __future__ import annotations
 
+import os
 import zlib
 from collections.abc import Iterator
 
@@ -84,9 +85,11 @@ def _checked_lengths(cols: dict, i: int, verify_checksum: bool):
     """``(payload, lengths)`` of blocks row ``i``, where ``cols`` maps the
     :data:`_DECODE_COLS` to their Arrow arrays. The payload CRC is checked
     when asked; the decoded lengths must agree with the row's doc ids and
-    stored ``n_rows`` and sum to its stored ``n_values``, else
-    ``ValueError`` names the chunk by its doc-id span. The payload is a
-    zero-copy view and is not decoded here."""
+    stored ``n_rows`` and sum to its stored ``n_values`` and to the value
+    count in the payload frame's header, else ``ValueError`` names the
+    chunk by its doc-id span. The payload is a zero-copy view and is not
+    decoded here, so a gather of some docs' spans reads a frame that holds
+    every doc."""
     payload = memoryview(cols["payload"][i].as_buffer())
     if verify_checksum and zlib.crc32(payload) != cols["checksum"][i].as_py():
         raise ValueError("payload checksum mismatch (corrupt block)")
@@ -97,9 +100,15 @@ def _checked_lengths(cols: dict, i: int, verify_checksum: bool):
     n_rows = cols["n_rows"][i].as_py()
     n_values = cols["n_values"][i].as_py()
     total = int(lengths.sum())
-    if lengths.size == len(doc_ids) == n_rows and total == n_values:
-        return payload, lengths
     span = f"{doc_ids[0]}..{doc_ids[-1]}" if len(doc_ids) else "no doc ids"
+    if lengths.size == len(doc_ids) == n_rows and total == n_values:
+        n = B.read_frame(payload)[1]
+        if n == total:
+            return payload, lengths
+        raise ValueError(
+            f"chunk [{span}]: payload frame holds {n} values, its "
+            f"{lengths.size} lengths sum to {total}"
+        )
     raise ValueError(
         f"chunk [{span}]: {lengths.size} lengths summing to {total}, "
         f"{len(doc_ids)} doc ids, stored n_rows {n_rows} and "
@@ -128,6 +137,20 @@ def _doc_starts(lengths: np.ndarray) -> np.ndarray:
     starts = np.zeros(lengths.size, dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
     return starts
+
+
+def _picked_docs(cols: dict, i: int, sel, verify_checksum: bool):
+    """``(doc_ids, lengths, values)`` of blocks row ``i``'s docs at the
+    sorted positions ``sel`` (``None``: every doc), after the checks of
+    :func:`_checked_lengths`. Every doc decodes the whole value stream; a
+    subset gathers only its spans."""
+    payload, lengths = _checked_lengths(cols, i, verify_checksum)
+    doc_ids = cols["doc_ids"][i].values
+    if sel is None or sel.size == lengths.size:
+        return doc_ids, lengths, _all_values(payload, lengths)
+    out_lens = lengths[sel]
+    values = _gather_spans(payload, _doc_starts(lengths)[sel], out_lens)
+    return doc_ids.take(pa.array(sel)), out_lens, values
 
 
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
@@ -256,26 +279,56 @@ def _pack_survivors(pruned):
     return pruned
 
 
-def _scan_files_that_can_match(blocks_df, prune):
-    """``blocks_df`` re-read over only the data files ``prune(paths)``
-    keeps, when ``blocks_df`` is a bare parquet file scan (its analyzed
-    plan is one ``LogicalRelation`` with no partition columns); any other
-    frame comes back unchanged. ``prune`` takes and returns local paths;
-    files that are not local ``file:`` URIs are always kept. With every
-    file kept the frame comes back unchanged, and with none kept it is an
-    empty frame with the same schema. Planning starts no Spark job."""
+# The driver-local budget of point and range reads, in bytes. A read
+# decodes in the driver (:func:`_decode_local`) when its kept data files
+# total at most this on disk, and only while the tokens it decodes total at
+# most this too: the first chunk that takes them past it stops the local
+# read, and the read decodes on Spark instead. A driver-local read skips
+# the parquet scan job, the Python task and their planning. In a probe on
+# 4 cores with the benchmark's Spark conf (24 commits of 2 000 docs, each
+# one 0.38 MB file holding one chunk of 1.1 M tokens, 4.4 MB decoded;
+# median process-tree CPU and wall of the read plus ``toArrow()``) it cost
+# less CPU than Spark at every size measured, 1 to 24 files (9.2 MB): one
+# doc per file 0.34/0.51/0.78/1.31 CPU s at 1/6/12/24 files against
+# 0.77/1.60/1.91/2.78, every doc 0.35/1.32/1.94/3.60 against
+# 0.77/1.52/2.71/4.21. It decodes on one core, so its wall time passed
+# Spark's near 2 MB of files when every doc was decoded (about 22 MB of
+# tokens) and near 4-5 MB for one doc per file. 8 MiB stays inside the
+# measured file sizes, and as decoded tokens (2 Mi values, under two such
+# commits) below the point where decoding every doc costs more wall time.
+# Rerun at 8 MiB: one doc of each of 21 files (8.0 MB) stayed local at 1.01
+# CPU s against 2.42 (wall 0.92 s against 0.79); every doc of 2 files
+# (8.8 MB of tokens) stopped and moved to Spark for 1.03 CPU s against a
+# direct 1.00 (wall 0.43 s against 0.36).
+LOCAL_READ_BYTES = 8 << 20
+
+
+def _read_files_that_can_match(blocks_df, prune):
+    """``(scan, paths)`` of a point or range read over ``blocks_df``.
+
+    When ``blocks_df`` is a bare parquet file scan (its analyzed plan is
+    one ``LogicalRelation`` with no partition columns), only the data
+    files ``prune(paths)`` keeps are read; ``prune`` takes and returns
+    local paths, and files that are not local ``file:`` URIs are always
+    kept. ``scan()`` builds the frame that reads them: ``blocks_df`` with
+    every file kept, an empty frame with its schema with none kept, else
+    ``blocks_df`` re-read over the kept files. ``paths`` lists the kept
+    files for a driver-local read when every one is local and they total
+    at most :data:`LOCAL_READ_BYTES` on disk, else it is ``None``. Any
+    other frame gives ``scan()`` = ``blocks_df`` and no ``paths``.
+    Planning starts no Spark job."""
     from urllib.parse import unquote, urlparse
 
     plan = blocks_df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
-        return blocks_df
+        return lambda: blocks_df, None
     rel = plan.relation()
     if (
         rel.getClass().getSimpleName() != "HadoopFsRelation"
         or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
         or rel.partitionSchema().length()
     ):
-        return blocks_df
+        return lambda: blocks_df, None
     uris = list(blocks_df.inputFiles())
     local = {
         u: unquote(urlparse(u).path) for u in uris if u.startswith("file:")
@@ -285,36 +338,91 @@ def _scan_files_that_can_match(blocks_df, prune):
         "file:" + local[u] if u in local else u
         for u in uris if u not in local or local[u] in kept
     ]
-    if len(files) == len(uris):
-        return blocks_df
-    if not files:
-        return blocks_df.limit(0)
-    return blocks_df.sparkSession.read.schema(blocks_df.schema).parquet(*files)
+
+    def scan():
+        if len(files) == len(uris):
+            return blocks_df
+        if not files:
+            return blocks_df.limit(0)
+        spark = blocks_df.sparkSession
+        return spark.read.schema(blocks_df.schema).parquet(*files)
+
+    paths = sorted(kept)
+    if len(files) != len(paths) or (  # a kept file is not local
+        sum(os.path.getsize(p) for p in paths) > LOCAL_READ_BYTES
+    ):
+        paths = None
+    return scan, paths
 
 
-def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
+def _decode_local(spark, paths: list[str], verify_checksum: bool, **pick):
+    """The picked docs of the blocks files ``paths``, decoded in the driver
+    through the direct scan's checked reader and returned as a local
+    DataFrame with :data:`TOKENS_OUT_SPARK_SCHEMA`; ``None`` as soon as
+    the decoded tokens pass :data:`LOCAL_READ_BYTES`, so the driver holds
+    at most that plus one chunk's picked tokens."""
+    from ..sources.parquet_direct import _iter_chunks
+
+    batches, held = [], 0
+    for ids, lengths, values in _iter_chunks(
+        [(p, 0, -1) for p in paths], verify_checksum=verify_checksum, **pick
+    ):
+        held += values.nbytes
+        if held > LOCAL_READ_BYTES:
+            return None
+        batches.append(tokens_batch(ids, lengths, values))
+    if not batches:  # pyspark cannot convert a table with no batches
+        batches = [pa.RecordBatch.from_pylist([], schema=_OUT_ARROW_SCHEMA)]
+    table = pa.Table.from_batches(batches)
+    return spark.createDataFrame(table, TOKENS_OUT_SPARK_SCHEMA)
+
+
+def decode_doc_range(
+    blocks_df,
+    lo: str,
+    hi: str,
+    *,
+    verify_checksum: bool = True,
+    with_source: bool = False,
+    transform=None,
+):
     """Selective decode of ``doc_id in [lo, hi)`` via zone-map pruning.
-
-    Chunks whose ``[min_doc_id, max_doc_id]`` span does not intersect the
-    requested range are dropped BEFORE decode by a Catalyst filter on the
-    blocks scan — on a parquet/Iceberg blocks table the predicate reaches
-    the reader (``PushedFilters``), so pruned row groups never read their
-    ``payload`` bytes at all. Surviving chunks decode normally and a row
-    filter trims boundary chunks that straddle the range.
 
     Task shape: first, on the driver, a bare parquet scan drops every data
     file whose doc-id envelope in its directory's ``_manifest.json`` (a
     snapshot commit's or the direct sink's) misses the range
-    (:func:`_scan_files_that_can_match`), so a range inside one commit of
-    a many-file snapshot table scans one file in one task, with no
-    exchange. Files without recorded envelopes, and frames with any
-    operator above the scan, are scanned whole. Then the zone-map filter
-    runs in the parallel scan, one task per file split, and pruned row
-    groups never leave it. When the scan still has more splits than the
-    session's default parallelism, the survivors' encoded rows cross one
-    ``rebalance`` exchange into fewer Python tasks (see
-    :func:`_pack_survivors`). Otherwise each scan task decodes its own
-    survivors.
+    (:func:`_read_files_that_can_match`). When the kept files are local and
+    total at most :data:`LOCAL_READ_BYTES` (8 MiB) on disk, the driver
+    reads them with pyarrow and decodes them through the direct scan's
+    checked reader (``parquet_direct._iter_chunks``): chunks whose zone map
+    misses the range keep their payload untouched, boundary chunks gather
+    only the docs inside it, and every touched chunk has its CRC (unless
+    ``verify_checksum`` is false) and stored counts checked. The result is
+    a local DataFrame with :data:`TOKENS_OUT_SPARK_SCHEMA`, and no Spark
+    job or Python task runs until an action reads it. The trade: this read
+    is eager, so a corrupt or miscounted chunk raises here rather than at
+    the action, and the decode time moves from the action into this call
+    (in a traced read, from the ``decode.exec`` span into
+    ``decode.plan``). The budget bounds the driver's memory: it reads the
+    kept files a few chunks at a time and holds at most the budget of
+    decoded tokens plus one chunk's worth; a read whose tokens pass the
+    budget stops there and decodes on Spark. ``createDataFrame`` then
+    holds a second copy of the tokens in the driver's JVM, and the result
+    is still a DataFrame.
+
+    Larger reads, non-local files, frames with any operator above the
+    scan, and calls with ``with_source`` or ``transform`` decode on Spark.
+    Chunks whose ``[min_doc_id, max_doc_id]`` span does not intersect the
+    range are dropped BEFORE decode by a Catalyst filter on the blocks scan
+    — on a parquet/Iceberg blocks table the predicate reaches the reader
+    (``PushedFilters``), so pruned row groups never read their ``payload``
+    bytes at all. That
+    filter runs in the parallel scan, one task per file split. When the
+    scan still has more splits than the session's default parallelism,
+    the survivors' encoded rows cross one ``rebalance`` exchange into
+    fewer Python tasks (see :func:`_pack_survivors`). Otherwise each scan
+    task decodes its own survivors, and a row filter trims boundary chunks
+    that straddle the range.
 
     The point-lookup / range-scan analog of the reference decoding a single
     requested layer out of a multi-layer tile rather than the whole tile
@@ -328,13 +436,22 @@ def decode_doc_range(blocks_df, lo: str, hi: str, **decode_kwargs):
 
     from ..sources.parquet_direct import prune_files_by_doc_range
 
-    blocks_df = _scan_files_that_can_match(
+    scan, paths = _read_files_that_can_match(
         blocks_df, lambda files: prune_files_by_doc_range(files, lo, hi)
     )
-    pruned = blocks_df.filter(
+    if paths is not None and not with_source and transform is None:
+        out = _decode_local(
+            blocks_df.sparkSession, paths, verify_checksum, doc_range=(lo, hi)
+        )
+        if out is not None:
+            return out
+    pruned = scan().filter(
         (F.col("max_doc_id") >= lo) & (F.col("min_doc_id") < hi)
     )
-    out = decode_dataframe(_pack_survivors(pruned), **decode_kwargs)
+    out = decode_dataframe(
+        _pack_survivors(pruned), verify_checksum=verify_checksum,
+        with_source=with_source, transform=transform,
+    )
     return out.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
 
@@ -342,8 +459,31 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     """Point-lookup decode: tokens of an explicit ``doc_id`` set.
 
     The random-access read path of the store — "show me these training
-    examples" — without a corpus scan. Three pruning layers, cheapest
-    first:
+    examples" — without a corpus scan.
+
+    Task shape: first, on the driver, a bare parquet scan drops every data
+    file whose doc-id envelope in its directory's ``_manifest.json`` holds
+    none of the ids (:func:`_read_files_that_can_match`). When the kept
+    files are local and total at most :data:`LOCAL_READ_BYTES` (8 MiB) on
+    disk, the driver reads them with pyarrow and decodes them through the
+    direct scan's checked reader (``parquet_direct._iter_chunks``): a chunk
+    whose zone map or doc ids hold none of the ids keeps its payload
+    untouched, and every other chunk has its CRC (unless
+    ``verify_checksum`` is false) and stored counts checked and gathers
+    only the wanted docs' spans. The result is a local DataFrame with
+    :data:`TOKENS_OUT_SPARK_SCHEMA`, and no Spark job or Python task runs
+    until an action reads it. The trade: this read is eager, so a corrupt
+    or miscounted chunk raises here rather than at the action, and the
+    decode time moves from the action into this call (in a traced read,
+    from the ``decode.exec`` span into ``decode.plan``). The budget bounds
+    the driver's memory: it reads the kept files a few chunks at a time
+    and holds at most the budget of decoded tokens plus one chunk's worth;
+    a read whose tokens pass the budget stops there and decodes on Spark.
+    ``createDataFrame`` then holds a second copy of the tokens in the
+    driver's JVM, and the result is still a DataFrame.
+
+    Larger reads, non-local files and frames with any operator above the
+    scan decode on Spark, with three pruning layers, cheapest first:
 
     1. a Catalyst range filter on the id set's global envelope
        ``[min(ids), max(ids)]`` over the zone-map columns — this one is a
@@ -363,19 +503,12 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
        value stream; a one-doc lookup in a sequential-codec chunk still
        decodes once but ships one doc across Arrow/JVM).
 
-    Task shape: first, on the driver, a bare parquet scan drops every data
-    file whose doc-id envelope in its directory's ``_manifest.json`` holds
-    none of the ids (:func:`_scan_files_that_can_match`), so ids of one
-    commit of a many-file snapshot table scan one file in one task, with
-    no exchange. Files without recorded envelopes, and frames with any
-    operator above the scan, are scanned whole. Then layers 1 and 2 run in
-    the parallel scan, one task per file split, so pruned row groups never
-    leave it. When the scan still has more splits than the session's
-    default parallelism, the survivors' encoded rows cross one
-    ``rebalance`` exchange into fewer Python tasks (see
-    :func:`_pack_survivors`): a few ids scattered over a many-file table
-    decode in one Python task, not one per file. Otherwise each scan task
-    runs layer 3 itself.
+    Layers 1 and 2 run in the parallel scan, one task per file split, so
+    pruned row groups never leave it. When the scan still has more splits
+    than the session's default parallelism, the survivors' encoded rows
+    cross one ``rebalance`` exchange into fewer Python tasks (see
+    :func:`_pack_survivors`). Otherwise each scan task runs layer 3
+    itself.
 
     ``ids`` must be point-lookup sized (the literal array and the broadcast
     of it bound the driver plan; ~10^4 is comfortable). For bulk subsets
@@ -391,16 +524,22 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     ids = sorted(set(ids))
     if not ids:
         raise ValueError("ids must be a non-empty collection of doc ids")
-    blocks_df = _scan_files_that_can_match(
+    scan, paths = _read_files_that_can_match(
         blocks_df, lambda files: prune_files_by_doc_ids(files, ids)
     )
+    if paths is not None:
+        out = _decode_local(
+            blocks_df.sparkSession, paths, verify_checksum, doc_ids=ids
+        )
+        if out is not None:
+            return out
 
     want = F.filter(
         F.array(*[F.lit(d) for d in ids]),
         lambda d: (d >= F.col("min_doc_id")) & (d <= F.col("max_doc_id")),
     )
     hit = (
-        blocks_df.filter(
+        scan().filter(
             (F.col("max_doc_id") >= ids[0]) & (F.col("min_doc_id") <= ids[-1])
         )
         .select(*_DECODE_COLS, want.alias("__want"))
@@ -468,9 +607,9 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
 
 def _decode_wanted(verify_checksum: bool):
     """``mapInArrow`` function over blocks rows that carry a ``__want`` id
-    array: each row's docs whose ids are in ``__want``, gathered after the
-    checks of :func:`_checked_lengths`. A row none of whose docs is wanted
-    decodes neither its lengths nor its payload."""
+    array: each row's docs whose ids are in ``__want``, read through
+    :func:`_picked_docs`. A row none of whose docs is wanted decodes
+    neither its lengths nor its payload."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
@@ -479,17 +618,14 @@ def _decode_wanted(verify_checksum: bool):
             cols = {c: batch.column(c) for c in _DECODE_COLS}
             wants = batch.column("__want")
             for i in range(batch.num_rows):
-                doc_ids = cols["doc_ids"][i].values
-                hit = pc.is_in(doc_ids, value_set=wants[i].values)
-                sel = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
-                if not sel.size:
-                    continue
-                payload, lengths = _checked_lengths(cols, i, verify_checksum)
-                out_lens = lengths[sel]
-                values = _gather_spans(
-                    payload, _doc_starts(lengths)[sel], out_lens
+                hit = pc.is_in(
+                    cols["doc_ids"][i].values, value_set=wants[i].values
                 )
-                yield tokens_batch(doc_ids.filter(hit), out_lens, values)
+                sel = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
+                if sel.size:
+                    yield tokens_batch(
+                        *_picked_docs(cols, i, sel, verify_checksum)
+                    )
 
     return fn
 

@@ -123,6 +123,24 @@ def _prune_files(files: list[str], can_match) -> list[str]:
     return keep
 
 
+def _range_can_match(lo: str | None, hi: str | None):
+    """Envelope test of the half-open range ``[lo, hi)`` (either end
+    ``None``): can a ``[mn, mx]`` zone map hold a doc of it?"""
+    return lambda mn, mx: (hi is None or mn < hi) and (lo is None or mx >= lo)
+
+
+def _ids_can_match(ids: list[str]):
+    """Envelope test of the sorted ``ids``: does ``[mn, mx]`` hold one of
+    them (one ``bisect``)?"""
+    from bisect import bisect_left
+
+    def can_match(mn, mx):
+        i = bisect_left(ids, mn)
+        return i < len(ids) and ids[i] <= mx
+
+    return can_match
+
+
 def prune_files_by_doc_range(
     files: list[str], lo: str | None, hi: str | None
 ) -> list[str]:
@@ -132,23 +150,13 @@ def prune_files_by_doc_range(
     turns a range query's planning cost from O(all files) into O(matching
     files + manifest read); the surviving files' row groups still prune
     again at the parquet level via the pushed zone-map predicate."""
-    return _prune_files(
-        files,
-        lambda mn, mx: (hi is None or mn < hi) and (lo is None or mx >= lo),
-    )
+    return _prune_files(files, _range_can_match(lo, hi))
 
 
 def prune_files_by_doc_ids(files: list[str], ids: list[str]) -> list[str]:
-    """Drop files whose manifest zone map holds none of the sorted ``ids``
-    (one ``bisect`` per file); files without stats are kept, as in
-    :func:`prune_files_by_doc_range`."""
-    from bisect import bisect_left
-
-    def can_match(mn, mx):
-        i = bisect_left(ids, mn)
-        return i < len(ids) and ids[i] <= mx
-
-    return _prune_files(files, can_match)
+    """Drop files whose manifest zone map holds none of the sorted ``ids``;
+    files without stats are kept, as in :func:`prune_files_by_doc_range`."""
+    return _prune_files(files, _ids_can_match(ids))
 
 
 def blocks_scan(
@@ -374,18 +382,26 @@ def _iter_chunks(
     items: list[tuple[str, int, int]],
     tokens: bool = False,
     doc_range: tuple[str, str] | None = None,
+    doc_ids: list[str] | None = None,
+    verify_checksum: bool = True,
 ):
     """Yield ``(doc_ids, lengths, values)`` per chunk of one task's
     ``(path, lo, hi)`` items: one per blocks row (CRC-checked decode), or
     one per record batch of a tokens table (``tokens=True``).
 
-    Counts are checked at this boundary: each blocks row must decode to its
-    stored ``n_rows`` docs (and as many doc ids) and ``n_values`` tokens,
-    and a row range must read exactly ``hi - lo`` rows; a mismatch raises
-    ``ValueError`` naming the file and row. ``doc_range=(lo, hi)`` skips
-    blocks rows whose ``[min_doc_id, max_doc_id]`` zone map misses the
-    range without touching their payload, and trims boundary chunks to the
-    docs inside it."""
+    Counts are checked at this boundary (``decode._picked_docs``): each
+    blocks row's lengths must agree with its stored ``n_rows`` and
+    ``n_values`` and its doc ids, its payload must hold their sum, its CRC
+    must match unless ``verify_checksum`` is false, and a row range must
+    read exactly ``hi - lo`` rows; a mismatch raises ``ValueError`` naming
+    the file and row.
+
+    A doc picker, ``doc_range=(lo, hi)`` or the sorted ``doc_ids``, makes
+    this a selective read of blocks: a row whose ``[min_doc_id,
+    max_doc_id]`` zone map misses the picker, or none of whose doc ids it
+    picks, is skipped without touching its payload; a row with every doc
+    picked decodes whole, and any other row gathers only the picked docs'
+    spans. Without a picker every row decodes whole."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -397,8 +413,21 @@ def _iter_chunks(
     else:
         cols, batch_size = list(D._DECODE_COLS), 64
     if doc_range is not None:
-        cols += ["min_doc_id", "max_doc_id"]
+        can_match = _range_can_match(*doc_range)
         id_lo, id_hi = doc_range
+
+        def picked(ids):
+            return pc.and_(pc.greater_equal(ids, id_lo), pc.less(ids, id_hi))
+    elif doc_ids is not None:
+        can_match = _ids_can_match(doc_ids)
+        value_set = pa.array(doc_ids, pa.string())
+
+        def picked(ids):
+            return pc.is_in(ids, value_set=value_set)
+    else:
+        can_match = None
+    if can_match is not None:
+        cols += ["min_doc_id", "max_doc_id"]
     for path, lo, hi in items:
         row = lo
         for batch in _read_block_batches(path, cols, lo, hi, batch_size):
@@ -409,37 +438,31 @@ def _iter_chunks(
                 )
                 continue
             arrays = {c: batch.column(c) for c in D._DECODE_COLS}
-            if doc_range is not None:
+            if can_match is not None:
                 zmin = batch.column("min_doc_id").to_pylist()
                 zmax = batch.column("max_doc_id").to_pylist()
             for i in range(batch.num_rows):
-                # null zone map (empty-doc_ids chunk or pre-zonemap
-                # writer) -> conservative keep
-                if (doc_range is not None and zmin[i] is not None
-                        and zmax[i] is not None
-                        and (zmax[i] < id_lo or zmin[i] >= id_hi)):
-                    continue  # zone map: payload untouched
+                sel = None
+                if can_match is not None:
+                    # null zone map (empty-doc_ids chunk or pre-zonemap
+                    # writer): only its doc ids can rule it out
+                    if (zmin[i] is not None and zmax[i] is not None
+                            and not can_match(zmin[i], zmax[i])):
+                        continue  # zone map: payload untouched
+                    sel = np.flatnonzero(
+                        picked(arrays["doc_ids"][i].values)
+                        .to_numpy(zero_copy_only=False)
+                    )
+                    if not sel.size:
+                        continue  # no picked doc: payload untouched
                 try:
-                    payload, lengths = D._checked_lengths(arrays, i, True)
-                    values = D._all_values(payload, lengths)
+                    chunk = D._picked_docs(arrays, i, sel, verify_checksum)
                 except ValueError as e:
                     raise ValueError(
                         f"{path} row {base + i}: decoded block disagrees "
                         f"with the row: {e}"
                     ) from e
-                doc_ids = arrays["doc_ids"][i].values
-                if doc_range is not None:
-                    keep = pc.and_(
-                        pc.greater_equal(doc_ids, id_lo),
-                        pc.less(doc_ids, id_hi),
-                    ).to_numpy(zero_copy_only=False)
-                    if not keep.any():
-                        continue
-                    if not keep.all():
-                        values = values[np.repeat(keep, lengths)]
-                        lengths = lengths[keep]
-                        doc_ids = doc_ids.filter(pa.array(keep))
-                yield doc_ids, lengths, values
+                yield chunk
         if hi >= 0 and row != hi:
             raise ValueError(
                 f"{path}: read {row - lo} rows of the planned range "

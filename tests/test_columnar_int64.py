@@ -96,6 +96,17 @@ def test_spark_roundtrip_events_ts(spark):
     assert got == want
 
 
+def test_null_value_is_refused_not_stored(spark):
+    """A null value has no int64 encoding: the encoder fails and names the
+    column instead of storing it as -2^63 (pandas turns the null into NaN,
+    which ``to_numpy(np.int64)`` casts to -2^63)."""
+    df = spark.createDataFrame(
+        list(enumerate([1, 2, 3, 2**40, None, 7])), "k long, v long"
+    )
+    with pytest.raises(Exception, match="column 'v' holds a null"):
+        decode_int64_column(encode_int64_column(df, "v", "k", 4)).collect()
+
+
 def test_rollup_shape(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")
