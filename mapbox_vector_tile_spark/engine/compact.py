@@ -44,7 +44,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from ..codec.strings import decode_string_chunk
-from .decode import _all_values, _checked_lengths
+from .decode import _read_rows
 from .encode import (
     _BLOCKS_ARROW_SCHEMA,
     BLOCKS_SPARK_SCHEMA,
@@ -119,14 +119,14 @@ def compact_blocks(
                     "source_blob and others do not"
                 )
             parts = _BucketAcc()
-            for m, blob in zip(members, blobs):
-                payload, lengths = _checked_lengths(
-                    m["_cols"], m["_i"], verify_checksum
-                )
+            rows = _read_rows(
+                [m["_row"] for m in members], verify_checksum, flush=(0, 0)
+            )
+            for blob, (ids, lengths, values, _) in zip(blobs, rows):
                 parts.add(
-                    m["doc_ids"],
+                    ids,
                     lengths,
-                    _all_values(payload, lengths),
+                    values,
                     None if blob is None
                     else pa.array(decode_string_chunk(blob), pa.string()),
                 )
@@ -172,7 +172,7 @@ def compact_blocks(
                 m["doc_ids"] = cols["doc_ids"][i].values
                 m["_group"] = key[1]
                 # the member's Arrow row, for the checked decode
-                m["_cols"], m["_i"] = cols, i
+                m["_row"] = batch.slice(i, 1)
                 members.append(m)
             b = flush()
             if b is not None:

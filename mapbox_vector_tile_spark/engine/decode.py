@@ -132,25 +132,32 @@ def _gather_spans(payload, starts: np.ndarray, out_lens: np.ndarray):
     return decode_block_gather(payload, idx)[0]
 
 
-def _doc_starts(lengths: np.ndarray) -> np.ndarray:
-    """Flat start position of each doc in its chunk's value stream."""
-    starts = np.zeros(lengths.size, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=starts[1:])
-    return starts
-
-
-def _picked_docs(cols: dict, i: int, sel, verify_checksum: bool):
-    """``(doc_ids, lengths, values)`` of blocks row ``i``'s docs at the
-    sorted positions ``sel`` (``None``: every doc), after the checks of
-    :func:`_checked_lengths`. Every doc decodes the whole value stream; a
-    subset gathers only its spans."""
+def _picked_docs(cols: dict, i: int, sel, verify_checksum: bool, trim=None):
+    """``(doc_ids, lengths, values, n_tok)`` of blocks row ``i``'s docs at
+    the sorted positions ``sel`` (``None``: every doc), after the checks of
+    :func:`_checked_lengths`. ``trim=(k, tail)`` keeps each doc's first
+    (last when ``tail``) ``min(k, n_tok)`` values; ``n_tok`` stays the
+    doc's length. Every doc untrimmed decodes the whole value stream; a
+    subset or a trim gathers only its spans (spans are disjoint and
+    ascending because doc spans are)."""
     payload, lengths = _checked_lengths(cols, i, verify_checksum)
     doc_ids = cols["doc_ids"][i].values
-    if sel is None or sel.size == lengths.size:
-        return doc_ids, lengths, _all_values(payload, lengths)
-    out_lens = lengths[sel]
-    values = _gather_spans(payload, _doc_starts(lengths)[sel], out_lens)
-    return doc_ids.take(pa.array(sel)), out_lens, values
+    if sel is not None and sel.size == lengths.size:
+        sel = None
+    if sel is None and trim is None:
+        return doc_ids, lengths, _all_values(payload, lengths), lengths
+    starts, n_tok = np.zeros(lengths.size, dtype=np.int64), lengths
+    np.cumsum(lengths[:-1], out=starts[1:])
+    if sel is not None:
+        doc_ids = doc_ids.take(pa.array(sel))
+        starts, n_tok = starts[sel], lengths[sel]
+    out_lens = n_tok
+    if trim is not None:
+        k, tail = trim
+        out_lens = np.minimum(n_tok, k)
+        if tail:
+            starts = starts + (n_tok - out_lens)
+    return doc_ids, out_lens, _gather_spans(payload, starts, out_lens), n_tok
 
 
 # decode output batching: one Arrow batch per CHUNK is the zero-copy ideal
@@ -161,6 +168,162 @@ def _picked_docs(cols: dict, i: int, sel, verify_checksum: bool):
 # chunks are small); a chunk at/over it keeps the direct no-copy path.
 DECODE_FLUSH_VALUES = 1 << 18
 DECODE_FLUSH_ROWS = 1 << 12
+
+
+def _read_rows(
+    batches,
+    verify_checksum: bool,
+    pick=None,
+    trim=None,
+    label=None,
+    with_source: bool = False,
+    flush=None,
+):
+    """The one checked reader of blocks rows: ``(doc_ids, lengths, values,
+    n_tok[, source])`` for the picked docs of the blocks record
+    ``batches`` (from a ``mapInArrow`` task or a pyarrow file read).
+
+    ``pick(batch, i)`` chooses row ``i``'s docs: ``None`` skips the row
+    without touching its lengths or payload, else the sorted positions of
+    the picked docs (all of them: the whole row); with no picker every doc
+    of every row is read. ``trim=(k, tail)`` keeps the first (last) ``k``
+    values of each picked doc. Each read row goes through
+    :func:`_picked_docs`, and a ``ValueError`` from its checks is prefixed
+    with ``label(r)``, ``r`` counting the rows of ``batches``.
+    ``with_source`` adds the picked docs' source strings (blocks encoded
+    with ``string_col``).
+
+    Outputs are batched by ``flush=(values, docs)``, the
+    :data:`DECODE_FLUSH_VALUES`/:data:`DECODE_FLUSH_ROWS` defaults read
+    when the reader starts: a row at or over either size is yielded on its
+    own with no copy, smaller ones accumulate and are yielded joined once
+    they reach it. ``(0, 0)`` yields one output per read row."""
+    from ..codec.strings import decode_string_chunk
+
+    flush_values, flush_docs = flush or (DECODE_FLUSH_VALUES, DECODE_FLUSH_ROWS)
+    held: list[tuple] = []
+    n_values = n_docs = base = 0
+    for batch in batches:
+        cols = {c: batch.column(c) for c in _DECODE_COLS}
+        for i in range(batch.num_rows):
+            sel = None
+            if pick is not None:
+                sel = pick(batch, i)
+                if sel is None:
+                    continue  # not picked: lengths and payload untouched
+            try:
+                out = _picked_docs(cols, i, sel, verify_checksum, trim)
+            except ValueError as e:
+                if label is None:
+                    raise
+                raise ValueError(
+                    f"{label(base + i)}: decoded block disagrees with the "
+                    f"row: {e}"
+                ) from e
+            if with_source:
+                blob = batch.column("source_blob")[i].as_py()
+                if blob is None:
+                    raise ValueError("blocks were encoded without string_col")
+                src = pa.array(decode_string_chunk(blob), pa.string())
+                out += (src if sel is None else src.take(pa.array(sel)),)
+            size, docs = out[2].size, out[1].size
+            if not held and (size >= flush_values or docs >= flush_docs):
+                yield out
+                continue
+            held.append(out)
+            n_values += size
+            n_docs += docs
+            if n_values >= flush_values or n_docs >= flush_docs:
+                yield _joined(held)
+                held.clear()
+                n_values = n_docs = 0
+        base += batch.num_rows
+    if held:
+        yield _joined(held)
+
+
+def _joined(outputs: list[tuple]) -> tuple:
+    """One output of :func:`_read_rows` from several, field by field."""
+    return outputs[0] if len(outputs) == 1 else tuple(
+        pa.concat_arrays(f) if isinstance(f[0], pa.Array) else np.concatenate(f)
+        for f in zip(*outputs)
+    )
+
+
+def _positions(mask) -> np.ndarray | None:
+    """The set positions of a boolean Arrow ``mask``; ``None`` if none."""
+    sel = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+    return sel if sel.size else None
+
+
+def _pick_wanted(batch, i):
+    """Picker of the docs whose ids are in row ``i``'s ``__want`` array."""
+    import pyarrow.compute as pc
+
+    return _positions(pc.is_in(
+        batch.column("doc_ids")[i].values,
+        value_set=batch.column("__want")[i].values,
+    ))
+
+
+def _zone_picker(can_match, test):
+    """Picker of the docs whose ids pass ``test``: a row whose
+    ``[min_doc_id, max_doc_id]`` zone map fails ``can_match(mn, mx)`` is
+    skipped before its doc ids are read. A null zone map (a chunk with no
+    doc ids, or a writer that kept none) leaves it to the doc ids."""
+
+    def pick(batch, i):
+        mn = batch.column("min_doc_id")[i].as_py()
+        mx = batch.column("max_doc_id")[i].as_py()
+        if mn is not None and mx is not None and not can_match(mn, mx):
+            return None
+        return _positions(test(batch.column("doc_ids")[i].values))
+
+    return pick
+
+
+def _range_picker(lo: str, hi: str):
+    """Picker of the docs with ids in ``[lo, hi)``."""
+    import pyarrow.compute as pc
+
+    from ..sources.parquet_direct import _range_can_match
+
+    return _zone_picker(
+        _range_can_match(lo, hi),
+        lambda ids: pc.and_(pc.greater_equal(ids, lo), pc.less(ids, hi)),
+    )
+
+
+def _ids_picker(ids: list[str]):
+    """Picker of the docs with ids in the sorted ``ids``."""
+    import pyarrow.compute as pc
+
+    from ..sources.parquet_direct import _ids_can_match
+
+    value_set = pa.array(ids, pa.string())
+    return _zone_picker(
+        _ids_can_match(ids), lambda d: pc.is_in(d, value_set=value_set)
+    )
+
+
+def _decode_frame(
+    df, verify_checksum: bool, cols=(), with_source=False, pick=None, trim=None
+):
+    """``df``'s blocks rows decoded on Spark: one ``mapInArrow`` over
+    :data:`_DECODE_COLS` plus ``cols`` (the columns ``pick`` reads) through
+    :func:`_read_rows`, with the flush sizes of the calling process."""
+    flush = (DECODE_FLUSH_VALUES, DECODE_FLUSH_ROWS)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for ids, lengths, values, n_tok, *src in _read_rows(
+            batches, verify_checksum, pick, trim,
+            with_source=with_source, flush=flush,
+        ):
+            yield tokens_batch(ids, lengths, values, *src, n_tok=n_tok)
+
+    cols = _DECODE_COLS + list(cols) + (["source_blob"] if with_source else [])
+    schema = TOKENS_SRC_OUT_SPARK_SCHEMA if with_source else TOKENS_OUT_SPARK_SCHEMA
+    return df.select(*cols).mapInArrow(fn, schema)
 
 
 def decode_dataframe(
@@ -183,70 +346,7 @@ def decode_dataframe(
     decoder.py:146-149); e.g. ``verify.inverse_transform_tokens`` to map a
     remapped vocabulary back to the original. Applied as a Catalyst
     expression over the decoded frame, so it stays JVM-side."""
-
-    _FLUSH_VALUES = DECODE_FLUSH_VALUES
-    _FLUSH_ROWS = DECODE_FLUSH_ROWS
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec.strings import decode_string_chunk
-
-        b_docs: list = []
-        b_lens: list = []
-        b_vals: list = []
-        b_srcs: list = []
-        b_nvals = b_nrows = 0
-
-        def flush():
-            nonlocal b_nvals, b_nrows
-            out = tokens_batch(
-                pa.concat_arrays(b_docs) if len(b_docs) > 1 else b_docs[0],
-                np.concatenate(b_lens) if len(b_lens) > 1 else b_lens[0],
-                np.concatenate(b_vals) if len(b_vals) > 1 else b_vals[0],
-                (pa.concat_arrays(b_srcs) if len(b_srcs) > 1 else b_srcs[0])
-                if with_source else None,
-            )
-            b_docs.clear(); b_lens.clear(); b_vals.clear(); b_srcs.clear()
-            b_nvals = b_nrows = 0
-            return out
-
-        for batch in batches:
-            cols = {c: batch.column(c) for c in _DECODE_COLS}
-            doc_ids_col = cols["doc_ids"]
-            src_col = batch.column("source_blob") if with_source else None
-            for i in range(batch.num_rows):
-                payload, lengths = _checked_lengths(cols, i, verify_checksum)
-                values = _all_values(payload, lengths)
-                srcs = None
-                if with_source:
-                    blob = src_col[i].as_py()
-                    if blob is None:
-                        raise ValueError(
-                            "blocks were encoded without string_col"
-                        )
-                    srcs = pa.array(decode_string_chunk(blob), pa.string())
-                if (
-                    not b_docs
-                    and (values.size >= _FLUSH_VALUES
-                         or lengths.size >= _FLUSH_ROWS)
-                ):
-                    yield tokens_batch(doc_ids_col[i].values, lengths,
-                                       values, srcs)
-                    continue
-                b_docs.append(doc_ids_col[i].values)
-                b_lens.append(lengths)
-                b_vals.append(values)
-                if with_source:
-                    b_srcs.append(srcs)
-                b_nvals += values.size
-                b_nrows += lengths.size
-                if b_nvals >= _FLUSH_VALUES or b_nrows >= _FLUSH_ROWS:
-                    yield flush()
-        if b_docs:
-            yield flush()
-
-    cols = _DECODE_COLS + (["source_blob"] if with_source else [])
-    schema_str = TOKENS_SRC_OUT_SPARK_SCHEMA if with_source else TOKENS_OUT_SPARK_SCHEMA
-    out = blocks_df.select(*cols).mapInArrow(fn, schema_str)
+    out = _decode_frame(blocks_df, verify_checksum, with_source=with_source)
     return transform(out) if transform is not None else out
 
 
@@ -355,17 +455,24 @@ def _read_files_that_can_match(blocks_df, prune):
     return scan, paths
 
 
-def _decode_local(spark, paths: list[str], verify_checksum: bool, **pick):
-    """The picked docs of the blocks files ``paths``, decoded in the driver
-    through the direct scan's checked reader and returned as a local
-    DataFrame with :data:`TOKENS_OUT_SPARK_SCHEMA`; ``None`` as soon as
-    the decoded tokens pass :data:`LOCAL_READ_BYTES`, so the driver holds
-    at most that plus one chunk's picked tokens."""
+def _decode_local(spark, paths: list[str], verify_checksum: bool, pick):
+    """The docs ``pick`` picks from the blocks files ``paths``, decoded in
+    the driver through the direct scan's checked reader and returned as a
+    local DataFrame with :data:`TOKENS_OUT_SPARK_SCHEMA`: no Spark job or
+    Python task runs until an action reads it. ``None`` as soon as the
+    decoded tokens pass :data:`LOCAL_READ_BYTES`, so the driver holds at
+    most that plus one output batch (and ``createDataFrame`` a second copy
+    in its JVM); the read then decodes on Spark.
+
+    The trade: this read is eager, so a corrupt or miscounted chunk raises
+    when the read is built rather than at the action, and the decode time
+    moves from the action into the call (in a traced read, from the
+    ``decode.exec`` span into ``decode.plan``)."""
     from ..sources.parquet_direct import _iter_chunks
 
     batches, held = [], 0
-    for ids, lengths, values in _iter_chunks(
-        [(p, 0, -1) for p in paths], verify_checksum=verify_checksum, **pick
+    for ids, lengths, values, _ in _iter_chunks(
+        [(p, 0, -1) for p in paths], verify_checksum, pick
     ):
         held += values.nbytes
         if held > LOCAL_READ_BYTES:
@@ -388,41 +495,28 @@ def decode_doc_range(
 ):
     """Selective decode of ``doc_id in [lo, hi)`` via zone-map pruning.
 
-    Task shape: first, on the driver, a bare parquet scan drops every data
+    Task shape: on the driver, a bare parquet scan first drops every data
     file whose doc-id envelope in its directory's ``_manifest.json`` (a
     snapshot commit's or the direct sink's) misses the range
-    (:func:`_read_files_that_can_match`). When the kept files are local and
-    total at most :data:`LOCAL_READ_BYTES` (8 MiB) on disk, the driver
-    reads them with pyarrow and decodes them through the direct scan's
-    checked reader (``parquet_direct._iter_chunks``): chunks whose zone map
-    misses the range keep their payload untouched, boundary chunks gather
-    only the docs inside it, and every touched chunk has its CRC (unless
-    ``verify_checksum`` is false) and stored counts checked. The result is
-    a local DataFrame with :data:`TOKENS_OUT_SPARK_SCHEMA`, and no Spark
-    job or Python task runs until an action reads it. The trade: this read
-    is eager, so a corrupt or miscounted chunk raises here rather than at
-    the action, and the decode time moves from the action into this call
-    (in a traced read, from the ``decode.exec`` span into
-    ``decode.plan``). The budget bounds the driver's memory: it reads the
-    kept files a few chunks at a time and holds at most the budget of
-    decoded tokens plus one chunk's worth; a read whose tokens pass the
-    budget stops there and decodes on Spark. ``createDataFrame`` then
-    holds a second copy of the tokens in the driver's JVM, and the result
-    is still a DataFrame.
+    (:func:`_read_files_that_can_match`). Every read then decodes through
+    the checked row reader (:func:`_read_rows`) with a range picker: a
+    chunk whose zone map misses the range keeps its payload untouched, a
+    boundary chunk gathers only the docs inside it (and, with
+    ``with_source``, their source strings), and every touched chunk has its
+    CRC (unless ``verify_checksum`` is false) and stored counts checked.
 
-    Larger reads, non-local files, frames with any operator above the
-    scan, and calls with ``with_source`` or ``transform`` decode on Spark.
-    Chunks whose ``[min_doc_id, max_doc_id]`` span does not intersect the
-    range are dropped BEFORE decode by a Catalyst filter on the blocks scan
-    — on a parquet/Iceberg blocks table the predicate reaches the reader
-    (``PushedFilters``), so pruned row groups never read their ``payload``
-    bytes at all. That
-    filter runs in the parallel scan, one task per file split. When the
-    scan still has more splits than the session's default parallelism,
-    the survivors' encoded rows cross one ``rebalance`` exchange into
-    fewer Python tasks (see :func:`_pack_survivors`). Otherwise each scan
-    task decodes its own survivors, and a row filter trims boundary chunks
-    that straddle the range.
+    When the kept files are local and total at most
+    :data:`LOCAL_READ_BYTES` (8 MiB) on disk, the driver reads them with
+    pyarrow and decodes them, eagerly (:func:`_decode_local` states the
+    trade). Larger reads, non-local files, frames with any operator above
+    the scan, and calls with ``with_source`` or ``transform`` decode on
+    Spark: a Catalyst filter on ``[min_doc_id, max_doc_id]`` drops the
+    chunks that miss the range in the parallel scan (on a parquet/Iceberg
+    blocks table it reaches the reader as ``PushedFilters``, so pruned row
+    groups never read their ``payload`` bytes), and the survivors decode in
+    the scan's tasks, or behind one ``rebalance`` exchange when the scan
+    has more splits than the session's default parallelism
+    (:func:`_pack_survivors`).
 
     The point-lookup / range-scan analog of the reference decoding a single
     requested layer out of a multi-layer tile rather than the whole tile
@@ -439,20 +533,19 @@ def decode_doc_range(
     scan, paths = _read_files_that_can_match(
         blocks_df, lambda files: prune_files_by_doc_range(files, lo, hi)
     )
+    pick = _range_picker(lo, hi)
     if paths is not None and not with_source and transform is None:
-        out = _decode_local(
-            blocks_df.sparkSession, paths, verify_checksum, doc_range=(lo, hi)
-        )
+        out = _decode_local(blocks_df.sparkSession, paths, verify_checksum, pick)
         if out is not None:
             return out
     pruned = scan().filter(
         (F.col("max_doc_id") >= lo) & (F.col("min_doc_id") < hi)
     )
-    out = decode_dataframe(
-        _pack_survivors(pruned), verify_checksum=verify_checksum,
-        with_source=with_source, transform=transform,
+    out = _decode_frame(
+        _pack_survivors(pruned), verify_checksum, ["min_doc_id", "max_doc_id"],
+        with_source=with_source, pick=pick,
     )
-    return out.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+    return transform(out) if transform is not None else out
 
 
 def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
@@ -461,26 +554,16 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     The random-access read path of the store — "show me these training
     examples" — without a corpus scan.
 
-    Task shape: first, on the driver, a bare parquet scan drops every data
+    Task shape: on the driver, a bare parquet scan first drops every data
     file whose doc-id envelope in its directory's ``_manifest.json`` holds
     none of the ids (:func:`_read_files_that_can_match`). When the kept
     files are local and total at most :data:`LOCAL_READ_BYTES` (8 MiB) on
-    disk, the driver reads them with pyarrow and decodes them through the
-    direct scan's checked reader (``parquet_direct._iter_chunks``): a chunk
-    whose zone map or doc ids hold none of the ids keeps its payload
-    untouched, and every other chunk has its CRC (unless
-    ``verify_checksum`` is false) and stored counts checked and gathers
-    only the wanted docs' spans. The result is a local DataFrame with
-    :data:`TOKENS_OUT_SPARK_SCHEMA`, and no Spark job or Python task runs
-    until an action reads it. The trade: this read is eager, so a corrupt
-    or miscounted chunk raises here rather than at the action, and the
-    decode time moves from the action into this call (in a traced read,
-    from the ``decode.exec`` span into ``decode.plan``). The budget bounds
-    the driver's memory: it reads the kept files a few chunks at a time
-    and holds at most the budget of decoded tokens plus one chunk's worth;
-    a read whose tokens pass the budget stops there and decodes on Spark.
-    ``createDataFrame`` then holds a second copy of the tokens in the
-    driver's JVM, and the result is still a DataFrame.
+    disk, the driver reads them with pyarrow and decodes them, eagerly
+    (:func:`_decode_local` states the trade), through the checked row
+    reader (:func:`_read_rows`) with an id picker: a chunk whose zone map
+    or doc ids hold none of the ids keeps its payload untouched, and every
+    other chunk has its CRC (unless ``verify_checksum`` is false) and
+    stored counts checked and gathers only the wanted docs' spans.
 
     Larger reads, non-local files and frames with any operator above the
     scan decode on Spark, with three pruning layers, cheapest first:
@@ -495,20 +578,18 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
        id array, O(|ids|) work per *chunk row*, zone-map-sized), and
        chunks with an empty ``__want`` drop — this prunes the envelope's
        interior chunks when the set is scattered;
-    3. worker-side (:func:`_decode_wanted`), each surviving chunk tests
-       its own ``doc_ids`` against ``__want`` and decodes ONLY the
-       matching docs: the lengths stream gives each doc's flat span and
-       :func:`~..codec.gather.decode_block_gather` resolves the positions
-       codec-aware (RLE/CONSTANT/PAGED chunks never inflate their full
+    3. in the Python task, the same row reader with the ``__want`` picker:
+       each surviving chunk tests its own ``doc_ids`` against ``__want``
+       and gathers ONLY the matching docs' spans
+       (:func:`~..codec.gather.decode_block_gather` resolves the positions
+       codec-aware: RLE/CONSTANT/PAGED chunks never inflate their full
        value stream; a one-doc lookup in a sequential-codec chunk still
        decodes once but ships one doc across Arrow/JVM).
 
     Layers 1 and 2 run in the parallel scan, one task per file split, so
-    pruned row groups never leave it. When the scan still has more splits
-    than the session's default parallelism, the survivors' encoded rows
-    cross one ``rebalance`` exchange into fewer Python tasks (see
-    :func:`_pack_survivors`). Otherwise each scan task runs layer 3
-    itself.
+    pruned row groups never leave it. Layer 3 runs in the scan's tasks, or
+    behind one ``rebalance`` exchange when the scan has more splits than
+    the session's default parallelism (:func:`_pack_survivors`).
 
     ``ids`` must be point-lookup sized (the literal array and the broadcast
     of it bound the driver plan; ~10^4 is comfortable). For bulk subsets
@@ -529,7 +610,7 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
     )
     if paths is not None:
         out = _decode_local(
-            blocks_df.sparkSession, paths, verify_checksum, doc_ids=ids
+            blocks_df.sparkSession, paths, verify_checksum, _ids_picker(ids)
         )
         if out is not None:
             return out
@@ -545,8 +626,8 @@ def decode_doc_ids(blocks_df, ids, verify_checksum: bool = True):
         .select(*_DECODE_COLS, want.alias("__want"))
         .filter(F.size("__want") > 0)
     )
-    return _pack_survivors(hit).mapInArrow(
-        _decode_wanted(verify_checksum), TOKENS_OUT_SPARK_SCHEMA
+    return _decode_frame(
+        _pack_survivors(hit), verify_checksum, ["__want"], pick=_pick_wanted
     )
 
 
@@ -572,7 +653,7 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
     3. worker-side, each surviving chunk membership-tests its OWN
        ``doc_ids`` against ``__want`` and decodes only the matching
        docs' spans via the codec-aware positional gather — the same
-       worker (:func:`_decode_wanted`) as the literal-id path.
+       row reader and ``__want`` picker as the literal-id path.
 
     Joining back id VALUES (not positions) makes ``chunk_id``
     collisions harmless: ``chunk_id`` is only unique within one encode
@@ -599,35 +680,10 @@ def decode_doc_ids_df(blocks_df, ids_df, verify_checksum: bool = True):
         .groupBy("chunk_id")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("__want"))
     )
-    hit = blocks_df.join(matched, "chunk_id").select(*_DECODE_COLS, "__want")
-    return hit.mapInArrow(
-        _decode_wanted(verify_checksum), TOKENS_OUT_SPARK_SCHEMA
+    return _decode_frame(
+        blocks_df.join(matched, "chunk_id"), verify_checksum, ["__want"],
+        pick=_pick_wanted,
     )
-
-
-def _decode_wanted(verify_checksum: bool):
-    """``mapInArrow`` function over blocks rows that carry a ``__want`` id
-    array: each row's docs whose ids are in ``__want``, read through
-    :func:`_picked_docs`. A row none of whose docs is wanted decodes
-    neither its lengths nor its payload."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            cols = {c: batch.column(c) for c in _DECODE_COLS}
-            wants = batch.column("__want")
-            for i in range(batch.num_rows):
-                hit = pc.is_in(
-                    cols["doc_ids"][i].values, value_set=wants[i].values
-                )
-                sel = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
-                if sel.size:
-                    yield tokens_batch(
-                        *_picked_docs(cols, i, sel, verify_checksum)
-                    )
-
-    return fn
 
 
 def decode_prefix_dataframe(blocks_df, k: int, verify_checksum: bool = True):
@@ -652,7 +708,7 @@ def decode_prefix_dataframe(blocks_df, k: int, verify_checksum: bool = True):
     """
     if k < 0:
         raise ValueError("prefix length k must be >= 0")
-    return _truncated_dataframe(blocks_df, k, verify_checksum, tail=False)
+    return _decode_frame(blocks_df, verify_checksum, trim=(k, False))
 
 
 def decode_padded_dataframe(
@@ -700,27 +756,5 @@ def decode_suffix_dataframe(blocks_df, k: int, verify_checksum: bool = True):
     """
     if k < 0:
         raise ValueError("suffix length k must be >= 0")
-    return _truncated_dataframe(blocks_df, k, verify_checksum, tail=True)
+    return _decode_frame(blocks_df, verify_checksum, trim=(k, True))
 
-
-def _truncated_dataframe(blocks_df, k: int, verify_checksum: bool, tail: bool):
-    """``tokens[:k]`` (or ``tokens[-k:]`` when ``tail``) per doc, with the
-    original ``n_tok``: each doc's kept span becomes one sorted gather index
-    (spans are disjoint and ascending because doc spans are). Each chunk is
-    checked by :func:`_checked_lengths` first."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {c: batch.column(c) for c in _DECODE_COLS}
-            for i in range(batch.num_rows):
-                payload, lengths = _checked_lengths(cols, i, verify_checksum)
-                out_lens = np.minimum(lengths, k)
-                starts = _doc_starts(lengths)
-                if tail:
-                    starts += lengths - out_lens
-                values = _gather_spans(payload, starts, out_lens)
-                yield tokens_batch(
-                    cols["doc_ids"][i].values, out_lens, values, n_tok=lengths
-                )
-
-    return blocks_df.select(*_DECODE_COLS).mapInArrow(fn, TOKENS_OUT_SPARK_SCHEMA)

@@ -109,16 +109,19 @@ def encode_with_global_dict(
     code stream re-runs the normal auto-selector (dense ranks bit-pack).
     All metadata columns pass through; payload/codec/bytes_enc/checksum
     are replaced. Unknown tokens fail fast (the dict must cover the
-    corpus it was built from)."""
+    corpus it was built from). Every chunk is read through the checked
+    row reader first (payload CRC, decoded lengths against the stored
+    counts), so a corrupt payload fails the rewrite instead of being
+    re-encoded under a fresh checksum."""
+    from .decode import _read_rows
+
     toks_sorted, code_of = _dict_arrays(dict_df)
     schema = blocks_df.schema
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            payloads = batch.column("payload")
             new_payloads, new_codec, new_enc, new_cks = [], [], [], []
-            for i in range(batch.num_rows):
-                vals = B.decode_block(memoryview(payloads[i].as_buffer()))
+            for _, _, vals, _ in _read_rows([batch], True, flush=(0, 0)):
                 idx = np.searchsorted(toks_sorted, vals)
                 if (idx >= toks_sorted.size).any() or (
                     toks_sorted[np.minimum(idx, toks_sorted.size - 1)]

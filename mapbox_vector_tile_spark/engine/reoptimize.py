@@ -19,7 +19,7 @@ import pyarrow as pa
 from ..codec import blocks as B
 from ..codec import select as S
 from ..codec.analysis import ChunkAnalysis
-from .decode import _all_values, _checked_lengths
+from .decode import _read_rows
 from .encode import _BLOCKS_ARROW_SCHEMA, BLOCKS_SPARK_SCHEMA
 
 
@@ -41,13 +41,12 @@ def reoptimize_blocks(blocks_df, validate: bool = False):
         import numpy as np
 
         for batch in batches:
-            arrays = {name: batch.column(name) for name in batch.schema.names}
-            cols = {name: arrays[name].to_pylist() for name in
+            cols = {name: batch.column(name).to_pylist() for name in
                     batch.schema.names if name != "doc_ids"}
             doc_ids = batch.column("doc_ids")
-            for i in range(batch.num_rows):
-                stored, lengths = _checked_lengths(arrays, i, True)
-                an = ChunkAnalysis(_all_values(stored, lengths))
+            rows = _read_rows([batch], True, flush=(0, 0))
+            for i, (_, _, values, _) in enumerate(rows):
+                an = ChunkAnalysis(values)
                 cid = S.choose_codec(an.a, an)
                 payload = B.encode_block(an.a, cid, an)
                 if validate and not np.array_equal(

@@ -15,8 +15,9 @@ codec suite.
 
 Plan shape (graded for 100x scale):
 - one ``mapInArrow`` pass over the blocks scan; the projection carries
-  only ``payload, lengths_blob, doc_ids`` (Catalyst prunes the rest at
-  the parquet reader);
+  only ``payload, lengths_blob, doc_ids`` and the other columns of the
+  checked row read, the stored counts and checksum (Catalyst prunes the
+  rest at the parquet reader);
 - per chunk: codec-aware hit positions -> per-doc counts via one
   ``searchsorted`` against the doc-offset prefix sum (docs are whole
   within a chunk by the encode contract) — no token explode, no join;
@@ -31,7 +32,6 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from ..codec import blocks as B
 from ..codec.search import hit_positions
 
 _HITS_ARROW_SCHEMA = pa.schema(
@@ -41,16 +41,55 @@ HITS_SPARK_SCHEMA = "doc_id string, n_hits long"
 
 
 def _doc_counts(
-    positions: np.ndarray, lengths_blob: memoryview
+    positions: np.ndarray, lengths: np.ndarray, width: int = 1
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(hit_doc_indices, hit_counts) for hit positions within one chunk."""
-    lengths = B.decode_block(lengths_blob).astype(np.int64)
+    """(hit_doc_indices, hit_counts) of the hits in one chunk: each hit is
+    the ``width`` values ending at its flat position, and counts for its
+    doc only when all of them lie inside that doc."""
     offsets = np.zeros(lengths.size + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     doc_idx = np.searchsorted(offsets, positions, side="right") - 1
+    if width > 1:
+        first = np.searchsorted(offsets, positions - (width - 1), side="right")
+        doc_idx = doc_idx[first - 1 == doc_idx]
     counts = np.bincount(doc_idx, minlength=lengths.size)
     hit = np.nonzero(counts)[0]
     return hit, counts[hit]
+
+
+def _hit_docs(blocks_df, probe, width: int = 1, cols=()):
+    """``(doc_id, n_hits)`` DataFrame of the docs with hits:
+    ``probe(batch, i, payload)`` gives the flat hit positions of blocks
+    row ``i`` (:func:`_doc_counts` with ``width`` credits them to docs).
+    Every row is read through ``decode._checked_lengths`` without its CRC
+    first: its lengths must agree with its doc ids and stored counts and
+    sum to the payload frame's value count, so a hit is never credited to
+    the wrong doc. That reads the lengths and the frame header only, so a
+    probe still prunes without inflating the payload."""
+    from .decode import _DECODE_COLS, _checked_lengths
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            row_cols = {c: batch.column(c) for c in _DECODE_COLS}
+            for i in range(batch.num_rows):
+                payload, lengths = _checked_lengths(row_cols, i, False)
+                pos = probe(batch, i, payload)
+                if pos.size == 0:
+                    continue
+                hit, counts = _doc_counts(pos, lengths, width)
+                if hit.size == 0:
+                    continue
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        row_cols["doc_ids"][i].values.take(pa.array(hit)),
+                        pa.array(counts, pa.int64()),
+                    ],
+                    schema=_HITS_ARROW_SCHEMA,
+                )
+
+    return blocks_df.select(*_DECODE_COLS, *cols).mapInArrow(
+        fn, HITS_SPARK_SCHEMA
+    )
 
 
 def with_token_blooms(blocks_df, bits_per_value: int = 10,
@@ -62,19 +101,17 @@ def with_token_blooms(blocks_df, bits_per_value: int = 10,
     ``RAW``) — the Parquet column-index-bloom analog stored chunk-side, so
     no join is ever needed at query time. High-cardinality chunks store
     NULL (a saturated filter is pure overhead); the search path treats
-    NULL as "must check".
+    NULL as "must check". Each chunk's values come from the checked row
+    reader, so a corrupt payload fails the pass instead of being indexed.
     """
     from ..codec.bloom import build_bloom
+    from .decode import _read_rows
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            payloads = batch.column("payload")
             blooms = [
-                build_bloom(
-                    B.decode_block(memoryview(payloads[i].as_buffer())),
-                    bits_per_value, max_bytes, k,
-                )
-                for i in range(batch.num_rows)
+                build_bloom(values, bits_per_value, max_bytes, k)
+                for _, _, values, _ in _read_rows([batch], True, flush=(0, 0))
             ]
             yield pa.RecordBatch.from_arrays(
                 list(batch.columns) + [pa.array(blooms, pa.binary())],
@@ -99,45 +136,23 @@ def search_token(blocks_df, x: int):
     filter is consulted first, so even param-opaque codecs skip their
     payloads for absent probes.
     """
+    from ..codec.bloom import might_contain
+
     x = int(x)
     has_bloom = "token_bloom" in blocks_df.columns
+    none = np.zeros(0, np.int64)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec.bloom import might_contain
+    def probe(batch, i, payload):
+        if has_bloom:
+            bloom = batch.column("token_bloom")[i]
+            if not might_contain(
+                memoryview(bloom.as_buffer()) if bloom.is_valid else None, x
+            ):
+                return none
+        return hit_positions(payload, x)[0]
 
-        for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            doc_ids_col = batch.column("doc_ids")
-            blooms = batch.column("token_bloom") if has_bloom else None
-            for i in range(batch.num_rows):
-                if blooms is not None and not might_contain(
-                    None if not blooms[i].is_valid
-                    else memoryview(blooms[i].as_buffer()),
-                    x,
-                ):
-                    continue
-                pos, _ = hit_positions(memoryview(payloads[i].as_buffer()), x)
-                if pos.size == 0:
-                    continue
-                hit, counts = _doc_counts(
-                    pos, memoryview(lengths_blobs[i].as_buffer())
-                )
-                if hit.size == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids_col[i].values.take(pa.array(hit)),
-                        pa.array(counts, pa.int64()),
-                    ],
-                    schema=_HITS_ARROW_SCHEMA,
-                )
-
-    cols = ["doc_ids", "lengths_blob", "payload"] + (
-        ["token_bloom"] if has_bloom else []
-    )
-    out = blocks_df.select(*cols).mapInArrow(fn, HITS_SPARK_SCHEMA)
-    return out.orderBy("doc_id")
+    cols = ["token_bloom"] if has_bloom else []
+    return _hit_docs(blocks_df, probe, cols=cols).orderBy("doc_id")
 
 
 def search_phrase(blocks_df, x: int, y: int):
@@ -157,52 +172,15 @@ def search_phrase(blocks_df, x: int, y: int):
     """
     x, y = int(x), int(y)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            doc_ids_col = batch.column("doc_ids")
-            for i in range(batch.num_rows):
-                payload = memoryview(payloads[i].as_buffer())
-                pos_x, _ = hit_positions(payload, x)
-                if pos_x.size == 0:
-                    continue
-                pos_y = (
-                    pos_x if y == x else hit_positions(payload, y)[0]
-                )
-                if pos_y.size == 0:
-                    continue
-                pairs = np.intersect1d(
-                    pos_x + 1, pos_y, assume_unique=True
-                )  # flat positions of the y in each (x, y) pair
-                if pairs.size == 0:
-                    continue
-                lengths = B.decode_block(
-                    memoryview(lengths_blobs[i].as_buffer())
-                ).astype(np.int64)
-                offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-                np.cumsum(lengths, out=offsets[1:])
-                # drop pairs straddling a doc boundary: x at position p
-                # and y at p+1 must fall in the same doc span
-                d_y = np.searchsorted(offsets, pairs, side="right") - 1
-                d_x = np.searchsorted(offsets, pairs - 1, side="right") - 1
-                pairs = pairs[d_x == d_y]
-                if pairs.size == 0:
-                    continue
-                doc_idx = np.searchsorted(offsets, pairs, side="right") - 1
-                counts = np.bincount(doc_idx, minlength=lengths.size)
-                hit = np.nonzero(counts)[0]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids_col[i].values.take(pa.array(hit)),
-                        pa.array(counts[hit], pa.int64()),
-                    ],
-                    schema=_HITS_ARROW_SCHEMA,
-                )
+    def probe(batch, i, payload):
+        pos_x = hit_positions(payload, x)[0]
+        if pos_x.size == 0:
+            return pos_x
+        pos_y = pos_x if y == x else hit_positions(payload, y)[0]
+        # flat positions of the y in each (x, y) pair
+        return np.intersect1d(pos_x + 1, pos_y, assume_unique=True)
 
-    out = blocks_df.select("doc_ids", "lengths_blob", "payload").mapInArrow(
-        fn, HITS_SPARK_SCHEMA
-    )
+    out = _hit_docs(blocks_df, probe, width=2)
     return out.withColumnRenamed("n_hits", "n_pairs").orderBy("doc_id")
 
 
@@ -218,32 +196,6 @@ def search_token_range(blocks_df, lo: int, hi: int):
     from ..codec.search import range_positions
 
     lo, hi = int(lo), int(hi)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            payloads = batch.column("payload")
-            lengths_blobs = batch.column("lengths_blob")
-            doc_ids_col = batch.column("doc_ids")
-            for i in range(batch.num_rows):
-                pos, _ = range_positions(
-                    memoryview(payloads[i].as_buffer()), lo, hi
-                )
-                if pos.size == 0:
-                    continue
-                hit, counts = _doc_counts(
-                    pos, memoryview(lengths_blobs[i].as_buffer())
-                )
-                if hit.size == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_ids_col[i].values.take(pa.array(hit)),
-                        pa.array(counts, pa.int64()),
-                    ],
-                    schema=_HITS_ARROW_SCHEMA,
-                )
-
-    out = blocks_df.select("doc_ids", "lengths_blob", "payload").mapInArrow(
-        fn, HITS_SPARK_SCHEMA
-    )
-    return out.orderBy("doc_id")
+    return _hit_docs(
+        blocks_df, lambda batch, i, payload: range_positions(payload, lo, hi)[0]
+    ).orderBy("doc_id")

@@ -378,96 +378,51 @@ def _read_block_batches(
         )
 
 
+def _planned_batches(path: str, cols: list[str], lo: int, hi: int,
+                     batch_size: int = 64):
+    """:func:`_read_block_batches`, checked to read exactly ``hi - lo``
+    rows of a planned row range (``ValueError`` naming the file)."""
+    n = 0
+    for batch in _read_block_batches(path, cols, lo, hi, batch_size):
+        n += batch.num_rows
+        yield batch
+    if hi >= 0 and n != hi - lo:
+        raise ValueError(
+            f"{path}: read {n} rows of the planned range [{lo}, {hi})"
+        )
+
+
 def _iter_chunks(
-    items: list[tuple[str, int, int]],
-    tokens: bool = False,
-    doc_range: tuple[str, str] | None = None,
-    doc_ids: list[str] | None = None,
-    verify_checksum: bool = True,
+    items: list[tuple[str, int, int]], verify_checksum: bool = True, pick=None
 ):
-    """Yield ``(doc_ids, lengths, values)`` per chunk of one task's
-    ``(path, lo, hi)`` items: one per blocks row (CRC-checked decode), or
-    one per record batch of a tokens table (``tokens=True``).
-
-    Counts are checked at this boundary (``decode._picked_docs``): each
-    blocks row's lengths must agree with its stored ``n_rows`` and
-    ``n_values`` and its doc ids, its payload must hold their sum, its CRC
-    must match unless ``verify_checksum`` is false, and a row range must
-    read exactly ``hi - lo`` rows; a mismatch raises ``ValueError`` naming
-    the file and row.
-
-    A doc picker, ``doc_range=(lo, hi)`` or the sorted ``doc_ids``, makes
-    this a selective read of blocks: a row whose ``[min_doc_id,
-    max_doc_id]`` zone map misses the picker, or none of whose doc ids it
-    picks, is skipped without touching its payload; a row with every doc
-    picked decodes whole, and any other row gathers only the picked docs'
-    spans. Without a picker every row decodes whole."""
-    import numpy as np
-    import pyarrow.compute as pc
-
+    """``(doc_ids, lengths, values, n_tok)`` of the blocks of one task's
+    ``(path, lo, hi)`` items, read through the checked row reader
+    (``decode._read_rows``: CRC unless ``verify_checksum`` is false, stored
+    counts, output batching); a row that fails its checks raises
+    ``ValueError`` naming the file and row. ``pick`` is a doc picker of
+    ``decode`` (the zone-map columns are read for it): rows it skips keep
+    their payload untouched, and rows with some docs picked gather only
+    their spans."""
     from ..engine import decode as D
-    from ..engine import encode as E
 
-    if tokens:
-        cols, batch_size = ["doc_id", "tokens"], 4096
-    else:
-        cols, batch_size = list(D._DECODE_COLS), 64
-    if doc_range is not None:
-        can_match = _range_can_match(*doc_range)
-        id_lo, id_hi = doc_range
-
-        def picked(ids):
-            return pc.and_(pc.greater_equal(ids, id_lo), pc.less(ids, id_hi))
-    elif doc_ids is not None:
-        can_match = _ids_can_match(doc_ids)
-        value_set = pa.array(doc_ids, pa.string())
-
-        def picked(ids):
-            return pc.is_in(ids, value_set=value_set)
-    else:
-        can_match = None
-    if can_match is not None:
-        cols += ["min_doc_id", "max_doc_id"]
+    cols = D._DECODE_COLS + (["min_doc_id", "max_doc_id"] if pick else [])
     for path, lo, hi in items:
-        row = lo
-        for batch in _read_block_batches(path, cols, lo, hi, batch_size):
-            base, row = row, row + batch.num_rows
-            if tokens:
-                yield (batch.column("doc_id"),) + E._flatten_tokens(
-                    batch.column("tokens")
-                )
-                continue
-            arrays = {c: batch.column(c) for c in D._DECODE_COLS}
-            if can_match is not None:
-                zmin = batch.column("min_doc_id").to_pylist()
-                zmax = batch.column("max_doc_id").to_pylist()
-            for i in range(batch.num_rows):
-                sel = None
-                if can_match is not None:
-                    # null zone map (empty-doc_ids chunk or pre-zonemap
-                    # writer): only its doc ids can rule it out
-                    if (zmin[i] is not None and zmax[i] is not None
-                            and not can_match(zmin[i], zmax[i])):
-                        continue  # zone map: payload untouched
-                    sel = np.flatnonzero(
-                        picked(arrays["doc_ids"][i].values)
-                        .to_numpy(zero_copy_only=False)
-                    )
-                    if not sel.size:
-                        continue  # no picked doc: payload untouched
-                try:
-                    chunk = D._picked_docs(arrays, i, sel, verify_checksum)
-                except ValueError as e:
-                    raise ValueError(
-                        f"{path} row {base + i}: decoded block disagrees "
-                        f"with the row: {e}"
-                    ) from e
-                yield chunk
-        if hi >= 0 and row != hi:
-            raise ValueError(
-                f"{path}: read {row - lo} rows of the planned range "
-                f"[{lo}, {hi})"
-            )
+        yield from D._read_rows(
+            _planned_batches(path, cols, lo, hi), verify_checksum, pick,
+            label=lambda r: f"{path} row {lo + r}",
+        )
+
+
+def _token_chunks(items: list[tuple[str, int, int]]):
+    """``(doc_id, lengths, values)`` per record batch of one task's
+    ``(path, lo, hi)`` items of a tokens table, through the encoders'
+    checked flatten."""
+    from ..engine.encode import _flatten_tokens
+
+    for path, lo, hi in items:
+        for batch in _planned_batches(path, ["doc_id", "tokens"], lo, hi, 4096):
+            yield (batch.column("doc_id"),
+                   *_flatten_tokens(batch.column("tokens")))
 
 
 def _scan(
@@ -476,13 +431,12 @@ def _scan(
     n_tasks: int | None,
     reduce_task,
     schema: str,
-    **chunk_kw,
 ) -> tuple[DataFrame, int]:
     """The direct scans' one task loop: plan ``files`` with
     :func:`block_task_dataframe`, then in each task hand
-    ``reduce_task(task_id, chunks)`` the task's :func:`_iter_chunks`
-    stream; it yields the task's output batches. Returns the mapped
-    DataFrame and the planned task count."""
+    ``reduce_task(task_id, items)`` the task's ``(path, lo, hi)`` items;
+    it yields the task's output batches. Returns the mapped DataFrame and
+    the planned task count."""
     tasks, n_planned = block_task_dataframe(spark, files, n_tasks)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -491,10 +445,7 @@ def _scan(
                 *(tb.column(c).to_pylist()
                   for c in ("task_id", "paths", "los", "his"))
             ):
-                yield from reduce_task(
-                    task_id, _iter_chunks(list(zip(paths, los, his)),
-                                          **chunk_kw)
-                )
+                yield from reduce_task(task_id, list(zip(paths, los, his)))
 
     return tasks.mapInArrow(fn, schema), n_planned
 
@@ -530,8 +481,8 @@ def decode_to_parquet_direct(
     Catalyst selective path (:func:`blocks_scan` + ``decode_doc_range``):
     fragments prune from the task plan via the manifest zone maps, chunks
     whose ``[min_doc_id, max_doc_id]`` envelope misses the range skip
-    without touching their payload, and boundary chunks row-trim after
-    decode."""
+    without touching their payload, and boundary chunks gather only the
+    docs inside the range."""
     from ..engine import decode as D
 
     files = list_parquet_files(blocks_path)
@@ -545,8 +496,13 @@ def decode_to_parquet_direct(
     def part(task_id: int) -> str:
         return f"part-{task_id:05d}.parquet"
 
-    def write_part(task_id, chunks):
-        batches = [D.tokens_batch(*c) for c in chunks]
+    pick = None if doc_range is None else D._range_picker(*doc_range)
+
+    def write_part(task_id, items):
+        batches = [
+            D.tokens_batch(ids, lengths, values)
+            for ids, lengths, values, _ in _iter_chunks(items, pick=pick)
+        ]
         n_rows = sum(b.num_rows for b in batches)
         if n_rows:
             write_parquet_atomic(
@@ -563,8 +519,7 @@ def decode_to_parquet_direct(
     written, n_planned = [], 0
     if files:
         scan, n_planned = _scan(
-            spark, files, n_tasks, write_part, "task_id int, n_rows long",
-            doc_range=doc_range,
+            spark, files, n_tasks, write_part, "task_id int, n_rows long"
         )
         written = scan.collect()
     check_planned_tasks(range(n_planned), written, "direct decode", "result")
@@ -592,7 +547,7 @@ _CKS_ARROW = pa.schema(
 )
 
 
-def _doc_cks_batch(doc_ids: pa.Array, lengths, values) -> pa.RecordBatch:
+def _doc_cks_batch(doc_ids: pa.Array, lengths, values, *_) -> pa.RecordBatch:
     """Per-doc order-sensitive checksums (same formulas as
     ``corpus.doc_checksums``: sum(tok) % MOD, sum((j+1)*tok) % MOD)."""
     import numpy as np
@@ -615,15 +570,15 @@ def _doc_cks_batch(doc_ids: pa.Array, lengths, values) -> pa.RecordBatch:
 
 
 def _checksum_scan(
-    spark: SparkSession, path: str, n_tasks: int | None, tokens: bool
+    spark: SparkSession, path: str, n_tasks: int | None, chunks
 ) -> DataFrame:
     files = list_parquet_files(path)
     if not files:
         raise ValueError(f"no parquet files under {path}")
     return _scan(
         spark, files, n_tasks,
-        lambda _task_id, chunks: (_doc_cks_batch(*c) for c in chunks),
-        _CKS_SCHEMA, tokens=tokens,
+        lambda _task_id, items: (_doc_cks_batch(*c) for c in chunks(items)),
+        _CKS_SCHEMA,
     )[0]
 
 
@@ -634,7 +589,7 @@ def doc_checksums_direct(
     checksum rows. The arrays never reach the JVM — only (doc_id, n_tok,
     cks, wcks) metadata rows do, which makes the round-trip verify a
     metadata join instead of a full-array exchange."""
-    return _checksum_scan(spark, tokens_path, n_tasks, tokens=True)
+    return _checksum_scan(spark, tokens_path, n_tasks, _token_chunks)
 
 
 def decoded_doc_checksums_direct(
@@ -644,4 +599,4 @@ def decoded_doc_checksums_direct(
     schema as :func:`doc_checksums_direct`) — the decoded arrays stay in the
     worker; only checksum metadata crosses to the JVM. Files split into row
     ranges when fewer than ``n_tasks`` (:func:`block_task_dataframe`)."""
-    return _checksum_scan(spark, blocks_path, n_tasks, tokens=False)
+    return _checksum_scan(spark, blocks_path, n_tasks, _iter_chunks)

@@ -1,6 +1,7 @@
 """Decode output batching: tiny chunks coalesce into combined Arrow
 batches; results are bit-identical to per-chunk emission at every flush
-setting, with and without the string column."""
+setting, for the full decode with and without the string column and for
+the prefix and id readers, which batch through the same row reader."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,12 +24,13 @@ def tiny_blocks(spark):
     return df
 
 
-def _decoded(blocks, with_source):
-    rows = D.decode_dataframe(blocks, with_source=with_source).collect()
+_IDS = G.doc_id_str(list(range(0, 800, 3)))
+
+
+def _decoded(df):
     return {
-        r.doc_id: (list(r.tokens), r.n_tok,
-                   r.source if with_source else None)
-        for r in rows
+        r.doc_id: (list(r.tokens), r.n_tok, getattr(r, "source", None))
+        for r in df.collect()
     }
 
 
@@ -36,12 +38,20 @@ def _decoded(blocks, with_source):
 def test_decode_batching_identical_across_flush_sizes(
     spark, tiny_blocks, with_source, monkeypatch
 ):
-    want = _decoded(tiny_blocks, with_source)
-    assert len(want) == 800
-    for fv, fr in [(1, 1), (300, 10**9), (10**9, 7), (10**9, 10**9)]:
-        monkeypatch.setattr(D, "DECODE_FLUSH_VALUES", fv)
-        monkeypatch.setattr(D, "DECODE_FLUSH_ROWS", fr)
-        assert _decoded(tiny_blocks, with_source) == want
+    reads = [(lambda b: D.decode_dataframe(b, with_source=with_source), 800)]
+    if not with_source:  # the prefix and id readers have no source column
+        reads += [
+            (lambda b: D.decode_prefix_dataframe(b, 5), 800),
+            (lambda b: D.decode_doc_ids(b, _IDS), len(_IDS)),
+        ]
+    for read, n_docs in reads:
+        monkeypatch.undo()
+        want = _decoded(read(tiny_blocks))
+        assert len(want) == n_docs
+        for fv, fr in [(1, 1), (300, 10**9), (10**9, 7), (10**9, 10**9)]:
+            monkeypatch.setattr(D, "DECODE_FLUSH_VALUES", fv)
+            monkeypatch.setattr(D, "DECODE_FLUSH_ROWS", fr)
+            assert _decoded(read(tiny_blocks)) == want
 
 
 def test_decode_batching_fewer_output_batches(spark, tiny_blocks):

@@ -74,21 +74,31 @@ def test_point_lookup_prunes_chunks(blocks):
 
 
 def test_unwanted_rows_decode_nothing():
-    """The id lookups' worker skips a row none of whose docs is wanted
-    before reading its lengths or payload; a wanted doc in the same row
-    reaches the checked decode."""
-    from mapbox_vector_tile_spark.engine.decode import _decode_wanted
+    """The checked row reader skips a row none of whose docs its id picker
+    (the literal ids, or the row's ``__want`` array) picks before reading
+    its lengths or payload; a picked doc in the same row reaches the
+    checked decode."""
+    from mapbox_vector_tile_spark.engine.decode import (
+        _ids_picker,
+        _pick_wanted,
+        _read_rows,
+    )
 
     def rows(want):
         return [pa.RecordBatch.from_pydict({
             "doc_ids": [["doc-a", "doc-b"]], "n_rows": [2], "n_values": [3],
             "lengths_blob": [b"junk"], "payload": [b"junk"], "checksum": [0],
+            "min_doc_id": ["doc-a"], "max_doc_id": ["doc-b"],
             "__want": [want],
         })]
 
-    assert list(_decode_wanted(True)(iter(rows(["doc-c"])))) == []
-    with pytest.raises(ValueError, match="checksum"):
-        list(_decode_wanted(True)(iter(rows(["doc-a"]))))
+    # doc-ab passes the zone map but is none of the row's doc ids
+    for want in (["doc-c"], ["doc-ab"]):
+        assert list(_read_rows(rows(want), True, _ids_picker(want))) == []
+        assert list(_read_rows(rows(want), True, _pick_wanted)) == []
+    for pick in (_ids_picker(["doc-a"]), _pick_wanted):
+        with pytest.raises(ValueError, match="checksum"):
+            list(_read_rows(rows(["doc-a"]), True, pick))
 
 
 def test_point_lookup_rejects_empty_set(blocks):

@@ -275,3 +275,47 @@ def test_search_token_range_spark(spark):
         for r in search_token_range(blocks, lo, hi).collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_search_checks_each_row_lengths(spark):
+    """Each search reads a blocks row's lengths through the checked row
+    path: lengths that disagree with the row's doc ids, or that do not sum
+    to its payload's value count, raise ``ValueError`` naming the chunk
+    instead of crediting a hit to another doc or failing inside Arrow."""
+    import pyarrow as pa
+    import pytest
+
+    from mapbox_vector_tile_spark.codec.select import encode_auto
+    from mapbox_vector_tile_spark.engine.encode import (
+        BLOCKS_SPARK_SCHEMA,
+        encode_dataframe,
+    )
+    from mapbox_vector_tile_spark.engine.search import (
+        search_phrase,
+        search_token,
+        search_token_range,
+    )
+
+    tokens = spark.createDataFrame(
+        [("a", [1, 2]), ("b", [3, 4]), ("c", [5, 6])],
+        "doc_id string, tokens array<int>",
+    ).coalesce(1)
+    good = encode_dataframe(tokens).toArrow()
+    assert good.num_rows == 1 and good.column("n_values")[0].as_py() == 6
+    i = good.schema.get_field_index("lengths_blob")
+    searches = [
+        lambda df: search_token(df, 6),
+        lambda df: search_phrase(df, 5, 6),
+        lambda df: search_token_range(df, 6, 6),
+    ]
+    for run in searches:
+        df = spark.createDataFrame(good, BLOCKS_SPARK_SCHEMA)
+        assert [tuple(r) for r in run(df).collect()] == [("c", 1)]
+    # two lengths for three doc ids; lengths summing to 5 over 6 values
+    for lengths in ([2, 4], [2, 2, 1]):
+        blob = encode_auto(np.array(lengths, np.int32))[0]
+        bad = good.set_column(i, "lengths_blob", pa.array([blob], pa.binary()))
+        df = spark.createDataFrame(bad, BLOCKS_SPARK_SCHEMA)
+        for run in searches:
+            with pytest.raises(Exception, match=r"ValueError: chunk \[a\.\.c\]"):
+                run(df).collect()

@@ -34,11 +34,17 @@ from mapbox_vector_tile_spark.engine.decode import (
     decode_doc_ids,
     decode_doc_ids_df,
     decode_doc_range,
+    decode_padded_dataframe,
     decode_prefix_dataframe,
     decode_suffix_dataframe,
 )
 from mapbox_vector_tile_spark.engine.deletes import decode_with_deletes
 from mapbox_vector_tile_spark.engine.encode import BLOCKS_SPARK_SCHEMA
+from mapbox_vector_tile_spark.engine.search import (
+    search_phrase,
+    search_token,
+    search_token_range,
+)
 from mapbox_vector_tile_spark.sources import parquet_direct as PD
 from mapbox_vector_tile_spark.streaming.snapshot_sink import commit_micro_batch
 
@@ -782,25 +788,51 @@ def test_gather_decoders_check_stored_counts(spark, tmp_path):
     assert [r.doc_id for r in decode_doc_ids(blocks, ok).collect()] == ok
 
 
+def _on_spark(read):
+    """``read`` run with no read within the driver-local budget."""
+    def run():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(D, "LOCAL_READ_BYTES", 0)
+            return read()
+    return run
+
+
 @pytest.mark.parametrize("column", ["n_values", "n_rows"])
 def test_scan_decoders_check_stored_counts(spark, tmp_path, column):
-    """The full, range, prefix, suffix and merge-on-read decoders check
-    every chunk's decoded lengths against its stored counts and name the
-    chunk; a range read that misses the bad chunk still reads. Each read is
-    built inside the check, since a driver-local range read decodes (and
-    fails) when it is built."""
+    """Every reader of the checked row reader (the full, range, id,
+    prefix, padded, suffix and merge-on-read decoders, the direct scans)
+    and the three searches check every chunk's decoded lengths against its
+    stored counts and name the chunk; a range read that misses the bad
+    chunk still reads. Each read is built inside the check, since a
+    driver-local read decodes (and fails) when it is built."""
     blocks, bad_doc = _bump_stored_count(spark, tmp_path, column)
+    data = str(tmp_path / "tbl" / "data")
+    out = str(tmp_path / "out")
     no_deletes = spark.createDataFrame([("zzz",)], "doc_id string")
+    ids_df = spark.createDataFrame([(bad_doc,)], "doc_id string")
     reads = [
-        lambda: decode_dataframe(blocks),
-        lambda: decode_doc_range(blocks, bad_doc, bad_doc + "~"),
-        lambda: decode_prefix_dataframe(blocks, 4),
-        lambda: decode_suffix_dataframe(blocks, 4),
-        lambda: decode_with_deletes(blocks, no_deletes),
+        lambda: decode_dataframe(blocks).collect(),
+        lambda: decode_doc_range(blocks, bad_doc, bad_doc + "~").collect(),
+        _on_spark(lambda: decode_doc_range(blocks, bad_doc, bad_doc + "~")
+                  .collect()),
+        lambda: decode_doc_ids(blocks, [bad_doc]).collect(),
+        _on_spark(lambda: decode_doc_ids(blocks, [bad_doc]).collect()),
+        lambda: decode_doc_ids_df(blocks, ids_df).collect(),
+        lambda: decode_prefix_dataframe(blocks, 4).collect(),
+        lambda: decode_padded_dataframe(blocks, 4, -1).collect(),
+        lambda: decode_suffix_dataframe(blocks, 4).collect(),
+        lambda: decode_with_deletes(blocks, no_deletes).collect(),
+        lambda: PD.decode_to_parquet_direct(spark, data, out),
+        lambda: PD.decode_to_parquet_direct(
+            spark, data, out, doc_range=(bad_doc, bad_doc + "~")),
+        lambda: PD.decoded_doc_checksums_direct(spark, data).collect(),
+        lambda: search_token(blocks, 1).collect(),
+        lambda: search_phrase(blocks, 1, 2).collect(),
+        lambda: search_token_range(blocks, 0, 10).collect(),
     ]
     for read in reads:
         with pytest.raises(Exception, match=_BAD_CHUNK):
-            read().collect()
+            read()
     lo, hi = G.doc_id_str([BATCH_DOCS, 2 * BATCH_DOCS])
     assert decode_doc_range(blocks, lo, hi).count() == BATCH_DOCS
 
