@@ -2385,7 +2385,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # text-column encode: documents.text stored as FSST+dict string chunks,
     # decoded back; per-chunk order-sensitive text checksums are the gate
     def text_roundtrip(spark, sf_dir):
-        from mapbox_vector_tile_spark.engine.text_column import (
+        from mapbox_vector_tile_spark.engine.columnar import (
             text_roundtrip_rollup,
         )
 
@@ -2402,7 +2402,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # formula oracle as the per-chunk-table form, so the gate proves the
     # shared-mode decode is byte-exact too.
     def text_shared_fsst(spark, sf_dir):
-        from mapbox_vector_tile_spark.engine.text_column import (
+        from mapbox_vector_tile_spark.engine.columnar import (
             text_roundtrip_rollup,
         )
 
@@ -3996,7 +3996,7 @@ FROM s, (VALUES ('event_id'), ('event_type'), ('props'), ('ts_us'),
                 ('user_id'), ('value')) t(col)
 ORDER BY t.col
 """
-    from mapbox_vector_tile_spark.engine.text_column import (
+    from mapbox_vector_tile_spark.engine.columnar import (
         text_roundtrip_rollup_sql,
     )
 

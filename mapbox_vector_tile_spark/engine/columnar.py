@@ -1,216 +1,51 @@
-"""Scalar-column encode: the codec ladder over ANY int32 column.
+"""Single-column round trips through the table store.
 
-The engine's blocks pipeline encodes token ARRAYS; real tables also carry
-flat measure columns (event values, counts, ids). This is the same
-self-describing frame (`codec.blocks.encode_block`) and the same
-auto-selector (`codec.select.encode_auto`) applied to a scalar column,
-chunked by an explicit key so the layout is a pure function of the data:
+Five gated queries each store ONE column of a source table and roll the
+decoded values up per chunk: event value cents as int32 (with and without
+nulls), event timestamps as int64 epoch micros, and document text as
+FSST+dictionary string chunks (per-chunk or one shared FSST table). Every
+one encodes with :func:`.table_encode.encode_table` over the order and
+value columns and decodes with :func:`.table_encode.decode_table`, so the
+layout is the table store's:
 
 - chunk assignment ``chunk = order_key >> log2(chunk_rows)`` and in-chunk
   order = the order key — deterministic across parallelism and row order
   (the resume/oracle property every other layout decision here has);
-- encode is ``applyInPandas`` per chunk: one shuffle on the chunk id,
-  kernels see one contiguous int32 array per chunk (the RLE/FOR/dict
-  ladder then wins exactly as it does on token chunks);
-- decode is a stateless ``mapInArrow`` over block rows, emitting
-  ``(chunk, pos, value)`` — positions reconstruct the total order.
+- one frame per column through its type's codec (the int32 ladder, the
+  int64 outer transforms, FSST+dict strings), with nulls in a validity
+  bitmap so the inner frame encodes only the non-null values;
+- decode emits ``(chunk, pos, value)`` — positions reconstruct the total
+  order, and the rank-weighted checksums below gate it.
 
-At 100 TB this is a straight repartition-encode: chunk ids are dense and
-ordered, so the shuffle is range-partitionable and each task's memory is
-O(chunk_rows). The reference encodes exactly one scalar stream this way
-already — per-feature attribute values (/root/reference/
-mapbox_vector_tile/encoder.py:241-266 writes deduplicated scalar value
-tables per tile); this generalizes it to arbitrary table columns.
+The reference writes its per-layer value tables the same way for every
+value type (``mapbox_vector_tile/encoder.py:241-266``); the table store
+generalizes that to arbitrary table columns.
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
+from pyspark.sql import Column, DataFrame, functions as F
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
-
-from ..codec.blocks import CODEC_NAMES, decode_block
-from ..codec.select import encode_auto
+from .table_encode import decode_table, encode_table
 
 CHUNK_ROWS = 1024
-
-# nullable wrapper: n_rows, n_valid | packed validity bitmap | inner frame.
-# Nulls are a COLUMN-level concern (Arrow separates validity from values the
-# same way), so the wrapper sits outside the codec ladder: the inner frame
-# encodes only the non-null values and every codec stays null-free.
-_NULL_FMT = "<qq"  # format string, not a Struct: worker closures pickle it
-_NULL_HDR_SIZE = struct.calcsize(_NULL_FMT)
-
-_BLOCKS_SCHEMA = (
-    "chunk long, n_values long, codec string, bytes_enc long, "
-    "bytes_raw long, payload binary"
-)
+TEXT_CHUNK_ROWS = 256
 
 
-def encode_scalar_column(
+def _round_trip(
     df: DataFrame,
-    value_col: str,
     order_col: str,
-    chunk_rows: int = CHUNK_ROWS,
+    value: Column,
+    chunk_rows: int,
+    fsst_table: bytes | None = None,
 ) -> DataFrame:
-    """Encode ``value_col`` (int32-safe) into self-describing blocks,
-    chunked and ordered by ``order_col``."""
-    chunk = (
-        (F.col(order_col) - F.pmod(F.col(order_col), F.lit(chunk_rows)))
-        / chunk_rows
-    ).cast("long")
-    rows = df.select(
-        chunk.alias("chunk"),
-        F.col(order_col).cast("long").alias("k"),
-        F.col(value_col).cast("int").alias("v"),
-    )
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("k", ignore_index=True)
-        a = pdf["v"].to_numpy(np.int32)
-        payload, codec_id = encode_auto(a)
-        return pd.DataFrame(
-            {
-                "chunk": [int(pdf["chunk"].iloc[0])],
-                "n_values": [len(a)],
-                "codec": [CODEC_NAMES[codec_id]],
-                "bytes_enc": [len(payload)],
-                "bytes_raw": [4 * len(a)],
-                "payload": [payload],
-            }
-        )
-
-    return rows.groupBy("chunk").applyInPandas(enc, _BLOCKS_SCHEMA)
-
-
-def decode_scalar_column(blocks: DataFrame) -> DataFrame:
-    """Inverse: ``(chunk, pos, value)`` — pos is the in-chunk rank in
-    order-key order."""
-
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            chunks = batch.column("chunk").to_numpy(zero_copy_only=False)
-            payloads = batch.column("payload")
-            out_c, out_p, out_v = [], [], []
-            for i in range(batch.num_rows):
-                vals = decode_block(memoryview(payloads[i].as_buffer()))
-                out_c.append(np.full(len(vals), chunks[i], np.int64))
-                out_p.append(np.arange(len(vals), dtype=np.int64))
-                out_v.append(vals.astype(np.int64))
-            if out_c:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_c), pa.int64()),
-                        pa.array(np.concatenate(out_p), pa.int64()),
-                        pa.array(np.concatenate(out_v), pa.int64()),
-                    ],
-                    schema=pa.schema(
-                        [
-                            ("chunk", pa.int64()),
-                            ("pos", pa.int64()),
-                            ("value", pa.int64()),
-                        ]
-                    ),
-                )
-
-    return blocks.select("chunk", "payload").mapInArrow(
-        dec, "chunk long, pos long, value long"
-    )
-
-
-def encode_scalar_column_nullable(
-    df: DataFrame,
-    value_col: str,
-    order_col: str,
-    chunk_rows: int = CHUNK_ROWS,
-) -> DataFrame:
-    """Nullable variant: a packed validity bitmap precedes the inner block,
-    which encodes only the non-null values through the normal ladder (so
-    e.g. a column that is constant-when-present still picks CONSTANT)."""
-    chunk = (
-        (F.col(order_col) - F.pmod(F.col(order_col), F.lit(chunk_rows)))
-        / chunk_rows
-    ).cast("long")
-    rows = df.select(
-        chunk.alias("chunk"),
-        F.col(order_col).cast("long").alias("k"),
-        F.col(value_col).isNull().alias("is_null"),
-        F.coalesce(F.col(value_col).cast("int"), F.lit(0)).alias("v"),
-    )
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("k", ignore_index=True)
-        valid = ~pdf["is_null"].to_numpy(bool)
-        a = pdf["v"].to_numpy(np.int32)[valid]
-        inner, codec_id = encode_auto(a)
-        payload = (
-            struct.pack(_NULL_FMT, valid.size, int(valid.sum()))
-            + np.packbits(valid).tobytes()
-            + inner
-        )
-        return pd.DataFrame(
-            {
-                "chunk": [int(pdf["chunk"].iloc[0])],
-                "n_values": [int(valid.size)],
-                "codec": [CODEC_NAMES[codec_id]],
-                "bytes_enc": [len(payload)],
-                "bytes_raw": [4 * int(valid.size)],
-                "payload": [payload],
-            }
-        )
-
-    return rows.groupBy("chunk").applyInPandas(enc, _BLOCKS_SCHEMA)
-
-
-def decode_scalar_column_nullable(blocks: DataFrame) -> DataFrame:
-    """Inverse: ``(chunk, pos, value)`` with SQL NULLs restored at their
-    original positions (pos covers null rows too — total order is kept)."""
-
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            chunks = batch.column("chunk").to_numpy(zero_copy_only=False)
-            payloads = batch.column("payload")
-            arrs = []
-            for i in range(batch.num_rows):
-                mv = memoryview(payloads[i].as_buffer())
-                n_rows, n_valid = struct.unpack_from(_NULL_FMT, mv)
-                off = _NULL_HDR_SIZE
-                nb = (n_rows + 7) // 8
-                valid = np.unpackbits(
-                    np.frombuffer(mv, np.uint8, count=nb, offset=off)
-                )[:n_rows].astype(bool)
-                vals = decode_block(mv[off + nb :])
-                if vals.size != n_valid:
-                    raise ValueError(
-                        f"nullable chunk: {vals.size} values, want {n_valid}"
-                    )
-                full = np.zeros(n_rows, dtype=np.int64)
-                full[valid] = vals.astype(np.int64)
-                arrs.append(
-                    pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.full(n_rows, chunks[i], np.int64)),
-                            pa.array(np.arange(n_rows, dtype=np.int64)),
-                            pa.array(full, pa.int64(), mask=~valid),
-                        ],
-                        schema=pa.schema(
-                            [
-                                ("chunk", pa.int64()),
-                                ("pos", pa.int64()),
-                                ("value", pa.int64()),
-                            ]
-                        ),
-                    )
-                )
-            yield from arrs
-
-    return blocks.select("chunk", "payload").mapInArrow(
-        dec, "chunk long, pos long, value long"
-    )
+    """``(chunk, pos, value)`` of ``value`` over ``df`` after a table-store
+    encode and decode; ``pos`` is the in-chunk rank by ``order_col``.
+    ``fsst_table`` is the shared FSST table of a string ``value``."""
+    table = df.select(order_col, value.alias("value"))
+    tables = None if fsst_table is None else {"value": fsst_table}
+    blocks = encode_table(table, order_col, chunk_rows, fsst_tables=tables)
+    return decode_table(blocks, table.schema, ["value"], fsst_tables=tables)
 
 
 def scalar_nullable_roundtrip_rollup(
@@ -221,9 +56,9 @@ def scalar_nullable_roundtrip_rollup(
 ) -> DataFrame:
     """Gated end-to-end: nulls must survive at their exact positions.
     ``(chunk, n, n_null, sum_v, wcks)`` — wcks weights non-null values by
-    their in-chunk rank INCLUDING null rows, so null placement is gated."""
-    blocks = encode_scalar_column_nullable(df, value_col, order_col, chunk_rows)
-    dec = decode_scalar_column_nullable(blocks)
+    their in-chunk rank INCLUDING null rows, so null placement is gated.
+    The value is stored as int32, through the codec ladder."""
+    dec = _round_trip(df, order_col, F.col(value_col).cast("int"), chunk_rows)
     return (
         dec.groupBy("chunk")
         .agg(
@@ -268,9 +103,9 @@ def scalar_roundtrip_rollup(
 ) -> DataFrame:
     """Gated end-to-end: encode -> decode -> per-chunk order-sensitive
     checksums. ``(chunk, n, sum_v, wcks)`` where wcks weights each value
-    by its in-chunk rank (so value ORDER is gated, not just the multiset)."""
-    blocks = encode_scalar_column(df, value_col, order_col, chunk_rows)
-    dec = decode_scalar_column(blocks)
+    by its in-chunk rank (so value ORDER is gated, not just the multiset).
+    The value is stored as int32, through the codec ladder."""
+    dec = _round_trip(df, order_col, F.col(value_col).cast("int"), chunk_rows)
     return (
         dec.groupBy("chunk")
         .agg(
@@ -299,100 +134,6 @@ FROM rows_ GROUP BY chunk ORDER BY chunk
 """
 
 
-# ---------------------------------------------------------------------------
-# int64 columns (timestamps, wide ids) — codec/int64.py outer transforms
-# ---------------------------------------------------------------------------
-
-_I64_BLOCKS_SCHEMA = (
-    "chunk long, n_values long, mode string, bytes_enc long, "
-    "bytes_raw long, payload binary"
-)
-
-
-def encode_int64_column(
-    df: DataFrame,
-    value_col: str,
-    order_col: str,
-    chunk_rows: int = CHUNK_ROWS,
-) -> DataFrame:
-    """Encode an int64 column (epoch-micros timestamps, 64-bit ids) into
-    self-describing blocks via the int64 outer transforms
-    (``codec/int64.py``: delta32 / delta-planes / planes, inner streams
-    through the full int32 ladder). Same deterministic chunk contract as
-    :func:`encode_scalar_column` — one shuffle on the chunk id, worker
-    memory O(chunk_rows), layout a pure function of the data. A null value
-    fails the encode with ``ValueError`` naming ``value_col``."""
-    from ..codec.int64 import INT64_MODE_NAMES, encode_int64_auto
-
-    chunk = (
-        (F.col(order_col) - F.pmod(F.col(order_col), F.lit(chunk_rows)))
-        / chunk_rows
-    ).cast("long")
-    rows = df.select(
-        chunk.alias("chunk"),
-        F.col(order_col).cast("long").alias("k"),
-        F.col(value_col).cast("long").alias("v"),
-    )
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pandas holds a null as NaN, which the int64 cast turns into -2^63
-        if pdf["v"].isna().any():
-            raise ValueError(
-                f"encode_int64_column: column {value_col!r} holds a null, "
-                "which has no int64 encoding"
-            )
-        pdf = pdf.sort_values("k", ignore_index=True)
-        a = pdf["v"].to_numpy(np.int64)
-        payload, mode = encode_int64_auto(a)
-        return pd.DataFrame(
-            {
-                "chunk": [int(pdf["chunk"].iloc[0])],
-                "n_values": [len(a)],
-                "mode": [INT64_MODE_NAMES[mode]],
-                "bytes_enc": [len(payload)],
-                "bytes_raw": [8 * len(a)],
-                "payload": [payload],
-            }
-        )
-
-    return rows.groupBy("chunk").applyInPandas(enc, _I64_BLOCKS_SCHEMA)
-
-
-def decode_int64_column(blocks: DataFrame) -> DataFrame:
-    """Stateless inverse map: ``(chunk, pos, value)`` int64-exact."""
-    from ..codec.int64 import decode_int64
-
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            chunks = batch.column("chunk").to_numpy(zero_copy_only=False)
-            payloads = batch.column("payload")
-            out_c, out_p, out_v = [], [], []
-            for i in range(batch.num_rows):
-                vals = decode_int64(memoryview(payloads[i].as_buffer()))
-                out_c.append(np.full(len(vals), chunks[i], np.int64))
-                out_p.append(np.arange(len(vals), dtype=np.int64))
-                out_v.append(vals)
-            if out_c:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_c), pa.int64()),
-                        pa.array(np.concatenate(out_p), pa.int64()),
-                        pa.array(np.concatenate(out_v), pa.int64()),
-                    ],
-                    schema=pa.schema(
-                        [
-                            ("chunk", pa.int64()),
-                            ("pos", pa.int64()),
-                            ("value", pa.int64()),
-                        ]
-                    ),
-                )
-
-    return blocks.select("chunk", "payload").mapInArrow(
-        dec, "chunk long, pos long, value long"
-    )
-
-
 _I64_MOD = 1_000_003  # modular checksum base: micros sums overflow int64
 
 
@@ -402,13 +143,13 @@ def int64_roundtrip_rollup(
     order_col: str,
     chunk_rows: int = CHUNK_ROWS,
 ) -> DataFrame:
-    """Gated end-to-end for int64 columns. Epoch-micros sums overflow
-    int64 under rank weighting, so the checksums are modular: per chunk
-    ``(n, min_v, max_v, sum_mod, wcks_mod)`` where
-    ``wcks_mod = SUM(pmod(v, M) * (pos+1)) % M`` gates value ORDER and
-    min/max gate the raw domain."""
-    blocks = encode_int64_column(df, value_col, order_col, chunk_rows)
-    dec = decode_int64_column(blocks)
+    """Gated end-to-end for int64 columns (epoch-micros timestamps, wide
+    ids), stored through the int64 outer transforms (``codec/int64.py``).
+    Epoch-micros sums overflow int64 under rank weighting, so the
+    checksums are modular: per chunk ``(n, min_v, max_v, sum_mod,
+    wcks_mod)`` where ``wcks_mod = SUM(pmod(v, M) * (pos+1)) % M`` gates
+    value ORDER and min/max gate the raw domain."""
+    dec = _round_trip(df, order_col, F.col(value_col).cast("long"), chunk_rows)
     vm = F.pmod(F.col("value"), F.lit(_I64_MOD))
     return (
         dec.groupBy("chunk")
@@ -442,5 +183,93 @@ SELECT chunk, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(((SUM(v % {m}) % {m}) + {m}) % {m} AS BIGINT) AS sum_mod,
        CAST(((SUM((v % {m}) * (pos + 1)) % {m}) + {m}) % {m} AS BIGINT)
          AS wcks_mod
+FROM rows_ GROUP BY chunk ORDER BY chunk
+"""
+
+
+def train_shared_fsst_table(
+    df: DataFrame,
+    text_col: str = "text",
+    order_col: str = "doc_id",
+    sample_rows: int = 256,
+) -> bytes:
+    """One FSST symbol table for a whole column: trained on a DETERMINISTIC
+    sample (the ``sample_rows`` lowest order keys — resume/oracle-stable
+    across parallelism), packed with :func:`..codec.fsst.pack_table`.
+    Sharing it across every chunk (``encode_table(fsst_tables=...)``)
+    amortizes training cost (the expensive FSST step) and removes the
+    per-chunk table bytes; the paper deploys exactly this way over many
+    small blocks."""
+    from ..codec import fsst
+
+    sample = (
+        df.select(F.col(text_col).cast("string").alias("t"),
+                  F.col(order_col).alias("k"))
+        .orderBy("k")
+        .limit(sample_rows)
+        .collect()
+    )
+    blob = "\n".join(r.t for r in sample if r.t is not None).encode()
+    return fsst.pack_table(fsst.train(blob))
+
+
+def text_roundtrip_rollup(
+    df: DataFrame,
+    text_col: str = "text",
+    order_col: str = "doc_id",
+    chunk_rows: int = TEXT_CHUNK_ROWS,
+    mod: int = 1_000_000_007,
+    shared_fsst: bool = False,
+) -> DataFrame:
+    """Gated end-to-end: encode -> decode -> per-chunk order-sensitive text
+    checksums. ``(chunk, n, sum_len, cks, wcks)`` where cks hashes each
+    decoded string portably (48-bit md5 prefix mod ``mod``) and wcks weights
+    by in-chunk rank, so content AND order are gated. ``shared_fsst``
+    encodes every chunk against one :func:`train_shared_fsst_table`."""
+    from ..functions.text import h48
+
+    shared = (
+        train_shared_fsst_table(df, text_col, order_col)
+        if shared_fsst else None
+    )
+    dec = _round_trip(
+        df, order_col, F.col(text_col).cast("string"), chunk_rows, shared
+    )
+    h = h48(F.col("value")) % F.lit(mod)
+    return (
+        dec.groupBy("chunk")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(F.length(F.col("value"))).cast("long").alias("sum_len"),
+            F.pmod(F.sum(h), F.lit(mod)).cast("long").alias("cks"),
+            F.pmod(F.sum(h * (F.col("pos") + 1)), F.lit(mod))
+            .cast("long")
+            .alias("wcks"),
+        )
+        .orderBy("chunk")
+    )
+
+
+def text_roundtrip_rollup_sql(
+    chunk_rows: int = TEXT_CHUNK_ROWS,
+    mod: int = 1_000_000_007,
+    doc_source: str = "documents",
+) -> str:
+    """Oracle straight from the source table: identical per-chunk rollup
+    (DuckDB md5 prefix matches Spark's — both hash the utf-8 bytes)."""
+    from ..functions.text import h48_sql
+
+    h = f"({h48_sql('text')} % {int(mod)})"
+    return f"""
+WITH rows_ AS (
+  SELECT doc_id // {int(chunk_rows)} AS chunk,
+         ROW_NUMBER() OVER (PARTITION BY doc_id // {int(chunk_rows)}
+                            ORDER BY doc_id) - 1 AS pos,
+         text
+  FROM {doc_source})
+SELECT chunk, CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(length(text)) AS BIGINT) AS sum_len,
+       CAST(SUM({h}) % {int(mod)} AS BIGINT) AS cks,
+       CAST(SUM({h} * (pos + 1)) % {int(mod)} AS BIGINT) AS wcks
 FROM rows_ GROUP BY chunk ORDER BY chunk
 """

@@ -282,16 +282,22 @@ def _zone_picker(can_match, test):
     return pick
 
 
-def _range_picker(lo: str, hi: str):
-    """Picker of the docs with ids in ``[lo, hi)``."""
+def _range_picker(lo: str | None, hi: str | None):
+    """Picker of the docs with ids in ``[lo, hi)``; a ``None`` end is
+    open. The row test is built from the ends that are present: comparing
+    ids with ``None`` would give nulls and pick no doc."""
     import pyarrow.compute as pc
 
     from ..sources.parquet_direct import _range_can_match
 
-    return _zone_picker(
-        _range_can_match(lo, hi),
-        lambda ids: pc.and_(pc.greater_equal(ids, lo), pc.less(ids, hi)),
-    )
+    def test(ids):
+        if lo is None:
+            return pc.less(ids, hi) if hi is not None else pc.is_valid(ids)
+        if hi is None:
+            return pc.greater_equal(ids, lo)
+        return pc.and_(pc.greater_equal(ids, lo), pc.less(ids, hi))
+
+    return _zone_picker(_range_can_match(lo, hi), test)
 
 
 def _ids_picker(ids: list[str]):

@@ -164,11 +164,15 @@ def _float_from_sort_keys(k: np.ndarray) -> np.ndarray:
     return u.astype(np.uint64).view(np.float64)
 
 
-def _encode_column_arrow(sub: pa.Array, kind: str) -> tuple[bytes, str, int]:
+def _encode_column_arrow(
+    sub: pa.Array, kind: str, fsst_table: bytes | None = None
+) -> tuple[bytes, str, int]:
     """-> (payload, codec name, bytes_raw). ``sub`` must be null-free —
     :func:`encode_table` strips nulls into the validity bitmap first.
     Arrow-native: int64/float64 values never pass through a lossy pandas
-    dtype, and real NaN doubles stay distinct from NULLs."""
+    dtype, and real NaN doubles stay distinct from NULLs. A string column
+    with a packed shared ``fsst_table`` compresses its dictionary blob
+    against that table."""
     if sub.null_count:
         raise ValueError("inner frame encode is null-free by contract")
     if kind == KIND_INT32:
@@ -186,7 +190,8 @@ def _encode_column_arrow(sub: pa.Array, kind: str) -> tuple[bytes, str, int]:
     if kind == KIND_STRING:
         vals = sub.to_pylist()
         raw = sum(len(s.encode()) for s in vals)
-        return encode_string_chunk(vals), "dict_fsst", raw
+        payload = encode_string_chunk(vals, shared_table=fsst_table)
+        return payload, "dict_fsst", raw
     if kind == KIND_DATE:
         a = np.asarray(sub.cast(pa.int32()))  # exact epoch days
         payload, cid = encode_auto(a)
@@ -206,7 +211,9 @@ def _encode_column_arrow(sub: pa.Array, kind: str) -> tuple[bytes, str, int]:
     raise ValueError(f"unknown column kind {kind}")
 
 
-def _decode_column(payload: memoryview, kind: str, n: int):
+def _decode_column(
+    payload: memoryview, kind: str, n: int, fsst_table: bytes | None = None
+):
     if kind == KIND_INT32:
         vals = B.decode_block(payload)
         arr = pa.array(vals.astype(np.int32), pa.int32())
@@ -215,7 +222,8 @@ def _decode_column(payload: memoryview, kind: str, n: int):
     elif kind == KIND_FLOAT64:
         arr = pa.array(decode_float64(payload), pa.float64())
     elif kind == KIND_STRING:
-        arr = pa.array(decode_string_chunk(payload), pa.string())
+        texts = decode_string_chunk(payload, shared_table=fsst_table)
+        arr = pa.array(texts, pa.string())
     elif kind == KIND_DATE:
         days = B.decode_block(payload).astype(np.int32)
         arr = pa.array(days, pa.int32()).cast(pa.date32())
@@ -234,7 +242,9 @@ def _decode_column(payload: memoryview, kind: str, n: int):
     return arr
 
 
-def _decode_frame(payloads, valids, j: int, kind: str, n: int):
+def _decode_frame(
+    payloads, valids, j: int, kind: str, n: int, fsst_table=None
+):
     """Decode column ``j`` of a chunk row to a FULL-LENGTH Arrow array:
     when a validity bitmap is present, the inner frame holds only the
     non-null values and nulls re-expand through an Arrow ``take`` with
@@ -242,7 +252,7 @@ def _decode_frame(payloads, valids, j: int, kind: str, n: int):
     vbuf = None if valids is None else valids[j]
     if vbuf is None or not vbuf.is_valid:
         return _decode_column(
-            memoryview(payloads[j].as_buffer()), kind, n
+            memoryview(payloads[j].as_buffer()), kind, n, fsst_table
         )
     packed = np.frombuffer(vbuf.as_buffer(), np.uint8)
     valid = np.unpackbits(packed, count=n).astype(bool)
@@ -250,7 +260,7 @@ def _decode_frame(payloads, valids, j: int, kind: str, n: int):
     if n_valid == 0:
         return pa.nulls(n, _pa_type_of(kind))
     inner = _decode_column(
-        memoryview(payloads[j].as_buffer()), kind, n_valid
+        memoryview(payloads[j].as_buffer()), kind, n_valid, fsst_table
     )
     idx = np.zeros(n, np.int64)
     idx[valid] = np.arange(n_valid)
@@ -278,9 +288,18 @@ def encode_table(
     order_col: str,
     chunk_rows: int = 4096,
     bloom_cols: list[str] | None = None,
+    fsst_tables: dict[str, bytes] | None = None,
 ) -> DataFrame:
     """Encode EVERY column of ``df`` into per-(chunk, column) frames,
     chunked and ordered by the integer ``order_col``.
+
+    ``fsst_tables`` maps string columns to one packed FSST symbol table
+    each (``codec.fsst.pack_table``; ``columnar.train_shared_fsst_table``
+    trains one): their chunks compress the dictionary blob against that
+    shared table instead of embedding a table of their own, so training
+    cost and table bytes are paid once per column. The table is not
+    stored; :func:`decode_table` needs the same mapping back, and every
+    other reader of such a frame fails with the codec's ``ValueError``.
 
     ``bloom_cols`` names int-family columns (int/bigint/timestamp/date/
     decimal/double) that additionally store a per-chunk Bloom filter over
@@ -300,6 +319,12 @@ def encode_table(
                 f"bloom_cols: {c!r} is a string column (the dictionary "
                 "probe already prunes point predicates there)"
             )
+    fsst_tables = fsst_tables or {}
+    not_strings = set(fsst_tables) - {c for c, k in kinds if k == KIND_STRING}
+    if not_strings:
+        raise ValueError(
+            f"fsst_tables: not string columns: {sorted(not_strings)}"
+        )
     chunk = (
         (F.col(order_col) - F.pmod(F.col(order_col), F.lit(chunk_rows)))
         / chunk_rows
@@ -334,7 +359,9 @@ def encode_table(
                 maxs.append(None)
                 blooms.append(None)
                 continue
-            payload, codec, raw = _encode_column_arrow(sub, kind)
+            payload, codec, raw = _encode_column_arrow(
+                sub, kind, fsst_tables.get(name)
+            )
             payloads.append(payload)
             codecs.append(codec)
             enc_b.append(len(payload))
@@ -387,7 +414,10 @@ def encode_table(
 
 
 def decode_table(
-    blocks: DataFrame, df_schema, columns: list[str] | None = None
+    blocks: DataFrame,
+    df_schema,
+    columns: list[str] | None = None,
+    fsst_tables: dict[str, bytes] | None = None,
 ) -> DataFrame:
     """Inverse: wide rows ``(chunk, pos, <original columns>)``; ``pos`` is
     the in-chunk rank by the order key, so total order reconstructs.
@@ -398,6 +428,10 @@ def decode_table(
     two-column projection of a ten-column table pays two columns of
     decode CPU and Arrow transfer, the classic columnar-store win; the
     tests prove it by poisoning an unselected frame).
+
+    ``fsst_tables`` hands back the shared FSST tables the columns were
+    encoded with (:func:`encode_table`); a shared-table frame decoded
+    without its table fails with the codec's ``ValueError``.
 
     SCHEMA DRIFT: chunks resolve by column NAME, so a table whose later
     generations added columns reads as one frame — chunks written before
@@ -427,6 +461,7 @@ def decode_table(
         arrow_fields.append((f.name, _pa_type_of(kind)))
         spark_ddl += f", {f.name} {s}"
     out_schema = pa.schema(arrow_fields)
+    fsst_tables = fsst_tables or {}
 
     def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -443,7 +478,8 @@ def decode_table(
                     if cname not in wanted:
                         continue  # projection: frame never parsed
                     by_name[cname] = _decode_frame(
-                        payloads, valids_row, j, kind, n
+                        payloads, valids_row, j, kind, n,
+                        fsst_tables.get(cname),
                     )
                 arrays = [
                     pa.array(np.full(n, chunk, np.int64)),

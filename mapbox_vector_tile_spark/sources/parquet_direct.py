@@ -466,7 +466,7 @@ def decode_to_parquet_direct(
     blocks_path: str,
     out_path: str,
     n_tasks: int | None = None,
-    doc_range: tuple[str, str] | None = None,
+    doc_range: tuple[str | None, str | None] | None = None,
 ) -> int:
     """Decode a blocks dataset straight to a tokens parquet dataset — the
     inverse of the fused encode's worker-side sink: each task decodes its
@@ -477,12 +477,13 @@ def decode_to_parquet_direct(
     An empty result is one empty part file with the tokens schema, so it
     reads back as zero rows. Returns rows written.
 
-    ``doc_range=(lo, hi)`` makes this the worker-side-sink twin of the
-    Catalyst selective path (:func:`blocks_scan` + ``decode_doc_range``):
-    fragments prune from the task plan via the manifest zone maps, chunks
-    whose ``[min_doc_id, max_doc_id]`` envelope misses the range skip
-    without touching their payload, and boundary chunks gather only the
-    docs inside the range."""
+    ``doc_range=(lo, hi)`` (half-open, either end ``None``) makes this the
+    worker-side-sink twin of the Catalyst selective path
+    (:func:`blocks_scan` + ``decode_doc_range``): fragments prune from the
+    task plan via the manifest zone maps, chunks whose
+    ``[min_doc_id, max_doc_id]`` envelope misses the range skip without
+    touching their payload, and boundary chunks gather only the docs
+    inside the range."""
     from ..engine import decode as D
 
     files = list_parquet_files(blocks_path)

@@ -1,8 +1,7 @@
 """int64 column codecs: kernel exactness across the full domain, mode
-selection sanity, Spark roundtrip + order gate over events.ts."""
+selection sanity, table-store roundtrip + order gate over events.ts."""
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -15,10 +14,10 @@ from mapbox_vector_tile_spark.codec.int64 import (
     decode_int64,
     encode_int64_auto,
 )
-from mapbox_vector_tile_spark.engine.columnar import (
-    decode_int64_column,
-    encode_int64_column,
-    int64_roundtrip_rollup,
+from mapbox_vector_tile_spark.engine.columnar import int64_roundtrip_rollup
+from mapbox_vector_tile_spark.engine.table_encode import (
+    decode_table,
+    encode_table,
 )
 
 
@@ -76,14 +75,17 @@ def test_spark_roundtrip_events_ts(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")
     )
-    blocks = encode_int64_column(ev, "ts_us", "event_id", 256)
+    blocks = encode_table(ev, "event_id", 256)
     rows = blocks.collect()
-    # monotone micros with >int32 deltas must engage delta-planes and
-    # beat raw bytes
-    assert {r.mode for r in rows} <= set(INT64_MODE_NAMES.values())
-    assert sum(r.bytes_enc for r in rows) < sum(r.bytes_raw for r in rows)
-    dec = decode_int64_column(spark.createDataFrame(rows, blocks.schema))
-    got = {(r.chunk, r.pos): r.value for r in dec.collect()}
+    j = list(rows[0].cols).index("ts_us")
+    # monotone micros with >int32 deltas must engage the int64 transforms
+    # and beat raw bytes
+    assert {r.codecs[j] for r in rows} <= set(INT64_MODE_NAMES.values())
+    assert sum(r.bytes_enc[j] for r in rows) < sum(r.bytes_raw[j] for r in rows)
+    dec = decode_table(
+        spark.createDataFrame(rows, blocks.schema), ev.schema, ["ts_us"]
+    )
+    got = {(r.chunk, r.pos): r.ts_us for r in dec.collect()}
     want_rows = sorted((r.event_id, r.ts_us) for r in ev.collect())
     by_chunk = {}
     for eid, v in want_rows:
@@ -96,15 +98,14 @@ def test_spark_roundtrip_events_ts(spark):
     assert got == want
 
 
-def test_null_value_is_refused_not_stored(spark):
-    """A null value has no int64 encoding: the encoder fails and names the
-    column instead of storing it as -2^63 (pandas turns the null into NaN,
-    which ``to_numpy(np.int64)`` casts to -2^63)."""
-    df = spark.createDataFrame(
-        list(enumerate([1, 2, 3, 2**40, None, 7])), "k long, v long"
-    )
-    with pytest.raises(Exception, match="column 'v' holds a null"):
-        decode_int64_column(encode_int64_column(df, "v", "k", 4)).collect()
+def test_null_value_round_trips_at_its_position(spark):
+    """A null in an int64 column comes back as a null at its own position,
+    not as -2^63 (what a pandas NaN cast to int64 would store)."""
+    vals = [1, 2, 3, 2**40, None, 7]
+    df = spark.createDataFrame(list(enumerate(vals)), "k long, v long")
+    dec = decode_table(encode_table(df, "k", 4), df.schema, ["v"])
+    got = [r.v for r in dec.orderBy("chunk", "pos").collect()]
+    assert got == vals
 
 
 def test_rollup_shape(spark):

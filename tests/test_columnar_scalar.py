@@ -1,13 +1,14 @@
-"""Scalar-column encode: roundtrip exactness, codec diversity, compression
-wins on codec-friendly columns, parallelism invariance."""
+"""Scalar-column round trips through the table store: roundtrip
+exactness, codec diversity, compression wins on codec-friendly int32
+columns, null positions, parallelism invariance."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from mapbox_vector_tile_spark.engine.columnar import (
-    decode_scalar_column,
-    encode_scalar_column,
-    scalar_roundtrip_rollup,
+from mapbox_vector_tile_spark.engine.columnar import scalar_roundtrip_rollup
+from mapbox_vector_tile_spark.engine.table_encode import (
+    decode_table,
+    encode_table,
 )
 
 
@@ -20,11 +21,24 @@ def events(spark):
     return df
 
 
+def _int_column(df, order_col, value_col):
+    """``df``'s order key and ``value_col`` as int32, the scalar rollups'
+    stored table."""
+    return df.select(order_col, F.col(value_col).cast("int").alias(value_col))
+
+
+def _frame(row, col, field):
+    """``field`` (a manifest array) of column ``col`` in one blocks row."""
+    return getattr(row, field)[list(row.cols).index(col)]
+
+
 def test_roundtrip_values_and_order(spark, events):
-    blocks = encode_scalar_column(events, "value_c", "event_id", 256)
-    dec = decode_scalar_column(blocks)
+    table = _int_column(events, "event_id", "value_c")
+    dec = decode_table(
+        encode_table(table, "event_id", 256), table.schema, ["value_c"]
+    )
     got = {
-        (r.chunk, r.pos): r.value for r in dec.collect()
+        (r.chunk, r.pos): r.value_c for r in dec.collect()
     }
     want_rows = sorted(
         (r.event_id, r.value_c) for r in events.collect()
@@ -56,11 +70,11 @@ def test_codec_ladder_engages(spark):
         ("sorted_v", 4.0),
         ("dict_v", 4.0),
     ):
-        blocks = encode_scalar_column(df, col, "k", 1024).collect()
-        codecs = {b.codec for b in blocks}
-        assert codecs != {"RAW"}, (col, codecs)
-        ratio = sum(b.bytes_raw for b in blocks) / sum(
-            b.bytes_enc for b in blocks
+        blocks = encode_table(_int_column(df, "k", col), "k", 1024).collect()
+        codecs = {_frame(b, col, "codecs") for b in blocks}
+        assert "raw" not in codecs, (col, codecs)
+        ratio = sum(_frame(b, col, "bytes_raw") for b in blocks) / sum(
+            _frame(b, col, "bytes_enc") for b in blocks
         )
         assert ratio > want_better, (col, ratio, codecs)
 
@@ -76,11 +90,6 @@ def test_parallelism_invariance(spark, events):
 
 
 def test_nullable_roundtrip_positions_and_values(spark):
-    from mapbox_vector_tile_spark.engine.columnar import (
-        decode_scalar_column_nullable,
-        encode_scalar_column_nullable,
-    )
-
     n = 3000
     df = spark.range(n).select(
         F.col("id").alias("k"),
@@ -89,9 +98,9 @@ def test_nullable_roundtrip_positions_and_values(spark):
         .cast("long")
         .alias("v"),
     )
-    blocks = encode_scalar_column_nullable(df, "v", "k", 1024)
-    dec = decode_scalar_column_nullable(blocks)
-    got = {(r.chunk, r.pos): r.value for r in dec.collect()}
+    table = _int_column(df, "k", "v")
+    dec = decode_table(encode_table(table, "k", 1024), table.schema, ["v"])
+    got = {(r.chunk, r.pos): r.v for r in dec.collect()}
     want = {
         (i // 1024, i % 1024): (None if i % 7 == 0 else i * 3)
         for i in range(n)
@@ -100,11 +109,6 @@ def test_nullable_roundtrip_positions_and_values(spark):
 
 
 def test_nullable_all_null_and_no_null_chunks(spark):
-    from mapbox_vector_tile_spark.engine.columnar import (
-        decode_scalar_column_nullable,
-        encode_scalar_column_nullable,
-    )
-
     # chunk 0 all null, chunk 1 no nulls
     df = spark.range(2048).select(
         F.col("id").alias("k"),
@@ -113,14 +117,14 @@ def test_nullable_all_null_and_no_null_chunks(spark):
         .cast("long")
         .alias("v"),
     )
-    rows = encode_scalar_column_nullable(df, "v", "k", 1024).collect()
-    by_chunk = {r.chunk: r for r in rows}
-    assert by_chunk[0].n_values == 1024 and by_chunk[1].n_values == 1024
+    table = _int_column(df, "k", "v")
+    blocks = encode_table(table, "k", 1024)
+    by_chunk = {r.chunk: r for r in blocks.collect()}
+    assert by_chunk[0].n_rows == 1024 and by_chunk[1].n_rows == 1024
+    assert _frame(by_chunk[0], "v", "codecs") == "all_null"
     # constant-when-present picks CONSTANT for the non-null chunk
-    assert by_chunk[1].codec == "constant"
-    dec = decode_scalar_column_nullable(
-        encode_scalar_column_nullable(df, "v", "k", 1024)
-    ).collect()
-    nulls = sum(1 for r in dec if r.value is None)
+    assert _frame(by_chunk[1], "v", "codecs") == "constant"
+    dec = decode_table(blocks, table.schema, ["v"]).collect()
+    nulls = sum(1 for r in dec if r.v is None)
     assert nulls == 1024
-    assert all(r.value == 42 for r in dec if r.value is not None)
+    assert all(r.v == 42 for r in dec if r.v is not None)

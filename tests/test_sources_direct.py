@@ -329,3 +329,30 @@ def test_check_planned_tasks_raises_on_missing_task():
     )
     with pytest.raises(RuntimeError, match=r"result row \[1, 3\]"):
         check_planned_tasks(range(4), rows, "direct decode", "result")
+
+
+def test_decode_to_parquet_direct_open_ended_doc_range(spark, tmp_path):
+    """A ``doc_range`` with one end ``None`` decodes exactly the docs on
+    the open side, the same docs as a filter over the full decode."""
+    n = 300
+    tokens_pq = str(tmp_path / "tokens")
+    blocks_pq = str(tmp_path / "blocks")
+    out_pq = str(tmp_path / "decoded")
+    G.corpus_dataframe(spark, n, num_partitions=3).write.parquet(tokens_pq)
+    exchange_encode_fused_direct(spark, tokens_pq, blocks_pq, 4)
+    decode_to_parquet_direct(spark, blocks_pq, out_pq)
+    full = {r.doc_id: r.tokens for r in spark.read.parquet(out_pq).collect()}
+    assert len(full) == n
+    cut = "doc-00000100"
+    for doc_range, keep in (
+        ((cut, None), lambda d: d >= cut),
+        ((None, cut), lambda d: d < cut),
+        ((None, None), lambda d: True),
+    ):
+        want = {d: t for d, t in full.items() if keep(d)}
+        got = decode_to_parquet_direct(
+            spark, blocks_pq, out_pq, doc_range=doc_range
+        )
+        assert got == len(want), doc_range
+        back = spark.read.parquet(out_pq).collect()
+        assert {r.doc_id: r.tokens for r in back} == want, doc_range
