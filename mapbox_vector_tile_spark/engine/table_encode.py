@@ -13,8 +13,19 @@ encodings + per-segment metadata) expressed in the engine's own frames.
 Scale shape: deterministic chunking by an integer order key (``chunk =
 key >> log2(rows)`` — layout is a pure function of the data, the
 resume/oracle property everything else here has); encode is ONE shuffle
-on the chunk id with worker memory O(chunk_rows * columns); decode is a
-stateless ``mapInArrow`` emitting wide rows, parallel by chunk row.
+on the chunk id with worker memory O(chunk_rows * columns).
+
+Decode is one reader, per-caller pickers: :func:`_read_chunks` is the
+only loop that turns chunk rows into wide ``(chunk, pos, <columns>)``
+rows (one stateless ``mapInArrow``, parallel by chunk row), and
+``decode_table``, the merge-on-read deletes and the string/int predicate
+scans differ only in the picker that chooses each chunk's rows.
+
+Schema drift: chunks resolve columns by NAME, so a table whose later
+generations added columns reads as one table. A chunk written before a
+column existed reads NULL for it (the Iceberg add-column contract at
+chunk granularity): NULL never matches a predicate or an equality
+delete, and the aggregates count its rows with no value.
 
 Null handling: a nullable column stores a packed validity bitmap in the
 ``valids`` manifest column and its inner frame encodes only the
@@ -242,42 +253,138 @@ def _decode_column(
     return arr
 
 
-def _decode_frame(
-    payloads, valids, j: int, kind: str, n: int, fsst_table=None
-):
-    """Decode column ``j`` of a chunk row to a FULL-LENGTH Arrow array:
-    when a validity bitmap is present, the inner frame holds only the
-    non-null values and nulls re-expand through an Arrow ``take`` with
-    null indices (one vectorized gather, any kind)."""
-    vbuf = None if valids is None else valids[j]
-    if vbuf is None or not vbuf.is_valid:
-        return _decode_column(
-            memoryview(payloads[j].as_buffer()), kind, n, fsst_table
-        )
+def _col_index(batch, i, col: str) -> int | None:
+    """Position of ``col`` in chunk row ``i``'s ``cols``; ``None`` for a
+    chunk written before the column existed."""
+    cols = batch.column("cols")[i].as_py()
+    return cols.index(col) if col in cols else None
+
+
+def _valid_mask(batch, i, j: int) -> np.ndarray | None:
+    """Row validity of column ``j`` of chunk row ``i``; ``None`` when the
+    column stored no bitmap (no nulls, or a table written before
+    ``valids`` existed)."""
+    if "valids" not in batch.schema.names:
+        return None
+    vbuf = batch.column("valids")[i][j]
+    if not vbuf.is_valid:
+        return None
     packed = np.frombuffer(vbuf.as_buffer(), np.uint8)
-    valid = np.unpackbits(packed, count=n).astype(bool)
+    n = batch.column("n_rows")[i].as_py()
+    return np.unpackbits(packed, count=n).astype(bool)
+
+
+def _decode_frame(batch, i, j: int, fsst_table: bytes | None = None):
+    """Decode column ``j`` of chunk row ``i`` to a FULL-LENGTH Arrow
+    array, by the kind the chunk stored: when a validity bitmap is
+    present, the inner frame holds only the non-null values and nulls
+    re-expand through an Arrow ``take`` with null indices (one vectorized
+    gather, any kind)."""
+    kind = batch.column("kinds")[i][j].as_py()
+    n = batch.column("n_rows")[i].as_py()
+    payload = memoryview(batch.column("payloads")[i][j].as_buffer())
+    valid = _valid_mask(batch, i, j)
+    if valid is None:
+        return _decode_column(payload, kind, n, fsst_table)
     n_valid = int(valid.sum())
     if n_valid == 0:
         return pa.nulls(n, _pa_type_of(kind))
-    inner = _decode_column(
-        memoryview(payloads[j].as_buffer()), kind, n_valid, fsst_table
-    )
+    inner = _decode_column(payload, kind, n_valid, fsst_table)
     idx = np.zeros(n, np.int64)
     idx[valid] = np.arange(n_valid)
     return inner.take(pa.array(idx, mask=~valid))
 
 
+def _schema_of(df_schema, columns: list[str] | None = None) -> dict[str, str]:
+    """Column name -> kind of the table schema ``df_schema`` (a StructType
+    or DDL string), in schema order; with ``columns``, only those (a
+    name outside the schema is refused)."""
+    from pyspark.sql.types import StructType
+
+    if isinstance(df_schema, str):
+        df_schema = StructType.fromDDL(df_schema)
+    kinds = {}
+    for f in df_schema.fields:
+        k = _kind_of(f.dataType.simpleString())
+        if k is None:
+            raise ValueError(
+                f"unsupported table column type "
+                f"{f.dataType.simpleString()} ({f.name})"
+            )
+        kinds[f.name] = k
+    if columns is None:
+        return kinds
+    unknown = set(columns) - set(kinds)
+    if unknown:
+        raise ValueError(f"projection names not in schema: {sorted(unknown)}")
+    return {c: k for c, k in kinds.items() if c in columns}
+
+
+# kind -> a Spark type string of it (decimal kinds are their own)
+_SPARK_TYPE = {k: s for s, k in _SPARK_TO_KIND.items()}
+
+
+def _read_chunks(
+    blocks: DataFrame,
+    df_schema,
+    columns: list[str] | None = None,
+    pick=None,
+    fsst_tables: dict[str, bytes] | None = None,
+) -> DataFrame:
+    """The one reader of table chunk rows: ONE ``mapInArrow`` emitting
+    ``(chunk, pos, <columns>)`` for the picked rows of every chunk row of
+    ``blocks``; ``pos`` is the row's original in-chunk rank.
+
+    ``pick(batch, i)`` chooses chunk row ``i``'s rows: ``None`` skips the
+    chunk with no other frame parsed, else the ascending positions of the
+    rows to keep (all ``n_rows`` of them: the whole chunk, no gather).
+    With no picker every row is read. Only the projected columns' frames
+    are parsed; a projected column the chunk lacks reads NULL."""
+    kinds = _schema_of(df_schema, columns)
+    out_schema = pa.schema(
+        [("chunk", pa.int64()), ("pos", pa.int64())]
+        + [(c, _pa_type_of(k)) for c, k in kinds.items()]
+    )
+    ddl = ", ".join(
+        ["chunk long", "pos long"]
+        + [f"{c} {_SPARK_TYPE.get(k, k)}" for c, k in kinds.items()]
+    )
+    fsst_tables = fsst_tables or {}
+
+    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in range(batch.num_rows):
+                n = batch.column("n_rows")[i].as_py()
+                sel = np.arange(n) if pick is None else pick(batch, i)
+                if sel is None or sel.size == 0:
+                    continue
+                take = None if sel.size == n else pa.array(sel)
+                cols = batch.column("cols")[i].as_py()
+                chunk = batch.column("chunk")[i].as_py()
+                arrays = [
+                    pa.array(np.full(sel.size, chunk, np.int64)),
+                    pa.array(sel.astype(np.int64)),
+                ]
+                for c in kinds:
+                    if c not in cols:
+                        arrays.append(
+                            pa.nulls(sel.size, out_schema.field(c).type)
+                        )
+                        continue
+                    full = _decode_frame(
+                        batch, i, cols.index(c), fsst_tables.get(c)
+                    )
+                    arrays.append(full if take is None else full.take(take))
+                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+
+    return blocks.mapInArrow(read, ddl)
+
+
 def table_kinds(df: DataFrame, order_col: str) -> list[tuple[str, str]]:
     """(name, kind) for every column, order_col first (it is stored too —
     decode reconstructs the full original table including the key)."""
-    kinds = []
-    for f in df.schema.fields:
-        s = f.dataType.simpleString()
-        k = _kind_of(s)
-        if k is None:
-            raise ValueError(f"unsupported table column type {s} ({f.name})")
-        kinds.append((f.name, k))
-    kinds.sort(key=lambda kv: (kv[0] != order_col,))
+    kinds = sorted(_schema_of(df.schema).items(),
+                   key=lambda kv: kv[0] != order_col)
     if kinds[0][0] != order_col:
         raise ValueError(f"order_col {order_col!r} not in table")
     return kinds
@@ -433,65 +540,9 @@ def decode_table(
     encoded with (:func:`encode_table`); a shared-table frame decoded
     without its table fails with the codec's ``ValueError``.
 
-    SCHEMA DRIFT: chunks resolve by column NAME, so a table whose later
-    generations added columns reads as one frame — chunks written before
-    a column existed backfill NULL for it (the Iceberg add-column
-    contract, applied to the chunk store; streaming ingest can widen the
-    schema mid-stream)."""
-    from pyspark.sql.types import StructType
-
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    all_names = [f.name for f in df_schema.fields]
-    if columns is None:
-        names = all_names
-    else:
-        unknown = set(columns) - set(all_names)
-        if unknown:
-            raise ValueError(f"projection names not in schema: {sorted(unknown)}")
-        names = [n for n in all_names if n in set(columns)]
-    wanted = set(names)
-    arrow_fields = [("chunk", pa.int64()), ("pos", pa.int64())]
-    spark_ddl = "chunk long, pos long"
-    for f in df_schema.fields:
-        if f.name not in wanted:
-            continue
-        s = f.dataType.simpleString()
-        kind = _kind_of(s)
-        arrow_fields.append((f.name, _pa_type_of(kind)))
-        spark_ddl += f", {f.name} {s}"
-    out_schema = pa.schema(arrow_fields)
-    fsst_tables = fsst_tables or {}
-
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            has_valids = "valids" in batch.schema.names
-            for i in range(batch.num_rows):
-                chunk = batch.column("chunk")[i].as_py()
-                n = batch.column("n_rows")[i].as_py()
-                cols = batch.column("cols")[i].as_py()
-                kinds_row = batch.column("kinds")[i].as_py()
-                payloads = batch.column("payloads")[i]
-                valids_row = batch.column("valids")[i] if has_valids else None
-                by_name = {}
-                for j, (cname, kind) in enumerate(zip(cols, kinds_row)):
-                    if cname not in wanted:
-                        continue  # projection: frame never parsed
-                    by_name[cname] = _decode_frame(
-                        payloads, valids_row, j, kind, n,
-                        fsst_tables.get(cname),
-                    )
-                arrays = [
-                    pa.array(np.full(n, chunk, np.int64)),
-                    pa.array(np.arange(n, dtype=np.int64)),
-                ] + [
-                    by_name[name] if name in by_name
-                    else pa.nulls(n, out_schema.field(name).type)
-                    for name in names
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return blocks.mapInArrow(dec, spark_ddl)
+    Schema drift follows the module rule (a chunk written before a column
+    existed reads NULL for it)."""
+    return _read_chunks(blocks, df_schema, columns, fsst_tables=fsst_tables)
 
 
 def decode_table_with_deletes(
@@ -516,8 +567,8 @@ def decode_table_with_deletes(
       ``searchsorted`` calls against the sorted array): chunks with no
       overlapping delete decode on the untouched fast path — only the
       intersecting chunks parse their key frame;
-    - touched chunks build one keep-mask from the key frame and filter
-      every projected column with a vectorized Arrow ``filter``. ``pos``
+    - touched chunks pick their surviving rows from the key frame, and
+      only those rows of the projected columns materialize. ``pos``
       keeps its ORIGINAL in-chunk rank (Iceberg position semantics: a
       delete does not renumber survivors).
 
@@ -526,98 +577,43 @@ def decode_table_with_deletes(
     keys never match an equality delete. Compaction is the "apply for
     real" companion: ``decode -> re-encode`` retires the sidecar.
     """
-    from pyspark.sql.types import StructType
-
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    key_field = next(
-        (f for f in df_schema.fields if f.name == key_col), None
-    )
-    if key_field is None:
+    kind = _schema_of(df_schema).get(key_col)
+    if kind is None:
         raise ValueError(f"key_col {key_col!r} not in schema")
-    kind = _kind_of(key_field.dataType.simpleString())
     if kind not in (KIND_INT32, KIND_INT64):
         raise ValueError(
             f"key_col {key_col!r} must be int/bigint, got {kind}"
         )
-    all_names = [f.name for f in df_schema.fields]
-    names = all_names if columns is None else [
-        n for n in all_names if n in set(columns)
-    ]
-    wanted = set(names)
-    arrow_fields = [("chunk", pa.int64()), ("pos", pa.int64())]
-    spark_ddl = "chunk long, pos long"
-    for f in df_schema.fields:
-        if f.name not in wanted:
-            continue
-        s = f.dataType.simpleString()
-        arrow_fields.append((f.name, _pa_type_of(_kind_of(s))))
-        spark_ddl += f", {f.name} {s}"
-    out_schema = pa.schema(arrow_fields)
-
     dels = (
         deletes_df.select(F.col(key_col).cast("long").alias("k"))
         .distinct()
         .agg(F.sort_array(F.collect_list("k")).alias("_deleted"))
     )
-    withd = blocks.crossJoin(F.broadcast(dels))
 
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        del_arr: np.ndarray | None = None
-        for batch in batches:
-            if del_arr is None and batch.num_rows:
-                del_arr = np.asarray(
-                    batch.column("_deleted")[0].as_py(), dtype=np.int64
-                )
-            has_valids = "valids" in batch.schema.names
-            for i in range(batch.num_rows):
-                chunk = batch.column("chunk")[i].as_py()
-                n = batch.column("n_rows")[i].as_py()
-                cols = batch.column("cols")[i].as_py()
-                kinds_row = batch.column("kinds")[i].as_py()
-                payloads = batch.column("payloads")[i]
-                valids_row = batch.column("valids")[i] if has_valids else None
-                mins_row = batch.column("mins")[i].as_py()
-                maxs_row = batch.column("maxs")[i].as_py()
-                j_key = cols.index(key_col)
-                keep = None
-                zlo, zhi = mins_row[j_key], maxs_row[j_key]
-                if zlo is not None and del_arr.size:
-                    a = int(np.searchsorted(del_arr, zlo, "left"))
-                    b = int(np.searchsorted(del_arr, zhi, "right"))
-                    if a != b:  # zone-map hit: parse the key frame
-                        keys = _decode_frame(
-                            payloads, valids_row, j_key, kinds_row[j_key], n
-                        )
-                        kv = np.asarray(keys.cast(pa.int64()).fill_null(0))
-                        hit = np.isin(kv, del_arr[a:b])
-                        if keys.null_count:  # NULL keys never match
-                            hit &= np.asarray(keys.is_valid())
-                        if hit.all():
-                            continue
-                        if hit.any():
-                            keep = ~hit
-                by_name = {}
-                for j, (cname, ckind) in enumerate(zip(cols, kinds_row)):
-                    if cname not in wanted:
-                        continue  # projection: frame never parsed
-                    by_name[cname] = _decode_frame(
-                        payloads, valids_row, j, ckind, n
-                    )
-                arrays = [
-                    pa.array(np.full(n, chunk, np.int64)),
-                    pa.array(np.arange(n, dtype=np.int64)),
-                ] + [
-                    by_name[name] if name in by_name
-                    else pa.nulls(n, out_schema.field(name).type)
-                    for name in names
-                ]
-                rb = pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-                if keep is not None:
-                    rb = rb.filter(pa.array(keep))
-                yield rb
+    def pick(batch, i):
+        keep = np.arange(batch.column("n_rows")[i].as_py())
+        j = _col_index(batch, i, key_col)
+        if j is None:
+            return keep  # pre-drift chunk: NULL keys never match
+        zlo = batch.column("mins")[i][j].as_py()
+        zhi = batch.column("maxs")[i][j].as_py()
+        if zlo is None:
+            return keep  # all-null key column
+        deleted = np.asarray(batch.column("_deleted")[i].values, np.int64)
+        a = int(np.searchsorted(deleted, zlo, "left"))
+        b = int(np.searchsorted(deleted, zhi, "right"))
+        if a == b:
+            return keep  # zone map misses every delete: key frame unread
+        keys = _decode_frame(batch, i, j)
+        hit = np.isin(np.asarray(keys.cast(pa.int64()).fill_null(0)),
+                      deleted[a:b])
+        if keys.null_count:  # NULL keys never match
+            hit &= np.asarray(keys.is_valid())
+        return np.flatnonzero(~hit)
 
-    return withd.mapInArrow(dec, spark_ddl)
+    return _read_chunks(
+        blocks.crossJoin(F.broadcast(dels)), df_schema, columns, pick
+    )
 
 
 def scan_table_range(
@@ -653,16 +649,9 @@ def scan_table_multi_range(
     key range intersects its zone map), then the row predicates
     re-apply post-decode. Same key-space mapping per kind as
     :func:`scan_table_range`."""
-    from pyspark.sql.types import StructType
-
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
     if not predicates:
         raise ValueError("need at least one predicate")
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
+    kinds = _schema_of(df_schema)
     manifest_filter = None
     row_filter = None
     for col, (lo, hi) in predicates.items():
@@ -756,30 +745,18 @@ def scan_table_int_in(
     Three layers, cheapest first: (1) a Catalyst zone-map filter on the
     manifest arrays — the OR of each value's interval test, exact per
     value, reaches the blocks scan so pruned chunks never read payload
-    bytes; (2) worker-side, the per-chunk Bloom filter (when
-    :func:`encode_table` stored one for ``col``) drops chunks containing
-    NONE of the values — the case that matters for columns uncorrelated
-    with the order key, where every chunk's [min,max] straddles the
-    probes; (3) surviving chunks decode the predicate column and
+    bytes; (2) in the decode pass, a picker over the per-chunk Bloom
+    filter (when :func:`encode_table` stored one for ``col``) skips
+    chunks containing NONE of the values — the case that matters for
+    columns uncorrelated with the order key, where every chunk's
+    [min,max] straddles the probes; (3) surviving chunks decode and
     row-filter exactly. No false negatives anywhere, so the result is
     exact with or without a stored bloom. ``values`` is point-probe
     sized (the literal OR bounds the plan)."""
-    from pyspark.sql.types import StructType
-
     if not values:
         raise ValueError("IN-list must be non-empty")
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
-    kind = kinds.get(col)
-    keys, row_vals = [], []
-    for v in values:
-        key, rv = _probe_key(kind, col, v)
-        keys.append(key)
-        row_vals.append(rv)
+    kind = _schema_of(df_schema).get(col)
+    keys, row_vals = zip(*(_probe_key(kind, col, v) for v in values))
     if columns is not None and col not in columns:
         raise ValueError("projection must include the predicate column")
 
@@ -791,36 +768,54 @@ def scan_table_int_in(
             & (F.element_at(F.col("maxs"), idx.cast("int")) >= F.lit(key))
         )
         zone = z if zone is None else zone | z
-    pruned = blocks.filter((idx > 0) & zone)
 
-    def bloom_gate(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if "blooms" not in batch.schema.names:
-                yield batch  # pre-bloom table: zone map only
-                continue
-            keep = []
-            cols_col = batch.column("cols")
-            blooms_col = batch.column("blooms")
-            for i in range(batch.num_rows):
-                j = cols_col[i].as_py().index(col)
-                blob = blooms_col[i][j]
-                b = (None if not blob.is_valid
-                     else memoryview(blob.as_buffer()))
-                if any(bloom.might_contain(b, key, wide=True)
+    def pick(batch, i):
+        if "blooms" in batch.schema.names:  # else a pre-bloom table
+            blob = batch.column("blooms")[i][_col_index(batch, i, col)]
+            b = None if not blob.is_valid else memoryview(blob.as_buffer())
+            if not any(bloom.might_contain(b, key, wide=True)
                        for key in keys):
-                    keep.append(i)
-            if keep:
-                yield batch.take(pa.array(keep, pa.int32()))
+                return None
+        return np.arange(batch.column("n_rows")[i].as_py())
 
-    gated = pruned.mapInArrow(bloom_gate, pruned.schema)
-    dec = decode_table(gated, df_schema, columns)
+    pruned = blocks.filter((idx > 0) & zone)
+    dec = _read_chunks(pruned, df_schema, columns, pick)
     row_pred = None
     for rv in row_vals:
         r = F.col(col) == rv
         row_pred = r if row_pred is None else row_pred | r
     return dec.filter(row_pred)
+
+
+def _dict_picker(df_schema, col: str, ranks_of):
+    """Picker of the rows whose string ``col`` is one of the dictionary
+    entries ranked by ``ranks_of(dict_blob)``: a chunk whose dictionary
+    holds none of them is skipped having parsed ONLY that blob (no index
+    stream, no other frame), else the matching codes of the bit-packed
+    index stream map back to row positions. A chunk written before
+    ``col`` existed, or whose ``col`` is all NULL, matches nothing."""
+    from ..codec.strings import string_chunk_indices
+
+    if _schema_of(df_schema).get(col) != KIND_STRING:
+        raise ValueError(f"{col!r} is not a string column")
+
+    def pick(batch, i):
+        j = _col_index(batch, i, col)
+        if j is None:
+            return None
+        blob = memoryview(batch.column("payloads")[i][j].as_buffer())
+        if len(blob) == 0:
+            return None
+        ranks = ranks_of(blob)
+        if not ranks:
+            return None  # dict probe pruned the chunk
+        codes = string_chunk_indices(blob)
+        sel = np.flatnonzero(np.isin(codes, np.asarray(ranks, np.uint32)))
+        valid = _valid_mask(batch, i, j)
+        # codes index the NON-NULL rows: map back to row space
+        return sel if valid is None else np.flatnonzero(valid)[sel]
+
+    return pick
 
 
 def scan_table_string_eq(
@@ -855,88 +850,25 @@ def scan_table_string_in(
     projected columns materialize (Arrow ``take``). This is the
     dictionary-predicate evaluation of the classic columnar engines,
     over the engine's own string frames."""
-    from pyspark.sql.types import StructType
-
-    from ..codec.strings import (
-        string_chunk_find,
-        string_chunk_indices,
-        string_chunk_table,
-    )
+    from ..codec.strings import string_chunk_find, string_chunk_table
 
     if not values:
         raise ValueError("IN-list must be non-empty")
     value_set = set(values)
+    if len(value_set) == 1:  # early-exit single probe
+        (value,) = value_set
 
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
-    if kinds.get(col) != KIND_STRING:
-        raise ValueError(f"{col!r} is not a string column")
-    all_names = [f.name for f in df_schema.fields]
-    names = all_names if columns is None else [n for n in all_names if n in set(columns)]
-    if columns is not None and set(columns) - set(all_names):
-        raise ValueError("projection names not in schema")
-    arrow_fields = [("chunk", pa.int64()), ("pos", pa.int64())]
-    spark_ddl = "chunk long, pos long"
-    ddl_of = {f.name: f.dataType.simpleString() for f in df_schema.fields}
-    for n in names:
-        arrow_fields.append((n, _pa_type_of(kinds[n])))
-        spark_ddl += f", {n} {ddl_of[n]}"
-    out_schema = pa.schema(arrow_fields)
-    name_set = set(names)
+        def ranks_of(blob):
+            rank = string_chunk_find(blob, value)
+            return [rank] if rank >= 0 else []
+    else:  # one table parse, set membership
+        def ranks_of(blob):
+            return [r for r, s in enumerate(string_chunk_table(blob))
+                    if s in value_set]
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            has_valids = "valids" in batch.schema.names
-            for i in range(batch.num_rows):
-                cols_row = batch.column("cols")[i].as_py()
-                payloads = batch.column("payloads")[i]
-                valids_row = batch.column("valids")[i] if has_valids else None
-                j_pred = cols_row.index(col)
-                pred_payload = payloads[j_pred]
-                if len(pred_payload.as_buffer()) == 0:
-                    continue  # all-null predicate column: nothing matches
-                pred_buf = memoryview(pred_payload.as_buffer())
-                if len(value_set) == 1:  # early-exit single probe
-                    rank = string_chunk_find(pred_buf, next(iter(value_set)))
-                    ranks = [rank] if rank >= 0 else []
-                else:  # one table parse, set membership
-                    table = string_chunk_table(pred_buf)
-                    ranks = [i for i, s in enumerate(table) if s in value_set]
-                if not ranks:
-                    continue  # dict probe pruned the chunk
-                codes = string_chunk_indices(pred_buf)
-                sel = np.flatnonzero(
-                    np.isin(codes, np.asarray(ranks, np.uint32))
-                )
-                if sel.size == 0:
-                    continue
-                chunk = batch.column("chunk")[i].as_py()
-                n = batch.column("n_rows")[i].as_py()
-                kinds_row = batch.column("kinds")[i].as_py()
-                pred_vbuf = None if valids_row is None else valids_row[j_pred]
-                if pred_vbuf is not None and pred_vbuf.is_valid:
-                    # codes index the NON-NULL rows: map back to row space
-                    packed = np.frombuffer(pred_vbuf.as_buffer(), np.uint8)
-                    valid = np.unpackbits(packed, count=n).astype(bool)
-                    sel = np.flatnonzero(valid)[sel]
-                take = pa.array(sel)
-                by_name = {}
-                for j, (cname, kind) in enumerate(zip(cols_row, kinds_row)):
-                    if cname not in name_set:
-                        continue
-                    full = _decode_frame(payloads, valids_row, j, kind, n)
-                    by_name[cname] = full.take(take)
-                arrays = [
-                    pa.array(np.full(sel.size, chunk, np.int64)),
-                    pa.array(sel.astype(np.int64)),
-                ] + [by_name[m] for m in names]
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return blocks.mapInArrow(scan, spark_ddl)
+    return _read_chunks(
+        blocks, df_schema, columns, _dict_picker(df_schema, col, ranks_of)
+    )
 
 
 def scan_table_string_prefix(
@@ -954,85 +886,18 @@ def scan_table_string_prefix(
     over string columns at scale (id namespaces, URL/path prefixes).
     Matching chunks filter by integer code membership; only surviving
     ROWS of the projected columns materialize."""
-    from pyspark.sql.types import StructType
-
-    from ..codec.strings import string_chunk_indices, string_chunk_table
+    from ..codec.strings import string_chunk_table
 
     if not prefix:
         raise ValueError("prefix must be non-empty")
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
-    if kinds.get(col) != KIND_STRING:
-        raise ValueError(f"{col!r} is not a string column")
-    all_names = [f.name for f in df_schema.fields]
-    names = (all_names if columns is None
-             else [n for n in all_names if n in set(columns)])
-    if columns is not None and set(columns) - set(all_names):
-        raise ValueError("projection names not in schema")
-    arrow_fields = [("chunk", pa.int64()), ("pos", pa.int64())]
-    spark_ddl = "chunk long, pos long"
-    ddl_of = {f.name: f.dataType.simpleString() for f in df_schema.fields}
-    for n in names:
-        arrow_fields.append((n, _pa_type_of(kinds[n])))
-        spark_ddl += f", {n} {ddl_of[n]}"
-    out_schema = pa.schema(arrow_fields)
-    name_set = set(names)
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            has_valids = "valids" in batch.schema.names
-            for i in range(batch.num_rows):
-                cols_row = batch.column("cols")[i].as_py()
-                if col not in cols_row:  # pre-drift chunk: NULL never
-                    continue             # matches LIKE
-                payloads = batch.column("payloads")[i]
-                valids_row = batch.column("valids")[i] if has_valids else None
-                j_pred = cols_row.index(col)
-                pred_payload = payloads[j_pred]
-                if len(pred_payload.as_buffer()) == 0:
-                    continue  # all-null predicate column
-                pred_buf = memoryview(pred_payload.as_buffer())
-                table = string_chunk_table(pred_buf)
-                ranks = [r for r, s in enumerate(table)
-                         if s.startswith(prefix)]
-                if not ranks:
-                    continue  # dict probe pruned the chunk
-                codes = string_chunk_indices(pred_buf)
-                sel = np.flatnonzero(
-                    np.isin(codes, np.asarray(ranks, np.uint32))
-                )
-                if sel.size == 0:
-                    continue
-                chunk = batch.column("chunk")[i].as_py()
-                n = batch.column("n_rows")[i].as_py()
-                kinds_row = batch.column("kinds")[i].as_py()
-                pred_vbuf = None if valids_row is None else valids_row[j_pred]
-                if pred_vbuf is not None and pred_vbuf.is_valid:
-                    packed = np.frombuffer(pred_vbuf.as_buffer(), np.uint8)
-                    valid = np.unpackbits(packed, count=n).astype(bool)
-                    sel = np.flatnonzero(valid)[sel]
-                take = pa.array(sel)
-                by_name = {}
-                for j, (cname, kind) in enumerate(zip(cols_row, kinds_row)):
-                    if cname not in name_set:
-                        continue
-                    full = _decode_frame(payloads, valids_row, j, kind, n)
-                    by_name[cname] = full.take(take)
-                arrays = [
-                    pa.array(np.full(sel.size, chunk, np.int64)),
-                    pa.array(sel.astype(np.int64)),
-                ] + [
-                    by_name[m] if m in by_name
-                    else pa.nulls(sel.size, out_schema.field(m).type)
-                    for m in names
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    def ranks_of(blob):
+        return [r for r, s in enumerate(string_chunk_table(blob))
+                if s.startswith(prefix)]
 
-    return blocks.mapInArrow(scan, spark_ddl)
+    return _read_chunks(
+        blocks, df_schema, columns, _dict_picker(df_schema, col, ranks_of)
+    )
 
 
 def table_stats(blocks: DataFrame, df_schema) -> DataFrame:
@@ -1042,10 +907,6 @@ def table_stats(blocks: DataFrame, df_schema) -> DataFrame:
     dict probe, not a range). Float extrema come back through the inverse
     of the order-preserving key map. The aggregate input is the manifest
     (one row per chunk), so at 100 TB this is a metadata-sized job."""
-    from pyspark.sql.types import StructType
-
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
     spark = blocks.sparkSession
     z = blocks.select(
         "n_rows",
@@ -1062,7 +923,7 @@ def table_stats(blocks: DataFrame, df_schema) -> DataFrame:
         )
     )
     rows = agg.collect()  # one row per column: scalar-sized final result
-    order = {f.name: i for i, f in enumerate(df_schema.fields)}
+    order = {c: i for i, c in enumerate(_schema_of(df_schema))}
     out = []
     for r in sorted(rows, key=lambda r: order.get(r["col"], len(order))):
         if r["kind"] in (KIND_INT32, KIND_INT64, KIND_DATE, KIND_BOOL, KIND_TS):
@@ -1091,17 +952,10 @@ def table_int_stats(blocks: DataFrame, df_schema, col: str) -> DataFrame:
     values). Returns one row: ``(col, n, n_valid, sum_v, min_v, max_v,
     values_decoded)`` — the last is the O(n)-materialization telemetry
     the tests bound."""
-    from pyspark.sql.types import StructType
-
     from ..codec.aggregate import value_stats
 
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
-    if kinds.get(col) not in (KIND_INT32, KIND_DATE, KIND_BOOL):
+    if _schema_of(df_schema).get(col) not in (KIND_INT32, KIND_DATE,
+                                              KIND_BOOL):
         raise ValueError(
             f"codec stats pushdown needs an int32-family column, got {col!r}"
         )
@@ -1119,12 +973,11 @@ def table_int_stats(blocks: DataFrame, df_schema, col: str) -> DataFrame:
         )
         for batch in batches:
             for i in range(batch.num_rows):
-                cols_row = batch.column("cols")[i].as_py()
-                payloads = batch.column("payloads")[i]
                 n = batch.column("n_rows")[i].as_py()
-                j = cols_row.index(col)
-                buf = payloads[j].as_buffer()
-                if len(buf) == 0:  # all_null
+                j = _col_index(batch, i, col)
+                buf = (b"" if j is None
+                       else batch.column("payloads")[i][j].as_buffer())
+                if len(buf) == 0:  # pre-drift chunk or all_null frame
                     nv, s, mn, mx, dec = 0, None, None, None, 0
                 else:
                     nv, s, mn, mx, dec = value_stats(memoryview(buf))
@@ -1165,39 +1018,21 @@ def table_group_count(blocks: DataFrame, df_schema, col: str) -> DataFrame:
     ``cardinality`` rows per chunk instead of ``n_rows``, and the final
     aggregate is one tiny hash agg on the value. Nulls form their own
     group (SQL GROUP BY semantics)."""
-    from pyspark.sql.types import StructType
-
     from ..codec.strings import string_chunk_indices, string_chunk_table
 
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
-    if kinds.get(col) != KIND_STRING:
+    if _schema_of(df_schema).get(col) != KIND_STRING:
         raise ValueError(f"{col!r} is not a string column")
 
     def gc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for i in range(batch.num_rows):
-                cols_row = batch.column("cols")[i].as_py()
-                payloads = batch.column("payloads")[i]
                 n = batch.column("n_rows")[i].as_py()
-                if col not in cols_row:  # pre-drift chunk: all-null group
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([None], pa.string()),
-                         pa.array([n], pa.int64())],
-                        schema=pa.schema(
-                            [("value", pa.string()), ("cnt", pa.int64())]
-                        ),
-                    )
-                    continue
-                j = cols_row.index(col)
-                buf = payloads[j].as_buffer()
+                j = _col_index(batch, i, col)
+                buf = (b"" if j is None
+                       else batch.column("payloads")[i][j].as_buffer())
                 values: list[str | None] = []
                 counts: list[int] = []
-                if len(buf) == 0:  # all_null frame
+                if len(buf) == 0:  # pre-drift chunk or all_null frame
                     n_codes = 0
                 else:
                     mv = memoryview(buf)
@@ -1238,69 +1073,50 @@ def table_group_sum(
     per chunk and per-row group strings never materialize. SQL
     semantics: a NULL group groups separately; NULL values count in
     ``n`` but not ``n_valid``/``sum_v``."""
-    from pyspark.sql.types import StructType
-
     from ..codec.strings import string_chunk_indices, string_chunk_table
 
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    kinds = {
-        f.name: _kind_of(f.dataType.simpleString())
-        for f in df_schema.fields
-    }
+    kinds = _schema_of(df_schema)
     if kinds.get(group_col) != KIND_STRING:
         raise ValueError(f"{group_col!r} is not a string column")
     if kinds.get(value_col) not in (KIND_INT32, KIND_INT64):
         raise ValueError(f"{value_col!r} is not an int column")
-    vkind = kinds[value_col]
 
     def gs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
         for batch in batches:
-            has_valids = "valids" in batch.schema.names
             for i in range(batch.num_rows):
-                cols_row = batch.column("cols")[i].as_py()
-                payloads = batch.column("payloads")[i]
-                valids_row = (
-                    batch.column("valids")[i] if has_valids else None
-                )
                 n = batch.column("n_rows")[i].as_py()
-                if group_col not in cols_row or len(
-                    payloads[cols_row.index(group_col)].as_buffer()
-                ) == 0:
+                jg = _col_index(batch, i, group_col)
+                gmv = memoryview(
+                    b"" if jg is None
+                    else batch.column("payloads")[i][jg].as_buffer()
+                )
+                if len(gmv) == 0:
                     # pre-drift chunk / all-null group column: null group
                     table: list = []
                     row_codes = np.zeros(n, np.int64)
                     card = 0
                 else:
-                    jg = cols_row.index(group_col)
-                    gmv = memoryview(payloads[jg].as_buffer())
                     table = string_chunk_table(gmv)
                     codes = string_chunk_indices(gmv).astype(np.int64)
                     card = len(table)
-                    gv = None if valids_row is None else valids_row[jg]
-                    if gv is not None and gv.is_valid:
-                        packed = np.frombuffer(gv.as_buffer(), np.uint8)
-                        gvalid = np.unpackbits(packed, count=n).astype(bool)
+                    gvalid = _valid_mask(batch, i, jg)
+                    if gvalid is None:
+                        row_codes = codes
+                    else:
                         row_codes = np.full(n, card, np.int64)  # null grp
                         row_codes[np.flatnonzero(gvalid)] = codes
-                    else:
-                        row_codes = codes
-                if value_col not in cols_row:
+                jv = _col_index(batch, i, value_col)
+                if jv is None:
                     # pre-drift chunk: the value column reads all-NULL
                     vmask = np.zeros(n, bool)
                     vnp = np.zeros(n, np.int64)
                 else:
-                    vals = _decode_frame(
-                        payloads, valids_row, cols_row.index(value_col),
-                        vkind, n,
-                    )
+                    vals = _decode_frame(batch, i, jv)
                     vmask = (np.asarray(vals.is_valid())
                              if vals.null_count else np.ones(n, bool))
-                    import pyarrow.compute as pc
-
-                    vnp = np.asarray(
-                        pc.fill_null(vals, 0).cast(pa.int64())
-                    )
+                    vnp = np.asarray(pc.fill_null(vals, 0).cast(pa.int64()))
                 acc = np.zeros(card + 1, np.int64)
                 np.add.at(acc, row_codes, np.where(vmask, vnp, 0))
                 cnt = np.bincount(row_codes, minlength=card + 1)
@@ -1362,11 +1178,7 @@ def merge_table(
     (the CoW delta a versioned store persists per commit — see
     ``streaming/table_sink.start_table_upsert_stream``); the caller owns
     carrying the untouched blocks forward."""
-    from pyspark.sql.types import StructType
-
-    if isinstance(df_schema, str):
-        df_schema = StructType.fromDDL(df_schema)
-    names = [f.name for f in df_schema.fields]
+    names = list(_schema_of(df_schema))
     chunk_of = (
         (F.col(order_col) - F.pmod(F.col(order_col), F.lit(chunk_rows)))
         / chunk_rows

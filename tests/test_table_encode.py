@@ -336,6 +336,28 @@ def test_projection_pushdown_skips_unselected_frames(spark, events):
     got = {r.event_id: r.event_type for r in dec.collect()}
     want = {r.event_id: r.event_type for r in events.collect()}
     assert got == want
+    # the string scan and the merge-on-read reader project the same way
+    from mapbox_vector_tile_spark.engine.table_encode import (
+        decode_table_with_deletes,
+        scan_table_string_in,
+    )
+
+    vals = ["view", "purchase"]
+    hit = scan_table_string_in(
+        poisoned, events.schema, "event_type", vals, ["event_id", "value"]
+    )
+    assert {r.event_id: r.value for r in hit.collect()} == {
+        r.event_id: r.value
+        for r in events.filter(F.col("event_type").isin(vals)).collect()
+    }
+    dels = events.select("event_id").filter("event_id % 5 = 2")
+    kept = decode_table_with_deletes(
+        poisoned, events.schema, dels, "event_id", ["event_id", "event_type"]
+    )
+    assert {r.event_id: r.event_type for r in kept.collect()} == {
+        r.event_id: r.event_type
+        for r in events.filter("event_id % 5 <> 2").collect()
+    }
 
 
 def test_float_range_scan_prunes_and_matches(spark, events):
@@ -628,6 +650,10 @@ def test_int_in_bloom_pruning(spark, events):
         r.event_id for r in want.collect()
     )
     assert got.count() >= 3
+    # the bloom gate is a picker of the one chunk reader: one Python pass
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE echoes both
+    assert final.count("MapInArrow") == 1, final
 
 
 def test_group_sum_pushdown(spark, events):
@@ -749,6 +775,58 @@ def test_schema_drift_backfill(spark, events):
     }
     assert gs == want
 
+    # string scans, projected drift column: pre-drift rows read NULL
+    from mapbox_vector_tile_spark.engine.table_encode import (
+        scan_table_string_eq,
+        scan_table_string_in,
+        scan_table_string_prefix,
+    )
+
+    src = events.select(
+        "event_id", "event_type",
+        F.when(F.col("event_id") >= 500,
+               F.round(F.col("value") * 100).cast("long")).alias("value_c"),
+    )
+    cols = ["event_id", "event_type", "value_c"]
+    probes = [
+        (lambda b, s: scan_table_string_eq(b, s, "event_type", "view", cols),
+         F.col("event_type") == "view"),
+        (lambda b, s: scan_table_string_in(
+            b, s, "event_type", ["view", "purchase"], cols),
+         F.col("event_type").isin(["view", "purchase"])),
+        (lambda b, s: scan_table_string_prefix(b, s, "event_type", "p", cols),
+         F.col("event_type").startswith("p")),
+    ]
+    for scan, pred in probes:
+        got = {r.event_id: r.value_c for r in scan(blocks, schema2).collect()}
+        want = {r.event_id: r.value_c for r in src.filter(pred).collect()}
+        assert got == want
+        assert any(k < 500 and v is None for k, v in got.items())
+
+    # string scans, drifted predicate column: NULL never matches, so no
+    # pre-drift chunk yields a row
+    late = encode_table(
+        events.filter("event_id < 500").select("event_id"), "event_id", 128
+    ).unionByName(
+        encode_table(
+            events.filter("event_id >= 500").select("event_id", "event_type"),
+            "event_id", 128,
+        )
+    )
+    src_late = events.select(
+        "event_id",
+        F.when(F.col("event_id") >= 500, F.col("event_type"))
+        .alias("event_type"),
+    )
+    for scan, pred in probes:
+        got = sorted(
+            r.event_id for r in scan(
+                late, "event_id bigint, event_type string, value_c bigint"
+            ).collect()
+        )
+        want = sorted(r.event_id for r in src_late.filter(pred).collect())
+        assert got == want and got and min(got) >= 500
+
 
 def test_string_prefix_scan(spark, events):
     """Prefix predicate at dict level: exact vs LIKE, chunk pruning on
@@ -835,6 +913,26 @@ def test_int_stats_codec_pushdown(spark):
     gb = table_int_stats(blocks, df.schema, "b").first()
     assert gb.sum_v == df.filter("b").count()
     assert gb.values_decoded <= gb.n_valid and (gb.min_v, gb.max_v) == (0, 1)
+    # a chunk written before the column existed counts its rows in n and
+    # adds nothing else (SQL semantics of an all-NULL column)
+    src = df.withColumn(
+        "v32", F.when(F.col("k") >= 450, (F.col("k") % 5).cast("int"))
+    )
+    drifted = encode_table(
+        src.filter("k < 450").select("k", "v"), "k", 128
+    ).unionByName(encode_table(src.filter("k >= 450"), "k", 128))
+    gd = table_int_stats(drifted, src.schema, "v32").first()
+    wd = src.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("v32").alias("n_valid"),
+        F.sum("v32").alias("s"),
+        F.min("v32").alias("mn"),
+        F.max("v32").alias("mx"),
+    ).first()
+    assert (gd.n, gd.n_valid, gd.sum_v, gd.min_v, gd.max_v) == (
+        wd.n, wd.n_valid, wd.s, wd.mn, wd.mx,
+    )
+    assert gd.values_decoded <= gd.n_valid
 
 
 def test_timestamp_kind_native_roundtrip_and_scan(spark):
@@ -1225,3 +1323,27 @@ def test_mor_deletes_null_keys_survive(spark):
     kept = {r.ord for r in out}
     # deleted: ords 1 and 4 (k=10, 40); k=0 never exists; NULLs all kept
     assert kept == set(range(64)) - {1, 4}
+
+
+def test_mor_deletes_keyed_on_drifted_column(spark):
+    """A chunk written before the key column existed reads NULL keys, and
+    NULL keys never match an equality delete: it keeps every row."""
+    from mapbox_vector_tile_spark.engine.table_encode import (
+        decode_table_with_deletes,
+        encode_table,
+    )
+
+    src = spark.createDataFrame(
+        [(i, None if i < 32 else i * 10, f"s{i}") for i in range(64)],
+        "ord int, k2 long, s string",
+    )
+    blocks = encode_table(
+        src.filter("ord < 32").select("ord", "s"), "ord", 16
+    ).unionByName(encode_table(src.filter("ord >= 32"), "ord", 16))
+    dels = spark.createDataFrame([(330,), (400,), (50,)], "k2 long")
+    out = decode_table_with_deletes(blocks, src.schema, dels, "k2").collect()
+    want = src.join(dels, "k2", "left_anti").collect()
+    assert {(r.ord, r.k2, r.s) for r in out} == {
+        (r.ord, r.k2, r.s) for r in want
+    }
+    assert {r.ord for r in out} == set(range(64)) - {33, 40}
